@@ -44,18 +44,11 @@ object QueriesExt14 {
     // into a scratch dir (a corpus-sized Spark write inside the query)
     // just to give the file source a directory to watch. The landing-zone
     // copy a real pipeline pays is a byte copy, not a decode+re-encode —
-    // so copy the RAW fixture bytes via the filesystem and apply
-    // Tables.events' ts adaptation INSIDE the stream, branched on the
-    // observed schema exactly like the batch loader.
+    // so copy the RAW fixture bytes via the filesystem and apply the batch
+    // loader's own ts adaptation (Tables.adaptEventsTs) INSIDE the stream.
     val srcDir = graft.streaming.WorkDirs.stageRawTable(s, dir, "events", "ssjoin-src")
     val schema = s.read.parquet(srcDir).schema
-    def adapt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case _ => df.withColumn("ts", col("ts").cast("timestamp"))
-      }
-    def stream = adapt(s.readStream.schema(schema).parquet(srcDir))
+    def stream = adaptEventsTs(s.readStream.schema(schema).parquet(srcDir))
 
     val joined = graft.streaming.StreamJoins.viewPurchaseAttribution(
       stream.filter(col("event_type") === "view"),

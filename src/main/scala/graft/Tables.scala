@@ -21,6 +21,12 @@ object Tables {
   // all consumers of one table now share the identical plan object, so
   // plan-keyed stage caches (`sameResult`) can never miss on projection
   // shape.
+  //
+  // Condition: fixture dirs are READ-ONLY for a session's lifetime. The
+  // memo pins the file listing and inferred schema at first use; a fixture
+  // regenerated or appended to mid-session would keep serving the stale
+  // listing with no error. Anything that rewrites a fixture dir must be
+  // read back from a new session or under a new dir.
   private val memo =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 
@@ -46,24 +52,29 @@ object Tables {
     *  - long  → epoch-nanos: integer-divide to micros (`div`, not `/`,
     *    since epoch-nanos exceed double's 2^53 exact-integer range);
     *  - timestamp/timestamp_ntz → already micros; cast unifies NTZ to
-    *    TimestampType under the UTC session (a no-op re-interpretation).
+    *    TimestampType under the UTC session (a no-op re-interpretation);
+    *  - anything else throws: a malformed fixture must fail loudly, not
+    *    load as nulls.
+    * The one owner of this rule: the batch loader below and the in-stream
+    * adaptation over raw staged bytes (events_stream_join) both call it.
     */
-  def events(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "events@adapted") {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      val raw = table(spark, dir, "events")
-      raw.schema("ts").dataType match {
-        case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case TimestampType | TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast("timestamp"))
-        case other =>
-          throw new IllegalStateException(
-            s"events.ts has unsupported type $other — expected LongType (nanos " +
-              "fixture generation) or Timestamp[NTZ]Type (micros generation); " +
-              "a malformed fixture must fail loudly, not load as nulls")
-      }
+  def adaptEventsTs(raw: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    raw.schema("ts").dataType match {
+      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampType | TimestampNTZType =>
+        raw.withColumn("ts", col("ts").cast("timestamp"))
+      case other =>
+        throw new IllegalStateException(
+          s"events.ts has unsupported type $other — expected LongType (nanos " +
+            "fixture generation) or Timestamp[NTZ]Type (micros generation); " +
+            "a malformed fixture must fail loudly, not load as nulls")
     }
+  }
+
+  def events(spark: SparkSession, dir: String): DataFrame =
+    memoized(spark, dir, "events@adapted")(adaptEventsTs(table(spark, dir, "events")))
   def documents(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming z-score anomaly detection — the streaming counterpart of the
   * batch `events_anomaly` query (SURVEY.md §2 B23). The batch form scores
@@ -25,40 +25,26 @@ object Anomaly {
   /** (n, Σx, Σx²) prefix state. */
   case class Moments(n: Long, s1: Double, s2: Double)
 
-  private class ZScoreProcessor[K, V](
-      ts: V => Long,
-      order: V => Long,
-      value: V => Double,
-      threshold: Double,
-      minPrior: Int,
-      ttl: TTLConfig
-  ) extends StatefulProcessor[K, V, (V, Double)] {
-    @transient private var moments: ValueState[Moments] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      moments = getHandle.getValueState[Moments]("moments", Encoders.product[Moments], ttl)
-
-    override def handleInputRows(key: K, rows: Iterator[V], timerValues: TimerValues): Iterator[(V, Double)] = {
-      var m       = if (moments.exists()) moments.get() else Moments(0L, 0.0, 0.0)
-      val flagged = Vector.newBuilder[(V, Double)]
-      // identical prefix-moments arithmetic + (ts, order) in-batch
-      // determinism to the fMGWS form below
-      rows.toVector.sortBy(r => (ts(r), order(r))).foreach { r =>
-        val x = value(r)
-        if (m.n >= minPrior) {
-          val mean = m.s1 / m.n
-          val varP = m.s2 / m.n - mean * mean
-          if (varP > 0.0) {
-            val z = (x - mean) / math.sqrt(varP)
-            if (math.abs(z) >= threshold) flagged += ((r, z))
+  /** Prefix-moments scoring of one key's batch slice in (ts, order) order. */
+  private def zScoreFold[K, V](ts: V => Long, order: V => Long, value: V => Double, threshold: Double, minPrior: Int) =
+    new KeyedFold[K, V, Moments, (V, Double)]("moments", Encoders.product[Moments], Moments(0L, 0.0, 0.0))({
+      (_, prev, rows) =>
+        var m       = prev
+        val flagged = Vector.newBuilder[(V, Double)]
+        rows.toVector.sortBy(r => (ts(r), order(r))).foreach { r =>
+          val x = value(r)
+          if (m.n >= minPrior) {
+            val mean = m.s1 / m.n
+            val varP = m.s2 / m.n - mean * mean
+            if (varP > 0.0) {
+              val z = (x - mean) / math.sqrt(varP)
+              if (math.abs(z) >= threshold) flagged += ((r, z))
+            }
           }
+          m = Moments(m.n + 1, m.s1 + x, m.s2 + x * x)
         }
-        m = Moments(m.n + 1, m.s1 + x, m.s2 + x * x)
-      }
-      moments.update(m)
-      flagged.result().iterator
-    }
-  }
+        (Some(m), flagged.result().iterator)
+    })
 
   /** `zScore` on Spark 4's `transformWithState` — same prefix-moments
     * online-monitor semantics as the fMGWS form below, with the (n, Σx,
@@ -76,11 +62,7 @@ object Anomaly {
       minPrior: Int = 5,
       ttl: TTLConfig = TTLConfig.NONE
   )(implicit ke: Encoder[K], ve: Encoder[V], outEnc: Encoder[(V, Double)]): Dataset[(V, Double)] =
-    ds.groupByKey(key)
-      .transformWithState(
-        new ZScoreProcessor[K, V](ts, order, value, threshold, minPrior, ttl),
-        TwsSupport.timeModeFor(ttl),
-        OutputMode.Append())
+    zScoreFold[K, V](ts, order, value, threshold, minPrior).tws(ds, key, ttl, OutputMode.Append())
 
   /** Returns flagged records with their z-score. */
   def zScore[K, V](
@@ -96,36 +78,6 @@ object Anomaly {
       ke: Encoder[K],
       ve: Encoder[V],
       outEnc: Encoder[(V, Double)]
-  ): Dataset[(V, Double)] = {
-    implicit val stateEnc: Encoder[Moments] = Encoders.product[Moments]
-    val timeout =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-
-    ds.groupByKey(key)
-      .flatMapGroupsWithState[Moments, (V, Double)](OutputMode.Append, timeout) {
-        (_: K, records: Iterator[V], state: GroupState[Moments]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var m       = state.getOption.getOrElse(Moments(0L, 0.0, 0.0))
-            val flagged = Vector.newBuilder[(V, Double)]
-            records.toVector.sortBy(r => (ts(r), order(r))).foreach { r =>
-              val x = value(r)
-              if (m.n >= minPrior) {
-                val mean = m.s1 / m.n
-                val varP = m.s2 / m.n - mean * mean
-                if (varP > 0.0) {
-                  val z = (x - mean) / math.sqrt(varP)
-                  if (math.abs(z) >= threshold) flagged += ((r, z))
-                }
-              }
-              m = Moments(m.n + 1, m.s1 + x, m.s2 + x * x)
-            }
-            state.update(m)
-            ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            flagged.result().iterator
-          }
-      }
-  }
+  ): Dataset[(V, Double)] =
+    zScoreFold[K, V](ts, order, value, threshold, minPrior).fmgws(ds, key, ttl)
 }

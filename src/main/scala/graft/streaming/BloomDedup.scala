@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Bounded-memory streaming dedup on a per-key Bloom filter
   * (SURVEY.md §2 B200) — the 100 TB answer to "drop ids we've already
@@ -47,46 +47,23 @@ object BloomDedup {
     h
   }
 
-  private class Processor(mBits: Int, k: Int, ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, String), (String, String)] {
-    @transient private var state: ValueState[Array[Byte]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[Array[Byte]]("bloom", Encoders.BINARY, ttl)
-
-    private def probe(bits: Array[Byte], id: String, insert: Boolean): Boolean = {
-      val h  = hashId(id)
-      val h1 = h
-      val h2 = mix64(h) | 1L // odd stride
-      var maybeSeen = true
-      var i = 0
-      while (i < k) {
-        val pos  = java.lang.Long.remainderUnsigned(h1 + i * h2, mBits.toLong).toInt
-        val byte = pos >>> 3
-        val mask = (1 << (pos & 7)).toByte
-        if ((bits(byte) & mask) == 0) {
-          maybeSeen = false
-          if (insert) bits(byte) = (bits(byte) | mask).toByte else return false
-        }
-        i += 1
+  /** Set the id's k probe bits; true iff all were already set (maybe seen). */
+  private def insert(bits: Array[Byte], id: String, mBits: Int, k: Int): Boolean = {
+    val h1 = hashId(id)
+    val h2 = mix64(h1) | 1L // odd stride
+    var maybeSeen = true
+    var i = 0
+    while (i < k) {
+      val pos  = java.lang.Long.remainderUnsigned(h1 + i * h2, mBits.toLong).toInt
+      val byte = pos >>> 3
+      val mask = (1 << (pos & 7)).toByte
+      if ((bits(byte) & mask) == 0) {
+        maybeSeen = false
+        bits(byte) = (bits(byte) | mask).toByte
       }
-      maybeSeen
+      i += 1
     }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, String)],
-        timerValues: TimerValues
-    ): Iterator[(String, String)] = {
-      val bits = Option(state.get()).getOrElse(new Array[Byte](mBits / 8))
-      // in-batch order: sort by id so emission is a pure function of the
-      // batch's id multiset (same discipline as Trending/Anomaly/Debounce)
-      val out = rows.toSeq.sortBy(_._2).iterator.filter { case (_, id) =>
-        !probe(bits, id, insert = true)
-      }.toVector
-      state.update(bits)
-      out.iterator
-    }
+    maybeSeen
   }
 
   /** @param ds    (key, id) rows — dedup ids within each key
@@ -102,9 +79,13 @@ object BloomDedup {
   ): Dataset[(String, String)] = {
     require(mBits > 0 && mBits % 8 == 0, s"mBits must be a positive multiple of 8, got $mBits")
     require(k >= 1 && k <= 16, s"k must be in [1, 16], got $k")
-    implicit val outEnc: Encoder[(String, String)] = Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    implicit val keyEnc: Encoder[String]           = Encoders.STRING
-    ds.groupByKey(_._1)
-      .transformWithState(new Processor(mBits, k, ttl), TwsSupport.timeModeFor(ttl), OutputMode.Append())
+    val fold = new KeyedFold[String, (String, String), Array[Byte], (String, String)](
+      "bloom", Encoders.BINARY, new Array[Byte](mBits / 8))({ (_, bits, rows) =>
+      // in-batch order: sort by id so emission is a pure function of the
+      // batch's id multiset (same discipline as Trending/Anomaly/Debounce)
+      val out = rows.toSeq.sortBy(_._2).filter { case (_, id) => !insert(bits, id, mBits, k) }
+      (Some(bits), out.iterator)
+    })
+    fold.tws(ds, _._1, ttl, OutputMode.Append())(Encoders.STRING, Encoders.tuple(Encoders.STRING, Encoders.STRING))
   }
 }

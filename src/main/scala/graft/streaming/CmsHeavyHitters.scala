@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming Count-Min Sketch heavy hitters on `transformWithState`
   * (SURVEY.md §2 B209) — the stream form of B208's `events_cms_topk`:
@@ -40,60 +40,15 @@ object CmsHeavyHitters {
   private[graft] def bucket(r: Int, id: String, w: Int): Int =
     (KmvSketch.hash52(s"$r:$id") % w).toInt
 
-  private class Processor(d: Int, w: Int, m: Int, ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, String), HeavyHitter] {
-    // (flattened d×w counter grid, current candidate ids)
-    @transient private var state: ValueState[(Array[Long], Array[String])] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      implicit val longArrEnc: Encoder[Array[Long]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-      implicit val strArrEnc: Encoder[Array[String]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[String]]()
-      state = getHandle.getValueState[(Array[Long], Array[String])](
-        "cms",
-        Encoders.tuple(longArrEnc, strArrEnc),
-        ttl
-      )
+  private def estimate(grid: Array[Long], id: String, d: Int, w: Int): Long = {
+    var best = Long.MaxValue
+    var r    = 0
+    while (r < d) {
+      val c = grid(r * w + bucket(r, id, w))
+      if (c < best) best = c
+      r += 1
     }
-
-    private def estimate(grid: Array[Long], id: String): Long = {
-      var best = Long.MaxValue
-      var r    = 0
-      while (r < d) {
-        val c = grid(r * w + bucket(r, id, w))
-        if (c < best) best = c
-        r += 1
-      }
-      best
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, String)],
-        timerValues: TimerValues
-    ): Iterator[HeavyHitter] = {
-      val (grid, prevCands) =
-        Option(state.get()).getOrElse((new Array[Long](d * w), Array.empty[String]))
-      // phase 1: settle the grid — addition commutes, order-free
-      val touched = scala.collection.mutable.LinkedHashSet.empty[String]
-      rows.foreach { row =>
-        val id = row._2
-        touched += id
-        var r = 0
-        while (r < d) { grid(r * w + bucket(r, id, w)) += 1L; r += 1 }
-      }
-      // phase 2: score the closed pool against the settled grid
-      val pool = (prevCands.iterator ++ touched.iterator).toSet.toArray
-      val top = pool
-        .map(id => (id, estimate(grid, id)))
-        .sortBy { case (id, est) => (-est, id) }
-        .take(m)
-      state.update((grid, top.map(_._1)))
-      top.iterator.zipWithIndex.map { case ((id, est), i) =>
-        HeavyHitter(key, id, est, i + 1)
-      }
-    }
+    best
   }
 
   /** @param ds (key, id) rows — track the top-m most frequent ids per key */
@@ -105,9 +60,31 @@ object CmsHeavyHitters {
       ttl: TTLConfig = TTLConfig.NONE
   ): Dataset[HeavyHitter] = {
     require(d >= 1 && w >= 2 && m >= 1, s"bad CMS geometry d=$d w=$w m=$m")
-    implicit val outEnc: Encoder[HeavyHitter] = Encoders.product[HeavyHitter]
-    implicit val keyEnc: Encoder[String]      = Encoders.STRING
-    ds.groupByKey(_._1)
-      .transformWithState(new Processor(d, w, m, ttl), TwsSupport.timeModeFor(ttl), OutputMode.Update())
+    // (flattened d×w counter grid, current candidate ids)
+    val fold = new KeyedFold[String, (String, String), (Array[Long], Array[String]), HeavyHitter](
+      "cms",
+      Encoders.tuple(KeyedFold.longArrays, KeyedFold.stringArrays),
+      (new Array[Long](d * w), Array.empty[String]))({
+      (key, prev, rows) =>
+        val (grid, prevCands) = prev
+        // phase 1: settle the grid — addition commutes, order-free
+        val touched = scala.collection.mutable.LinkedHashSet.empty[String]
+        rows.foreach { row =>
+          val id = row._2
+          touched += id
+          var r = 0
+          while (r < d) { grid(r * w + bucket(r, id, w)) += 1L; r += 1 }
+        }
+        // phase 2: score the closed pool against the settled grid
+        val pool = (prevCands.iterator ++ touched.iterator).toSet.toArray
+        val top = pool
+          .map(id => (id, estimate(grid, id, d, w)))
+          .sortBy { case (id, est) => (-est, id) }
+          .take(m)
+        (Some((grid, top.map(_._1))), top.iterator.zipWithIndex.map { case ((id, est), i) =>
+          HeavyHitter(key, id, est, i + 1)
+        })
+    })
+    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[HeavyHitter])
   }
 }

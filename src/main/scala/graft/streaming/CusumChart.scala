@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming CUSUM control chart on `transformWithState` (SURVEY.md §2
   * B226) — the ONLINE form of B225's batch changepoint: per key, the
@@ -35,43 +35,6 @@ object CusumChart {
 
   case class ChartState(key: String, sPos: Long, sNeg: Long, nPoints: Long, tripped: Int, tripMs: Long)
 
-  private class Processor(target: Long, slack: Long, h: Long, ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, Long, Long), ChartState] {
-    // (sPos, sNeg, nPoints)
-    @transient private var state: ValueState[(Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[(Long, Long, Long)](
-        "cusum",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
-        ttl
-      )
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, Long, Long)],
-        timerValues: TimerValues
-    ): Iterator[ChartState] = {
-      var (sPos, sNeg, n) = Option(state.get()).getOrElse((0L, 0L, 0L))
-      var tripped = 0
-      var tripMs  = -1L
-      // event-time sort: CUSUM is a sequential fold; order is load-bearing
-      rows.toSeq.sortBy(_._2).foreach { case (_, ms, x) =>
-        sPos = math.max(0L, sPos + (x - target - slack))
-        sNeg = math.max(0L, sNeg + (target - x - slack))
-        n += 1
-        if (sPos > h || sNeg > h) {
-          if (tripped == 0) tripMs = ms
-          tripped = 1
-          sPos = 0L // Page's restart: re-arm for the next shift
-          sNeg = 0L
-        }
-      }
-      state.update((sPos, sNeg, n))
-      Iterator.single(ChartState(key, sPos, sNeg, n, tripped, tripMs))
-    }
-  }
-
   /** @param ds (key, eventTimeMs, value) rows — value in caller's fixed-point unit
     * @param target in-control mean, same unit
     * @param slack  allowance k (half the shift to detect), same unit
@@ -85,9 +48,27 @@ object CusumChart {
       ttl: TTLConfig = TTLConfig.NONE
   ): Dataset[ChartState] = {
     require(slack >= 0 && h > 0, s"need slack >= 0 and h > 0 (got slack=$slack h=$h)")
-    implicit val outEnc: Encoder[ChartState] = Encoders.product[ChartState]
-    implicit val keyEnc: Encoder[String]     = Encoders.STRING
-    ds.groupByKey(_._1)
-      .transformWithState(new Processor(target, slack, h, ttl), TwsSupport.timeModeFor(ttl), OutputMode.Update())
+    // state: (sPos, sNeg, nPoints)
+    val fold = new KeyedFold[String, (String, Long, Long), (Long, Long, Long), ChartState](
+      "cusum", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong), (0L, 0L, 0L))({
+      (key, chart, rows) =>
+        var (sPos, sNeg, n) = chart
+        var tripped = 0
+        var tripMs  = -1L
+        // event-time sort: CUSUM is a sequential fold; order is load-bearing
+        rows.toSeq.sortBy(_._2).foreach { case (_, ms, x) =>
+          sPos = math.max(0L, sPos + (x - target - slack))
+          sNeg = math.max(0L, sNeg + (target - x - slack))
+          n += 1
+          if (sPos > h || sNeg > h) {
+            if (tripped == 0) tripMs = ms
+            tripped = 1
+            sPos = 0L // Page's restart: re-arm for the next shift
+            sNeg = 0L
+          }
+        }
+        (Some((sPos, sNeg, n)), Iterator.single(ChartState(key, sPos, sNeg, n, tripped, tripMs)))
+    })
+    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[ChartState])
   }
 }

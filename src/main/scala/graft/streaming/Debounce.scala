@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming leading-edge debounce — the streaming twin of the batch
   * `events_debounce` query (SURVEY.md §2 B72): per key, a record is
@@ -23,29 +23,20 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Debounce {
 
-  private class LeadingEdgeProcessor[K, V](
-      ts: V => Long,
-      order: V => Long,
-      gapMs: Long,
-      ttl: TTLConfig
-  ) extends StatefulProcessor[K, V, V] {
-    @transient private var last: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[Long]("last", Encoders.scalaLong, ttl)
-
-    override def handleInputRows(key: K, rows: Iterator[V], timerValues: TimerValues): Iterator[V] = {
-      var l       = if (last.exists()) last.get() else Long.MinValue
+  /** Burst heads of one key's batch slice, against the last seen ms.
+    * Deterministic in-batch (ts, order) order: one key's batch slice is
+    * bounded by that key's arrival rate, so the sort is local and small.
+    */
+  private def leadingEdgeFold[K, V](ts: V => Long, order: V => Long, gapMs: Long) =
+    new KeyedFold[K, V, Long, V]("last", Encoders.scalaLong, Long.MinValue)({ (_, prev, rows) =>
+      var last    = prev
       val emitted = Vector.newBuilder[V]
-      // same deterministic in-batch (ts, order) discipline as the fMGWS form
       rows.toVector.sortBy(r => (ts(r), order(r))).foreach { r =>
-        if (l == Long.MinValue || ts(r) - l > gapMs) emitted += r
-        if (ts(r) > l) l = ts(r)
+        if (last == Long.MinValue || ts(r) - last > gapMs) emitted += r
+        if (ts(r) > last) last = ts(r)
       }
-      if (l != Long.MinValue) last.update(l)
-      emitted.result().iterator
-    }
-  }
+      (Some(last).filter(_ != Long.MinValue), emitted.result().iterator)
+    })
 
   /** `leadingEdge` on Spark 4's `transformWithState` — identical emission
     * contract to the fMGWS form below (burst-head only, every record
@@ -64,11 +55,7 @@ object Debounce {
       gapMs: Long,
       ttl: TTLConfig = TTLConfig.NONE
   )(implicit ke: Encoder[K], ve: Encoder[V]): Dataset[V] =
-    ds.groupByKey(key)
-      .transformWithState(
-        new LeadingEdgeProcessor[K, V](ts, order, gapMs, ttl),
-        TwsSupport.timeModeFor(ttl),
-        OutputMode.Append())
+    leadingEdgeFold[K, V](ts, order, gapMs).tws(ds, key, ttl, OutputMode.Append())
 
   def leadingEdge[K, V](
       ds: Dataset[V],
@@ -77,31 +64,6 @@ object Debounce {
       order: V => Long,
       gapMs: Long,
       ttl: Option[java.time.Duration] = None
-  )(implicit ke: Encoder[K], ve: Encoder[V], tupleEnc: Encoder[(K, V)]): Dataset[V] = {
-    implicit val stateEnc: Encoder[Long] = org.apache.spark.sql.Encoders.scalaLong
-    val timeout =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-
-    ds.groupByKey(key)
-      .flatMapGroupsWithState[Long, V](OutputMode.Append, timeout) {
-        (_: K, records: Iterator[V], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var last    = state.getOption.getOrElse(Long.MinValue)
-            val emitted = Vector.newBuilder[V]
-            // deterministic in-batch order: one key's batch slice is
-            // bounded by that key's arrival rate, so the sort is local
-            // and small
-            records.toVector.sortBy(r => (ts(r), order(r))).foreach { r =>
-              if (last == Long.MinValue || ts(r) - last > gapMs) emitted += r
-              if (ts(r) > last) last = ts(r)
-            }
-            if (last != Long.MinValue) state.update(last)
-            ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            emitted.result().iterator
-          }
-      }
-  }
+  )(implicit ke: Encoder[K], ve: Encoder[V], tupleEnc: Encoder[(K, V)]): Dataset[V] =
+    leadingEdgeFold[K, V](ts, order, gapMs).fmgws(ds, key, ttl)
 }

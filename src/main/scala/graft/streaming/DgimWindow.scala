@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming DGIM sliding-window counter on `transformWithState`
   * (SURVEY.md §2 B212) — "how many events did this key see in the last
@@ -77,45 +77,6 @@ object DgimWindow {
     if (buckets.isEmpty) 0L
     else buckets.map(_._2).sum - buckets.head._2 / 2
 
-  private class Processor(windowMs: Long, r: Int, ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, Long), WindowEstimate] {
-    // (flattened bucket list [ts, size, ...], asOf high-water mark)
-    @transient private var state: ValueState[(Array[Long], Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      implicit val arrEnc: Encoder[Array[Long]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-      state = getHandle.getValueState[(Array[Long], Long)](
-        "dgim",
-        Encoders.tuple(arrEnc, Encoders.scalaLong),
-        ttl
-      )
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, Long)],
-        timerValues: TimerValues
-    ): Iterator[WindowEstimate] = {
-      val (flat, prevAsOf) = Option(state.get()).getOrElse((Array.empty[Long], Long.MinValue))
-      var buckets = flat.grouped(2).map(a => (a(0), a(1))).toVector
-      // in-batch event-time sort: emission must be a pure function of the
-      // timestamp multiset, not of shuffle iterator order
-      val tss  = rows.map(_._2).toArray.sorted
-      var asOf = prevAsOf
-      tss.foreach { ts =>
-        if (ts > asOf) asOf = ts
-        // DGIM assumes in-order arrival; a late event (ts < asOf) still
-        // inserts — its bucket carries its own ts and expires correctly,
-        // the estimate stays an ε-approximation of the multiset count
-        buckets = insert(buckets, ts, r)
-      }
-      buckets = expire(buckets, asOf, windowMs)
-      state.update((buckets.flatMap(b => Seq(b._1, b._2)).toArray, asOf))
-      Iterator.single(WindowEstimate(key, asOf, estimate(buckets), buckets.length))
-    }
-  }
-
   /** @param ds (key, eventTimeMs) rows — estimate each key's count over
     *   the trailing `windowMs`, anchored at the key's max event time
     * @param r max buckets per size; error ≤ 1/(2(r−1))
@@ -127,9 +88,25 @@ object DgimWindow {
       ttl: TTLConfig = TTLConfig.NONE
   ): Dataset[WindowEstimate] = {
     require(windowMs > 0 && r >= 2, s"bad DGIM geometry windowMs=$windowMs r=$r")
-    implicit val outEnc: Encoder[WindowEstimate] = Encoders.product[WindowEstimate]
-    implicit val keyEnc: Encoder[String]         = Encoders.STRING
-    ds.groupByKey(_._1)
-      .transformWithState(new Processor(windowMs, r, ttl), TwsSupport.timeModeFor(ttl), OutputMode.Update())
+    // (flattened bucket list [ts, size, ...], asOf high-water mark)
+    val fold = new KeyedFold[String, (String, Long), (Array[Long], Long), WindowEstimate](
+      "dgim", Encoders.tuple(KeyedFold.longArrays, Encoders.scalaLong), (Array.empty[Long], Long.MinValue))({
+      (key, prev, rows) =>
+        var buckets = prev._1.grouped(2).map(a => (a(0), a(1))).toVector
+        var asOf    = prev._2
+        // in-batch event-time sort: emission must be a pure function of the
+        // timestamp multiset, not of shuffle iterator order
+        rows.map(_._2).toArray.sorted.foreach { ts =>
+          if (ts > asOf) asOf = ts
+          // DGIM assumes in-order arrival; a late event (ts < asOf) still
+          // inserts — its bucket carries its own ts and expires correctly,
+          // the estimate stays an ε-approximation of the multiset count
+          buckets = insert(buckets, ts, r)
+        }
+        buckets = expire(buckets, asOf, windowMs)
+        (Some((buckets.flatMap(b => Seq(b._1, b._2)).toArray, asOf)),
+          Iterator.single(WindowEstimate(key, asOf, estimate(buckets), buckets.length)))
+    })
+    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[WindowEstimate])
   }
 }

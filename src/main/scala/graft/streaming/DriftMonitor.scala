@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming distribution-drift monitor on `transformWithState`
   * (SURVEY.md §2 B231) — the ONLINE companion to the batch drift
@@ -69,31 +69,6 @@ object DriftMonitor {
     best
   }
 
-  private class Processor(refPpm: Map[Int, Long], ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, Long), DriftScore] {
-    @transient private var state: ValueState[Array[Long]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      implicit val enc: Encoder[Array[Long]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-      state = getHandle.getValueState[Array[Long]]("driftHist", enc, ttl)
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, Long)],
-        timerValues: TimerValues
-    ): Iterator[DriftScore] = {
-      val counts = Option(state.get()).getOrElse(new Array[Long](1024))
-      rows.foreach { case (_, xMicro) => counts(HistQuantiles.bucketOf(xMicro)) += 1L }
-      state.update(counts)
-      var n = 0L
-      var b = 0
-      while (b < counts.length) { n += counts(b); b += 1 }
-      Iterator.single(DriftScore(key, n, psiMicro(counts, n, refPpm), ksPpm(counts, n, refPpm)))
-    }
-  }
-
   /** @param ds (key, valueMicro) rows
     * @param referencePpm bucket → ppm share of the reference distribution
     *   (B201 bucket indexing; shares should sum to ~1e6)
@@ -105,9 +80,13 @@ object DriftMonitor {
   ): Dataset[DriftScore] = {
     require(referencePpm.nonEmpty, "reference distribution must be non-empty")
     require(referencePpm.keys.forall(b => b >= 0 && b < 1024), "reference buckets must be in [0, 1024)")
-    implicit val outEnc: Encoder[DriftScore] = Encoders.product[DriftScore]
-    implicit val keyEnc: Encoder[String]     = Encoders.STRING
-    ds.groupByKey(_._1)
-      .transformWithState(new Processor(referencePpm, ttl), TwsSupport.timeModeFor(ttl), OutputMode.Update())
+    val fold = new KeyedFold[String, (String, Long), Array[Long], DriftScore](
+      "driftHist", KeyedFold.longArrays, new Array[Long](1024))({ (key, counts, rows) =>
+      rows.foreach { case (_, xMicro) => counts(HistQuantiles.bucketOf(xMicro)) += 1L }
+      val n = counts.sum
+      val score = DriftScore(key, n, psiMicro(counts, n, referencePpm), ksPpm(counts, n, referencePpm))
+      (Some(counts), Iterator.single(score))
+    })
+    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[DriftScore])
   }
 }

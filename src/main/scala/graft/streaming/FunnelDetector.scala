@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming funnel detection — the stateful-pattern-match (CEP) shape
   * over a keyed event stream: per key, advance through an ordered stage
@@ -23,32 +23,26 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object FunnelDetector {
 
-  private class FunnelProcessor[K, V](
-      stage: V => String,
-      eventMs: V => Long,
-      stages: Seq[String]
-  , ttl: TTLConfig) extends StatefulProcessor[K, V, (K, Long)] {
-    private val completed = stages.length
-    @transient private var idxState: ValueState[Int] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      idxState = getHandle.getValueState[Int]("idx", Encoders.scalaInt, ttl)
-
-    override def handleInputRows(key: K, rows: Iterator[V], timerValues: TimerValues): Iterator[(K, Long)] = {
-      var idx = if (idxState.exists()) idxState.get() else 0
-      var hit: Option[Long] = None
-      if (idx < completed) {
-        // same deterministic (eventMs, stage) in-batch ordering as fMGWS
+  /** Advance one key's next-stage index over its batch slice in
+    * deterministic (eventMs, stage) order; a completed key is left as is.
+    */
+  private def funnelFold[K, V](stage: V => String, eventMs: V => Long, stages: Seq[String]) = {
+    require(stages.nonEmpty, "funnel needs at least one stage")
+    val completed = stages.length
+    new KeyedFold[K, V, Int, (K, Long)]("idx", Encoders.scalaInt, 0)({ (key, prev, rows) =>
+      if (prev >= completed) (None, Iterator.empty)
+      else {
+        var idx = prev
+        var hit: Option[Long] = None
         rows.toSeq.sortBy(r => (eventMs(r), stage(r))).foreach { r =>
           if (idx < completed && stage(r) == stages(idx)) {
             idx += 1
             if (idx == completed) hit = Some(eventMs(r))
           }
         }
-        idxState.update(idx)
+        (Some(idx), hit.map(ms => (key, ms)).iterator)
       }
-      hit.map(ms => (key, ms)).iterator
-    }
+    })
   }
 
   /** `detect` on Spark 4's `transformWithState` — same CEP contract as the
@@ -65,14 +59,8 @@ object FunnelDetector {
       eventMs: V => Long,
       stages: Seq[String],
       ttl: TTLConfig = TTLConfig.NONE
-  )(implicit ke: Encoder[K], ve: Encoder[V], outEnc: Encoder[(K, Long)]): Dataset[(K, Long)] = {
-    require(stages.nonEmpty, "funnel needs at least one stage")
-    ds.groupByKey(key)
-      .transformWithState(
-        new FunnelProcessor[K, V](stage, eventMs, stages, ttl),
-        TwsSupport.timeModeFor(ttl),
-        OutputMode.Append())
-  }
+  )(implicit ke: Encoder[K], ve: Encoder[V], outEnc: Encoder[(K, Long)]): Dataset[(K, Long)] =
+    funnelFold[K, V](stage, eventMs, stages).tws(ds, key, ttl, OutputMode.Append())
 
   /** One completion per key: the key and the timestamp of the event that
     * completed the funnel.
@@ -88,36 +76,6 @@ object FunnelDetector {
       ke: Encoder[K],
       ve: Encoder[V],
       outEnc: Encoder[(K, Long)]
-  ): Dataset[(K, Long)] = {
-    require(stages.nonEmpty, "funnel needs at least one stage")
-    implicit val stateEnc: Encoder[Int] = org.apache.spark.sql.Encoders.scalaInt
-    val completed = stages.length
-    val timeout =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-
-    ds.groupByKey(key)
-      .flatMapGroupsWithState[Int, (K, Long)](OutputMode.Append, timeout) {
-        (k: K, records: Iterator[V], state: GroupState[Int]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var idx = state.getOption.getOrElse(0)
-            var hit: Option[Long] = None
-            if (idx < completed) {
-              // deterministic in-batch order for distinct timestamps
-              val ordered = records.toSeq.sortBy(r => (eventMs(r), stage(r)))
-              ordered.foreach { r =>
-                if (idx < completed && stage(r) == stages(idx)) {
-                  idx += 1
-                  if (idx == completed) hit = Some(eventMs(r))
-                }
-              }
-              state.update(idx)
-            }
-            if (state.exists || idx > 0) ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            hit.map(ms => (k, ms)).iterator
-          }
-      }
-  }
+  ): Dataset[(K, Long)] =
+    funnelFold[K, V](stage, eventMs, stages).fmgws(ds, key, ttl)
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming bottom-k-by-hash distinct sample on `transformWithState`
   * (SURVEY.md §2 B219): per key, the k distinct ids with the smallest
@@ -26,48 +26,6 @@ object HashSample {
 
   case class SampleMember(key: String, id: String, hash: Long, rank: Int, threshold: Long)
 
-  private class Processor(k: Int, ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, String), SampleMember] {
-    // parallel arrays (hashes ascending, ids) — the bounded min-set
-    @transient private var state: ValueState[(Array[Long], Array[String])] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      implicit val longArrEnc: Encoder[Array[Long]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-      implicit val strArrEnc: Encoder[Array[String]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[String]]()
-      state = getHandle.getValueState[(Array[Long], Array[String])](
-        "hashsample",
-        Encoders.tuple(longArrEnc, strArrEnc),
-        ttl
-      )
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, String)],
-        timerValues: TimerValues
-    ): Iterator[SampleMember] = {
-      val (h0, id0) =
-        Option(state.get()).getOrElse((Array.empty[Long], Array.empty[String]))
-      // min-set union of (state ∪ batch), dedup by id — a set fold, so
-      // arrival order and duplicate arrivals cannot matter
-      val byId = scala.collection.mutable.HashMap.empty[String, Long]
-      var i = 0
-      while (i < id0.length) { byId.put(id0(i), h0(i)); i += 1 }
-      rows.foreach { row =>
-        val id = row._2
-        if (!byId.contains(id)) byId.put(id, KmvSketch.hash52(id))
-      }
-      val kept = byId.toSeq.sortBy { case (id, h) => (h, id) }.take(k)
-      state.update((kept.map(_._2).toArray, kept.map(_._1).toArray))
-      val threshold = if (kept.size >= k) kept.last._2 else Long.MaxValue
-      kept.iterator.zipWithIndex.map { case ((id, h), idx) =>
-        SampleMember(key, id, h, idx + 1, threshold)
-      }
-    }
-  }
-
   /** @param ds (key, id) rows — keep the k hash-smallest distinct ids per key */
   def perKey(
       ds: Dataset[(String, String)],
@@ -75,9 +33,29 @@ object HashSample {
       ttl: TTLConfig = TTLConfig.NONE
   ): Dataset[SampleMember] = {
     require(k >= 1, s"hash sample needs k >= 1 (got $k)")
-    implicit val outEnc: Encoder[SampleMember] = Encoders.product[SampleMember]
-    implicit val keyEnc: Encoder[String]       = Encoders.STRING
-    ds.groupByKey(_._1)
-      .transformWithState(new Processor(k, ttl), TwsSupport.timeModeFor(ttl), OutputMode.Update())
+    // parallel arrays (hashes ascending, ids) — the bounded min-set
+    val fold = new KeyedFold[String, (String, String), (Array[Long], Array[String]), SampleMember](
+      "hashsample",
+      Encoders.tuple(KeyedFold.longArrays, KeyedFold.stringArrays),
+      (Array.empty[Long], Array.empty[String]))({
+      (key, prev, rows) =>
+        val (h0, id0) = prev
+        // min-set union of (state ∪ batch), dedup by id — a set fold, so
+        // arrival order and duplicate arrivals cannot matter
+        val byId = scala.collection.mutable.HashMap.empty[String, Long]
+        var i = 0
+        while (i < id0.length) { byId.put(id0(i), h0(i)); i += 1 }
+        rows.foreach { row =>
+          val id = row._2
+          if (!byId.contains(id)) byId.put(id, KmvSketch.hash52(id))
+        }
+        val kept = byId.toSeq.sortBy { case (id, h) => (h, id) }.take(k)
+        val threshold = if (kept.size >= k) kept.last._2 else Long.MaxValue
+        val members = kept.iterator.zipWithIndex.map { case ((id, h), idx) =>
+          SampleMember(key, id, h, idx + 1, threshold)
+        }
+        (Some((kept.map(_._2).toArray, kept.map(_._1).toArray)), members)
+    })
+    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[SampleMember])
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming HDR-histogram quantiles on `transformWithState`
   * (SURVEY.md §2 B202) — the stream form of B201's
@@ -60,45 +60,25 @@ object HistQuantiles {
     0L
   }
 
-  private class Processor(ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, Double), KeyDigest] {
-    @transient private var state: ValueState[Array[Long]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      implicit val enc: Encoder[Array[Long]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-      state = getHandle.getValueState[Array[Long]]("hist", enc, ttl)
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, Double)],
-        timerValues: TimerValues
-    ): Iterator[KeyDigest] = {
-      val counts = Option(state.get()).getOrElse(new Array[Long](NBuckets))
-      // no sort needed: the histogram is a commutative integer aggregate
-      rows.foreach { case (_, x) =>
-        counts(bucketOf(math.round(x * 1000000.0))) += 1L
-      }
-      state.update(counts)
-      val n = counts.sum
-      Iterator.single(KeyDigest(
-        key, n,
-        quantile(counts, n, 1, 2),
-        quantile(counts, n, 9, 10),
-        quantile(counts, n, 99, 100)
-      ))
-    }
-  }
-
   /** @param ds (key, value) rows; values non-negative (micro-unit snap) */
   def perKey(
       ds: Dataset[(String, Double)],
       ttl: TTLConfig = TTLConfig.NONE
   ): Dataset[KeyDigest] = {
-    implicit val outEnc: Encoder[KeyDigest] = Encoders.product[KeyDigest]
-    implicit val keyEnc: Encoder[String]    = Encoders.STRING
-    ds.groupByKey(_._1)
-      .transformWithState(new Processor(ttl), TwsSupport.timeModeFor(ttl), OutputMode.Update())
+    val fold = new KeyedFold[String, (String, Double), Array[Long], KeyDigest](
+      "hist", KeyedFold.longArrays, new Array[Long](NBuckets))({ (key, counts, rows) =>
+      // no sort needed: the histogram is a commutative integer aggregate
+      rows.foreach { case (_, x) =>
+        counts(bucketOf(math.round(x * 1000000.0))) += 1L
+      }
+      val n = counts.sum
+      (Some(counts), Iterator.single(KeyDigest(
+        key, n,
+        quantile(counts, n, 1, 2),
+        quantile(counts, n, 9, 10),
+        quantile(counts, n, 99, 100)
+      )))
+    })
+    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[KeyDigest])
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming KMV (k-minimum-values) distinct-count sketch on
   * `transformWithState` (SURVEY.md §2 B204) — the stream form of B203's
@@ -40,38 +40,6 @@ object KmvSketch {
     if (sorted.length < k) (sorted.length.toLong, if (sorted.isEmpty) 0L else sorted.last)
     else ((k - 1).toLong * TwoPow52 / sorted(k - 1), sorted(k - 1))
 
-  private class Processor(k: Int, ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, String), KeyEstimate] {
-    // (sorted ascending k-min hash array, total rows seen)
-    @transient private var state: ValueState[(Array[Long], Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      implicit val arrEnc: Encoder[Array[Long]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-      state = getHandle.getValueState[(Array[Long], Long)](
-        "kmv",
-        Encoders.tuple(arrEnc, Encoders.scalaLong),
-        ttl
-      )
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, String)],
-        timerValues: TimerValues
-    ): Iterator[KeyEstimate] = {
-      val (prev, prevSeen) = Option(state.get()).getOrElse((Array.empty[Long], 0L))
-      var seen = prevSeen
-      val incoming = rows.map { r => seen += 1; hash52(r._2) }.toArray
-      // min-set union: commutative + idempotent, so arrival order and
-      // batch boundaries cannot change the result
-      val merged = (prev ++ incoming).distinct.sorted.take(k)
-      state.update((merged, seen))
-      val (est, kth) = estimate(k, merged, seen)
-      Iterator.single(KeyEstimate(key, seen, est, kth))
-    }
-  }
-
   /** @param ds (key, id) rows — estimate distinct ids within each key */
   def perKey(
       ds: Dataset[(String, String)],
@@ -79,9 +47,18 @@ object KmvSketch {
       ttl: TTLConfig = TTLConfig.NONE
   ): Dataset[KeyEstimate] = {
     require(k >= 2, s"k must be >= 2, got $k")
-    implicit val outEnc: Encoder[KeyEstimate] = Encoders.product[KeyEstimate]
-    implicit val keyEnc: Encoder[String]      = Encoders.STRING
-    ds.groupByKey(_._1)
-      .transformWithState(new Processor(k, ttl), TwsSupport.timeModeFor(ttl), OutputMode.Update())
+    // (sorted ascending k-min hash array, total rows seen)
+    val fold = new KeyedFold[String, (String, String), (Array[Long], Long), KeyEstimate](
+      "kmv", Encoders.tuple(KeyedFold.longArrays, Encoders.scalaLong), (Array.empty[Long], 0L))({
+      (key, prev, rows) =>
+        var seen = prev._2
+        val incoming = rows.map { r => seen += 1; hash52(r._2) }.toArray
+        // min-set union: commutative + idempotent, so arrival order and
+        // batch boundaries cannot change the result
+        val merged = (prev._1 ++ incoming).distinct.sorted.take(k)
+        val (est, kth) = estimate(k, merged, seen)
+        (Some((merged, seen)), Iterator.single(KeyEstimate(key, seen, est, kth)))
+    })
+    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[KeyEstimate])
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Per-key token-bucket rate limiting — the budget-based admission
   * control next to Debounce's gap-based one: each key owns a bucket of
@@ -22,41 +22,29 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object RateLimit {
 
-  private class TokenBucketProcessor[K, V](
-      ts: V => Long,
-      order: V => Long,
-      capacityMilli: Long,
-      refillMilliPerSec: Long,
-      ttl: TTLConfig
-  ) extends StatefulProcessor[K, V, V] {
-    @transient private var bucket: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      bucket = getHandle.getValueState[(Long, Long)](
-        "bucket",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
-        ttl)
-
-    override def handleInputRows(key: K, rows: Iterator[V], timerValues: TimerValues): Iterator[V] = {
-      var (tokens, lastMs) =
-        if (bucket.exists()) bucket.get() else (capacityMilli, Long.MinValue)
-      val emitted = Vector.newBuilder[V]
-      // identical integer-milli refill arithmetic to the fMGWS form
-      rows.toVector.sortBy(r => (ts(r), order(r))).foreach { r =>
-        val t = ts(r)
-        if (lastMs != Long.MinValue && t > lastMs) {
-          tokens = math.min(capacityMilli, tokens + (t - lastMs) * refillMilliPerSec / 1000L)
+  /** Integer-milli token-bucket admission of one key's batch slice in
+    * (ts, order) order; state is (tokens, last refill ms).
+    */
+  private def tokenBucketFold[K, V](ts: V => Long, order: V => Long, capacityMilli: Long, refillMilliPerSec: Long) =
+    new KeyedFold[K, V, (Long, Long), V](
+      "bucket", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), (capacityMilli, Long.MinValue))({
+      (_, prev, rows) =>
+        var (tokens, lastMs) = prev
+        val emitted          = Vector.newBuilder[V]
+        rows.toVector.sortBy(r => (ts(r), order(r))).foreach { r =>
+          val t = ts(r)
+          if (lastMs != Long.MinValue && t > lastMs) {
+            // integer refill: elapsed ms × rate, floor at the ms grain
+            tokens = math.min(capacityMilli, tokens + (t - lastMs) * refillMilliPerSec / 1000L)
+          }
+          if (lastMs == Long.MinValue || t > lastMs) lastMs = t
+          if (tokens >= 1000L) {
+            tokens -= 1000L
+            emitted += r
+          }
         }
-        if (lastMs == Long.MinValue || t > lastMs) lastMs = t
-        if (tokens >= 1000L) {
-          tokens -= 1000L
-          emitted += r
-        }
-      }
-      bucket.update((tokens, lastMs))
-      emitted.result().iterator
-    }
-  }
+        (Some((tokens, lastMs)), emitted.result().iterator)
+    })
 
   /** `tokenBucket` on Spark 4's `transformWithState` — same event-time
     * integer-milli admission arithmetic as the fMGWS form below, with the
@@ -73,11 +61,7 @@ object RateLimit {
       refillMilliPerSec: Long,
       ttl: TTLConfig = TTLConfig.NONE
   )(implicit ke: Encoder[K], ve: Encoder[V]): Dataset[V] =
-    ds.groupByKey(key)
-      .transformWithState(
-        new TokenBucketProcessor[K, V](ts, order, capacityMilli, refillMilliPerSec, ttl),
-        TwsSupport.timeModeFor(ttl),
-        OutputMode.Append())
+    tokenBucketFold[K, V](ts, order, capacityMilli, refillMilliPerSec).tws(ds, key, ttl, OutputMode.Append())
 
   def tokenBucket[K, V](
       ds: Dataset[V],
@@ -87,40 +71,6 @@ object RateLimit {
       capacityMilli: Long,
       refillMilliPerSec: Long,
       ttl: Option[java.time.Duration] = None
-  )(implicit ke: Encoder[K], ve: Encoder[V], tupleEnc: Encoder[(K, V)]): Dataset[V] = {
-    implicit val stateEnc: Encoder[(Long, Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong
-      )
-    val timeout =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-
-    ds.groupByKey(key)
-      .flatMapGroupsWithState[(Long, Long), V](OutputMode.Append, timeout) {
-        (_: K, records: Iterator[V], state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var (tokens, lastMs) = state.getOption.getOrElse((capacityMilli, Long.MinValue))
-            val emitted          = Vector.newBuilder[V]
-            records.toVector.sortBy(r => (ts(r), order(r))).foreach { r =>
-              val t = ts(r)
-              if (lastMs != Long.MinValue && t > lastMs) {
-                // integer refill: elapsed ms × rate, floor at the ms grain
-                tokens = math.min(capacityMilli, tokens + (t - lastMs) * refillMilliPerSec / 1000L)
-              }
-              if (lastMs == Long.MinValue || t > lastMs) lastMs = t
-              if (tokens >= 1000L) {
-                tokens -= 1000L
-                emitted += r
-              }
-            }
-            state.update((tokens, lastMs))
-            ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            emitted.result().iterator
-          }
-      }
-  }
+  )(implicit ke: Encoder[K], ve: Encoder[V], tupleEnc: Encoder[(K, V)]): Dataset[V] =
+    tokenBucketFold[K, V](ts, order, capacityMilli, refillMilliPerSec).fmgws(ds, key, ttl)
 }

@@ -1,19 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Running per-key aggregates on Spark 4's `transformWithState` — the
   * arbitrary-state API that supersedes flatMapGroupsWithState: typed state
   * handles (`ValueState`/`MapState`/`ListState`) with per-state TTL,
-  * timers, and a RocksDB-backed store. This operator is the migration
-  * template for the repo's fMGWS twins (StatefulDedup, Debounce, Anomaly):
-  * one `ValueState[(n, Σx, Σx²)]` per key, updated per batch, emitting the
-  * refreshed running stats row in Update mode.
+  * timers, and a RocksDB-backed store. One `ValueState[(n, Σx, Σx²)]` per
+  * key, updated per batch, emitting the refreshed running stats row in
+  * Update mode. The state plumbing — handle, TTL, time mode and the
+  * flatMapGroupsWithState form the fMGWS twins also run — is
+  * [[KeyedFold]]; this file states only the fold.
   *
   * State budget: three numbers per live key, expired by the store after
   * `ttl` of no updates (TTLConfig is enforced by the state store itself —
-  * no hand-rolled timeout bookkeeping, unlike the fMGWS twins).
+  * no hand-rolled timeout bookkeeping).
   *
   * Requires the RocksDB state store provider
   * (`spark.sql.streaming.stateStore.providerClass` =
@@ -25,36 +26,17 @@ object RunningStats {
   /** Emitted after every batch that touches the key. */
   case class KeyStats(key: String, n: Long, total: Double, mean: Double)
 
-  private class Processor(ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, Double), KeyStats] {
-    @transient private var state: ValueState[(Long, Double, Double)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[(Long, Double, Double)](
-        "moments",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble, Encoders.scalaDouble),
-        ttl
-      )
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, Double)],
-        timerValues: TimerValues
-    ): Iterator[KeyStats] = {
-      var (n, s1, s2) = Option(state.get()).getOrElse((0L, 0.0, 0.0))
-      rows.foreach { case (_, x) => n += 1; s1 += x; s2 += x * x }
-      state.update((n, s1, s2))
-      Iterator.single(KeyStats(key, n, s1, if (n == 0) 0.0 else s1 / n))
-    }
-  }
-
   def perKey(
       ds: Dataset[(String, Double)],
       ttl: TTLConfig = TTLConfig.NONE
   ): Dataset[KeyStats] = {
-    implicit val outEnc: Encoder[KeyStats] = Encoders.product[KeyStats]
-    implicit val keyEnc: Encoder[String]   = Encoders.STRING
-    ds.groupByKey(_._1)
-      .transformWithState(new Processor(ttl), TwsSupport.timeModeFor(ttl), OutputMode.Update())
+    val fold = new KeyedFold[String, (String, Double), (Long, Double, Double), KeyStats](
+      "moments", Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble, Encoders.scalaDouble), (0L, 0.0, 0.0))({
+      (key, moments, rows) =>
+        var (n, s1, s2) = moments
+        rows.foreach { case (_, x) => n += 1; s1 += x; s2 += x * x }
+        (Some((n, s1, s2)), Iterator.single(KeyStats(key, n, s1, if (n == 0) 0.0 else s1 / n)))
+    })
+    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[KeyStats])
   }
 }

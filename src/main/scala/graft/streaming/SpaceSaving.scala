@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming Space-Saving top-m on `transformWithState` (SURVEY.md §2
   * B218) — the DETERMINISTIC-guarantee streaming frequency tracker
@@ -38,30 +38,19 @@ object SpaceSaving {
     */
   case class TrackedItem(key: String, id: String, estimate: Long, error: Long, rank: Int, guaranteed: Int)
 
-  private class Processor(m: Int, ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, String), TrackedItem] {
+  /** @param ds (key, id) rows — track the top-m ids per key with proofs */
+  def perKey(
+      ds: Dataset[(String, String)],
+      m: Int = 10,
+      ttl: TTLConfig = TTLConfig.NONE
+  ): Dataset[TrackedItem] = {
+    require(m >= 1, s"space-saving needs m >= 1 counters (got $m)")
     // parallel arrays (ids, counts, errors) — one bounded summary per key
-    @transient private var state: ValueState[(Array[String], Array[Long], Array[Long])] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      implicit val strArrEnc: Encoder[Array[String]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[String]]()
-      implicit val longArrEnc: Encoder[Array[Long]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-      state = getHandle.getValueState[(Array[String], Array[Long], Array[Long])](
-        "spacesaving",
-        Encoders.tuple(strArrEnc, longArrEnc, longArrEnc),
-        ttl
-      )
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, String)],
-        timerValues: TimerValues
-    ): Iterator[TrackedItem] = {
-      val (ids0, cnts0, errs0) =
-        Option(state.get()).getOrElse((Array.empty[String], Array.empty[Long], Array.empty[Long]))
+    val fold = new KeyedFold[String, (String, String), (Array[String], Array[Long], Array[Long]), TrackedItem](
+      "spacesaving",
+      Encoders.tuple(KeyedFold.stringArrays, KeyedFold.longArrays, KeyedFold.longArrays),
+      (Array.empty[String], Array.empty[Long], Array.empty[Long]))({ (key, prev, rows) =>
+      val (ids0, cnts0, errs0) = prev
       val summary = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
       var i = 0
       while (i < ids0.length) { summary.put(ids0(i), (cnts0(i), errs0(i))); i += 1 }
@@ -86,28 +75,12 @@ object SpaceSaving {
       val ranked = summary.toSeq
         .map { case (id, (cnt, err)) => (id, cnt, err) }
         .sortBy { case (id, cnt, _) => (-cnt, id) }
-      state.update((
-        ranked.map(_._1).toArray,
-        ranked.map(_._2).toArray,
-        ranked.map(_._3).toArray
-      ))
-      ranked.iterator.zipWithIndex.map { case ((id, cnt, err), idx) =>
+      val next = (ranked.map(_._1).toArray, ranked.map(_._2).toArray, ranked.map(_._3).toArray)
+      (Some(next), ranked.iterator.zipWithIndex.map { case ((id, cnt, err), idx) =>
         val nextEst = if (idx + 1 < ranked.size) ranked(idx + 1)._2 else 0L
         TrackedItem(key, id, cnt, err, idx + 1, if (cnt - err >= nextEst) 1 else 0)
-      }
-    }
-  }
-
-  /** @param ds (key, id) rows — track the top-m ids per key with proofs */
-  def perKey(
-      ds: Dataset[(String, String)],
-      m: Int = 10,
-      ttl: TTLConfig = TTLConfig.NONE
-  ): Dataset[TrackedItem] = {
-    require(m >= 1, s"space-saving needs m >= 1 counters (got $m)")
-    implicit val outEnc: Encoder[TrackedItem] = Encoders.product[TrackedItem]
-    implicit val keyEnc: Encoder[String]      = Encoders.STRING
-    ds.groupByKey(_._1)
-      .transformWithState(new Processor(m, ttl), TwsSupport.timeModeFor(ttl), OutputMode.Update())
+      })
+    })
+    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[TrackedItem])
   }
 }

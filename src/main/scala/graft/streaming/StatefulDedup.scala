@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming latest-wins compaction (SURVEY.md §2 B2, streaming form) —
   * the reference's `@Version` optimistic-lock counter as unbounded keyed
@@ -36,29 +36,18 @@ object StatefulDedup {
     df.withWatermark(eventTimeCol, delay)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  private class LatestWinsProcessor[K, V](
-      version: V => Long,
-      ttl: TTLConfig
-  ) extends StatefulProcessor[K, V, V] {
-    @transient private var hwm: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      hwm = getHandle.getValueState[Long]("hwm", Encoders.scalaLong, ttl)
-
-    override def handleInputRows(key: K, rows: Iterator[V], timerValues: TimerValues): Iterator[V] = {
-      // reduce the batch to its single max-version record first so output
-      // is independent of same-key arrival order within the batch —
-      // identical discipline to the fMGWS form below
-      var best: Option[V] = None
-      rows.foreach { r =>
-        if (best.forall(b => version(r) > version(b))) best = Some(r)
-      }
-      val cur     = if (hwm.exists()) hwm.get() else Long.MinValue
-      val emitted = best.filter(r => version(r) > cur)
-      emitted.foreach(r => hwm.update(version(r)))
-      emitted.iterator
-    }
-  }
+  /** Per key, reduce the micro-batch to its single max-version record
+    * first, so output is independent of same-key arrival order within the
+    * batch (versions [1,2] and [2,1] both emit exactly the version-2
+    * record) — matching the batch twin Dedup.latestWins, which emits only
+    * the max per key — then emit it only if it advances the stored
+    * high-water mark.
+    */
+  private def latestWinsFold[K, V](version: V => Long) =
+    new KeyedFold[K, V, Long, V]("hwm", Encoders.scalaLong, Long.MinValue)({ (_, hwm, rows) =>
+      val emitted = rows.reduceOption((b, r) => if (version(r) > version(b)) r else b).filter(r => version(r) > hwm)
+      (emitted.map(version), emitted.iterator)
+    })
 
   /** `latestWins` on Spark 4's `transformWithState` (B171's migration
     * template applied to B2): same semantics as the fMGWS form below —
@@ -77,8 +66,7 @@ object StatefulDedup {
       version: V => Long,
       ttl: TTLConfig = TTLConfig.NONE
   )(implicit ke: Encoder[K], ve: Encoder[V]): Dataset[V] =
-    ds.groupByKey(key)
-      .transformWithState(new LatestWinsProcessor[K, V](version, ttl), TimeMode.None(), OutputMode.Append())
+    latestWinsFold[K, V](version).tws(ds, key, ttl, OutputMode.Append())
 
   /** Records that advance (key, version) survive; others are dropped. */
   def latestWins[K, V](
@@ -86,34 +74,6 @@ object StatefulDedup {
       key: V => K,
       version: V => Long,
       ttl: Option[java.time.Duration] = None
-  )(implicit ke: Encoder[K], ve: Encoder[V], tupleEnc: Encoder[(K, V)]): Dataset[V] = {
-    implicit val stateEnc: Encoder[Long] = org.apache.spark.sql.Encoders.scalaLong
-    val timeout =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-
-    ds.groupByKey(key)
-      .flatMapGroupsWithState[Long, V](OutputMode.Append, timeout) {
-        (_: K, records: Iterator[V], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val hwm = state.getOption.getOrElse(Long.MinValue)
-            // Reduce the whole micro-batch to the single max-version record
-            // first, so output is independent of same-key arrival order
-            // within the batch (versions [1,2] and [2,1] both emit exactly
-            // the version-2 record) — matching the batch twin
-            // Dedup.latestWins, which emits only the max per key.
-            var best: Option[V] = None
-            records.foreach { r =>
-              if (best.forall(b => version(r) > version(b))) best = Some(r)
-            }
-            val emitted = best.filter(r => version(r) > hwm)
-            emitted.foreach(r => state.update(version(r)))
-            if (emitted.nonEmpty || state.exists)
-              ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            emitted.iterator
-          }
-      }
-  }
+  )(implicit ke: Encoder[K], ve: Encoder[V], tupleEnc: Encoder[(K, V)]): Dataset[V] =
+    latestWinsFold[K, V](version).fmgws(ds, key, ttl)
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Exponentially-decayed per-key activity score on `transformWithState`
   * (SURVEY.md §2 B183) — the streaming "what's trending now" primitive: a
@@ -36,43 +36,6 @@ object Trending {
   /** Emitted after every batch that touches the key. */
   case class TopicScore(topic: String, score: Double, lastMs: Long, nEvents: Long)
 
-  private class Processor(halfLifeMs: Long, ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, Long), TopicScore] {
-    @transient private var state: ValueState[(Double, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[(Double, Long, Long)](
-        "decayed",
-        Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong, Encoders.scalaLong),
-        ttl
-      )
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, Long)],
-        timerValues: TimerValues
-    ): Iterator[TopicScore] = {
-      var (score, lastMs, n) = Option(state.get()).getOrElse((0.0, Long.MinValue, 0L))
-      // sort the batch slice by event time: fold order must not depend on
-      // shuffle iterator order (see determinism note above). The slice is
-      // one key's rows in one micro-batch — bounded, safe to materialize.
-      rows.toSeq.sortBy(_._2).foreach { case (_, ms) =>
-        // lazy decay: bring the score forward to this event's time, then
-        // bump. A backwards timestamp (replayed/late row) decays by 0 —
-        // max(0, Δt) — instead of inflating the score exponentially.
-        if (lastMs != Long.MinValue) {
-          val dt = math.max(0L, ms - lastMs)
-          score *= math.pow(2.0, -dt.toDouble / halfLifeMs.toDouble)
-        }
-        score += 1.0
-        lastMs = math.max(lastMs, ms)
-        n += 1
-      }
-      state.update((score, lastMs, n))
-      Iterator.single(TopicScore(key, score, lastMs, n))
-    }
-  }
-
   /** @param ds (topic, eventTimeMs) rows
     * @param halfLifeMs score halves after this much event-time inactivity
     */
@@ -82,9 +45,29 @@ object Trending {
       ttl: TTLConfig = TTLConfig.NONE
   ): Dataset[TopicScore] = {
     require(halfLifeMs > 0, s"halfLifeMs must be positive, got $halfLifeMs")
-    implicit val outEnc: Encoder[TopicScore] = Encoders.product[TopicScore]
-    implicit val keyEnc: Encoder[String]     = Encoders.STRING
-    ds.groupByKey(_._1)
-      .transformWithState(new Processor(halfLifeMs, ttl), TwsSupport.timeModeFor(ttl), OutputMode.Update())
+    val fold = new KeyedFold[String, (String, Long), (Double, Long, Long), TopicScore](
+      "decayed",
+      Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong, Encoders.scalaLong),
+      (0.0, Long.MinValue, 0L))({
+      (key, decayed, rows) =>
+        var (score, lastMs, n) = decayed
+        // sort the batch slice by event time: fold order must not depend on
+        // shuffle iterator order (see determinism note above). The slice is
+        // one key's rows in one micro-batch — bounded, safe to materialize.
+        rows.toSeq.sortBy(_._2).foreach { case (_, ms) =>
+          // lazy decay: bring the score forward to this event's time, then
+          // bump. A backwards timestamp (replayed/late row) decays by 0 —
+          // max(0, Δt) — instead of inflating the score exponentially.
+          if (lastMs != Long.MinValue) {
+            val dt = math.max(0L, ms - lastMs)
+            score *= math.pow(2.0, -dt.toDouble / halfLifeMs.toDouble)
+          }
+          score += 1.0
+          lastMs = math.max(lastMs, ms)
+          n += 1
+        }
+        (Some((score, lastMs, n)), Iterator.single(TopicScore(key, score, lastMs, n)))
+    })
+    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[TopicScore])
   }
 }

@@ -46,6 +46,10 @@ object WorkDirs {
     * FILE, which the file source cannot watch directly. Returns the
     * scratch dir. Any loader-side column adaptation (Tables.events' ts
     * normalization) must be applied INSIDE the stream by the caller.
+    *
+    * Only a flat table is supported: a directory with subdirectories (a
+    * hive-partitioned layout) or with no top-level `*.parquet` file fails
+    * loudly instead of streaming a partial or empty table.
     */
   def stageRawTable(spark: SparkSession, fixtureDir: String, table: String, label: String): String = {
     val dst  = fresh(spark, label)
@@ -54,9 +58,13 @@ object WorkDirs {
     val fs   = from.getFileSystem(conf)
     val to   = new Path(dst)
     val files =
-      if (fs.getFileStatus(from).isDirectory)
-        fs.listStatus(from).filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")).map(_.getPath)
-      else Array(from)
+      if (fs.getFileStatus(from).isDirectory) {
+        val entries = fs.listStatus(from)
+        require(!entries.exists(_.isDirectory),
+          s"$from has subdirectories (partitioned layout?); only a flat table can be staged")
+        entries.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")).map(_.getPath)
+      } else Array(from)
+    require(files.nonEmpty, s"$from has no *.parquet file to stage")
     files.foreach { f =>
       org.apache.hadoop.fs.FileUtil.copy(fs, f, fs, new Path(to, f.getName), false, conf)
     }

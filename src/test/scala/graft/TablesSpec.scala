@@ -73,4 +73,13 @@ class TablesSpec extends GraftSpecBase {
     val e = intercept[IllegalStateException](Tables.events(spark, dir))
     assert(e.getMessage.contains("unsupported type"))
   }
+
+  test("in-stream events ts adaptation fails loudly on an unexpected ts type, like the loader") {
+    // events_stream_join stages the raw fixture bytes and adapts ts inside
+    // the stream; it must throw where Tables.events throws, not stream nulls
+    val rows = Seq(Row(1L, "2024-01-01 00:00:00", 1L, "t", 1.0, "{}"))
+    val dir  = writeEvents(rows, schemaWithTs(StringType))
+    val e = intercept[IllegalStateException](QueriesExt14.queries("events_stream_join")(spark, dir))
+    assert(e.getMessage.contains("unsupported type"))
+  }
 }

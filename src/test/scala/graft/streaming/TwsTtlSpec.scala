@@ -8,8 +8,8 @@ import graft.GraftSpecBase
 
 /** The "TTL-expirable state" claim, proven end-to-end: a
   * transformWithState operator given a TTL must (a) start at all — TTL
-  * state demands processing-time mode, which TwsSupport.timeModeFor
-  * derives (TimeMode.None + a TTL throws at state registration) — and
+  * state demands processing-time mode, which KeyedFold.tws derives from
+  * the TTL (TimeMode.None + a TTL throws at state registration) — and
   * (b) actually forget a key that went cold longer than the TTL.
   *
   * Shape note: the test uses CHECKPOINTED single-batch (Trigger.Once)
@@ -77,6 +77,40 @@ class TwsTtlSpec extends GraftSpecBase {
       val r3 = drainOnce("ttl_r3")
       assert(r3.map(_.n) === Seq(1L), s"state should have expired: $r3")
       assert(r3.head.total === 30.0)
+    } finally {
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
+  test("StatefulDedup.latestWinsTws with a TTL starts and emits the max-version row") {
+    // TTL'd state needs the processing-time mode: under TimeMode.None any
+    // TTL fails at state registration (StatefulProcessorCannotAssignTTLInTimeMode)
+    spark.conf.set(
+      "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+    val srcDir = java.nio.file.Files.createTempDirectory("ttl-lw-src").toString
+    val ckpt   = java.nio.file.Files.createTempDirectory("ttl-lw-ckpt").toString
+    try {
+      Seq(("k", 1L, "a"), ("k", 3L, "c"), ("k", 2L, "b")).toDF("key", "version", "name")
+        .write.mode("append").parquet(srcDir)
+      val got = new java.util.concurrent.CopyOnWriteArrayList[(String, Long, String)]()
+      val src = spark.readStream
+        .schema("key STRING, version BIGINT, name STRING")
+        .parquet(srcDir)
+        .as[(String, Long, String)]
+      val q = StatefulDedup
+        .latestWinsTws[String, (String, Long, String)](src, _._1, _._2, ttl = TTLConfig(Duration.ofSeconds(10)))
+        .writeStream.queryName("ttl_lw").outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[(String, Long, String)], _: Long) =>
+          batch.collect().foreach(got.add)
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(onceTrigger)
+        .start()
+      q.awaitTermination()
+      import scala.jdk.CollectionConverters._
+      assert(got.asScala.toSeq === Seq(("k", 3L, "c")))
     } finally {
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }

@@ -27,4 +27,20 @@ class WorkDirsSpec extends GraftSpecBase {
       assert(new java.io.File(new java.net.URI(d)).isDirectory)
     } finally spark.conf.unset("spark.graft.stream.workdir")
   }
+
+  test("stageRawTable rejects a hive-partitioned table instead of staging part of it") {
+    import spark.implicits._
+    val fixture = java.nio.file.Files.createTempDirectory("wd-partitioned").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "part")
+      .write.partitionBy("part").parquet(s"$fixture/t.parquet")
+    val e = intercept[IllegalArgumentException](WorkDirs.stageRawTable(spark, fixture, "t", "wd-stage"))
+    assert(e.getMessage.contains("subdirectories"))
+  }
+
+  test("stageRawTable rejects a table directory with no parquet file") {
+    val fixture = java.nio.file.Files.createTempDirectory("wd-empty").toString
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(fixture, "t.parquet"))
+    val e = intercept[IllegalArgumentException](WorkDirs.stageRawTable(spark, fixture, "t", "wd-stage"))
+    assert(e.getMessage.contains("no *.parquet file"))
+  }
 }
