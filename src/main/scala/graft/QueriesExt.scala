@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.{normSql, shinglesSql}
 import graft.functions.Hashing
 import graft.operators.{Dedup, EventAnalytics, Similarity, TextAnalysis}
 
@@ -20,12 +21,9 @@ import graft.operators.{Dedup, EventAnalytics, Similarity, TextAnalysis}
 object QueriesExt {
 
   // SQL fragments shared by the oracles
-  private[graft] val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
   private[graft] def h32Sql(x: String)  = s"CAST('0x' || substr(md5($x),1,8) AS BIGINT)"
   private def h60Sql(x: String)  = s"CAST('0x' || substr(md5($x),1,15) AS BIGINT)"
   private[graft] val (permsA, permsB)   = Hashing.PermsAsSqlLists
-  private[graft] val shinglesSql =
-    "CASE WHEN len(toks)>=3 THEN [array_to_string(toks[i:i+2],' ') for i in range(1,len(toks)-1)] ELSE [norm] END"
 
   // ------------------------------------------------------------- text (B5)
 
@@ -107,7 +105,7 @@ object QueriesExt {
   private val dedupMinhashSql =
     s"""WITH nrm AS (SELECT doc_id, $normSql AS norm FROM documents),
        |tok AS (SELECT doc_id, norm, string_split(norm,' ') AS toks FROM nrm),
-       |sh AS (SELECT doc_id, $shinglesSql AS shingles FROM tok),
+       |sh AS (SELECT doc_id, ${shinglesSql(3)} AS shingles FROM tok),
        |hs AS (SELECT doc_id, [${h32Sql("s")} for s in shingles] AS hlist,
        |       list_distinct(shingles) AS sset FROM sh),
        |sg AS (SELECT doc_id,
@@ -145,7 +143,7 @@ object QueriesExt {
   private val dedupMinhashCalibrationSql =
     s"""WITH nrm AS (SELECT doc_id, $normSql AS norm FROM documents),
        |tok AS (SELECT doc_id, norm, string_split(norm,' ') AS toks FROM nrm),
-       |sh AS (SELECT doc_id, $shinglesSql AS shingles FROM tok),
+       |sh AS (SELECT doc_id, ${shinglesSql(3)} AS shingles FROM tok),
        |hs AS (SELECT doc_id, [${h32Sql("s")} for s in shingles] AS hlist,
        |       list_distinct(shingles) AS sset FROM sh),
        |sg AS (SELECT doc_id,
@@ -207,7 +205,7 @@ object QueriesExt {
   private val dedupNgramJaccardSql =
     s"""WITH nrm AS (SELECT doc_id, source, $normSql AS norm FROM documents),
        |tok AS (SELECT doc_id, source, norm, string_split(norm,' ') AS toks FROM nrm),
-       |sh AS (SELECT doc_id, source, $shinglesSql AS shingles FROM tok),
+       |sh AS (SELECT doc_id, source, ${shinglesSql(3)} AS shingles FROM tok),
        |st AS (SELECT doc_id, source, list_distinct(shingles) AS sset FROM sh)
        |SELECT id_a, id_b, jaccard FROM (
        |  SELECT x.doc_id AS id_a, y.doc_id AS id_b,
@@ -355,43 +353,23 @@ object QueriesExt {
 
   // ------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_token_stats"      -> (textTokenStats _),
-    "text_quality"          -> (textQuality _),
-    "text_langid"           -> (textLangId _),
-    "text_fingerprint"      -> (textFingerprint _),
-    "dedup_exact_text"      -> (dedupExactText _),
-    "dedup_minhash_lsh"     -> (dedupMinhash _),
-    "dedup_minhash_calibration" -> (dedupMinhashCalibration _),
-    "dedup_simhash"         -> (dedupSimhash _),
-    "dedup_ngram_jaccard"   -> (dedupNgramJaccard _),
-    "dedup_embed_cosine"    -> (dedupEmbedCosine _),
-    "sim_topk_cosine"       -> (simTopK _),
-    "sim_ann_bucketed"      -> (simAnnBucketed _),
-    "embed_norm_stats"      -> (embedNormStats _),
-    "events_tumbling_hourly" -> (eventsTumblingHourly _),
-    "events_sessionize"     -> (eventsSessionize _),
-    "events_hourly_users"   -> (eventsHourlyUsers _),
-    "mm_binary_meta"        -> (mmBinaryMeta _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_token_stats"      -> textTokenStatsSql,
-    "text_quality"          -> textQualitySql,
-    "text_langid"           -> textLangIdSql,
-    "text_fingerprint"      -> textFingerprintSql,
-    "dedup_exact_text"      -> dedupExactTextSql,
-    "dedup_minhash_lsh"     -> dedupMinhashSql,
-    "dedup_minhash_calibration" -> dedupMinhashCalibrationSql,
-    "dedup_simhash"         -> dedupSimhashSql,
-    "dedup_ngram_jaccard"   -> dedupNgramJaccardSql,
-    "dedup_embed_cosine"    -> dedupEmbedCosineSql,
-    "sim_topk_cosine"       -> simTopKSql,
-    "sim_ann_bucketed"      -> simAnnBucketedSql,
-    "embed_norm_stats"      -> embedNormStatsSql,
-    "events_tumbling_hourly" -> eventsTumblingHourlySql,
-    "events_sessionize"     -> eventsSessionizeSql,
-    "events_hourly_users"   -> eventsHourlyUsersSql,
-    "mm_binary_meta"        -> mmBinaryMetaSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_token_stats", Seq("B5"), textTokenStats, textTokenStatsSql),
+    QuerySpec("text_quality", Seq("B5"), textQuality, textQualitySql),
+    QuerySpec("text_langid", Seq("B5"), textLangId, textLangIdSql),
+    QuerySpec("text_fingerprint", Seq("B13"), textFingerprint, textFingerprintSql),
+    QuerySpec("dedup_exact_text", Seq("B1"), dedupExactText, dedupExactTextSql),
+    QuerySpec("dedup_minhash_lsh", Seq("B3"), dedupMinhash, dedupMinhashSql),
+    QuerySpec("dedup_minhash_calibration", Seq("B103"), dedupMinhashCalibration, dedupMinhashCalibrationSql),
+    QuerySpec("dedup_simhash", Seq("B3"), dedupSimhash, dedupSimhashSql),
+    QuerySpec("dedup_ngram_jaccard", Seq("B3"), dedupNgramJaccard, dedupNgramJaccardSql),
+    QuerySpec("dedup_embed_cosine", Seq("B4"), dedupEmbedCosine, dedupEmbedCosineSql),
+    QuerySpec("sim_topk_cosine", Seq("B4"), simTopK, simTopKSql),
+    QuerySpec("sim_ann_bucketed", Seq("B4"), simAnnBucketed, simAnnBucketedSql),
+    QuerySpec("embed_norm_stats", Seq("B6"), embedNormStats, embedNormStatsSql),
+    QuerySpec("events_tumbling_hourly", Seq("B7"), eventsTumblingHourly, eventsTumblingHourlySql),
+    QuerySpec("events_sessionize", Seq("B7"), eventsSessionize, eventsSessionizeSql),
+    QuerySpec("events_hourly_users", Seq("B40"), eventsHourlyUsers, eventsHourlyUsersSql),
+    QuerySpec("mm_binary_meta", Seq("B6"), mmBinaryMeta, mmBinaryMetaSql)
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.{normSql, shinglesSql}
 import graft.functions.Hashing
 import graft.operators.{Similarity, TextAnalysis}
 
@@ -84,14 +85,6 @@ object QueriesExt10 {
 
   private def textBoilerplate(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.boilerplateScore(documents(s, dir), "doc_id", "text", shingleWords = 3, minDocFreq = 5)
-
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
-
-  /** Same k-word shingle comprehension as the codegen WordKGrams fallback
-    * contract (QueriesExt9 / parity rules).
-    */
-  private def shinglesSql(k: Int) =
-    s"CASE WHEN len(toks)>=$k THEN [array_to_string(toks[i:i+${k - 1}],' ') for i in range(1,len(toks)-${k - 2})] ELSE [norm] END"
 
   private val textBoilerplateSql =
     s"""WITH t AS (SELECT doc_id, $normSql AS norm, string_split($normSql,' ') AS toks FROM documents),
@@ -324,21 +317,12 @@ object QueriesExt10 {
 
   // ---------------------------------------------------------- registration
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_pii_scrub"   -> (textPiiScrub _),
-    "text_boilerplate" -> (textBoilerplate _),
-    "q_domain_quota"   -> (qDomainQuota _),
-    "sim_rp_lsh"       -> (simRpLsh _),
-    "text_lm_score"    -> (textLmScore _),
-    "events_anomaly"   -> (eventsAnomaly _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_pii_scrub"   -> textPiiScrubSql,
-    "text_boilerplate" -> textBoilerplateSql,
-    "q_domain_quota"   -> qDomainQuotaSql,
-    "sim_rp_lsh"       -> simRpLshSql,
-    "text_lm_score"    -> textLmScoreSql,
-    "events_anomaly"   -> eventsAnomalySql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_pii_scrub", Seq("B18"), textPiiScrub, textPiiScrubSql),
+    QuerySpec("text_boilerplate", Seq("B19"), textBoilerplate, textBoilerplateSql),
+    QuerySpec("q_domain_quota", Seq("B20"), qDomainQuota, qDomainQuotaSql),
+    QuerySpec("sim_rp_lsh", Seq("B21"), simRpLsh, simRpLshSql),
+    QuerySpec("text_lm_score", Seq("B22"), textLmScore, textLmScoreSql),
+    QuerySpec("events_anomaly", Seq("B23"), eventsAnomaly, eventsAnomalySql)
   )
 }

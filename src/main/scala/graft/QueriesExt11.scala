@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.normSql
 import graft.operators.TextAnalysis
 
 /** Eleventh query batch — five training-data pipeline operators that round
@@ -25,8 +26,6 @@ import graft.operators.TextAnalysis
   * counts, md5 ordering/content hashes so engines compare byte-for-byte.
   */
 object QueriesExt11 {
-
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
 
   // -------------------------------------------------- sequence packing
 
@@ -904,45 +903,24 @@ object QueriesExt11 {
 
   // ------------------------------------------------------------ registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pack_sequences"   -> (qPackSequences _),
-    "text_chunk_overlap" -> (textChunkOverlap _),
-    "text_bpe_pairs"     -> (textBpePairs _),
-    "q_mixture_weights"  -> (qMixtureWeights _),
-    "dedup_lines"        -> (dedupLines _),
-    "sim_knn_graph"      -> (simKnnGraph _),
-    "mm_phash_neardup"   -> (mmPhashNeardup _),
-    "text_url_normalize" -> (textUrlNormalize _),
-    "q_bloom_semi_join"  -> (qBloomSemiJoin _),
-    "q_column_profile"   -> (qColumnProfile _),
-    "q_dq_checks"        -> (qDqChecks _),
-    "curate_pipeline_e2e" -> (qCuratePipelineE2e _),
-    "sim_ivf_incremental" -> (simIvfIncremental _),
-    "q_source_overlap"   -> (qSourceOverlap _),
-    "q_skew_profile"     -> (qSkewProfile _),
-    "dedup_containment"  -> (dedupContainment _),
-    "events_window_topk" -> (eventsWindowTopk _),
-    "events_dau_stickiness" -> (eventsDauStickiness _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_pack_sequences"   -> qPackSequencesSql,
-    "text_chunk_overlap" -> textChunkOverlapSql,
-    "text_bpe_pairs"     -> textBpePairsSql,
-    "q_mixture_weights"  -> qMixtureWeightsSql,
-    "dedup_lines"        -> dedupLinesSql,
-    "sim_knn_graph"      -> simKnnGraphSql,
-    "mm_phash_neardup"   -> mmPhashNeardupSql,
-    "text_url_normalize" -> textUrlNormalizeSql,
-    "q_bloom_semi_join"  -> qBloomSemiJoinSql,
-    "q_column_profile"   -> qColumnProfileSql,
-    "q_dq_checks"        -> qDqChecksSql,
-    "curate_pipeline_e2e" -> qCuratePipelineE2eSql,
-    "sim_ivf_incremental" -> simIvfIncrementalSql,
-    "q_source_overlap"   -> qSourceOverlapSql,
-    "q_skew_profile"     -> qSkewProfileSql,
-    "dedup_containment"  -> dedupContainmentSql,
-    "events_window_topk" -> eventsWindowTopkSql,
-    "events_dau_stickiness" -> eventsDauStickinessSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_pack_sequences", Seq("B24"), qPackSequences, qPackSequencesSql),
+    QuerySpec("text_chunk_overlap", Seq("B25"), textChunkOverlap, textChunkOverlapSql),
+    QuerySpec("text_bpe_pairs", Seq("B26"), textBpePairs, textBpePairsSql),
+    QuerySpec("q_mixture_weights", Seq("B27"), qMixtureWeights, qMixtureWeightsSql),
+    QuerySpec("dedup_lines", Seq("B28"), dedupLines, dedupLinesSql),
+    QuerySpec("sim_knn_graph", Seq("B29"), simKnnGraph, simKnnGraphSql),
+    QuerySpec("mm_phash_neardup", Seq("B30"), mmPhashNeardup, mmPhashNeardupSql),
+    QuerySpec("text_url_normalize", Seq("B31"), textUrlNormalize, textUrlNormalizeSql),
+    QuerySpec("q_bloom_semi_join", Seq("B32"), qBloomSemiJoin, qBloomSemiJoinSql),
+    QuerySpec("q_column_profile", Seq("B33"), qColumnProfile, qColumnProfileSql),
+    QuerySpec("q_dq_checks", Seq("B33"), qDqChecks, qDqChecksSql),
+    QuerySpec("curate_pipeline_e2e", Seq("B34"), qCuratePipelineE2e, qCuratePipelineE2eSql),
+    QuerySpec("sim_ivf_incremental", Seq("B35"), simIvfIncremental, simIvfIncrementalSql),
+    QuerySpec("q_source_overlap", Seq("B37"), qSourceOverlap, qSourceOverlapSql),
+    QuerySpec("q_skew_profile", Seq("B38"), qSkewProfile, qSkewProfileSql),
+    QuerySpec("dedup_containment", Seq("B39"), dedupContainment, dedupContainmentSql),
+    QuerySpec("events_window_topk", Seq("B40"), eventsWindowTopk, eventsWindowTopkSql),
+    QuerySpec("events_dau_stickiness", Seq("B40"), eventsDauStickiness, eventsDauStickinessSql)
   )
 }

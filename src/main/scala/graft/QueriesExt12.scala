@@ -89,11 +89,7 @@ object QueriesExt12 {
 
   // ------------------------------------------------------------ registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "jsonl_ingest" -> (jsonlIngest _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "jsonl_ingest" -> jsonlIngestSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("jsonl_ingest", Seq("A13", "B36"), jsonlIngest, jsonlIngestSql)
   )
 }

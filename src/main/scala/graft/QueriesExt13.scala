@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.normSql
 import graft.operators.TextAnalysis
 
 /** Round-7 additions: verbatim-passage reuse detection (B41) and
@@ -12,8 +13,6 @@ import graft.operators.TextAnalysis
   * pipeline runs between dedup and shard packing.
   */
 object QueriesExt13 {
-
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
 
   // ------------------------------------- verbatim passage reuse (B41)
 
@@ -406,21 +405,12 @@ object QueriesExt13 {
 
   // ------------------------------------------------------------ registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_dup_spans"        -> (textDupSpans _),
-    "q_token_budget_select" -> (qTokenBudgetSelect _),
-    "sim_centroid_outliers" -> (simCentroidOutliers _),
-    "csv_ingest"            -> (csvIngest _),
-    "text_vocab_coverage"   -> (textVocabCoverage _),
-    "curate_stream_e2e"     -> (curateStreamE2e _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_dup_spans"        -> textDupSpansSql,
-    "q_token_budget_select" -> qTokenBudgetSelectSql,
-    "sim_centroid_outliers" -> simCentroidOutliersSql,
-    "csv_ingest"            -> csvIngestSql,
-    "text_vocab_coverage"   -> textVocabCoverageSql,
-    "curate_stream_e2e"     -> curateStreamE2eSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_dup_spans", Seq("B41"), textDupSpans, textDupSpansSql),
+    QuerySpec("q_token_budget_select", Seq("B42"), qTokenBudgetSelect, qTokenBudgetSelectSql),
+    QuerySpec("sim_centroid_outliers", Seq("B43"), simCentroidOutliers, simCentroidOutliersSql),
+    QuerySpec("csv_ingest", Seq("A13", "B44"), csvIngest, csvIngestSql),
+    QuerySpec("text_vocab_coverage", Seq("B45"), textVocabCoverage, textVocabCoverageSql),
+    QuerySpec("curate_stream_e2e", Seq("B46"), curateStreamE2e, curateStreamE2eSql)
   )
 }

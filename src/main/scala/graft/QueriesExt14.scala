@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables._
+import graft.Parity.normSql
 import graft.operators.TextAnalysis
 
 /** Round-7 additions, batch 2: the watermarked stream-stream interval join
@@ -330,8 +331,6 @@ object QueriesExt14 {
 
   // ------------------------------ hashed-feature linear scorer (B49)
 
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
-
   /** fastText-style hashed bag-of-words linear classifier scoring: every
     * token hashes into one of 256 weight buckets (md5 feature hashing —
     * no vocabulary table at all), the document score is the mean bucket
@@ -434,21 +433,12 @@ object QueriesExt14 {
 
   // ------------------------------------------------------------ registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_stream_join"   -> (eventsStreamJoin _),
-    "cdc_enrich_stream"    -> (cdcEnrichStream _),
-    "cdc_apply_stream"     -> (cdcApplyStream _),
-    "text_html_extract"    -> (textHtmlExtract _),
-    "text_hash_classifier" -> (textHashClassifier _),
-    "sim_kmeans_assign"    -> (simKmeansAssign _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_stream_join"   -> eventsStreamJoinSql,
-    "cdc_enrich_stream"    -> cdcEnrichStreamSql,
-    "cdc_apply_stream"     -> cdcApplyStreamSql,
-    "text_html_extract"    -> textHtmlExtractSql,
-    "text_hash_classifier" -> textHashClassifierSql,
-    "sim_kmeans_assign"    -> simKmeansAssignSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_stream_join", Seq("B47"), eventsStreamJoin, eventsStreamJoinSql),
+    QuerySpec("cdc_enrich_stream", Seq("A5"), cdcEnrichStream, cdcEnrichStreamSql),
+    QuerySpec("cdc_apply_stream", Seq("B10"), cdcApplyStream, cdcApplyStreamSql),
+    QuerySpec("text_html_extract", Seq("B48"), textHtmlExtract, textHtmlExtractSql),
+    QuerySpec("text_hash_classifier", Seq("B49"), textHashClassifier, textHashClassifierSql),
+    QuerySpec("sim_kmeans_assign", Seq("B50"), simKmeansAssign, simKmeansAssignSql)
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.normSql
 
 /** Round-7 additions, batch 3: cluster-balanced sampling (B51), corpus
   * snapshot diff (B52), and histogram-exact per-source quantile
@@ -12,8 +13,6 @@ import graft.Tables._
   * threshold-setting steps of a corpus build.
   */
 object QueriesExt15 {
-
-  private val normSqlD = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
 
   // ------------------------------ cluster-balanced sampling (B51)
 
@@ -440,7 +439,7 @@ object QueriesExt15 {
   }
 
   private val textAutocompleteTopkSql =
-    s"""WITH tok AS (SELECT unnest(string_split($normSqlD, ' ')) AS term FROM documents),
+    s"""WITH tok AS (SELECT unnest(string_split($normSql, ' ')) AS term FROM documents),
        |words0 AS (SELECT term FROM tok WHERE length(term) > 0),
        |words AS (SELECT term, count(*) AS cnt FROM words0 GROUP BY 1),
        |pfx AS (SELECT term, cnt,
@@ -493,8 +492,8 @@ object QueriesExt15 {
 
   private val textMaxWordRunSql =
     s"""WITH toks AS (SELECT doc_id,
-       |    unnest(string_split($normSqlD, ' ')) AS term,
-       |    generate_subscripts(string_split($normSqlD, ' '), 1) - 1 AS pos
+       |    unnest(string_split($normSql, ' ')) AS term,
+       |    generate_subscripts(string_split($normSql, ' '), 1) - 1 AS pos
        |  FROM documents),
        |runs AS (SELECT doc_id, term,
        |    pos - row_number() OVER (PARTITION BY doc_id, term ORDER BY pos) AS grp
@@ -509,27 +508,15 @@ object QueriesExt15 {
 
   // ------------------------------------------------------------ registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_cluster_sample"     -> (simClusterSample _),
-    "corpus_snapshot_diff"   -> (corpusSnapshotDiff _),
-    "q_quantile_calibration" -> (qQuantileCalibration _),
-    "q_k_anonymity"          -> (qKAnonymity _),
-    "corpus_schema_drift"    -> (corpusSchemaDrift _),
-    "events_decay_score"     -> (eventsDecayScore _),
-    "q_weighted_sample"      -> (qWeightedSample _),
-    "text_autocomplete_topk" -> (textAutocompleteTopk _),
-    "text_max_word_run"      -> (textMaxWordRun _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "sim_cluster_sample"     -> simClusterSampleSql,
-    "corpus_snapshot_diff"   -> corpusSnapshotDiffSql,
-    "q_quantile_calibration" -> qQuantileCalibrationSql,
-    "q_k_anonymity"          -> qKAnonymitySql,
-    "corpus_schema_drift"    -> corpusSchemaDriftSql,
-    "events_decay_score"     -> eventsDecayScoreSql,
-    "q_weighted_sample"      -> qWeightedSampleSql,
-    "text_autocomplete_topk" -> textAutocompleteTopkSql,
-    "text_max_word_run"      -> textMaxWordRunSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_cluster_sample", Seq("B51"), simClusterSample, simClusterSampleSql),
+    QuerySpec("corpus_snapshot_diff", Seq("B52"), corpusSnapshotDiff, corpusSnapshotDiffSql),
+    QuerySpec("q_quantile_calibration", Seq("B53"), qQuantileCalibration, qQuantileCalibrationSql),
+    QuerySpec("q_k_anonymity", Seq("B54"), qKAnonymity, qKAnonymitySql),
+    QuerySpec("corpus_schema_drift", Seq("B55"), corpusSchemaDrift, corpusSchemaDriftSql),
+    QuerySpec("events_decay_score", Seq("B56"), eventsDecayScore, eventsDecayScoreSql),
+    QuerySpec("q_weighted_sample", Seq("B57"), qWeightedSample, qWeightedSampleSql),
+    QuerySpec("text_autocomplete_topk", Seq("B58"), textAutocompleteTopk, textAutocompleteTopkSql),
+    QuerySpec("text_max_word_run", Seq("B59"), textMaxWordRun, textMaxWordRunSql)
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.normSql
 
 /** Round-7 additions, batch 4: PMI collocation mining (B60), the event
   * transition matrix (B61), and URL blocklist filtering via the
@@ -906,7 +907,6 @@ object QueriesExt16 {
   }
 
   private val textLangidConfusionSql = {
-    val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
     s"""WITH base AS (SELECT doc_id, lang, string_split($normSql, ' ') AS toks FROM documents),
        |v AS (SELECT doc_id, lang,
        |  len(list_filter(toks, x -> list_contains(['the','and','of','is'], x))) AS v_en,
@@ -929,43 +929,23 @@ object QueriesExt16 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_pmi_collocations" -> (textPmiCollocations _),
-    "events_transitions"    -> (eventsTransitions _),
-    "text_url_blocklist"    -> (textUrlBlocklist _),
-    "events_winsorize"      -> (eventsWinsorize _),
-    "graph_pagerank"        -> (graphPagerank _),
-    "events_top_paths"      -> (eventsTopPaths _),
-    "q_copurchase_pairs"    -> (qCopurchasePairs _),
-    "events_trend_slope"    -> (eventsTrendSlope _),
-    "text_inverted_index"   -> (textInvertedIndex _),
-    "q_partial_merge"       -> (qPartialMerge _),
-    "sim_rrf_fusion"        -> (simRrfFusion _),
-    "q_hierarchy_flatten"   -> (qHierarchyFlatten _),
-    "events_debounce"       -> (eventsDebounce _),
-    "text_kwic"             -> (textKwic _),
-    "sim_negative_sample"   -> (simNegativeSample _),
-    "text_skipgram_pairs"   -> (textSkipgramPairs _),
-    "text_langid_confusion" -> (textLangidConfusion _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_pmi_collocations" -> textPmiCollocationsSql,
-    "events_transitions"    -> eventsTransitionsSql,
-    "text_url_blocklist"    -> textUrlBlocklistSql,
-    "events_winsorize"      -> eventsWinsorizeSql,
-    "graph_pagerank"        -> graphPagerankSql,
-    "events_top_paths"      -> eventsTopPathsSql,
-    "q_copurchase_pairs"    -> qCopurchasePairsSql,
-    "events_trend_slope"    -> eventsTrendSlopeSql,
-    "text_inverted_index"   -> textInvertedIndexSql,
-    "q_partial_merge"       -> qPartialMergeSql,
-    "sim_rrf_fusion"        -> simRrfFusionSql,
-    "q_hierarchy_flatten"   -> qHierarchyFlattenSql,
-    "events_debounce"       -> eventsDebounceSql,
-    "text_kwic"             -> textKwicSql,
-    "sim_negative_sample"   -> simNegativeSampleSql,
-    "text_skipgram_pairs"   -> textSkipgramPairsSql,
-    "text_langid_confusion" -> textLangidConfusionSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_pmi_collocations", Seq("B60"), textPmiCollocations, textPmiCollocationsSql),
+    QuerySpec("events_transitions", Seq("B61"), eventsTransitions, eventsTransitionsSql),
+    QuerySpec("text_url_blocklist", Seq("B62"), textUrlBlocklist, textUrlBlocklistSql),
+    QuerySpec("events_winsorize", Seq("B63"), eventsWinsorize, eventsWinsorizeSql),
+    QuerySpec("graph_pagerank", Seq("B64"), graphPagerank, graphPagerankSql),
+    QuerySpec("events_top_paths", Seq("B65"), eventsTopPaths, eventsTopPathsSql),
+    QuerySpec("q_copurchase_pairs", Seq("B66"), qCopurchasePairs, qCopurchasePairsSql),
+    QuerySpec("events_trend_slope", Seq("B67"), eventsTrendSlope, eventsTrendSlopeSql),
+    QuerySpec("text_inverted_index", Seq("B68"), textInvertedIndex, textInvertedIndexSql),
+    QuerySpec("q_partial_merge", Seq("B69"), qPartialMerge, qPartialMergeSql),
+    QuerySpec("sim_rrf_fusion", Seq("B70"), simRrfFusion, simRrfFusionSql),
+    QuerySpec("q_hierarchy_flatten", Seq("B71"), qHierarchyFlatten, qHierarchyFlattenSql),
+    QuerySpec("events_debounce", Seq("B72"), eventsDebounce, eventsDebounceSql),
+    QuerySpec("text_kwic", Seq("B73"), textKwic, textKwicSql),
+    QuerySpec("sim_negative_sample", Seq("B74"), simNegativeSample, simNegativeSampleSql),
+    QuerySpec("text_skipgram_pairs", Seq("B75"), textSkipgramPairs, textSkipgramPairsSql),
+    QuerySpec("text_langid_confusion", Seq("B76"), textLangidConfusion, textLangidConfusionSql)
   )
 }

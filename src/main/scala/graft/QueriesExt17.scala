@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.dec2
 
 /** Round-7 additions, batch 6: calendar gap filling with rolling windows
   * (B77), conversion-latency percentiles (B78), and max-min fair-share
@@ -473,7 +474,6 @@ object QueriesExt17 {
     * the class summary is a 3-row hash-agg.
     */
   private def qParetoAbc(s: SparkSession, dir: String): DataFrame = {
-    val dec2 = (c: org.apache.spark.sql.Column) => c.cast("decimal(18,2)")
     val rev = lineitem(s, dir)
       .groupBy("l_partkey")
       .agg(
@@ -905,41 +905,22 @@ object QueriesExt17 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_gap_fill"        -> (eventsGapFill _),
-    "events_convert_latency" -> (eventsConvertLatency _),
-    "q_fair_share"           -> (qFairShare _),
-    "q_record_linkage"       -> (qRecordLinkage _),
-    "events_user_cohorts"    -> (eventsUserCohorts _),
-    "events_ab_test"         -> (eventsAbTest _),
-    "text_encoding_audit"    -> (textEncodingAudit _),
-    "q_pareto_abc"           -> (qParetoAbc _),
-    "q_rollup_shares"        -> (qRollupShares _),
-    "events_attribution"     -> (eventsAttribution _),
-    "text_bitmap_index"      -> (textBitmapIndex _),
-    "text_bitmap_codf"       -> (textBitmapCodf _),
-    "cdc_scd3_current"       -> (cdcScd3Current _),
-    "q_open_orders_sweep"    -> (qOpenOrdersSweep _),
-    "cdc_asof_snapshot"      -> (cdcAsofSnapshot _),
-    "q_cv_folds"             -> (qCvFolds _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_gap_fill"        -> eventsGapFillSql,
-    "events_convert_latency" -> eventsConvertLatencySql,
-    "q_fair_share"           -> qFairShareSql,
-    "q_record_linkage"       -> qRecordLinkageSql,
-    "events_user_cohorts"    -> eventsUserCohortsSql,
-    "events_ab_test"         -> eventsAbTestSql,
-    "text_encoding_audit"    -> textEncodingAuditSql,
-    "q_pareto_abc"           -> qParetoAbcSql,
-    "q_rollup_shares"        -> qRollupSharesSql,
-    "events_attribution"     -> eventsAttributionSql,
-    "text_bitmap_index"      -> textBitmapIndexSql,
-    "text_bitmap_codf"       -> textBitmapCodfSql,
-    "cdc_scd3_current"       -> cdcScd3CurrentSql,
-    "q_open_orders_sweep"    -> qOpenOrdersSweepSql,
-    "cdc_asof_snapshot"      -> cdcAsofSnapshotSql,
-    "q_cv_folds"             -> qCvFoldsSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_gap_fill", Seq("B77"), eventsGapFill, eventsGapFillSql),
+    QuerySpec("events_convert_latency", Seq("B78"), eventsConvertLatency, eventsConvertLatencySql),
+    QuerySpec("q_fair_share", Seq("B79"), qFairShare, qFairShareSql),
+    QuerySpec("q_record_linkage", Seq("B80"), qRecordLinkage, qRecordLinkageSql),
+    QuerySpec("events_user_cohorts", Seq("B81"), eventsUserCohorts, eventsUserCohortsSql),
+    QuerySpec("events_ab_test", Seq("B82"), eventsAbTest, eventsAbTestSql),
+    QuerySpec("text_encoding_audit", Seq("B83"), textEncodingAudit, textEncodingAuditSql),
+    QuerySpec("q_pareto_abc", Seq("B84"), qParetoAbc, qParetoAbcSql),
+    QuerySpec("q_rollup_shares", Seq("B85"), qRollupShares, qRollupSharesSql),
+    QuerySpec("events_attribution", Seq("B86"), eventsAttribution, eventsAttributionSql),
+    QuerySpec("text_bitmap_index", Seq("B87"), textBitmapIndex, textBitmapIndexSql),
+    QuerySpec("text_bitmap_codf", Seq("B88"), textBitmapCodf, textBitmapCodfSql),
+    QuerySpec("cdc_scd3_current", Seq("B10"), cdcScd3Current, cdcScd3CurrentSql),
+    QuerySpec("q_open_orders_sweep", Seq("B89"), qOpenOrdersSweep, qOpenOrdersSweepSql),
+    QuerySpec("cdc_asof_snapshot", Seq("B10t"), cdcAsofSnapshot, cdcAsofSnapshotSql),
+    QuerySpec("q_cv_folds", Seq("B90"), qCvFolds, qCvFoldsSql)
   )
 }

@@ -578,29 +578,16 @@ object QueriesExt18 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_srm_check" -> (eventsSrmCheck _),
-    "q_null_safe_join" -> (qNullSafeJoin _),
-    "q_id_gaps"        -> (qIdGaps _),
-    "q_assoc_rules"    -> (qAssocRules _),
-    "q_fifo_allocation" -> (qFifoAllocation _),
-    "mm_header_parse"   -> (mmHeaderParse _),
-    "graph_triangles"   -> (graphTriangles _),
-    "q_source_drift"    -> (qSourceDrift _),
-    "q_partition_skew"  -> (qPartitionSkew _),
-    "q_reco_fallback"   -> (qRecoFallback _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_srm_check" -> eventsSrmCheckSql,
-    "q_null_safe_join" -> qNullSafeJoinSql,
-    "q_id_gaps"        -> qIdGapsSql,
-    "q_assoc_rules"    -> qAssocRulesSql,
-    "q_fifo_allocation" -> qFifoAllocationSql,
-    "mm_header_parse"   -> mmHeaderParseSql,
-    "graph_triangles"   -> graphTrianglesSql,
-    "q_source_drift"    -> qSourceDriftSql,
-    "q_partition_skew"  -> qPartitionSkewSql,
-    "q_reco_fallback"   -> qRecoFallbackSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_srm_check", Seq("B91"), eventsSrmCheck, eventsSrmCheckSql),
+    QuerySpec("q_null_safe_join", Seq("B92"), qNullSafeJoin, qNullSafeJoinSql),
+    QuerySpec("q_id_gaps", Seq("B93"), qIdGaps, qIdGapsSql),
+    QuerySpec("q_assoc_rules", Seq("B94"), qAssocRules, qAssocRulesSql),
+    QuerySpec("q_fifo_allocation", Seq("B95"), qFifoAllocation, qFifoAllocationSql),
+    QuerySpec("mm_header_parse", Seq("B96"), mmHeaderParse, mmHeaderParseSql),
+    QuerySpec("graph_triangles", Seq("B97"), graphTriangles, graphTrianglesSql),
+    QuerySpec("q_source_drift", Seq("B98"), qSourceDrift, qSourceDriftSql),
+    QuerySpec("q_partition_skew", Seq("B99"), qPartitionSkew, qPartitionSkewSql),
+    QuerySpec("q_reco_fallback", Seq("B100"), qRecoFallback, qRecoFallbackSql)
   )
 }

@@ -1323,57 +1323,30 @@ object QueriesExt19 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_conformance"   -> (eventsConformance _),
-    "text_script_mismatch" -> (textScriptMismatch _),
-    "q_ivm_delta"          -> (qIvmDelta _),
-    "q_fk_audit"           -> (qFkAudit _),
-    "q_join_estimate"      -> (qJoinEstimate _),
-    "q_discount_response"  -> (qDiscountResponse _),
-    "q_rising_parts"       -> (qRisingParts _),
-    "events_user_holdout"  -> (eventsUserHoldout _),
-    "q_benford_audit"      -> (qBenfordAudit _),
-    "events_ltv_triangle"  -> (eventsLtvTriangle _),
-    "q_skyline"            -> (qSkyline _),
-    "events_interarrival"  -> (eventsInterarrival _),
-    "q_minmax_pruning"     -> (qMinmaxPruning _),
-    "q_rfm_segments"       -> (qRfmSegments _),
-    "events_noisy_neighbors" -> (eventsNoisyNeighbors _),
-    "events_seasonal_decomp" -> (eventsSeasonalDecomp _),
-    "q_rank_correlation"   -> (qRankCorrelation _),
-    "graph_bfs_hops"       -> (graphBfsHops _),
-    "text_vocab_uniqueness" -> (textVocabUniqueness _),
-    "q_basket_gini"        -> (qBasketGini _),
-    "events_mode_values"   -> (eventsModeValues _),
-    "events_entry_exit"    -> (eventsEntryExit _),
-    "q_chi2_contingency"   -> (qChi2Contingency _),
-    "events_crash_free"    -> (eventsCrashFree _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_conformance"   -> eventsConformanceSql,
-    "text_script_mismatch" -> textScriptMismatchSql,
-    "q_ivm_delta"          -> qIvmDeltaSql,
-    "q_fk_audit"           -> qFkAuditSql,
-    "q_join_estimate"      -> qJoinEstimateSql,
-    "q_discount_response"  -> qDiscountResponseSql,
-    "q_rising_parts"       -> qRisingPartsSql,
-    "events_user_holdout"  -> eventsUserHoldoutSql,
-    "q_benford_audit"      -> qBenfordAuditSql,
-    "events_ltv_triangle"  -> eventsLtvTriangleSql,
-    "q_skyline"            -> qSkylineSql,
-    "events_interarrival"  -> eventsInterarrivalSql,
-    "q_minmax_pruning"     -> qMinmaxPruningSql,
-    "q_rfm_segments"       -> qRfmSegmentsSql,
-    "events_noisy_neighbors" -> eventsNoisyNeighborsSql,
-    "events_seasonal_decomp" -> eventsSeasonalDecompSql,
-    "q_rank_correlation"   -> qRankCorrelationSql,
-    "graph_bfs_hops"       -> graphBfsHopsSql,
-    "text_vocab_uniqueness" -> textVocabUniquenessSql,
-    "q_basket_gini"        -> qBasketGiniSql,
-    "events_mode_values"   -> eventsModeValuesSql,
-    "events_entry_exit"    -> eventsEntryExitSql,
-    "q_chi2_contingency"   -> qChi2ContingencySql,
-    "events_crash_free"    -> eventsCrashFreeSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_conformance", Seq("B104"), eventsConformance, eventsConformanceSql),
+    QuerySpec("text_script_mismatch", Seq("B105"), textScriptMismatch, textScriptMismatchSql),
+    QuerySpec("q_ivm_delta", Seq("B106"), qIvmDelta, qIvmDeltaSql),
+    QuerySpec("q_fk_audit", Seq("B107"), qFkAudit, qFkAuditSql),
+    QuerySpec("q_join_estimate", Seq("B108"), qJoinEstimate, qJoinEstimateSql),
+    QuerySpec("q_discount_response", Seq("B109"), qDiscountResponse, qDiscountResponseSql),
+    QuerySpec("q_rising_parts", Seq("B110"), qRisingParts, qRisingPartsSql),
+    QuerySpec("events_user_holdout", Seq("B111"), eventsUserHoldout, eventsUserHoldoutSql),
+    QuerySpec("q_benford_audit", Seq("B112"), qBenfordAudit, qBenfordAuditSql),
+    QuerySpec("events_ltv_triangle", Seq("B113"), eventsLtvTriangle, eventsLtvTriangleSql),
+    QuerySpec("q_skyline", Seq("B114"), qSkyline, qSkylineSql),
+    QuerySpec("events_interarrival", Seq("B115"), eventsInterarrival, eventsInterarrivalSql),
+    QuerySpec("q_minmax_pruning", Seq("B116"), qMinmaxPruning, qMinmaxPruningSql),
+    QuerySpec("q_rfm_segments", Seq("B117"), qRfmSegments, qRfmSegmentsSql),
+    QuerySpec("events_noisy_neighbors", Seq("B118"), eventsNoisyNeighbors, eventsNoisyNeighborsSql),
+    QuerySpec("events_seasonal_decomp", Seq("B119"), eventsSeasonalDecomp, eventsSeasonalDecompSql),
+    QuerySpec("q_rank_correlation", Seq("B120"), qRankCorrelation, qRankCorrelationSql),
+    QuerySpec("graph_bfs_hops", Seq("B121"), graphBfsHops, graphBfsHopsSql),
+    QuerySpec("text_vocab_uniqueness", Seq("B122"), textVocabUniqueness, textVocabUniquenessSql),
+    QuerySpec("q_basket_gini", Seq("B123"), qBasketGini, qBasketGiniSql),
+    QuerySpec("events_mode_values", Seq("B124"), eventsModeValues, eventsModeValuesSql),
+    QuerySpec("events_entry_exit", Seq("B125"), eventsEntryExit, eventsEntryExitSql),
+    QuerySpec("q_chi2_contingency", Seq("B126"), qChi2Contingency, qChi2ContingencySql),
+    QuerySpec("events_crash_free", Seq("B127"), eventsCrashFree, eventsCrashFreeSql)
   )
 }

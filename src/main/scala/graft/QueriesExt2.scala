@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.dec2
 
 /** Third query batch: SQL front door, cube/pivot, JSON extraction,
   * moment-statistics with exact-decimal components, percentile, sliding
@@ -17,8 +18,6 @@ import graft.Tables._
   * deterministic to the last bit before round().
   */
 object QueriesExt2 {
-
-  private def dec2(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
 
   // ------------------------------------------------------------ SQL surface
 
@@ -240,27 +239,15 @@ object QueriesExt2 {
 
   // ------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sql_q4"            -> (qSqlQ4 _),
-    "q_cube_status"       -> (qCube _),
-    "q_pivot_status"      -> (qPivot _),
-    "q_json_extract"      -> (qJsonExtract _),
-    "q_stats_formula"     -> (qStatsFormula _),
-    "q_median_price"      -> (qMedian _),
-    "events_sliding_2h"   -> (eventsSliding _),
-    "text_bpe_tokens"     -> (textBpeTokens _),
-    "sim_ann_signbucket"  -> (simAnnSignBucket _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_sql_q4"            -> qSqlQ4Sql,
-    "q_cube_status"       -> qCubeSql,
-    "q_pivot_status"      -> qPivotSql,
-    "q_json_extract"      -> qJsonExtractSql,
-    "q_stats_formula"     -> qStatsFormulaSql,
-    "q_median_price"      -> qMedianSql,
-    "events_sliding_2h"   -> eventsSlidingSql,
-    "text_bpe_tokens"     -> textBpeTokensSql,
-    "sim_ann_signbucket"  -> simAnnSignBucketSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_sql_q4", Seq("B8"), qSqlQ4, qSqlQ4Sql),
+    QuerySpec("q_cube_status", Seq("B12"), qCube, qCubeSql),
+    QuerySpec("q_pivot_status", Seq("B12"), qPivot, qPivotSql),
+    QuerySpec("q_json_extract", Seq("B8"), qJsonExtract, qJsonExtractSql),
+    QuerySpec("q_stats_formula", Seq("B8"), qStatsFormula, qStatsFormulaSql),
+    QuerySpec("q_median_price", Seq("B8"), qMedian, qMedianSql),
+    QuerySpec("events_sliding_2h", Seq("B7"), eventsSliding, eventsSlidingSql),
+    QuerySpec("text_bpe_tokens", Seq("B26"), textBpeTokens, textBpeTokensSql),
+    QuerySpec("sim_ann_signbucket", Seq("B4"), simAnnSignBucket, simAnnSignBucketSql)
   )
 }

@@ -866,39 +866,21 @@ object QueriesExt20 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_consistent_hash"     -> (qConsistentHash _),
-    "q_apportionment"       -> (qApportionment _),
-    "text_kappa_agreement"  -> (textKappaAgreement _),
-    "events_motif_window"   -> (eventsMotifWindow _),
-    "events_tukey_fences"   -> (eventsTukeyFences _),
-    "cdc_scd2_audit"        -> (cdcScd2Audit _),
-    "events_interpolate"    -> (eventsInterpolate _),
-    "q_shipping_sla"        -> (qShippingSla _),
-    "events_error_budget"   -> (eventsErrorBudget _),
-    "q_abc_xyz_matrix"      -> (qAbcXyzMatrix _),
-    "events_power_users"    -> (eventsPowerUsers _),
-    "events_reactivation"   -> (eventsReactivation _),
-    "q_revenue_waterfall"   -> (qRevenueWaterfall _),
-    "q_dead_stock"          -> (qDeadStock _),
-    "events_streaks"        -> (eventsStreaks _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_consistent_hash"     -> qConsistentHashSql,
-    "q_apportionment"       -> qApportionmentSql,
-    "text_kappa_agreement"  -> textKappaAgreementSql,
-    "events_motif_window"   -> eventsMotifWindowSql,
-    "events_tukey_fences"   -> eventsTukeyFencesSql,
-    "cdc_scd2_audit"        -> cdcScd2AuditSql,
-    "events_interpolate"    -> eventsInterpolateSql,
-    "q_shipping_sla"        -> qShippingSlaSql,
-    "events_error_budget"   -> eventsErrorBudgetSql,
-    "q_abc_xyz_matrix"      -> qAbcXyzMatrixSql,
-    "events_power_users"    -> eventsPowerUsersSql,
-    "events_reactivation"   -> eventsReactivationSql,
-    "q_revenue_waterfall"   -> qRevenueWaterfallSql,
-    "q_dead_stock"          -> qDeadStockSql,
-    "events_streaks"        -> eventsStreaksSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_consistent_hash", Seq("B128"), qConsistentHash, qConsistentHashSql),
+    QuerySpec("q_apportionment", Seq("B129"), qApportionment, qApportionmentSql),
+    QuerySpec("text_kappa_agreement", Seq("B130"), textKappaAgreement, textKappaAgreementSql),
+    QuerySpec("events_motif_window", Seq("B131"), eventsMotifWindow, eventsMotifWindowSql),
+    QuerySpec("events_tukey_fences", Seq("B132"), eventsTukeyFences, eventsTukeyFencesSql),
+    QuerySpec("cdc_scd2_audit", Seq("B133"), cdcScd2Audit, cdcScd2AuditSql),
+    QuerySpec("events_interpolate", Seq("B134"), eventsInterpolate, eventsInterpolateSql),
+    QuerySpec("q_shipping_sla", Seq("B135"), qShippingSla, qShippingSlaSql),
+    QuerySpec("events_error_budget", Seq("B136"), eventsErrorBudget, eventsErrorBudgetSql),
+    QuerySpec("q_abc_xyz_matrix", Seq("B137"), qAbcXyzMatrix, qAbcXyzMatrixSql),
+    QuerySpec("events_power_users", Seq("B138"), eventsPowerUsers, eventsPowerUsersSql),
+    QuerySpec("events_reactivation", Seq("B139"), eventsReactivation, eventsReactivationSql),
+    QuerySpec("q_revenue_waterfall", Seq("B140"), qRevenueWaterfall, qRevenueWaterfallSql),
+    QuerySpec("q_dead_stock", Seq("B141"), qDeadStock, qDeadStockSql),
+    QuerySpec("events_streaks", Seq("B142"), eventsStreaks, eventsStreaksSql)
   )
 }

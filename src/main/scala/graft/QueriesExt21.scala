@@ -265,15 +265,9 @@ object QueriesExt21 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dp_counts"  -> (qDpCounts _),
-    "events_cuped" -> (eventsCuped _),
-    "sim_mmr"      -> (simMmr _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_dp_counts"  -> qDpCountsSql,
-    "events_cuped" -> eventsCupedSql,
-    "sim_mmr"      -> simMmrSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_dp_counts", Seq("B143"), qDpCounts, qDpCountsSql),
+    QuerySpec("events_cuped", Seq("B144"), eventsCuped, eventsCupedSql),
+    QuerySpec("sim_mmr", Seq("B145"), simMmr, simMmrSql)
   )
 }

@@ -280,17 +280,10 @@ object QueriesExt22 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_ema_daily" -> (eventsEmaDaily _),
-    "text_zipf_slope"  -> (textZipfSlope _),
-    "graph_components" -> (graphComponents _),
-    "embed_quantize"   -> (embedQuantize _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_ema_daily" -> eventsEmaDailySql,
-    "text_zipf_slope"  -> textZipfSlopeSql,
-    "graph_components" -> graphComponentsSql,
-    "embed_quantize"   -> embedQuantizeSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_ema_daily", Seq("B146"), eventsEmaDaily, eventsEmaDailySql),
+    QuerySpec("text_zipf_slope", Seq("B147"), textZipfSlope, textZipfSlopeSql),
+    QuerySpec("graph_components", Seq("B148"), graphComponents, graphComponentsSql),
+    QuerySpec("embed_quantize", Seq("B149"), embedQuantize, embedQuantizeSql)
   )
 }

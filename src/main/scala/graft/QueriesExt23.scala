@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.{normSql, shinglesSql}
 
 /** Round-8 additions, batch 17: training-run mechanics — the deterministic
   * epoch shuffle a reproducible trainer needs, the marginal-novelty rate
@@ -11,11 +12,6 @@ import graft.Tables._
   * recall audit that certifies the ANN index against brute-force truth.
   */
 object QueriesExt23 {
-
-  // SQL fragments shared with the dedup oracles (same tokenization)
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
-  private val shinglesSql =
-    "CASE WHEN len(toks)>=3 THEN [array_to_string(toks[i:i+2],' ') for i in range(1,len(toks)-1)] ELSE [norm] END"
 
   // --------------------------- deterministic epoch shuffle (B150)
 
@@ -127,7 +123,7 @@ object QueriesExt23 {
     s"""WITH base AS (SELECT doc_id, source, $normSql AS norm FROM documents),
        |t AS (SELECT doc_id, source, norm, string_split(norm, ' ') AS toks FROM base),
        |sh AS (
-       |  SELECT doc_id, source, unnest(list_distinct($shinglesSql)) AS shingle FROM t),
+       |  SELECT doc_id, source, unnest(list_distinct(${shinglesSql(3)})) AS shingle FROM t),
        |novel AS (
        |  SELECT fsource AS source, count(*) AS n_novel FROM (
        |    SELECT shingle, min_by(source, doc_id) AS fsource FROM sh GROUP BY 1)
@@ -232,15 +228,9 @@ object QueriesExt23 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_epoch_order" -> (corpusEpochOrder _),
-    "text_ngram_novelty" -> (textNgramNovelty _),
-    "sim_ann_recall"     -> (simAnnRecall _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "corpus_epoch_order" -> corpusEpochOrderSql,
-    "text_ngram_novelty" -> textNgramNoveltySql,
-    "sim_ann_recall"     -> simAnnRecallSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("corpus_epoch_order", Seq("B150"), corpusEpochOrder, corpusEpochOrderSql),
+    QuerySpec("text_ngram_novelty", Seq("B151"), textNgramNovelty, textNgramNoveltySql),
+    QuerySpec("sim_ann_recall", Seq("B152"), simAnnRecall, simAnnRecallSql)
   )
 }

@@ -237,13 +237,8 @@ object QueriesExt24 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_degree_stats" -> (graphDegreeStats _),
-    "sim_pq_recall"      -> (simPqRecall _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "graph_degree_stats" -> graphDegreeStatsSql,
-    "sim_pq_recall"      -> simPqRecallSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("graph_degree_stats", Seq("B154"), graphDegreeStats, graphDegreeStatsSql),
+    QuerySpec("sim_pq_recall", Seq("B155"), simPqRecall, simPqRecallSql)
   )
 }

@@ -5,14 +5,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.normSql
 
 /** Round-8 additions, batch 19: boilerplate-prefix duplicate clusters, an
   * exact rolling median, and the day-of-week × hour usage heatmap — three
   * everyday curation/ops readouts.
   */
 object QueriesExt25 {
-
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
 
   // --------------------------- prefix-duplicate clusters (B157)
 
@@ -117,15 +116,9 @@ object QueriesExt25 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_prefix"     -> (dedupPrefix _),
-    "q_rolling_median" -> (qRollingMedian _),
-    "events_heatmap"   -> (eventsHeatmap _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "dedup_prefix"     -> dedupPrefixSql,
-    "q_rolling_median" -> qRollingMedianSql,
-    "events_heatmap"   -> eventsHeatmapSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dedup_prefix", Seq("B157"), dedupPrefix, dedupPrefixSql),
+    QuerySpec("q_rolling_median", Seq("B158"), qRollingMedian, qRollingMedianSql),
+    QuerySpec("events_heatmap", Seq("B159"), eventsHeatmap, eventsHeatmapSql)
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.normSql
 
 /** Round-8 additions, batch 20: distribution-position (cume_dist), robust
   * scale (median absolute deviation), and sentence-granularity text stats
@@ -12,8 +13,6 @@ import graft.Tables._
   * toolkit.
   */
 object QueriesExt26 {
-
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
 
   // --------------------------- cumulative distribution (B160)
 
@@ -137,15 +136,9 @@ object QueriesExt26 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_cume_dist"         -> (qCumeDist _),
-    "events_mad"          -> (eventsMad _),
-    "text_sentence_stats" -> (textSentenceStats _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_cume_dist"         -> qCumeDistSql,
-    "events_mad"          -> eventsMadSql,
-    "text_sentence_stats" -> textSentenceStatsSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_cume_dist", Seq("B160"), qCumeDist, qCumeDistSql),
+    QuerySpec("events_mad", Seq("B161"), eventsMad, eventsMadSql),
+    QuerySpec("text_sentence_stats", Seq("B162"), textSentenceStats, textSentenceStatsSql)
   )
 }

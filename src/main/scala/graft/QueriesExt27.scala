@@ -186,15 +186,9 @@ object QueriesExt27 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_recon_full_outer"   -> (qReconFullOuter _),
-    "dedup_canonical_pick" -> (dedupCanonicalPick _),
-    "cdc_op_stats"         -> (cdcOpStats _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_recon_full_outer"   -> qReconFullOuterSql,
-    "dedup_canonical_pick" -> dedupCanonicalPickSql,
-    "cdc_op_stats"         -> cdcOpStatsSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_recon_full_outer", Seq("B163"), qReconFullOuter, qReconFullOuterSql),
+    QuerySpec("dedup_canonical_pick", Seq("B164"), dedupCanonicalPick, dedupCanonicalPickSql),
+    QuerySpec("cdc_op_stats", Seq("A3", "A4", "B165"), cdcOpStats, cdcOpStatsSql)
   )
 }

@@ -170,15 +170,9 @@ object QueriesExt28 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_velocity_flags" -> (eventsVelocityFlags _),
-    "dedup_idf_jaccard"     -> (dedupIdfJaccard _),
-    "mm_chunk_manifest"     -> (mmChunkManifest _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_velocity_flags" -> eventsVelocityFlagsSql,
-    "dedup_idf_jaccard"     -> dedupIdfJaccardSql,
-    "mm_chunk_manifest"     -> mmChunkManifestSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_velocity_flags", Seq("B166"), eventsVelocityFlags, eventsVelocityFlagsSql),
+    QuerySpec("dedup_idf_jaccard", Seq("B167"), dedupIdfJaccard, dedupIdfJaccardSql),
+    QuerySpec("mm_chunk_manifest", Seq("B168"), mmChunkManifest, mmChunkManifestSql)
   )
 }

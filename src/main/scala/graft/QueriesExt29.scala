@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.normSql
 import graft.operators.TextAnalysis
 
 /** Round-8 additions, batch 23: tokenizer fertility by language and the
@@ -11,8 +12,6 @@ import graft.operators.TextAnalysis
   * advisor.
   */
 object QueriesExt29 {
-
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
 
   // --------------------------- tokenizer fertility (B172)
 
@@ -110,13 +109,8 @@ object QueriesExt29 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_token_fertility" -> (textTokenFertility _),
-    "q_compaction_plan"    -> (qCompactionPlan _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_token_fertility" -> textTokenFertilitySql,
-    "q_compaction_plan"    -> qCompactionPlanSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_token_fertility", Seq("B172"), textTokenFertility, textTokenFertilitySql),
+    QuerySpec("q_compaction_plan", Seq("B173"), qCompactionPlan, qCompactionPlanSql)
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.{dec2, revenue, revenueSql, tsLit}
 import graft.functions.Hashing
 import graft.operators.{AsOfJoin, SkewJoin}
 
@@ -14,13 +15,6 @@ import graft.operators.{AsOfJoin, SkewJoin}
   * Q14/Q18/Q19/Q22 shapes adapted to the fixture schema).
   */
 object QueriesExt3 {
-
-  private def dec2(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
-  private def tsLit(date: String)                  = to_timestamp(lit(date))
-  private def revenue =
-    sum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount"))))
-  private val revenueSql =
-    "sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))))"
 
   // --------------------------------------------------- as-of temporal join
 
@@ -142,6 +136,13 @@ object QueriesExt3 {
       )
       .select(col("id"), col("user_id"), col("event_type"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
   }
+
+  // deliberately the same oracle as cdc_enrich_join: the salted physical
+  // plan must produce the identical result set
+  private val cdcEnrichSaltedSql =
+    """SELECT event_id AS id, user_id, event_type, c_name, c_acctbal, c_mktsegment
+      |FROM events JOIN customer ON user_id * 13 = c_custkey
+      |WHERE event_id % 97 != 0 AND event_id % 89 != 0 AND event_id % 83 != 0""".stripMargin
 
   // ------------------------------------------------------- TPC-H-ish sweep
 
@@ -441,51 +442,27 @@ object QueriesExt3 {
 
   // ------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_minhash_clusters" -> (dedupMinhashClusters _),
-    "events_range_campaigns" -> (eventsRangeCampaigns _),
-    "q_approx_sketches"  -> (qApproxSketches _),
-    "sim_ivf_topk"       -> (simIvfTopK _),
-    "cdc_asof_enrich"    -> (cdcAsofEnrich _),
-    "cdc_asof_native"    -> (cdcAsofNative _),
-    "cdc_asof_forward"   -> (cdcAsofForward _),
-    "cdc_asof_tolerance" -> (cdcAsofTolerance _),
-    "cdc_enrich_salted"  -> (cdcEnrichSalted _),
-    "q7_volume_shipping" -> (q7 _),
-    "q9_product_revenue" -> (q9 _),
-    "q13_order_dist"     -> (q13 _),
-    "q14_promo_share"    -> (q14 _),
-    "q18_large_orders"   -> (q18 _),
-    "q19_disjunctive"    -> (q19 _),
-    "q22_idle_customers" -> (q22 _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "dedup_minhash_clusters" -> dedupMinhashClustersSql,
-    "events_range_campaigns" -> eventsRangeCampaignsSql,
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dedup_minhash_clusters", Seq("B3"), dedupMinhashClusters, dedupMinhashClustersSql),
+    QuerySpec("events_range_campaigns", Seq("B9"), eventsRangeCampaigns, eventsRangeCampaignsSql),
     // sketch values are engine-specific; the oracle checks the exact
     // companions and expects the in-query error-bound booleans to be TRUE
-    "q_approx_sketches"  -> qApproxSketchesSql,
+    QuerySpec("q_approx_sketches", Seq("B14"), qApproxSketches, qApproxSketchesSql),
     // the deterministic IVF index (md5-seeded coarse quantizer) is replayed
     // exactly by DuckDB — index build, probe selection, and final ranking
-    "sim_ivf_topk"       -> simIvfTopKSql,
-    "cdc_asof_enrich"    -> cdcAsofEnrichSql,
+    QuerySpec("sim_ivf_topk", Seq("B4"), simIvfTopK, simIvfTopKSql),
+    QuerySpec("cdc_asof_enrich", Seq("B9"), cdcAsofEnrich, cdcAsofEnrichSql),
     // the native (custom SparkPlan) route must land on the identical result
-    "cdc_asof_native"    -> cdcAsofEnrichSql,
-    "cdc_asof_forward"   -> cdcAsofForwardSql,
-    "cdc_asof_tolerance" -> cdcAsofToleranceSql,
-    // deliberately the same oracle as cdc_enrich_join: the salted physical
-    // plan must produce the identical result set
-    "cdc_enrich_salted"  ->
-      """SELECT event_id AS id, user_id, event_type, c_name, c_acctbal, c_mktsegment
-        |FROM events JOIN customer ON user_id * 13 = c_custkey
-        |WHERE event_id % 97 != 0 AND event_id % 89 != 0 AND event_id % 83 != 0""".stripMargin,
-    "q7_volume_shipping" -> q7Sql,
-    "q9_product_revenue" -> q9Sql,
-    "q13_order_dist"     -> q13Sql,
-    "q14_promo_share"    -> q14Sql,
-    "q18_large_orders"   -> q18Sql,
-    "q19_disjunctive"    -> q19Sql,
-    "q22_idle_customers" -> q22Sql
+    QuerySpec("cdc_asof_native", Seq("B9"), cdcAsofNative, cdcAsofEnrichSql),
+    QuerySpec("cdc_asof_forward", Seq("B9"), cdcAsofForward, cdcAsofForwardSql),
+    QuerySpec("cdc_asof_tolerance", Seq("B9"), cdcAsofTolerance, cdcAsofToleranceSql),
+    QuerySpec("cdc_enrich_salted", Seq("A5", "B9"), cdcEnrichSalted, cdcEnrichSaltedSql),
+    QuerySpec("q7_volume_shipping", Seq("B8"), q7, q7Sql),
+    QuerySpec("q9_product_revenue", Seq("B8"), q9, q9Sql),
+    QuerySpec("q13_order_dist", Seq("B8"), q13, q13Sql),
+    QuerySpec("q14_promo_share", Seq("B8"), q14, q14Sql),
+    QuerySpec("q18_large_orders", Seq("B8"), q18, q18Sql),
+    QuerySpec("q19_disjunctive", Seq("B8"), q19, q19Sql),
+    QuerySpec("q22_idle_customers", Seq("B8"), q22, q22Sql)
   )
 }

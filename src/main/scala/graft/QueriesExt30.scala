@@ -102,13 +102,8 @@ object QueriesExt30 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_filtered_topk" -> (simFilteredTopK _),
-    "cdc_vacuum_plan"   -> (cdcVacuumPlan _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "sim_filtered_topk" -> simFilteredTopKSql,
-    "cdc_vacuum_plan"   -> cdcVacuumPlanSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_filtered_topk", Seq("B174"), simFilteredTopK, simFilteredTopKSql),
+    QuerySpec("cdc_vacuum_plan", Seq("B175"), cdcVacuumPlan, cdcVacuumPlanSql)
   )
 }

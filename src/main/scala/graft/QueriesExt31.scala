@@ -126,13 +126,8 @@ object QueriesExt31 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_rebalance_plan" -> (corpusRebalancePlan _),
-    "embed_centroid_drift"  -> (embedCentroidDrift _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "corpus_rebalance_plan" -> corpusRebalancePlanSql,
-    "embed_centroid_drift"  -> embedCentroidDriftSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("corpus_rebalance_plan", Seq("B176"), corpusRebalancePlan, corpusRebalancePlanSql),
+    QuerySpec("embed_centroid_drift", Seq("B177"), embedCentroidDrift, embedCentroidDriftSql)
   )
 }

@@ -378,21 +378,12 @@ object QueriesExt32 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_split_leakage_safe" -> (corpusSplitLeakageSafe _),
-    "corpus_temperature_mix"    -> (corpusTemperatureMix _),
-    "dedup_threshold_sweep"     -> (dedupThresholdSweep _),
-    "q_histogram"               -> (qHistogram _),
-    "events_funnel_time"        -> (eventsFunnelTime _),
-    "text_char_entropy"         -> (textCharEntropy _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "corpus_split_leakage_safe" -> corpusSplitLeakageSafeSql,
-    "corpus_temperature_mix"    -> corpusTemperatureMixSql,
-    "dedup_threshold_sweep"     -> dedupThresholdSweepSql,
-    "q_histogram"               -> qHistogramSql,
-    "events_funnel_time"        -> eventsFunnelTimeSql,
-    "text_char_entropy"         -> textCharEntropySql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("corpus_split_leakage_safe", Seq("B178"), corpusSplitLeakageSafe, corpusSplitLeakageSafeSql),
+    QuerySpec("corpus_temperature_mix", Seq("B179"), corpusTemperatureMix, corpusTemperatureMixSql),
+    QuerySpec("dedup_threshold_sweep", Seq("B180"), dedupThresholdSweep, dedupThresholdSweepSql),
+    QuerySpec("q_histogram", Seq("B181"), qHistogram, qHistogramSql),
+    QuerySpec("events_funnel_time", Seq("B182"), eventsFunnelTime, eventsFunnelTimeSql),
+    QuerySpec("text_char_entropy", Seq("B184"), textCharEntropy, textCharEntropySql)
   )
 }

@@ -359,19 +359,11 @@ object QueriesExt33 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_recall_vs_probes" -> (simRecallVsProbes _),
-    "dedup_mixture_impact" -> (dedupMixtureImpact _),
-    "mm_payload_dedup"     -> (mmPayloadDedup _),
-    "cdc_conflict_audit"   -> (cdcConflictAudit _),
-    "text_readability"     -> (textReadability _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "sim_recall_vs_probes" -> simRecallVsProbesSql,
-    "dedup_mixture_impact" -> dedupMixtureImpactSql,
-    "mm_payload_dedup"     -> mmPayloadDedupSql,
-    "cdc_conflict_audit"   -> cdcConflictAuditSql,
-    "text_readability"     -> textReadabilitySql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_recall_vs_probes", Seq("B185"), simRecallVsProbes, simRecallVsProbesSql),
+    QuerySpec("dedup_mixture_impact", Seq("B186"), dedupMixtureImpact, dedupMixtureImpactSql),
+    QuerySpec("mm_payload_dedup", Seq("B187"), mmPayloadDedup, mmPayloadDedupSql),
+    QuerySpec("cdc_conflict_audit", Seq("B188"), cdcConflictAudit, cdcConflictAuditSql),
+    QuerySpec("text_readability", Seq("B189"), textReadability, textReadabilitySql)
   )
 }

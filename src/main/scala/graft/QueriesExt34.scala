@@ -125,13 +125,8 @@ object QueriesExt34 {
 
   // ------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_chain_audit"   -> (dedupChainAudit _),
-    "events_late_profile" -> (eventsLateProfile _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "dedup_chain_audit"   -> dedupChainAuditSql,
-    "events_late_profile" -> eventsLateProfileSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dedup_chain_audit", Seq("B190"), dedupChainAudit, dedupChainAuditSql),
+    QuerySpec("events_late_profile", Seq("B191"), eventsLateProfile, eventsLateProfileSql)
   )
 }

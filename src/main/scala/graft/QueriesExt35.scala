@@ -191,15 +191,9 @@ object QueriesExt35 {
        |  CAST(sum(in_pair) * 1000000 // count(*) AS BIGINT) AS rate_ppm
        |FROM bucketed GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "embed_dim_stats"       -> (embedDimStats _),
-    "dedup_lang_pair_matrix" -> (dedupLangPairMatrix _),
-    "dedup_rate_by_length"  -> (dedupRateByLength _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "embed_dim_stats"       -> embedDimStatsSql,
-    "dedup_lang_pair_matrix" -> dedupLangPairMatrixSql,
-    "dedup_rate_by_length"  -> dedupRateByLengthSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("embed_dim_stats", Seq("B192"), embedDimStats, embedDimStatsSql),
+    QuerySpec("dedup_lang_pair_matrix", Seq("B193"), dedupLangPairMatrix, dedupLangPairMatrixSql),
+    QuerySpec("dedup_rate_by_length", Seq("B194"), dedupRateByLength, dedupRateByLengthSql)
   )
 }

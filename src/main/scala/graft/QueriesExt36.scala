@@ -94,13 +94,8 @@ object QueriesExt36 {
       |    AS entropy_micronats
       |FROM agg""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_cross_modal_agree" -> (dedupCrossModalAgree _),
-    "corpus_source_entropy"   -> (corpusSourceEntropy _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "dedup_cross_modal_agree" -> dedupCrossModalAgreeSql,
-    "corpus_source_entropy"   -> corpusSourceEntropySql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dedup_cross_modal_agree", Seq("B195"), dedupCrossModalAgree, dedupCrossModalAgreeSql),
+    QuerySpec("corpus_source_entropy", Seq("B196"), corpusSourceEntropy, corpusSourceEntropySql)
   )
 }

@@ -124,13 +124,8 @@ object QueriesExt37 {
       |  max(rate_milli) AS max_rate_milli
       |FROM pu GROUP BY 1, 2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_ivf_balance"    -> (simIvfBalance _),
-    "events_bot_profile" -> (eventsBotProfile _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "sim_ivf_balance"    -> simIvfBalanceSql,
-    "events_bot_profile" -> eventsBotProfileSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_ivf_balance", Seq("B197"), simIvfBalance, simIvfBalanceSql),
+    QuerySpec("events_bot_profile", Seq("B198"), eventsBotProfile, eventsBotProfileSql)
   )
 }

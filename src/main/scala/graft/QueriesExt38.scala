@@ -67,11 +67,7 @@ object QueriesExt38 {
        |  CAST(max(in_deg) AS BIGINT) AS max_in_degree
        |FROM alldeg GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_hubness" -> (simHubness _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "sim_hubness" -> simHubnessSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_hubness", Seq("B199"), simHubness, simHubnessSql)
   )
 }

@@ -83,11 +83,7 @@ object QueriesExt39 {
       |  min(CASE WHEN cum >= (99 * n + 99) // 100 THEN lb END) AS p99_micro
       |FROM cm GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_latency_digest" -> (eventsLatencyDigest _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_latency_digest" -> eventsLatencyDigestSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_latency_digest", Seq("B201"), eventsLatencyDigest, eventsLatencyDigestSql)
   )
 }

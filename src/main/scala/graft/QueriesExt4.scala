@@ -153,17 +153,10 @@ object QueriesExt4 {
 
   // ------------------------------------------------------------ registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_embed_quantize"        -> (qEmbedQuantize _),
-    "q_zorder_layout"         -> (qZorderLayout _),
-    "events_session_windows"  -> (eventsSessionWindows _),
-    "cdc_pipeline_e2e"        -> (cdcPipelineE2e _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_embed_quantize"        -> qEmbedQuantizeSql,
-    "q_zorder_layout"         -> qZorderLayoutSql,
-    "events_session_windows"  -> eventsSessionWindowsSql,
-    "cdc_pipeline_e2e"        -> cdcPipelineE2eSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_embed_quantize", Seq("B6"), qEmbedQuantize, qEmbedQuantizeSql),
+    QuerySpec("q_zorder_layout", Seq("B15"), qZorderLayout, qZorderLayoutSql),
+    QuerySpec("events_session_windows", Seq("B7"), eventsSessionWindows, eventsSessionWindowsSql),
+    QuerySpec("cdc_pipeline_e2e", Seq("A1", "A11", "A8", "A9"), cdcPipelineE2e, cdcPipelineE2eSql)
   )
 }

@@ -80,11 +80,7 @@ object QueriesExt40 {
       |  CAST(abs(kmv_estimate - exact_distinct) * 1000000 // exact_distinct AS BIGINT) AS err_ppm
       |FROM est""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_kmv_distinct" -> (eventsKmvDistinct _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_kmv_distinct" -> eventsKmvDistinctSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_kmv_distinct", Seq("B203"), eventsKmvDistinct, eventsKmvDistinctSql)
   )
 }

@@ -160,15 +160,9 @@ object QueriesExt41 {
       |  max(n_tokens) AS max_tokens
       |FROM t GROUP BY 1, 2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cdc_payload_evolution"   -> (cdcPayloadEvolution _),
-    "events_session_depth"    -> (eventsSessionDepth _),
-    "corpus_length_histogram" -> (corpusLengthHistogram _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "cdc_payload_evolution"   -> cdcPayloadEvolutionSql,
-    "events_session_depth"    -> eventsSessionDepthSql,
-    "corpus_length_histogram" -> corpusLengthHistogramSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("cdc_payload_evolution", Seq("B205"), cdcPayloadEvolution, cdcPayloadEvolutionSql),
+    QuerySpec("events_session_depth", Seq("B206"), eventsSessionDepth, eventsSessionDepthSql),
+    QuerySpec("corpus_length_histogram", Seq("B207"), corpusLengthHistogram, corpusLengthHistogramSql)
   )
 }

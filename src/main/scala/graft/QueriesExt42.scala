@@ -76,11 +76,7 @@ object QueriesExt42 {
       |JOIN counters c ON c.r = bk.r AND c.b = bk.b
       |GROUP BY t.user_id, t.cnt""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_cms_topk" -> (eventsCmsTopk _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_cms_topk" -> eventsCmsTopkSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_cms_topk", Seq("B208"), eventsCmsTopk, eventsCmsTopkSql)
   )
 }

@@ -245,13 +245,8 @@ object QueriesExt43 {
       |FROM gest g JOIN mest m ON m.event_type = g.event_type
       |JOIN mdays d ON d.event_type = g.event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_kmv_overlap"     -> (eventsKmvOverlap _),
-    "events_kmv_merge_daily" -> (eventsKmvMergeDaily _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_kmv_overlap"     -> eventsKmvOverlapSql,
-    "events_kmv_merge_daily" -> eventsKmvMergeDailySql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_kmv_overlap", Seq("B210"), eventsKmvOverlap, eventsKmvOverlapSql),
+    QuerySpec("events_kmv_merge_daily", Seq("B211"), eventsKmvMergeDaily, eventsKmvMergeDailySql)
   )
 }

@@ -138,11 +138,7 @@ object QueriesExt44 {
       |  AS BIGINT) AS all_within_bound
       |FROM dig d JOIN ex e ON e.event_type = d.event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_digest_vs_exact" -> (eventsDigestVsExact _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_digest_vs_exact" -> eventsDigestVsExactSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_digest_vs_exact", Seq("B213"), eventsDigestVsExact, eventsDigestVsExactSql)
   )
 }

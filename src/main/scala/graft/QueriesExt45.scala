@@ -299,17 +299,10 @@ object QueriesExt45 {
       |FROM ff f LEFT JOIN tt t ON t.query_id = f.query_id AND t.corpus_id = f.corpus_id
       |GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_mg_frequent"    -> (eventsMgFrequent _),
-    "q_theilsen_trend"      -> (qTheilsenTrend _),
-    "text_cdc_chunk_dedup"  -> (textCdcChunkDedup _),
-    "sim_truncation_recall" -> (simTruncationRecall _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_mg_frequent"    -> eventsMgFrequentSql,
-    "q_theilsen_trend"      -> qTheilsenTrendSql,
-    "text_cdc_chunk_dedup"  -> textCdcChunkDedupSql,
-    "sim_truncation_recall" -> simTruncationRecallSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_mg_frequent", Seq("B214"), eventsMgFrequent, eventsMgFrequentSql),
+    QuerySpec("q_theilsen_trend", Seq("B215"), qTheilsenTrend, qTheilsenTrendSql),
+    QuerySpec("text_cdc_chunk_dedup", Seq("B216"), textCdcChunkDedup, textCdcChunkDedupSql),
+    QuerySpec("sim_truncation_recall", Seq("B217"), simTruncationRecall, simTruncationRecallSql)
   )
 }

@@ -139,13 +139,8 @@ object QueriesExt46 {
       |  CAST(count(DISTINCT user_id) >= 3 AS BIGINT) AS l_ok
       |FROM events GROUP BY 1, 2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_kcore_peel" -> (graphKcorePeel _),
-    "q_l_diversity"    -> (qLDiversity _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "graph_kcore_peel" -> graphKcorePeelSql,
-    "q_l_diversity"    -> qLDiversitySql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("graph_kcore_peel", Seq("B220"), graphKcorePeel, graphKcorePeelSql),
+    QuerySpec("q_l_diversity", Seq("B221"), qLDiversity, qLDiversitySql)
   )
 }

@@ -133,13 +133,8 @@ object QueriesExt47 {
       |  n_rows * 1000000 // total AS share_ppm
       |FROM c, t""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "embed_binarize_recall" -> (embedBinarizeRecall _),
-    "q_salt_plan"           -> (qSaltPlan _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "embed_binarize_recall" -> embedBinarizeRecallSql,
-    "q_salt_plan"           -> qSaltPlanSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("embed_binarize_recall", Seq("B222"), embedBinarizeRecall, embedBinarizeRecallSql),
+    QuerySpec("q_salt_plan", Seq("B223"), qSaltPlan, qSaltPlanSql)
   )
 }

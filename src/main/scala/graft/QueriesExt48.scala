@@ -196,13 +196,8 @@ object QueriesExt48 {
       |  CAST(CASE WHEN n = rn THEN 0 ELSE (total - cumC) * 1000 // (n - rn) END AS BIGINT) AS mean_after_milli
       |FROM hit WHERE pick = 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_ks_drift"    -> (eventsKsDrift _),
-    "events_changepoint" -> (eventsChangepoint _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_ks_drift"    -> eventsKsDriftSql,
-    "events_changepoint" -> eventsChangepointSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_ks_drift", Seq("B224"), eventsKsDrift, eventsKsDriftSql),
+    QuerySpec("events_changepoint", Seq("B225"), eventsChangepoint, eventsChangepointSql)
   )
 }

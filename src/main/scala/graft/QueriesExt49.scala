@@ -194,13 +194,8 @@ object QueriesExt49 {
       |  CAST(sum(term_micro) AS BIGINT) AS psi_micro
       |FROM terms GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_moments_merge_daily" -> (eventsMomentsMergeDaily _),
-    "events_psi_drift"           -> (eventsPsiDrift _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_moments_merge_daily" -> eventsMomentsMergeDailySql,
-    "events_psi_drift"           -> eventsPsiDriftSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_moments_merge_daily", Seq("B227"), eventsMomentsMergeDaily, eventsMomentsMergeDailySql),
+    QuerySpec("events_psi_drift", Seq("B228"), eventsPsiDrift, eventsPsiDriftSql)
   )
 }

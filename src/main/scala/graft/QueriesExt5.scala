@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.{dec2, normSql, revenue, revenueSql, tsLit}
 import graft.operators.TextAnalysis
 
 /** Fifth query batch — round 2 coverage widening:
@@ -25,14 +26,6 @@ import graft.operators.TextAnalysis
   * timestamps, BIGINT counts, round-6 ratios).
   */
 object QueriesExt5 {
-
-  private def dec2(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
-  private def tsLit(date: String)                  = to_timestamp(lit(date))
-  private def revenue =
-    sum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount"))))
-  private val revenueSql =
-    "sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))))"
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
 
   // ------------------------------------------------------- TPC-H adaptations
 
@@ -481,39 +474,21 @@ object QueriesExt5 {
 
   // --------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q8_market_share"    -> (q8 _),
-    "q12_ship_lag"       -> (q12 _),
-    "q15_top_supplier"   -> (q15 _),
-    "q16_supplier_cnt"   -> (q16 _),
-    "q17_small_qty"      -> (q17 _),
-    "q20_red_parts"      -> (q20 _),
-    "q21_waiting_supp"   -> (q21 _),
-    "q_lead_lag"         -> (qLeadLag _),
-    "q_ntile_deciles"    -> (qNtileDeciles _),
-    "q_running_total"    -> (qRunningTotal _),
-    "q_first_last"       -> (qFirstLast _),
-    "q_grouping_sets"    -> (qGroupingSets _),
-    "q_array_ops"        -> (qArrayOps _),
-    "text_tfidf_top"     -> (qTfidfTop _),
-    "text_word_topk"     -> (qWordTopK _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q8_market_share"    -> q8Sql,
-    "q12_ship_lag"       -> q12Sql,
-    "q15_top_supplier"   -> q15Sql,
-    "q16_supplier_cnt"   -> q16Sql,
-    "q17_small_qty"      -> q17Sql,
-    "q20_red_parts"      -> q20Sql,
-    "q21_waiting_supp"   -> q21Sql,
-    "q_lead_lag"         -> qLeadLagSql,
-    "q_ntile_deciles"    -> qNtileDecilesSql,
-    "q_running_total"    -> qRunningTotalSql,
-    "q_first_last"       -> qFirstLastSql,
-    "q_grouping_sets"    -> qGroupingSetsSql,
-    "q_array_ops"        -> qArrayOpsSql,
-    "text_tfidf_top"     -> qTfidfTopSql,
-    "text_word_topk"     -> qWordTopKSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q8_market_share", Seq("B8"), q8, q8Sql),
+    QuerySpec("q12_ship_lag", Seq("B8"), q12, q12Sql),
+    QuerySpec("q15_top_supplier", Seq("B8"), q15, q15Sql),
+    QuerySpec("q16_supplier_cnt", Seq("B8"), q16, q16Sql),
+    QuerySpec("q17_small_qty", Seq("B8"), q17, q17Sql),
+    QuerySpec("q20_red_parts", Seq("B8"), q20, q20Sql),
+    QuerySpec("q21_waiting_supp", Seq("B8"), q21, q21Sql),
+    QuerySpec("q_lead_lag", Seq("B11"), qLeadLag, qLeadLagSql),
+    QuerySpec("q_ntile_deciles", Seq("B11"), qNtileDeciles, qNtileDecilesSql),
+    QuerySpec("q_running_total", Seq("B11"), qRunningTotal, qRunningTotalSql),
+    QuerySpec("q_first_last", Seq("B11"), qFirstLast, qFirstLastSql),
+    QuerySpec("q_grouping_sets", Seq("B12"), qGroupingSets, qGroupingSetsSql),
+    QuerySpec("q_array_ops", Seq("B8"), qArrayOps, qArrayOpsSql),
+    QuerySpec("text_tfidf_top", Seq("B13"), qTfidfTop, qTfidfTopSql),
+    QuerySpec("text_word_topk", Seq("B13"), qWordTopK, qWordTopKSql)
   )
 }

@@ -169,13 +169,8 @@ object QueriesExt50 {
       |  n_events * 1000 // (n_users + n_breaks) AS mean_events_per_session_milli
       |FROM g""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_jaccard_neighbors" -> (graphJaccardNeighbors _),
-    "events_session_gap_sweep" -> (eventsSessionGapSweep _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "graph_jaccard_neighbors" -> graphJaccardNeighborsSql,
-    "events_session_gap_sweep" -> eventsSessionGapSweepSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("graph_jaccard_neighbors", Seq("B229"), graphJaccardNeighbors, graphJaccardNeighborsSql),
+    QuerySpec("events_session_gap_sweep", Seq("B230"), eventsSessionGapSweep, eventsSessionGapSweepSql)
   )
 }

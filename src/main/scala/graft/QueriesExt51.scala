@@ -92,11 +92,7 @@ object QueriesExt51 {
       |    ELSE CAST(cum_converted AS BIGINT) * 1000000 // t_converted END AS cum_gain_ppm
       |FROM c""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_lift_table" -> (eventsLiftTable _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_lift_table" -> eventsLiftTableSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_lift_table", Seq("B232"), eventsLiftTable, eventsLiftTableSql)
   )
 }

@@ -53,7 +53,7 @@ object QueriesExt52 {
     * df-capped selected fingerprints grouped by content hash, with
     * the shared-count filter applied before the per-pair rollup.
     */
-  private def textWinnowingOverlap(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def textWinnowingOverlap(s: SparkSession, dir: String): DataFrame = {
     val g         = 8
     val w         = 4
     val minShared = 3
@@ -145,11 +145,7 @@ object QueriesExt52 {
       |JOIN pd pa ON pa.doc_id = p.doc_a
       |JOIN pd pb ON pb.doc_id = p.doc_b""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_winnowing_overlap" -> (textWinnowingOverlap _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_winnowing_overlap" -> textWinnowingOverlapSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_winnowing_overlap", Seq("B233"), textWinnowingOverlap, textWinnowingOverlapSql)
   )
 }

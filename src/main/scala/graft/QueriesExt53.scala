@@ -140,7 +140,7 @@ object QueriesExt53 {
     * rows.
     */
   private def dedupDetectorAgreement(s: SparkSession, dir: String): DataFrame = {
-    val wn = QueriesExt52.queries("text_winnowing_overlap")(s, dir)
+    val wn = QueriesExt52.textWinnowingOverlap(s, dir)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("containment_ppm"))
     val mh = graft.operators.Dedup
       .minhashPairs(documents(s, dir), "doc_id", "text", 3, 0.5)
@@ -178,13 +178,8 @@ object QueriesExt53 {
        |  CAST(sum(coalesce(jac_ppm, 0)) // count(*) AS BIGINT) AS mean_jaccard_ppm
        |FROM wj GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_zorder_pruning_gain"    -> (qZorderPruningGain _),
-    "dedup_detector_agreement" -> (dedupDetectorAgreement _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_zorder_pruning_gain"    -> qZorderPruningGainSql,
-    "dedup_detector_agreement" -> dedupDetectorAgreementSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_zorder_pruning_gain", Seq("B234"), qZorderPruningGain, qZorderPruningGainSql),
+    QuerySpec("dedup_detector_agreement", Seq("B235"), dedupDetectorAgreement, dedupDetectorAgreementSql)
   )
 }

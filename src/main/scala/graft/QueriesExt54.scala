@@ -83,11 +83,7 @@ object QueriesExt54 {
       |  CASE WHEN snaive_mae_milli < naive_mae_milli THEN 'snaive' ELSE 'naive' END AS best_baseline
       |FROM agg""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_forecast_baseline" -> (eventsForecastBaseline _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_forecast_baseline" -> eventsForecastBaselineSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_forecast_baseline", Seq("B236"), eventsForecastBaseline, eventsForecastBaselineSql)
   )
 }

@@ -159,11 +159,7 @@ object QueriesExt55 {
        |FROM rk, lam WHERE rk.rank <= 8""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "embed_pca_top_component" -> (embedPcaTopComponent _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "embed_pca_top_component" -> embedPcaTopComponentSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("embed_pca_top_component", Seq("B237"), embedPcaTopComponent, embedPcaTopComponentSql)
   )
 }

@@ -363,15 +363,9 @@ object QueriesExt56 {
        |FROM joined, tv""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_bootstrap_ci"      -> (eventsBootstrapCi _),
-    "graph_brand_modularity"   -> (graphBrandModularity _),
-    "events_markov_stationary" -> (eventsMarkovStationary _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_bootstrap_ci"      -> eventsBootstrapCiSql,
-    "graph_brand_modularity"   -> graphBrandModularitySql,
-    "events_markov_stationary" -> eventsMarkovStationarySql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_bootstrap_ci", Seq("B238"), eventsBootstrapCi, eventsBootstrapCiSql),
+    QuerySpec("graph_brand_modularity", Seq("B239"), graphBrandModularity, graphBrandModularitySql),
+    QuerySpec("events_markov_stationary", Seq("B240"), eventsMarkovStationary, eventsMarkovStationarySql)
   )
 }

@@ -166,11 +166,7 @@ object QueriesExt57 {
        |LEFT JOIN combined c ON c.user_id = t.user_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bloom_skipping_gain" -> (qBloomSkippingGain _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_bloom_skipping_gain" -> qBloomSkippingGainSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_bloom_skipping_gain", Seq("B241"), qBloomSkippingGain, qBloomSkippingGainSql)
   )
 }

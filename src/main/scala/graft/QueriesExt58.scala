@@ -229,11 +229,7 @@ object QueriesExt58 {
       |LEFT JOIN ncand nc ON nc.query_id = tr.query_id
       |LEFT JOIN found f ON f.query_id = tr.query_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_ivf_pq_compound" -> (simIvfPqCompound _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "sim_ivf_pq_compound" -> simIvfPqCompoundSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_ivf_pq_compound", Seq("B242"), simIvfPqCompound, simIvfPqCompoundSql)
   )
 }

@@ -127,11 +127,7 @@ object QueriesExt59 {
        |  (SELECT total_tokens_after FROM tok4) FROM top4""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_bpe_train" -> (textBpeTrain _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_bpe_train" -> textBpeTrainSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_bpe_train", Seq("B243"), textBpeTrain, textBpeTrainSql)
   )
 }

@@ -168,17 +168,10 @@ object QueriesExt6 {
 
   // --------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cdc_apply_merge"  -> (cdcApplyMerge _),
-    "cdc_scd2_history" -> (cdcScd2History _),
-    "q_full_outer"     -> (qFullOuter _),
-    "mm_frame_sample"  -> (mmFrameSample _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "cdc_apply_merge"  -> cdcApplyMergeSql,
-    "cdc_scd2_history" -> cdcScd2HistorySql,
-    "q_full_outer"     -> qFullOuterSql,
-    "mm_frame_sample"  -> mmFrameSampleSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("cdc_apply_merge", Seq("B10"), cdcApplyMerge, cdcApplyMergeSql),
+    QuerySpec("cdc_scd2_history", Seq("B10"), cdcScd2History, cdcScd2HistorySql),
+    QuerySpec("q_full_outer", Seq("B8"), qFullOuter, qFullOuterSql),
+    QuerySpec("mm_frame_sample", Seq("B6"), mmFrameSample, mmFrameSampleSql)
   )
 }

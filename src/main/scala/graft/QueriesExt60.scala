@@ -237,13 +237,8 @@ object QueriesExt60 {
        |FROM km""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_nsw_greedy"     -> (simNswGreedy _),
-    "events_survival_km" -> (eventsSurvivalKm _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "sim_nsw_greedy"     -> simNswGreedySql,
-    "events_survival_km" -> eventsSurvivalKmSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_nsw_greedy", Seq("B244"), simNswGreedy, simNswGreedySql),
+    QuerySpec("events_survival_km", Seq("B245"), eventsSurvivalKm, eventsSurvivalKmSql)
   )
 }

@@ -138,13 +138,8 @@ object QueriesExt61 {
       |     (SELECT * FROM m WHERE treat = 1 AND post = 0) tp,
       |     (SELECT * FROM m WHERE treat = 1 AND post = 1) to_""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_ab_power" -> (eventsAbPower _),
-    "events_did"      -> (eventsDid _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_ab_power" -> eventsAbPowerSql,
-    "events_did"      -> eventsDidSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_ab_power", Seq("B246"), eventsAbPower, eventsAbPowerSql),
+    QuerySpec("events_did", Seq("B247"), eventsDid, eventsDidSql)
   )
 }

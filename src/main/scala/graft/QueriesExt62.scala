@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.{normSql, shinglesSql}
 
 /** Round-10 additions, batch 55: planted-truth recall for the MinHash
   * near-dup detector — B103 derives the banding curve THEORETICALLY
@@ -70,7 +71,7 @@ object QueriesExt62 {
   }
 
   private val dedupPlantedRecallSql = {
-    import QueriesExt.{normSql, shinglesSql, h32Sql, permsA, permsB}
+    import QueriesExt.{h32Sql, permsA, permsB}
     s"""WITH st AS MATERIALIZED (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL SELECT doc_id + 1000000000000, text || ' zz'
@@ -83,7 +84,7 @@ object QueriesExt62 {
        |    FROM documents WHERE doc_id % 5 = 0),
        |nrm AS (SELECT doc_id, $normSql AS norm FROM st),
        |tok AS (SELECT doc_id, norm, string_split(norm,' ') AS toks FROM nrm),
-       |sh AS (SELECT doc_id, $shinglesSql AS shingles FROM tok),
+       |sh AS (SELECT doc_id, ${shinglesSql(3)} AS shingles FROM tok),
        |hs AS (SELECT doc_id, [${h32Sql("s")} for s in shingles] AS hlist,
        |       list_distinct(shingles) AS sset FROM sh),
        |sg AS (SELECT doc_id,
@@ -124,11 +125,7 @@ object QueriesExt62 {
        |GROUP BY 1""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_planted_recall" -> (dedupPlantedRecall _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "dedup_planted_recall" -> dedupPlantedRecallSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dedup_planted_recall", Seq("B248"), dedupPlantedRecall, dedupPlantedRecallSql)
   )
 }

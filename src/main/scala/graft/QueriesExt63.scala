@@ -110,11 +110,7 @@ object QueriesExt63 {
       |CROSS JOIN majority m
       |GROUP BY 1, 2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_markov_holdout_acc" -> (eventsMarkovHoldoutAcc _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_markov_holdout_acc" -> eventsMarkovHoldoutAccSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_markov_holdout_acc", Seq("B249"), eventsMarkovHoldoutAcc, eventsMarkovHoldoutAccSql)
   )
 }

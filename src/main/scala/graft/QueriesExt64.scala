@@ -99,11 +99,7 @@ object QueriesExt64 {
        |FROM lv""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "embed_kmeans_elbow" -> (embedKmeansElbow _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "embed_kmeans_elbow" -> embedKmeansElbowSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("embed_kmeans_elbow", Seq("B250"), embedKmeansElbow, embedKmeansElbowSql)
   )
 }

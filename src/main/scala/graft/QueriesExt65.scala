@@ -124,11 +124,7 @@ object QueriesExt65 {
        |FROM beta, anchor""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_heaps_law" -> (textHeapsLaw _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_heaps_law" -> textHeapsLawSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_heaps_law", Seq("B251"), textHeapsLaw, textHeapsLawSql)
   )
 }

@@ -86,7 +86,7 @@ object QueriesExt66 {
   }
 
   private val dedupYieldByGranularitySql = {
-    import QueriesExt.normSql
+    import Parity.normSql
     s"""WITH RECURSIVE tot AS (SELECT CAST(sum(n_chars) AS BIGINT) AS total_chars FROM documents),
        |ex AS (
        |  SELECT 'exact_doc' AS layer, count(*) AS n_units,
@@ -178,13 +178,8 @@ object QueriesExt66 {
        |FROM counts""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_yield_by_granularity" -> (dedupYieldByGranularity _),
-    "events_wilson_ci"           -> (eventsWilsonCi _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "dedup_yield_by_granularity" -> dedupYieldByGranularitySql,
-    "events_wilson_ci"           -> eventsWilsonCiSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dedup_yield_by_granularity", Seq("B252"), dedupYieldByGranularity, dedupYieldByGranularitySql),
+    QuerySpec("events_wilson_ci", Seq("B253"), eventsWilsonCi, eventsWilsonCiSql)
   )
 }

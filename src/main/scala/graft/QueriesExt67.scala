@@ -104,11 +104,7 @@ object QueriesExt67 {
        |FROM flagged GROUP BY 1""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_code_detect" -> (textCodeDetect _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_code_detect" -> textCodeDetectSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_code_detect", Seq("B254"), textCodeDetect, textCodeDetectSql)
   )
 }

@@ -77,7 +77,7 @@ object QueriesExt68 {
   }
 
   private val textLmHoldoutPplSql = {
-    import QueriesExt.normSql
+    import Parity.normSql
     s"""WITH base AS (
        |  SELECT doc_id, source, $normSql AS nrm,
        |    CAST('0x' || substr(md5('cv:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 10 AS fold
@@ -146,13 +146,8 @@ object QueriesExt68 {
       |FROM ud JOIN f ON f.user_id = ud.user_id
       |GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_lm_holdout_ppl"    -> (textLmHoldoutPpl _),
-    "events_new_vs_returning" -> (eventsNewVsReturning _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_lm_holdout_ppl"    -> textLmHoldoutPplSql,
-    "events_new_vs_returning" -> eventsNewVsReturningSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_lm_holdout_ppl", Seq("B255"), textLmHoldoutPpl, textLmHoldoutPplSql),
+    QuerySpec("events_new_vs_returning", Seq("B256"), eventsNewVsReturning, eventsNewVsReturningSql)
   )
 }

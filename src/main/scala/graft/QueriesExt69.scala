@@ -82,11 +82,7 @@ object QueriesExt69 {
        |GROUP BY 1""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_phash_threshold_sweep" -> (mmPhashThresholdSweep _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "mm_phash_threshold_sweep" -> mmPhashThresholdSweepSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("mm_phash_threshold_sweep", Seq("B257"), mmPhashThresholdSweep, mmPhashThresholdSweepSql)
   )
 }

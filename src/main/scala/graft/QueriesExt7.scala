@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.normSql
 import graft.functions.Hashing
 import graft.operators.{Dedup, TextAnalysis}
 
@@ -24,8 +25,6 @@ import graft.operators.{Dedup, TextAnalysis}
   *    (the DISTINCT variants are covered by q_set_ops).
   */
 object QueriesExt7 {
-
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
 
   // ------------------------------------------------- deterministic sampling
 
@@ -227,23 +226,13 @@ object QueriesExt7 {
 
   // --------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hash_sample"        -> (qHashSample _),
-    "dedup_canonical_docs" -> (dedupCanonicalDocs _),
-    "q_regexp_extract"     -> (qRegexpExtract _),
-    "q_multiset_ops"       -> (qMultisetOps _),
-    "q_fuzzy_name"         -> (qFuzzyName _),
-    "q_calendar_funcs"     -> (qCalendarFuncs _),
-    "dedup_jaccard_ppjoin" -> (dedupJaccardPpjoin _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_hash_sample"        -> qHashSampleSql,
-    "dedup_canonical_docs" -> dedupCanonicalDocsSql,
-    "q_regexp_extract"     -> qRegexpExtractSql,
-    "q_multiset_ops"       -> qMultisetOpsSql,
-    "q_fuzzy_name"         -> qFuzzyNameSql,
-    "q_calendar_funcs"     -> qCalendarFuncsSql,
-    "dedup_jaccard_ppjoin" -> QueriesExt.ngramJaccardSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_hash_sample", Seq("B16"), qHashSample, qHashSampleSql),
+    QuerySpec("dedup_canonical_docs", Seq("B31"), dedupCanonicalDocs, dedupCanonicalDocsSql),
+    QuerySpec("q_regexp_extract", Seq("B8"), qRegexpExtract, qRegexpExtractSql),
+    QuerySpec("q_multiset_ops", Seq("B8"), qMultisetOps, qMultisetOpsSql),
+    QuerySpec("q_fuzzy_name", Seq("B8"), qFuzzyName, qFuzzyNameSql),
+    QuerySpec("q_calendar_funcs", Seq("B8"), qCalendarFuncs, qCalendarFuncsSql),
+    QuerySpec("dedup_jaccard_ppjoin", Seq("B3"), dedupJaccardPpjoin, QueriesExt.ngramJaccardSql)
   )
 }

@@ -478,17 +478,10 @@ object QueriesExt70 {
       |    AS assortativity_micro
       |FROM sums""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_louvain_pass" -> (graphLouvainPass _),
-    "sim_hamming_rerank" -> (simHammingRerank _),
-    "events_topk_merge_daily" -> (eventsTopkMergeDaily _),
-    "graph_assortativity" -> (graphAssortativity _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "graph_louvain_pass" -> graphLouvainPassSql,
-    "sim_hamming_rerank" -> simHammingRerankSql,
-    "events_topk_merge_daily" -> eventsTopkMergeDailySql,
-    "graph_assortativity" -> graphAssortativitySql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("graph_louvain_pass", Seq("B258"), graphLouvainPass, graphLouvainPassSql),
+    QuerySpec("sim_hamming_rerank", Seq("B259"), simHammingRerank, simHammingRerankSql),
+    QuerySpec("events_topk_merge_daily", Seq("B260"), eventsTopkMergeDaily, eventsTopkMergeDailySql),
+    QuerySpec("graph_assortativity", Seq("B261"), graphAssortativity, graphAssortativitySql)
   )
 }

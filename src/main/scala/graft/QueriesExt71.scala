@@ -106,7 +106,7 @@ object QueriesExt71 {
   }
 
   private val textKnContinuationSql = {
-    import QueriesExt.normSql
+    import Parity.normSql
     s"""WITH base AS (
        |  SELECT doc_id, source, $normSql AS nrm,
        |    CAST('0x' || substr(md5('cv:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 10 AS fold
@@ -250,13 +250,8 @@ object QueriesExt71 {
       |    AS holt_beats_naive
       |FROM holt h JOIN naive n ON n.event_type = h.event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_kn_continuation" -> (textKnContinuation _),
-    "events_holt_linear" -> (eventsHoltLinear _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_kn_continuation" -> textKnContinuationSql,
-    "events_holt_linear" -> eventsHoltLinearSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_kn_continuation", Seq("B262"), textKnContinuation, textKnContinuationSql),
+    QuerySpec("events_holt_linear", Seq("B263"), eventsHoltLinear, eventsHoltLinearSql)
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.{normSql, shinglesSql}
 
 /** Round-11 additions, batch 46: payload-entropy media gating with
   * planted separation (B264), b-bit MinHash priced against the full
@@ -122,10 +123,10 @@ object QueriesExt72 {
     operators.Dedup.bBitCalibration(documents(s, dir), "doc_id", "text", shingleWords = 3)
 
   private val dedupMinhashBBitSql = {
-    import QueriesExt.{normSql, shinglesSql, h32Sql, permsA, permsB}
+    import QueriesExt.{h32Sql, permsA, permsB}
     s"""WITH nrm AS (SELECT doc_id, $normSql AS norm FROM documents),
        |tok AS (SELECT doc_id, norm, string_split(norm,' ') AS toks FROM nrm),
-       |sh AS (SELECT doc_id, $shinglesSql AS shingles FROM tok),
+       |sh AS (SELECT doc_id, ${shinglesSql(3)} AS shingles FROM tok),
        |hs AS (SELECT doc_id, [${h32Sql("s")} for s in shingles] AS hlist,
        |       list_distinct(shingles) AS sset FROM sh),
        |sg AS (SELECT doc_id,
@@ -309,17 +310,10 @@ object QueriesExt72 {
       |  CAST(t.top_events * 1000000 // b.t_events AS BIGINT) AS top_decile_share_ppm
       |FROM base b, top t""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_payload_entropy" -> (mmPayloadEntropy _),
-    "dedup_minhash_b_bit" -> (dedupMinhashBBit _),
-    "embed_isotropy_score" -> (embedIsotropyScore _),
-    "events_gini_concentration" -> (eventsGiniConcentration _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "mm_payload_entropy" -> mmPayloadEntropySql,
-    "dedup_minhash_b_bit" -> dedupMinhashBBitSql,
-    "embed_isotropy_score" -> embedIsotropyScoreSql,
-    "events_gini_concentration" -> eventsGiniConcentrationSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("mm_payload_entropy", Seq("B264"), mmPayloadEntropy, mmPayloadEntropySql),
+    QuerySpec("dedup_minhash_b_bit", Seq("B265"), dedupMinhashBBit, dedupMinhashBBitSql),
+    QuerySpec("embed_isotropy_score", Seq("B266"), embedIsotropyScore, embedIsotropyScoreSql),
+    QuerySpec("events_gini_concentration", Seq("B267"), eventsGiniConcentration, eventsGiniConcentrationSql)
   )
 }

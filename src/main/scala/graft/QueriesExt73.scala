@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.dec2
 
 /** Round-11 additions, batch 47: incremental view maintenance for a JOIN
   * view with the delta-algebra identity certified inline (B268 — B106
@@ -12,8 +13,6 @@ import graft.Tables._
   * the security-adjacent text-cleaning gate).
   */
 object QueriesExt73 {
-
-  private def dec2(c: Column) = c.cast("decimal(18,2)")
 
   // --------------------------- IVM join delta (B268)
 
@@ -176,13 +175,8 @@ object QueriesExt73 {
       |    // count(*) AS flag_rate_ppm
       |FROM cnt GROUP BY 1, 2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ivm_join_delta" -> (qIvmJoinDelta _),
-    "text_unicode_confusables" -> (textUnicodeConfusables _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_ivm_join_delta" -> qIvmJoinDeltaSql,
-    "text_unicode_confusables" -> textUnicodeConfusablesSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_ivm_join_delta", Seq("B268"), qIvmJoinDelta, qIvmJoinDeltaSql),
+    QuerySpec("text_unicode_confusables", Seq("B269"), textUnicodeConfusables, textUnicodeConfusablesSql)
   )
 }

@@ -100,11 +100,7 @@ object QueriesExt74 {
       |  u.n_events, g.longest_gap_ms, u.longest_capped_ms
       |FROM per_user u JOIN per_gap g ON g.user_id = u.user_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_session_cap_split" -> (qSessionCapSplit _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_session_cap_split" -> qSessionCapSplitSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_session_cap_split", Seq("B270"), qSessionCapSplit, qSessionCapSplitSql)
   )
 }

@@ -224,15 +224,9 @@ object QueriesExt75 {
       |FROM per_node p, g
       |GROUP BY 1, 4, 5""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_coordinated_sample" -> (qCoordinatedSample _),
-    "q_weighted_quantiles" -> (qWeightedQuantiles _),
-    "graph_clustering_coeff" -> (graphClusteringCoeff _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_coordinated_sample" -> qCoordinatedSampleSql,
-    "q_weighted_quantiles" -> qWeightedQuantilesSql,
-    "graph_clustering_coeff" -> graphClusteringCoeffSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_coordinated_sample", Seq("B271"), qCoordinatedSample, qCoordinatedSampleSql),
+    QuerySpec("q_weighted_quantiles", Seq("B272"), qWeightedQuantiles, qWeightedQuantilesSql),
+    QuerySpec("graph_clustering_coeff", Seq("B273"), graphClusteringCoeff, graphClusteringCoeffSql)
   )
 }

@@ -159,13 +159,8 @@ object QueriesExt76 {
       |    AS pearson_micro
       |FROM sums""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_t_closeness" -> (qTCloseness _),
-    "events_type_correlation" -> (eventsTypeCorrelation _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_t_closeness" -> qTClosenessSql,
-    "events_type_correlation" -> eventsTypeCorrelationSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_t_closeness", Seq("B274"), qTCloseness, qTClosenessSql),
+    QuerySpec("events_type_correlation", Seq("B275"), eventsTypeCorrelation, eventsTypeCorrelationSql)
   )
 }

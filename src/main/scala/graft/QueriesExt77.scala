@@ -169,13 +169,8 @@ object QueriesExt77 {
       |    ELSE 2 * coalesce(ek.e_k, 0) * 1000000 // (nk.n_k * (nk.n_k - 1)) END AS phi_ppm
       |FROM ks LEFT JOIN nk ON nk.kthr = ks.kthr LEFT JOIN ek ON ek.kthr = ks.kthr""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_jsd_sources" -> (textJsdSources _),
-    "graph_rich_club" -> (graphRichClub _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_jsd_sources" -> textJsdSourcesSql,
-    "graph_rich_club" -> graphRichClubSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_jsd_sources", Seq("B276"), textJsdSources, textJsdSourcesSql),
+    QuerySpec("graph_rich_club", Seq("B277"), graphRichClub, graphRichClubSql)
   )
 }

@@ -392,21 +392,12 @@ object QueriesExt78 {
       |  CAST(count(DISTINCT CASE WHEN inv = 1 THEN user_id END) AS BIGINT) AS n_users_inverted
       |FROM r GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_gopher_rules"    -> (textGopherRules _),
-    "events_hazard_rate"   -> (eventsHazardRate _),
-    "text_ocr_garbage"     -> (textOcrGarbage _),
-    "events_burstiness"    -> (eventsBurstiness _),
-    "events_peak_capacity" -> (eventsPeakCapacity _),
-    "cdc_inversion_audit"  -> (cdcInversionAudit _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_gopher_rules"    -> textGopherRulesSql,
-    "events_hazard_rate"   -> eventsHazardRateSql,
-    "text_ocr_garbage"     -> textOcrGarbageSql,
-    "events_burstiness"    -> eventsBurstinessSql,
-    "events_peak_capacity" -> eventsPeakCapacitySql,
-    "cdc_inversion_audit"  -> cdcInversionAuditSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_gopher_rules", Seq("B278"), textGopherRules, textGopherRulesSql),
+    QuerySpec("events_hazard_rate", Seq("B279"), eventsHazardRate, eventsHazardRateSql),
+    QuerySpec("text_ocr_garbage", Seq("B280"), textOcrGarbage, textOcrGarbageSql),
+    QuerySpec("events_burstiness", Seq("B281"), eventsBurstiness, eventsBurstinessSql),
+    QuerySpec("events_peak_capacity", Seq("B282"), eventsPeakCapacity, eventsPeakCapacitySql),
+    QuerySpec("cdc_inversion_audit", Seq("B283"), cdcInversionAudit, cdcInversionAuditSql)
   )
 }

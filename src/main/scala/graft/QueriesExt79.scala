@@ -230,17 +230,10 @@ object QueriesExt79 {
        |FROM p GROUP BY 1""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_dot_vs_cosine_rank" -> (simDotVsCosineRank _),
-    "graph_partition_cut"    -> (graphPartitionCut _),
-    "mm_type_mismatch"       -> (mmTypeMismatch _),
-    "sim_rp_lsh_calibration" -> (simRpLshCalibration _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "sim_dot_vs_cosine_rank" -> simDotVsCosineRankSql,
-    "graph_partition_cut"    -> graphPartitionCutSql,
-    "mm_type_mismatch"       -> mmTypeMismatchSql,
-    "sim_rp_lsh_calibration" -> simRpLshCalibrationSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_dot_vs_cosine_rank", Seq("B284"), simDotVsCosineRank, simDotVsCosineRankSql),
+    QuerySpec("graph_partition_cut", Seq("B285"), graphPartitionCut, graphPartitionCutSql),
+    QuerySpec("mm_type_mismatch", Seq("B286"), mmTypeMismatch, mmTypeMismatchSql),
+    QuerySpec("sim_rp_lsh_calibration", Seq("B287"), simRpLshCalibration, simRpLshCalibrationSql)
   )
 }

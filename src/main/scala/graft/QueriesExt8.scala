@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.dec2
 import graft.operators.TextAnalysis
 
 /** Eighth query batch — remaining relational/window/text surface:
@@ -21,8 +22,6 @@ import graft.operators.TextAnalysis
   */
 object QueriesExt8 {
 
-  private def dec(c: Column) = c.cast("decimal(18,2)")
-
   // --------------------------------------------------------------- unpivot
 
   /** Pivot orders into per-priority status sums, then unpivot the measure
@@ -35,7 +34,7 @@ object QueriesExt8 {
     val wide = orders(s, dir)
       .groupBy(col("o_orderpriority"))
       .pivot("o_orderstatus", Seq("F", "O", "P"))
-      .agg(round(sum(dec(col("o_totalprice"))), 2).cast("double"))
+      .agg(round(sum(dec2(col("o_totalprice"))), 2).cast("double"))
       .select(
         col("o_orderpriority"),
         coalesce(col("F"), lit(0.0)).as("sum_f"),
@@ -80,7 +79,7 @@ object QueriesExt8 {
     orders(s, dir)
       .filter(col("o_totalprice") > 400000)
       .withColumn("cents", floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-      .withColumn("nearby_sum", round(sum(dec(col("o_totalprice"))).over(w), 2).cast("double"))
+      .withColumn("nearby_sum", round(sum(dec2(col("o_totalprice"))).over(w), 2).cast("double"))
       .withColumn("n_nearby", count(lit(1)).over(w))
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"), col("nearby_sum"), col("n_nearby"))
   }
@@ -152,17 +151,10 @@ object QueriesExt8 {
 
   // ------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_unpivot"       -> (qUnpivot _),
-    "q_range_frame"   -> (qRangeFrame _),
-    "q_percent_rank"  -> (qPercentRank _),
-    "text_ngram_freq" -> (textNgramFreq _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_unpivot"       -> qUnpivotSql,
-    "q_range_frame"   -> qRangeFrameSql,
-    "q_percent_rank"  -> qPercentRankSql,
-    "text_ngram_freq" -> textNgramFreqSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_unpivot", Seq("B12"), qUnpivot, qUnpivotSql),
+    QuerySpec("q_range_frame", Seq("B11"), qRangeFrame, qRangeFrameSql),
+    QuerySpec("q_percent_rank", Seq("B11"), qPercentRank, qPercentRankSql),
+    QuerySpec("text_ngram_freq", Seq("B13"), textNgramFreq, textNgramFreqSql)
   )
 }

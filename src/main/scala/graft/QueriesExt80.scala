@@ -239,19 +239,11 @@ object QueriesExt80 {
       |    AS contaminated_ppm
       |FROM d, c GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_srm_timeline"       -> (eventsSrmTimeline _),
-    "events_flap_rate"          -> (eventsFlapRate _),
-    "text_ngram_coverage_curve" -> (textNgramCoverageCurve _),
-    "embed_exact_dup"           -> (embedExactDup _),
-    "text_canary_contamination" -> (textCanaryContamination _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_srm_timeline"       -> eventsSrmTimelineSql,
-    "events_flap_rate"          -> eventsFlapRateSql,
-    "text_ngram_coverage_curve" -> textNgramCoverageCurveSql,
-    "embed_exact_dup"           -> embedExactDupSql,
-    "text_canary_contamination" -> textCanaryContaminationSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_srm_timeline", Seq("B288"), eventsSrmTimeline, eventsSrmTimelineSql),
+    QuerySpec("events_flap_rate", Seq("B289"), eventsFlapRate, eventsFlapRateSql),
+    QuerySpec("text_ngram_coverage_curve", Seq("B290"), textNgramCoverageCurve, textNgramCoverageCurveSql),
+    QuerySpec("embed_exact_dup", Seq("B291"), embedExactDup, embedExactDupSql),
+    QuerySpec("text_canary_contamination", Seq("B292"), textCanaryContamination, textCanaryContaminationSql)
   )
 }

@@ -49,11 +49,7 @@ object QueriesExt81 {
       |  max(ms) AS max_ms
       |FROM x GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_ts_quality" -> (eventsTsQuality _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_ts_quality" -> eventsTsQualitySql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_ts_quality", Seq("B293"), eventsTsQuality, eventsTsQualitySql)
   )
 }

@@ -254,17 +254,10 @@ object QueriesExt82 {
       |    AS corr_factor_ppm
       |FROM a""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_seasonal_anomaly"      -> (eventsSeasonalAnomaly _),
-    "cdc_watermark_survivor_drift" -> (cdcWatermarkSurvivorDrift _),
-    "events_debounce_sweep"        -> (eventsDebounceSweep _),
-    "q_selectivity_independence"   -> (qSelectivityIndependence _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_seasonal_anomaly"      -> eventsSeasonalAnomalySql,
-    "cdc_watermark_survivor_drift" -> cdcWatermarkSurvivorDriftSql,
-    "events_debounce_sweep"        -> eventsDebounceSweepSql,
-    "q_selectivity_independence"   -> qSelectivityIndependenceSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_seasonal_anomaly", Seq("B294"), eventsSeasonalAnomaly, eventsSeasonalAnomalySql),
+    QuerySpec("cdc_watermark_survivor_drift", Seq("B295"), cdcWatermarkSurvivorDrift, cdcWatermarkSurvivorDriftSql),
+    QuerySpec("events_debounce_sweep", Seq("B296"), eventsDebounceSweep, eventsDebounceSweepSql),
+    QuerySpec("q_selectivity_independence", Seq("B297"), qSelectivityIndependence, qSelectivityIndependenceSql)
   )
 }

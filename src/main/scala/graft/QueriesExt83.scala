@@ -89,7 +89,7 @@ object QueriesExt83 {
   }
 
   private val textDsirWeightsSql = {
-    import QueriesExt.normSql
+    import Parity.normSql
     s"""WITH nrm AS (SELECT doc_id, lang, string_split($normSql,' ') AS toks FROM documents),
        |tok AS (SELECT doc_id, lang, unnest(toks) AS tok FROM nrm),
        |dt AS (SELECT doc_id, tok, count(*) AS cnt FROM tok GROUP BY 1, 2),
@@ -350,17 +350,10 @@ object QueriesExt83 {
       |  min(p_day) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) < 0.05 AS significant
       |FROM pp""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_dsir_weights"   -> (textDsirWeights _),
-    "mm_aspect_buckets"   -> (mmAspectBuckets _),
-    "sim_hard_negatives"  -> (simHardNegatives _),
-    "events_ab_sequential" -> (eventsAbSequential _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_dsir_weights"   -> textDsirWeightsSql,
-    "mm_aspect_buckets"   -> mmAspectBucketsSql,
-    "sim_hard_negatives"  -> simHardNegativesSql,
-    "events_ab_sequential" -> eventsAbSequentialSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_dsir_weights", Seq("B298"), textDsirWeights, textDsirWeightsSql),
+    QuerySpec("mm_aspect_buckets", Seq("B299"), mmAspectBuckets, mmAspectBucketsSql),
+    QuerySpec("sim_hard_negatives", Seq("B300"), simHardNegatives, simHardNegativesSql),
+    QuerySpec("events_ab_sequential", Seq("B301"), eventsAbSequential, eventsAbSequentialSql)
   )
 }

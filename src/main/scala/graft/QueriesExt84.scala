@@ -406,17 +406,10 @@ object QueriesExt84 {
       |  mc_raw.mc - mc_w.mc AS gain_micro
       |FROM mc_raw, mc_w""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_shard_plan"        -> (mmShardPlan _),
-    "q_encoding_gain"      -> (qEncodingGain _),
-    "sim_nn_descent_round" -> (simNnDescentRound _),
-    "embed_whitening_gain" -> (embedWhiteningGain _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "mm_shard_plan"        -> mmShardPlanSql,
-    "q_encoding_gain"      -> qEncodingGainSql,
-    "sim_nn_descent_round" -> simNnDescentRoundSql,
-    "embed_whitening_gain" -> embedWhiteningGainSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("mm_shard_plan", Seq("B302"), mmShardPlan, mmShardPlanSql),
+    QuerySpec("q_encoding_gain", Seq("B303"), qEncodingGain, qEncodingGainSql),
+    QuerySpec("sim_nn_descent_round", Seq("B304"), simNnDescentRound, simNnDescentRoundSql),
+    QuerySpec("embed_whitening_gain", Seq("B305"), embedWhiteningGain, embedWhiteningGainSql)
   )
 }

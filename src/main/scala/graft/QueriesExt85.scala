@@ -183,7 +183,7 @@ object QueriesExt85 {
   }
 
   private val textRakeKeyphrasesSql = {
-    import QueriesExt.normSql
+    import Parity.normSql
     val stopList = operators.TextAnalysis.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
     s"""WITH tok AS (SELECT doc_id, generate_subscripts(toks, 1) AS pos, unnest(toks) AS tok
        |  FROM (SELECT doc_id, string_split($normSql, ' ') AS toks FROM documents)),
@@ -402,17 +402,10 @@ object QueriesExt85 {
       |       ELSE CAST(CAST(area_ms AS HUGEINT) * 1000000 // sum_dur_ms AS BIGINT) END AS littles_ratio_ppm
       |FROM base, ar""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "embed_pq_train_iter"           -> (embedPqTrainIter _),
-    "text_rake_keyphrases"          -> (textRakeKeyphrases _),
-    "embed_jl_distortion"           -> (embedJlDistortion _),
-    "events_concurrency_littles_law" -> (eventsConcurrencyLittlesLaw _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "embed_pq_train_iter"           -> embedPqTrainIterSql,
-    "text_rake_keyphrases"          -> textRakeKeyphrasesSql,
-    "embed_jl_distortion"           -> embedJlDistortionSql,
-    "events_concurrency_littles_law" -> eventsConcurrencyLittlesLawSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("embed_pq_train_iter", Seq("B306"), embedPqTrainIter, embedPqTrainIterSql),
+    QuerySpec("text_rake_keyphrases", Seq("B307"), textRakeKeyphrases, textRakeKeyphrasesSql),
+    QuerySpec("embed_jl_distortion", Seq("B308"), embedJlDistortion, embedJlDistortionSql),
+    QuerySpec("events_concurrency_littles_law", Seq("B309"), eventsConcurrencyLittlesLaw, eventsConcurrencyLittlesLawSql)
   )
 }

@@ -411,17 +411,10 @@ object QueriesExt86 {
       |    (sum(sum(credit_milli)) OVER ()) AS BIGINT) AS share_ppm
       |FROM credited GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_hits_scores"        -> (graphHitsScores _),
-    "text_textrank_sentences"  -> (textTextrankSentences _),
-    "embed_cluster_purity"     -> (embedClusterPurity _),
-    "events_attribution_ushape" -> (eventsAttributionUshape _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "graph_hits_scores"        -> graphHitsScoresSql,
-    "text_textrank_sentences"  -> textTextrankSentencesSql,
-    "embed_cluster_purity"     -> embedClusterPuritySql,
-    "events_attribution_ushape" -> eventsAttributionUshapeSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("graph_hits_scores", Seq("B310"), graphHitsScores, graphHitsScoresSql),
+    QuerySpec("text_textrank_sentences", Seq("B311"), textTextrankSentences, textTextrankSentencesSql),
+    QuerySpec("embed_cluster_purity", Seq("B312"), embedClusterPurity, embedClusterPuritySql),
+    QuerySpec("events_attribution_ushape", Seq("B313"), eventsAttributionUshape, eventsAttributionUshapeSql)
   )
 }

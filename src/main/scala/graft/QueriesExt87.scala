@@ -302,7 +302,7 @@ object QueriesExt87 {
   }
 
   private val textConditionalEntropySql = {
-    import QueriesExt.normSql
+    import Parity.normSql
     s"""WITH nrm AS (SELECT source, $normSql AS nrm FROM documents),
        |bg AS (SELECT source, substr(nrm, i, 2) AS b
        |  FROM (SELECT source, nrm, unnest(range(1, length(nrm))) AS i
@@ -377,17 +377,10 @@ object QueriesExt87 {
       |  max(n_cuts) AS max_cuts
       |FROM cuts GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_attribution_markov" -> (eventsAttributionMarkov _),
-    "q_join_order_surface"      -> (qJoinOrderSurface _),
-    "text_conditional_entropy"  -> (textConditionalEntropy _),
-    "mm_scene_cuts"             -> (mmSceneCuts _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "events_attribution_markov" -> eventsAttributionMarkovSql,
-    "q_join_order_surface"      -> qJoinOrderSurfaceSql,
-    "text_conditional_entropy"  -> textConditionalEntropySql,
-    "mm_scene_cuts"             -> mmSceneCutsSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("events_attribution_markov", Seq("B314"), eventsAttributionMarkov, eventsAttributionMarkovSql),
+    QuerySpec("q_join_order_surface", Seq("B315"), qJoinOrderSurface, qJoinOrderSurfaceSql),
+    QuerySpec("text_conditional_entropy", Seq("B316"), textConditionalEntropy, textConditionalEntropySql),
+    QuerySpec("mm_scene_cuts", Seq("B317"), mmSceneCuts, mmSceneCutsSql)
   )
 }

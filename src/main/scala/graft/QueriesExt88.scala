@@ -256,7 +256,7 @@ object QueriesExt88 {
   }
 
   private val textTermDriftSql = {
-    import QueriesExt.normSql
+    import Parity.normSql
     s"""WITH thr AS (SELECT max(doc_id) // 2 AS thr FROM documents),
        |tok AS (SELECT doc_id <= thr AS h1, unnest(string_split($normSql, ' ')) AS tok
        |  FROM documents, thr),
@@ -277,17 +277,10 @@ object QueriesExt88 {
        |FROM scored ORDER BY abs(z_drift) DESC, tok LIMIT 20""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_replica_checksum"       -> (qReplicaChecksum _),
-    "events_forecast_backtest" -> (eventsForecastBacktest _),
-    "graph_ppr_seed"           -> (graphPprSeed _),
-    "text_term_drift"          -> (textTermDrift _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_replica_checksum"       -> qReplicaChecksumSql,
-    "events_forecast_backtest" -> eventsForecastBacktestSql,
-    "graph_ppr_seed"           -> graphPprSeedSql,
-    "text_term_drift"          -> textTermDriftSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_replica_checksum", Seq("B318"), qReplicaChecksum, qReplicaChecksumSql),
+    QuerySpec("events_forecast_backtest", Seq("B319"), eventsForecastBacktest, eventsForecastBacktestSql),
+    QuerySpec("graph_ppr_seed", Seq("B320"), graphPprSeed, graphPprSeedSql),
+    QuerySpec("text_term_drift", Seq("B321"), textTermDrift, textTermDriftSql)
   )
 }

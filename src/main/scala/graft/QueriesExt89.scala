@@ -215,11 +215,7 @@ object QueriesExt89 {
       |FROM picked2 p JOIN nb ON nb.fc = p.fc, mv, q1, q2
       |GROUP BY 1, 3, 4, 5, 6""".stripMargin
 
-  private[graft] def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_louvain_level" -> (graphLouvainLevel _)
-  )
-
-  private[graft] def oracleSql: Map[String, String] = Map(
-    "graph_louvain_level" -> graphLouvainLevelSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("graph_louvain_level", Seq("B258"), graphLouvainLevel, graphLouvainLevelSql)
   )
 }

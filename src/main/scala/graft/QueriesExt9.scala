@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
+import graft.Parity.{normSql, shinglesSql}
 import graft.functions.Hashing
 import graft.operators.TextAnalysis
 
@@ -22,14 +23,6 @@ import graft.operators.TextAnalysis
   * hash buckets).
   */
 object QueriesExt9 {
-
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
-
-  /** k-word shingle list comprehension with the short-doc fallback used by
-    * the codegen'd WordKGrams expression ([norm] when fewer than k words).
-    */
-  private def shinglesSql(k: Int) =
-    s"CASE WHEN len(toks)>=$k THEN [array_to_string(toks[i:i+${k - 1}],' ') for i in range(1,len(toks)-${k - 2})] ELSE [norm] END"
 
   // ------------------------------------------------- eval decontamination
 
@@ -325,27 +318,15 @@ object QueriesExt9 {
 
   // ------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_decontaminate"  -> (textDecontaminate _),
-    "text_repetition"     -> (textRepetition _),
-    "q_stratified_sample" -> (qStratifiedSample _),
-    "events_funnel"       -> (eventsFunnel _),
-    "events_retention"    -> (eventsRetention _),
-    "q_shard_assign"      -> (qShardAssign _),
-    "q_embed_project"     -> (qEmbedProject _),
-    "dedup_minhash_incremental" -> (dedupMinhashIncremental _),
-    "q_topk_per_group"    -> (qTopkPerGroup _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_decontaminate"  -> textDecontaminateSql,
-    "text_repetition"     -> textRepetitionSql,
-    "q_stratified_sample" -> qStratifiedSampleSql,
-    "events_funnel"       -> eventsFunnelSql,
-    "events_retention"    -> eventsRetentionSql,
-    "q_shard_assign"      -> qShardAssignSql,
-    "q_embed_project"     -> qEmbedProjectSql,
-    "dedup_minhash_incremental" -> dedupMinhashIncrementalSql,
-    "q_topk_per_group"    -> qTopkPerGroupSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_decontaminate", Seq("B17"), textDecontaminate, textDecontaminateSql),
+    QuerySpec("text_repetition", Seq("B17"), textRepetition, textRepetitionSql),
+    QuerySpec("q_stratified_sample", Seq("B16"), qStratifiedSample, qStratifiedSampleSql),
+    QuerySpec("events_funnel", Seq("B7"), eventsFunnel, eventsFunnelSql),
+    QuerySpec("events_retention", Seq("B40"), eventsRetention, eventsRetentionSql),
+    QuerySpec("q_shard_assign", Seq("B15"), qShardAssign, qShardAssignSql),
+    QuerySpec("q_embed_project", Seq("B6"), qEmbedProject, qEmbedProjectSql),
+    QuerySpec("dedup_minhash_incremental", Seq("B3"), dedupMinhashIncremental, dedupMinhashIncrementalSql),
+    QuerySpec("q_topk_per_group", Seq("B11"), qTopkPerGroup, qTopkPerGroupSql)
   )
 }

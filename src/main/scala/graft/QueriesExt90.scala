@@ -331,11 +331,7 @@ object QueriesExt90 {
        |FROM curve, conv WHERE level <= conv.ca""".stripMargin
   }
 
-  private[graft] def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_louvain_converge" -> (graphLouvainConverge _)
-  )
-
-  private[graft] def oracleSql: Map[String, String] = Map(
-    "graph_louvain_converge" -> graphLouvainConvergeSql
+  private[graft] val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("graph_louvain_converge", Seq("B258"), graphLouvainConverge, graphLouvainConvergeSql)
   )
 }

@@ -5,12 +5,26 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables._
+import graft.Parity.{dec2, tsLit}
 import graft.cdc.Envelope
 import graft.enrich.Enrichment
 
+/** One registered query: its name, the SURVEY.md §2 ids it covers, its
+  * Spark builder and the DuckDB oracle SQL the driver hash-compares it
+  * against. Each registry object declares its queries once, as a `specs`
+  * list at the bottom of the object (object vals initialise in textual
+  * order, so a list above the `…Sql` strings would capture nulls).
+  */
+final case class QuerySpec(
+    name: String,
+    surveyIds: Seq[String],
+    build: (SparkSession, String) => DataFrame,
+    oracleSql: String)
+
 /** Driver contract (see repo README): `queries` = one deterministic batch
   * query per implemented operator from SURVEY.md §2; `oracleSql` = the
-  * DuckDB-equivalent SQL the driver hash-compares against at sf0.01.
+  * DuckDB-equivalent SQL the driver hash-compares against at sf0.01. Both
+  * are views of `registry`, the single list of [[QuerySpec]]s.
   *
   * Parity rules used throughout (so the independent oracle reproduces
   * results bit-for-bit):
@@ -29,23 +43,12 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- helpers
 
-  /** epoch-ms of a date literal like "1997-01-01" (UTC session). */
-  private def tsLit(date: String) = to_timestamp(lit(date))
-
-  /** Exact-decimal money arithmetic: the fixtures' money columns are
-    * 2-decimal values, so aggregating as DECIMAL is exact and
-    * order-independent — a plain double sum can flip a round() boundary
-    * depending on partition/merge order (observed: .595 rounding .59 vs
-    * .60 between engines). Matching oracle form:
-    * CAST(round(sum(CAST(x AS DECIMAL(18,2))), 2) AS DOUBLE).
-    */
-  private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
   // round BEFORE the double cast: round(DECIMAL) is exact HALF_UP in both
   // engines, while round(DOUBLE) differs (Spark rounds the shortest decimal
   // repr, DuckDB the binary value — .595 → .60 vs .59).
   private def decSum(c: org.apache.spark.sql.Column) = round(sum(c), 2).cast("double")
   private def decAvg(c: org.apache.spark.sql.Column) =
-    round(sum(dec(c)).cast("double") / count(lit(1)), 6)
+    round(sum(dec2(c)).cast("double") / count(lit(1)), 6)
 
   // ------------------------------------------------------- relational (B8)
 
@@ -128,7 +131,7 @@ object SparkEntry {
         col("l_quantity"),
         // per-row money math also goes through DECIMAL: round(double, 2)
         // diverges between engines on .xx5 boundaries (3 rows at sf0.1)
-        round(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"))), 2)
+        round(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount"))), 2)
           .cast("double").as("net_price")
       )
 
@@ -147,7 +150,7 @@ object SparkEntry {
       .join(lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
       .filter(col("l_shipdate") > tsLit("1998-06-30"))
       .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      .agg(decSum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))).as("revenue"))
+      .agg(decSum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount")))).as("revenue"))
       .select(
         col("l_orderkey"),
         unix_millis(col("o_orderdate").cast("timestamp")).as("o_orderdate_ms"),
@@ -177,7 +180,7 @@ object SparkEntry {
       .join(lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
       .join(supplier(s, dir), col("l_suppkey") === col("s_suppkey") && col("s_nationkey") === col("c_nationkey"))
       .groupBy(col("n_name"))
-      .agg(decSum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))).as("revenue"))
+      .agg(decSum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount")))).as("revenue"))
 
   private val q5Sql =
     """SELECT n_name, CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS revenue
@@ -196,7 +199,7 @@ object SparkEntry {
         col("l_shipdate") >= tsLit("1996-01-01") && col("l_shipdate") < tsLit("1997-01-01") &&
           col("l_discount").between(0.03, 0.07) && col("l_quantity") < 25
       )
-      .agg(decSum(dec(col("l_extendedprice")) * dec(col("l_discount"))).as("revenue"))
+      .agg(decSum(dec2(col("l_extendedprice")) * dec2(col("l_discount"))).as("revenue"))
 
   private val q6Sql =
     """SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))), 2) AS DOUBLE) AS revenue
@@ -212,7 +215,7 @@ object SparkEntry {
       .filter(col("l_returnflag") === "R")
       .join(nation(s, dir), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-      .agg(decSum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))).as("revenue"))
+      .agg(decSum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount")))).as("revenue"))
       .orderBy(col("revenue").desc, col("c_custkey").asc)
       .limit(20)
 
@@ -272,7 +275,7 @@ object SparkEntry {
       .join(broadcast(region(s, dir)), col("n_regionkey") === col("r_regionkey"))
       .join(orders(s, dir), col("c_custkey") === col("o_custkey"))
       .rollup(col("r_name"), col("n_name"))
-      .agg(decSum(dec(col("o_totalprice"))).as("sum_revenue"), count(lit(1)).as("n_orders"))
+      .agg(decSum(dec2(col("o_totalprice"))).as("sum_revenue"), count(lit(1)).as("n_orders"))
       .select(
         coalesce(col("r_name"), lit("ALL")).as("region_name"),
         coalesce(col("n_name"), lit("ALL")).as("nation_name"),
@@ -390,7 +393,7 @@ object SparkEntry {
         year(col("o_orderdate")).cast("long").as("o_year"),
         month(col("o_orderdate")).cast("long").as("o_month")
       )
-      .agg(count(lit(1)).as("n_orders"), decSum(dec(col("o_totalprice"))).as("sum_price"))
+      .agg(count(lit(1)).as("n_orders"), decSum(dec2(col("o_totalprice"))).as("sum_price"))
 
   private val qDateFuncsSql =
     """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
@@ -464,53 +467,42 @@ object SparkEntry {
 
   // ------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary"   -> (q1 _),
-    "q2_filter_project"    -> (q2 _),
-    "q3_shipping_priority" -> (q3 _),
-    "q5_local_supplier"    -> (q5 _),
-    "q6_revenue_forecast"  -> (q6 _),
-    "q10_returned_items"   -> (q10 _),
-    "q_top_orders"         -> (qTopOrders _),
-    "q_distinct_pairs"     -> (qDistinct _),
-    "q_window_rank"        -> (qWindowRank _),
-    "q_rollup_sales"       -> (qRollup _),
-    "q_semi_join"          -> (qSemiJoin _),
-    "q_anti_join"          -> (qAntiJoin _),
-    "q_set_ops"            -> (qSetOps _),
-    "q_broadcast_part"     -> (qBroadcastPart _),
-    "q_case_agg"           -> (qCaseAgg _),
-    "q_string_funcs"       -> (qStringFuncs _),
-    "q_date_funcs"         -> (qDateFuncs _),
-    "cdc_extract"          -> (cdcExtract _),
-    "cdc_latest_wins"      -> (cdcLatestWins _),
-    "cdc_enrich_join"      -> (cdcEnrichJoin _),
-    "cdc_enrich_dlq"       -> (cdcEnrichDlq _),
-    "cdc_dedup_exact"      -> (cdcDedupExact _)
-  ) ++ QueriesExt.queries ++ QueriesExt2.queries ++ QueriesExt3.queries ++ QueriesExt4.queries ++ QueriesExt5.queries ++ QueriesExt6.queries ++ QueriesExt7.queries ++ QueriesExt8.queries ++ QueriesExt9.queries ++ QueriesExt10.queries ++ QueriesExt11.queries ++ QueriesExt12.queries ++ QueriesExt13.queries ++ QueriesExt14.queries ++ QueriesExt15.queries ++ QueriesExt16.queries ++ QueriesExt17.queries ++ QueriesExt18.queries ++ QueriesExt19.queries ++ QueriesExt20.queries ++ QueriesExt21.queries ++ QueriesExt22.queries ++ QueriesExt23.queries ++ QueriesExt24.queries ++ QueriesExt25.queries ++ QueriesExt26.queries ++ QueriesExt27.queries ++ QueriesExt28.queries ++ QueriesExt29.queries ++ QueriesExt30.queries ++ QueriesExt31.queries ++ QueriesExt32.queries ++ QueriesExt33.queries ++ QueriesExt34.queries ++ QueriesExt35.queries ++ QueriesExt36.queries ++ QueriesExt37.queries ++ QueriesExt38.queries ++ QueriesExt39.queries ++ QueriesExt40.queries ++ QueriesExt41.queries ++ QueriesExt42.queries ++ QueriesExt43.queries ++ QueriesExt44.queries ++ QueriesExt45.queries ++ QueriesExt46.queries ++ QueriesExt47.queries ++ QueriesExt48.queries ++ QueriesExt49.queries ++ QueriesExt50.queries ++ QueriesExt51.queries ++ QueriesExt52.queries ++ QueriesExt53.queries ++ QueriesExt54.queries ++ QueriesExt55.queries ++ QueriesExt56.queries ++ QueriesExt57.queries ++ QueriesExt58.queries ++ QueriesExt59.queries ++ QueriesExt60.queries ++ QueriesExt61.queries ++ QueriesExt62.queries ++ QueriesExt63.queries ++ QueriesExt64.queries ++ QueriesExt65.queries ++ QueriesExt66.queries ++ QueriesExt67.queries ++ QueriesExt68.queries ++ QueriesExt69.queries ++ QueriesExt70.queries ++ QueriesExt71.queries ++ QueriesExt72.queries ++ QueriesExt73.queries ++ QueriesExt74.queries ++ QueriesExt75.queries ++ QueriesExt76.queries ++ QueriesExt77.queries ++ QueriesExt78.queries ++ QueriesExt79.queries ++ QueriesExt80.queries ++ QueriesExt81.queries ++ QueriesExt82.queries ++ QueriesExt83.queries ++ QueriesExt84.queries ++ QueriesExt85.queries ++ QueriesExt86.queries ++ QueriesExt87.queries ++ QueriesExt88.queries ++ QueriesExt89.queries ++ QueriesExt90.queries
+  private val local: Seq[QuerySpec] = Seq(
+    QuerySpec("q1_pricing_summary", Seq("B8"), q1, q1Sql),
+    QuerySpec("q2_filter_project", Seq("B8"), q2, q2Sql),
+    QuerySpec("q3_shipping_priority", Seq("B8"), q3, q3Sql),
+    QuerySpec("q5_local_supplier", Seq("B8"), q5, q5Sql),
+    QuerySpec("q6_revenue_forecast", Seq("B8"), q6, q6Sql),
+    QuerySpec("q10_returned_items", Seq("B8"), q10, q10Sql),
+    QuerySpec("q_top_orders", Seq("B8"), qTopOrders, qTopOrdersSql),
+    QuerySpec("q_distinct_pairs", Seq("B8"), qDistinct, qDistinctSql),
+    QuerySpec("q_window_rank", Seq("B11"), qWindowRank, qWindowRankSql),
+    QuerySpec("q_rollup_sales", Seq("B12"), qRollup, qRollupSql),
+    QuerySpec("q_semi_join", Seq("B8"), qSemiJoin, qSemiJoinSql),
+    QuerySpec("q_anti_join", Seq("B8"), qAntiJoin, qAntiJoinSql),
+    QuerySpec("q_set_ops", Seq("B8"), qSetOps, qSetOpsSql),
+    QuerySpec("q_broadcast_part", Seq("B8"), qBroadcastPart, qBroadcastPartSql),
+    QuerySpec("q_case_agg", Seq("B8"), qCaseAgg, qCaseAggSql),
+    QuerySpec("q_string_funcs", Seq("B8"), qStringFuncs, qStringFuncsSql),
+    QuerySpec("q_date_funcs", Seq("B8"), qDateFuncs, qDateFuncsSql),
+    QuerySpec("cdc_extract", Seq("A1", "A3", "A4"), cdcExtract, cdcExtractSql),
+    QuerySpec("cdc_latest_wins", Seq("B2"), cdcLatestWins, cdcLatestWinsSql),
+    QuerySpec("cdc_enrich_join", Seq("A5", "A6"), cdcEnrichJoin, cdcEnrichJoinSql),
+    QuerySpec("cdc_enrich_dlq", Seq("A7"), cdcEnrichDlq, cdcEnrichDlqSql),
+    QuerySpec("cdc_dedup_exact", Seq("B1"), cdcDedupExact, cdcDedupExactSql)
+  )
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary"   -> q1Sql,
-    "q2_filter_project"    -> q2Sql,
-    "q3_shipping_priority" -> q3Sql,
-    "q5_local_supplier"    -> q5Sql,
-    "q6_revenue_forecast"  -> q6Sql,
-    "q10_returned_items"   -> q10Sql,
-    "q_top_orders"         -> qTopOrdersSql,
-    "q_distinct_pairs"     -> qDistinctSql,
-    "q_window_rank"        -> qWindowRankSql,
-    "q_rollup_sales"       -> qRollupSql,
-    "q_semi_join"          -> qSemiJoinSql,
-    "q_anti_join"          -> qAntiJoinSql,
-    "q_set_ops"            -> qSetOpsSql,
-    "q_broadcast_part"     -> qBroadcastPartSql,
-    "q_case_agg"           -> qCaseAggSql,
-    "q_string_funcs"       -> qStringFuncsSql,
-    "q_date_funcs"         -> qDateFuncsSql,
-    "cdc_extract"          -> cdcExtractSql,
-    "cdc_latest_wins"      -> cdcLatestWinsSql,
-    "cdc_enrich_join"      -> cdcEnrichJoinSql,
-    "cdc_enrich_dlq"       -> cdcEnrichDlqSql,
-    "cdc_dedup_exact"      -> cdcDedupExactSql
-  ) ++ QueriesExt.oracleSql ++ QueriesExt2.oracleSql ++ QueriesExt3.oracleSql ++ QueriesExt4.oracleSql ++ QueriesExt5.oracleSql ++ QueriesExt6.oracleSql ++ QueriesExt7.oracleSql ++ QueriesExt8.oracleSql ++ QueriesExt9.oracleSql ++ QueriesExt10.oracleSql ++ QueriesExt11.oracleSql ++ QueriesExt12.oracleSql ++ QueriesExt13.oracleSql ++ QueriesExt14.oracleSql ++ QueriesExt15.oracleSql ++ QueriesExt16.oracleSql ++ QueriesExt17.oracleSql ++ QueriesExt18.oracleSql ++ QueriesExt19.oracleSql ++ QueriesExt20.oracleSql ++ QueriesExt21.oracleSql ++ QueriesExt22.oracleSql ++ QueriesExt23.oracleSql ++ QueriesExt24.oracleSql ++ QueriesExt25.oracleSql ++ QueriesExt26.oracleSql ++ QueriesExt27.oracleSql ++ QueriesExt28.oracleSql ++ QueriesExt29.oracleSql ++ QueriesExt30.oracleSql ++ QueriesExt31.oracleSql ++ QueriesExt32.oracleSql ++ QueriesExt33.oracleSql ++ QueriesExt34.oracleSql ++ QueriesExt35.oracleSql ++ QueriesExt36.oracleSql ++ QueriesExt37.oracleSql ++ QueriesExt38.oracleSql ++ QueriesExt39.oracleSql ++ QueriesExt40.oracleSql ++ QueriesExt41.oracleSql ++ QueriesExt42.oracleSql ++ QueriesExt43.oracleSql ++ QueriesExt44.oracleSql ++ QueriesExt45.oracleSql ++ QueriesExt46.oracleSql ++ QueriesExt47.oracleSql ++ QueriesExt48.oracleSql ++ QueriesExt49.oracleSql ++ QueriesExt50.oracleSql ++ QueriesExt51.oracleSql ++ QueriesExt52.oracleSql ++ QueriesExt53.oracleSql ++ QueriesExt54.oracleSql ++ QueriesExt55.oracleSql ++ QueriesExt56.oracleSql ++ QueriesExt57.oracleSql ++ QueriesExt58.oracleSql ++ QueriesExt59.oracleSql ++ QueriesExt60.oracleSql ++ QueriesExt61.oracleSql ++ QueriesExt62.oracleSql ++ QueriesExt63.oracleSql ++ QueriesExt64.oracleSql ++ QueriesExt65.oracleSql ++ QueriesExt66.oracleSql ++ QueriesExt67.oracleSql ++ QueriesExt68.oracleSql ++ QueriesExt69.oracleSql ++ QueriesExt70.oracleSql ++ QueriesExt71.oracleSql ++ QueriesExt72.oracleSql ++ QueriesExt73.oracleSql ++ QueriesExt74.oracleSql ++ QueriesExt75.oracleSql ++ QueriesExt76.oracleSql ++ QueriesExt77.oracleSql ++ QueriesExt78.oracleSql ++ QueriesExt79.oracleSql ++ QueriesExt80.oracleSql ++ QueriesExt81.oracleSql ++ QueriesExt82.oracleSql ++ QueriesExt83.oracleSql ++ QueriesExt84.oracleSql ++ QueriesExt85.oracleSql ++ QueriesExt86.oracleSql ++ QueriesExt87.oracleSql ++ QueriesExt88.oracleSql ++ QueriesExt89.oracleSql ++ QueriesExt90.oracleSql
+  /** Every registered query, each declared once by its owning object. */
+  val registry: Seq[QuerySpec] = local ++ QueriesExt.specs ++ QueriesExt2.specs ++ QueriesExt3.specs ++ QueriesExt4.specs ++ QueriesExt5.specs ++ QueriesExt6.specs ++ QueriesExt7.specs ++ QueriesExt8.specs ++ QueriesExt9.specs ++ QueriesExt10.specs ++ QueriesExt11.specs ++ QueriesExt12.specs ++ QueriesExt13.specs ++ QueriesExt14.specs ++ QueriesExt15.specs ++ QueriesExt16.specs ++ QueriesExt17.specs ++ QueriesExt18.specs ++ QueriesExt19.specs ++ QueriesExt20.specs ++ QueriesExt21.specs ++ QueriesExt22.specs ++ QueriesExt23.specs ++ QueriesExt24.specs ++ QueriesExt25.specs ++ QueriesExt26.specs ++ QueriesExt27.specs ++ QueriesExt28.specs ++ QueriesExt29.specs ++ QueriesExt30.specs ++ QueriesExt31.specs ++ QueriesExt32.specs ++ QueriesExt33.specs ++ QueriesExt34.specs ++ QueriesExt35.specs ++ QueriesExt36.specs ++ QueriesExt37.specs ++ QueriesExt38.specs ++ QueriesExt39.specs ++ QueriesExt40.specs ++ QueriesExt41.specs ++ QueriesExt42.specs ++ QueriesExt43.specs ++ QueriesExt44.specs ++ QueriesExt45.specs ++ QueriesExt46.specs ++ QueriesExt47.specs ++ QueriesExt48.specs ++ QueriesExt49.specs ++ QueriesExt50.specs ++ QueriesExt51.specs ++ QueriesExt52.specs ++ QueriesExt53.specs ++ QueriesExt54.specs ++ QueriesExt55.specs ++ QueriesExt56.specs ++ QueriesExt57.specs ++ QueriesExt58.specs ++ QueriesExt59.specs ++ QueriesExt60.specs ++ QueriesExt61.specs ++ QueriesExt62.specs ++ QueriesExt63.specs ++ QueriesExt64.specs ++ QueriesExt65.specs ++ QueriesExt66.specs ++ QueriesExt67.specs ++ QueriesExt68.specs ++ QueriesExt69.specs ++ QueriesExt70.specs ++ QueriesExt71.specs ++ QueriesExt72.specs ++ QueriesExt73.specs ++ QueriesExt74.specs ++ QueriesExt75.specs ++ QueriesExt76.specs ++ QueriesExt77.specs ++ QueriesExt78.specs ++ QueriesExt79.specs ++ QueriesExt80.specs ++ QueriesExt81.specs ++ QueriesExt82.specs ++ QueriesExt83.specs ++ QueriesExt84.specs ++ QueriesExt85.specs ++ QueriesExt86.specs ++ QueriesExt87.specs ++ QueriesExt88.specs ++ QueriesExt89.specs ++ QueriesExt90.specs
+
+  locally {
+    val dups = registry.groupBy(_.name).collect { case (n, ss) if ss.size > 1 => n }
+    require(dups.isEmpty, s"query names registered twice: ${dups.toSeq.sorted.mkString(", ")}")
+    val unmapped = registry.filter(_.surveyIds.isEmpty).map(_.name)
+    require(unmapped.isEmpty, s"queries without a SURVEY id: ${unmapped.sorted.mkString(", ")}")
+  }
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = registry.map(q => q.name -> q.build).toMap
+
+  val oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracleSql).toMap
 }

@@ -207,6 +207,12 @@ object Similarity {
     * queried at many operating points (the r15 ivfTopKSweep argument,
     * extended across queries). Incremental/refresh callers pass an
     * explicit seedSource and keep their private geometry.
+    *
+    * Unlike the other stage entries this one needs no localCheckpoint:
+    * ivfCentroidTable's seed pick is a `collect()` that runs once, inside
+    * getOrCompute's build, and the table it returns is a driver-built
+    * LocalRelation holding the collected rows. Consumers of the cached
+    * frame re-read those rows; none re-runs the seed pick.
     */
   private def ivfCentsCached(corpus: DataFrame, idCol: String, vecCol: String, nCells: Int): DataFrame = {
     val proj = corpus.select(col(idCol), col(vecCol))

@@ -5,64 +5,53 @@ import scala.jdk.CollectionConverters._
 
 /** REGISTRY.md generator (r12 verdict #7): the machine-readable
   * operator→query map the coverage audits were re-deriving by hand each
-  * round. Emits one row per registered query — SURVEY §2 ids (from
-  * scripts/survey_map.tsv), the registration site (file:line of the
-  * `"name" ->` entry), oracle presence, and the sf0.1→sf1 medians/ratio
-  * from the latest committed local[N] bench snapshots — plus a second
-  * table for the control-plane/streaming SURVEY ids whose evidence is the
-  * ScalaTest suite.
+  * round. Emits one row per registered query — its SURVEY §2 ids and the
+  * registration site (file:line of its `QuerySpec("name"` line), both
+  * from `SparkEntry.registry`, and the sf0.1→sf1 medians/ratio from the
+  * latest committed local[N] bench snapshots — plus a second table for the
+  * control-plane/streaming SURVEY ids whose evidence is the ScalaTest
+  * suite (scripts/survey_map.tsv).
   *
   * RegistrySpec pins the structure: REGISTRY.md's query rows must equal
-  * SparkEntry.queries exactly, and the survey map must be total both ways.
-  * Ratios are informative (refreshed whenever this tool is re-run) — the
-  * spec deliberately does not pin them, so a new bench snapshot doesn't
-  * fail the suite.
+  * the registry exactly and name a site for each. Ratios are informative
+  * (refreshed whenever this tool is re-run) — the spec deliberately does
+  * not pin them, so a new bench snapshot doesn't fail the suite.
   *
   * Usage: `scripts/run-main.sh graft.tools.Registry` (writes REGISTRY.md).
   */
 object Registry {
 
-  final case class MapEntry(queryIds: Map[String, Seq[String]], specIds: Seq[(String, String)])
-
-  def loadSurveyMap(root: Path = Paths.get(".")): MapEntry = {
-    val lines = Files.readAllLines(root.resolve("scripts/survey_map.tsv")).asScala
+  /** The spec-covered SURVEY ids of scripts/survey_map.tsv, as
+    * (id, evidence spec names) in file order.
+    */
+  def loadSurveyMap(root: Path = Paths.get(".")): Seq[(String, String)] =
+    Files.readAllLines(root.resolve("scripts/survey_map.tsv")).asScala.toSeq
       .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-    val (spec, query) = lines.partition(_.startsWith("spec:"))
-    MapEntry(
-      query.map { l =>
-        val Array(q, ids) = l.split("\t", 2)
-        q -> ids.trim.split("\\s+").toSeq
-      }.toMap,
-      spec.map { l =>
+      .map { l =>
+        require(l.startsWith("spec:"), s"survey_map.tsv holds only spec: rows, got: $l")
         val Array(s, id) = l.split("\t", 2)
         id.trim -> s.stripPrefix("spec:")
-      }.toSeq
-    )
-  }
+      }
 
-  /** file:line of each query's registration (`"name" ->`) across the
-    * registry sources. First match wins — the queries-map entry precedes
-    * the oracle-map entry in every file by convention.
+  /** file:line of each query's `QuerySpec("name"` line across the
+    * registry sources.
     */
-  def registrationSites(names: Set[String], root: Path = Paths.get(".")): Map[String, String] = {
+  def registrationSites(root: Path = Paths.get(".")): Map[String, String] = {
     val dir = root.resolve("src/main/scala/graft")
-    val files = Files.list(dir).iterator().asScala
+    val site = "QuerySpec\\(\"([a-z0-9_]+)\"".r
+    Files.list(dir).iterator().asScala
       .filter { p =>
         val n = p.getFileName.toString
         n == "SparkEntry.scala" || (n.startsWith("QueriesExt") && n.endsWith(".scala"))
       }
-      .toSeq.sortBy(_.getFileName.toString)
-    val found = scala.collection.mutable.Map.empty[String, String]
-    files.foreach { p =>
-      val fname = p.getFileName.toString
-      Files.readAllLines(p).asScala.zipWithIndex.foreach { case (line, i) =>
-        names.foreach { n =>
-          if (!found.contains(n) && line.contains("\"" + n + "\"") && line.contains("->"))
-            found(n) = s"$fname:${i + 1}"
+      .toSeq
+      .flatMap { p =>
+        val fname = p.getFileName.toString
+        Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (line, i) =>
+          site.findFirstMatchIn(line).map(_.group(1) -> s"$fname:${i + 1}")
         }
       }
-    }
-    found.toMap
+      .toMap
   }
 
   /** Latest committed bench medians per query for one sf suffix, restricted
@@ -107,39 +96,37 @@ object Registry {
   }
 
   def generate(root: Path = Paths.get(".")): String = {
-    val queries = graft.SparkEntry.queries.keySet
-    val oracles = graft.SparkEntry.oracleSql.keySet
-    val m       = loadSurveyMap(root)
-    val sites   = registrationSites(queries, root)
+    val specs   = graft.SparkEntry.registry.sortBy(_.name)
+    val specIds = loadSurveyMap(root)
+    val sites   = registrationSites(root)
+    val unsited = specs.map(_.name).filterNot(sites.contains)
+    require(unsited.isEmpty, s"no QuerySpec(\"name\" line found for: ${unsited.mkString(", ")}")
     val (f01, med01) = latestMeds("/sf0.1", root)
     val (f1, med1)   = latestMeds("/sf1", root)
     val fmt = (v: Option[Double]) => v.map(d => f"$d%.3f").getOrElse("—")
     val sb = new StringBuilder
     sb ++= "# REGISTRY — generated operator→query map (do NOT hand-edit)\n\n"
-    sb ++= "Generated by `graft.tools.Registry` from `SparkEntry.queries`,\n"
+    sb ++= "Generated by `graft.tools.Registry` from `SparkEntry.registry`,\n"
     sb ++= "`scripts/survey_map.tsv`, and the latest committed local[N] bench\n"
     sb ++= s"snapshots (`$f01` / `$f1`). Structure is pinned by RegistrySpec\n"
-    sb ++= "(query rows == registry, survey map total both ways); timing columns\n"
+    sb ++= "(query rows == registry, every query sited); timing columns\n"
     sb ++= "are informative and refresh on regeneration.\n\n"
-    sb ++= s"## Queries (${queries.size})\n\n"
-    sb ++= "| query | SURVEY ids | registered at | oracle | sf0.1 med s | sf1 med s | ratio | scale class |\n"
-    sb ++= "|---|---|---|---|---|---|---|---|\n"
-    queries.toSeq.sorted.foreach { q =>
-      val ids   = m.queryIds.getOrElse(q, Seq("UNMAPPED"))
-      val at    = sites.getOrElse(q, "UNKNOWN")
-      val o     = if (oracles(q)) "yes" else "NO"
-      val a     = med01.get(q)
-      val b     = med1.get(q)
+    sb ++= s"## Queries (${specs.size})\n\n"
+    sb ++= "| query | SURVEY ids | registered at | sf0.1 med s | sf1 med s | ratio | scale class |\n"
+    sb ++= "|---|---|---|---|---|---|---|\n"
+    specs.foreach { q =>
+      val a     = med01.get(q.name)
+      val b     = med1.get(q.name)
       val ratio = for (x <- a; y <- b if x > 0) yield y / x
-      sb ++= s"| `$q` | ${ids.mkString(" ")} | `$at` | $o | ${fmt(a)} | ${fmt(b)} | ${ratio.map(r => f"$r%.2f×").getOrElse("—")} | ${scaleClass(ratio)} |\n"
+      sb ++= s"| `${q.name}` | ${q.surveyIds.mkString(" ")} | `${sites(q.name)}` | ${fmt(a)} | ${fmt(b)} | ${ratio.map(r => f"$r%.2f×").getOrElse("—")} | ${scaleClass(ratio)} |\n"
     }
-    sb ++= s"\n## Spec-covered SURVEY ids (${m.specIds.size}) — control-plane / streaming operators\n\n"
+    sb ++= s"\n## Spec-covered SURVEY ids (${specIds.size}) — control-plane / streaming operators\n\n"
     sb ++= "| SURVEY id | evidence (ScalaTest) |\n|---|---|\n"
-    m.specIds.sortBy { case (id, _) =>
+    specIds.sortBy { case (id, _) =>
       (id.charAt(0), "\\d+".r.findFirstIn(id).map(_.toInt).getOrElse(0), id)
     }.foreach { case (id, spec) => sb ++= s"| $id | $spec |\n" }
-    val allIds = (m.queryIds.values.flatten ++ m.specIds.map(_._1)).toSet
-    sb ++= s"\nCoverage: ${queries.size} oracle-checked queries + ${m.specIds.size} spec-covered "
+    val allIds = (specs.flatMap(_.surveyIds) ++ specIds.map(_._1)).toSet
+    sb ++= s"\nCoverage: ${specs.size} oracle-checked queries + ${specIds.size} spec-covered "
     sb ++= s"operators span ${allIds.size} declared SURVEY §2 ids.\n"
     sb.result()
   }

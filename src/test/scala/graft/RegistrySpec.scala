@@ -3,9 +3,8 @@ package graft
 /** The driver-contract invariants the correctness gate silently assumes:
   * every registered query has an oracle and vice versa (the gap that left
   * B36 "unit-tested but unoracled" in round 6 cannot silently recur),
-  * names are unique across the QueriesExt concatenation (a duplicate key
-  * would make one registry entry shadow another), and every oracle is
-  * non-empty SQL.
+  * names are unique across the registry (a duplicate name would make one
+  * entry shadow another), and every oracle is non-empty SQL.
   */
 class RegistrySpec extends GraftSpecBase {
 
@@ -17,107 +16,11 @@ class RegistrySpec extends GraftSpecBase {
   }
 
   test("no registry shadowing across the QueriesExt concatenation") {
-    val registries: Seq[(String, Set[String])] = Seq(
-      "QueriesExt"   -> QueriesExt.queries.keySet,
-      "QueriesExt2"  -> QueriesExt2.queries.keySet,
-      "QueriesExt3"  -> QueriesExt3.queries.keySet,
-      "QueriesExt4"  -> QueriesExt4.queries.keySet,
-      "QueriesExt5"  -> QueriesExt5.queries.keySet,
-      "QueriesExt6"  -> QueriesExt6.queries.keySet,
-      "QueriesExt7"  -> QueriesExt7.queries.keySet,
-      "QueriesExt8"  -> QueriesExt8.queries.keySet,
-      "QueriesExt9"  -> QueriesExt9.queries.keySet,
-      "QueriesExt10" -> QueriesExt10.queries.keySet,
-      "QueriesExt11" -> QueriesExt11.queries.keySet,
-      "QueriesExt12" -> QueriesExt12.queries.keySet,
-      "QueriesExt13" -> QueriesExt13.queries.keySet,
-      "QueriesExt14" -> QueriesExt14.queries.keySet,
-      "QueriesExt15" -> QueriesExt15.queries.keySet,
-      "QueriesExt16" -> QueriesExt16.queries.keySet,
-      "QueriesExt17" -> QueriesExt17.queries.keySet,
-      "QueriesExt18" -> QueriesExt18.queries.keySet,
-      "QueriesExt19" -> QueriesExt19.queries.keySet,
-      "QueriesExt20" -> QueriesExt20.queries.keySet,
-      "QueriesExt21" -> QueriesExt21.queries.keySet,
-      "QueriesExt22" -> QueriesExt22.queries.keySet,
-      "QueriesExt23" -> QueriesExt23.queries.keySet,
-      "QueriesExt24" -> QueriesExt24.queries.keySet,
-      "QueriesExt25" -> QueriesExt25.queries.keySet,
-      "QueriesExt26" -> QueriesExt26.queries.keySet,
-      "QueriesExt27" -> QueriesExt27.queries.keySet,
-      "QueriesExt28" -> QueriesExt28.queries.keySet,
-      "QueriesExt29" -> QueriesExt29.queries.keySet,
-      "QueriesExt30" -> QueriesExt30.queries.keySet,
-      "QueriesExt31" -> QueriesExt31.queries.keySet,
-      "QueriesExt32" -> QueriesExt32.queries.keySet,
-      "QueriesExt33" -> QueriesExt33.queries.keySet,
-      "QueriesExt34" -> QueriesExt34.queries.keySet,
-      "QueriesExt35" -> QueriesExt35.queries.keySet,
-      "QueriesExt36" -> QueriesExt36.queries.keySet,
-      "QueriesExt37" -> QueriesExt37.queries.keySet,
-      "QueriesExt38" -> QueriesExt38.queries.keySet,
-      "QueriesExt39" -> QueriesExt39.queries.keySet,
-      "QueriesExt40" -> QueriesExt40.queries.keySet,
-      "QueriesExt41" -> QueriesExt41.queries.keySet,
-      "QueriesExt42" -> QueriesExt42.queries.keySet,
-      "QueriesExt43" -> QueriesExt43.queries.keySet,
-      "QueriesExt44" -> QueriesExt44.queries.keySet,
-      "QueriesExt45" -> QueriesExt45.queries.keySet,
-      "QueriesExt46" -> QueriesExt46.queries.keySet,
-      "QueriesExt47" -> QueriesExt47.queries.keySet,
-      "QueriesExt48" -> QueriesExt48.queries.keySet,
-      "QueriesExt49" -> QueriesExt49.queries.keySet,
-      "QueriesExt50" -> QueriesExt50.queries.keySet,
-      "QueriesExt51" -> QueriesExt51.queries.keySet,
-      "QueriesExt52" -> QueriesExt52.queries.keySet,
-      "QueriesExt53" -> QueriesExt53.queries.keySet,
-      "QueriesExt54" -> QueriesExt54.queries.keySet,
-      "QueriesExt55" -> QueriesExt55.queries.keySet,
-      "QueriesExt56" -> QueriesExt56.queries.keySet,
-      "QueriesExt57" -> QueriesExt57.queries.keySet,
-      "QueriesExt58" -> QueriesExt58.queries.keySet,
-      "QueriesExt59" -> QueriesExt59.queries.keySet,
-      "QueriesExt60" -> QueriesExt60.queries.keySet,
-      "QueriesExt61" -> QueriesExt61.queries.keySet,
-      "QueriesExt62" -> QueriesExt62.queries.keySet,
-      "QueriesExt63" -> QueriesExt63.queries.keySet,
-      "QueriesExt64" -> QueriesExt64.queries.keySet,
-      "QueriesExt65" -> QueriesExt65.queries.keySet,
-      "QueriesExt66" -> QueriesExt66.queries.keySet,
-      "QueriesExt67" -> QueriesExt67.queries.keySet,
-      "QueriesExt68" -> QueriesExt68.queries.keySet,
-      "QueriesExt69" -> QueriesExt69.queries.keySet,
-      "QueriesExt70" -> QueriesExt70.queries.keySet,
-      "QueriesExt71" -> QueriesExt71.queries.keySet,
-      "QueriesExt72" -> QueriesExt72.queries.keySet,
-      "QueriesExt73" -> QueriesExt73.queries.keySet,
-      "QueriesExt74" -> QueriesExt74.queries.keySet,
-      "QueriesExt75" -> QueriesExt75.queries.keySet,
-      "QueriesExt76" -> QueriesExt76.queries.keySet,
-      "QueriesExt77" -> QueriesExt77.queries.keySet,
-      "QueriesExt78" -> QueriesExt78.queries.keySet,
-      "QueriesExt79" -> QueriesExt79.queries.keySet,
-      "QueriesExt80" -> QueriesExt80.queries.keySet,
-      "QueriesExt81" -> QueriesExt81.queries.keySet,
-      "QueriesExt82" -> QueriesExt82.queries.keySet,
-      "QueriesExt83" -> QueriesExt83.queries.keySet,
-      "QueriesExt84" -> QueriesExt84.queries.keySet,
-      "QueriesExt85" -> QueriesExt85.queries.keySet,
-      "QueriesExt86" -> QueriesExt86.queries.keySet,
-      "QueriesExt87" -> QueriesExt87.queries.keySet,
-      "QueriesExt88" -> QueriesExt88.queries.keySet,
-      "QueriesExt89" -> QueriesExt89.queries.keySet,
-      "QueriesExt90" -> QueriesExt90.queries.keySet
-    )
-    val clashes = for {
-      ((na, a), i) <- registries.zipWithIndex
-      (nb, b)      <- registries.drop(i + 1)
-      k            <- (a & b).toSeq
-    } yield s"$k in both $na and $nb"
-    assert(clashes.isEmpty, clashes.mkString("; "))
-    val extTotal = registries.map(_._2.size).sum
-    assert(SparkEntry.queries.size === extTotal + 22, // 22 queries live in SparkEntry itself
-      s"concatenated size ${SparkEntry.queries.size} != ext $extTotal + 22 — a key shadowed a SparkEntry entry")
+    // a duplicate name would make one registry entry shadow another in the
+    // derived queries/oracleSql maps
+    val dups = SparkEntry.registry.map(_.name).groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    assert(dups.isEmpty, s"names registered twice: ${dups.toSeq.sorted}")
+    assert(SparkEntry.queries.size === SparkEntry.registry.size)
   }
 
   test("flagship entry returns rows on sf0.001 (driver t1 smoke)") {
@@ -146,21 +49,20 @@ class RegistrySpec extends GraftSpecBase {
   }
 
   test("survey map is total both ways and REGISTRY.md matches the registry (r12 verdict #7)") {
-    // the machine-readable operator→query map: every registered query must
-    // carry SURVEY §2 ids, every mapped query must exist, and the committed
-    // REGISTRY.md must list exactly the registered queries — so coverage
+    // every registered query carries SURVEY §2 ids on its QuerySpec, the
+    // spec-covered ids of scripts/survey_map.tsv are neither duplicated nor
+    // query-mapped, and the committed REGISTRY.md must list exactly the
+    // registered queries, each with its registration site — so coverage
     // tables can be generated, never hand-maintained, and a new wave fails
-    // the suite until both the map and REGISTRY.md are refreshed
+    // the suite until REGISTRY.md is refreshed
     // (`scripts/run-main.sh graft.tools.Registry`).
     val q = SparkEntry.queries.keySet
-    val m = graft.tools.Registry.loadSurveyMap()
-    val unmapped = (q -- m.queryIds.keySet).toSeq.sorted
-    assert(unmapped.isEmpty, s"queries missing from scripts/survey_map.tsv: $unmapped")
-    val ghost = (m.queryIds.keySet -- q).toSeq.sorted
-    assert(ghost.isEmpty, s"survey_map.tsv names not in the registry: $ghost")
-    val dupSpecIds = m.specIds.groupBy(_._1).collect { case (id, rs) if rs.size > 1 => id }
+    val unmapped = SparkEntry.registry.filter(_.surveyIds.isEmpty).map(_.name).sorted
+    assert(unmapped.isEmpty, s"queries without SURVEY ids: $unmapped")
+    val specIds = graft.tools.Registry.loadSurveyMap()
+    val dupSpecIds = specIds.groupBy(_._1).collect { case (id, rs) if rs.size > 1 => id }
     assert(dupSpecIds.isEmpty, s"duplicate spec-id rows: $dupSpecIds")
-    val overlap = m.specIds.map(_._1).toSet & m.queryIds.values.flatten.toSet
+    val overlap = specIds.map(_._1).toSet & SparkEntry.registry.flatMap(_.surveyIds).toSet
     assert(overlap.isEmpty, s"SURVEY ids both query-mapped and spec-only: ${overlap.toSeq.sorted}")
 
     val registryMd = new String(
@@ -168,6 +70,7 @@ class RegistrySpec extends GraftSpecBase {
     val listed = """\| `([a-z0-9_]+)` \|""".r.findAllMatchIn(registryMd).map(_.group(1)).toSet
     assert((q -- listed).isEmpty, s"REGISTRY.md missing queries: ${(q -- listed).toSeq.sorted} — regenerate")
     assert((listed -- q).isEmpty, s"REGISTRY.md lists unregistered queries: ${(listed -- q).toSeq.sorted} — regenerate")
+    assert(!registryMd.contains("UNKNOWN"), "REGISTRY.md has a query with an UNKNOWN registration site — regenerate")
   }
 
   test("every query output schema is scalar-only (driver-harness contract)") {

@@ -79,7 +79,7 @@ class TablesSpec extends GraftSpecBase {
     // the stream; it must throw where Tables.events throws, not stream nulls
     val rows = Seq(Row(1L, "2024-01-01 00:00:00", 1L, "t", 1.0, "{}"))
     val dir  = writeEvents(rows, schemaWithTs(StringType))
-    val e = intercept[IllegalStateException](QueriesExt14.queries("events_stream_join")(spark, dir))
+    val e = intercept[IllegalStateException](SparkEntry.queries("events_stream_join")(spark, dir))
     assert(e.getMessage.contains("unsupported type"))
   }
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.GraftSpecBase
 
 class SimilaritySpec extends GraftSpecBase {
@@ -116,5 +118,43 @@ class SimilaritySpec extends GraftSpecBase {
     assert(a.map(_._1).distinct.length === a.length) // one row per vector
     assert(a.forall { case (_, c, d) => c >= 0 && c < 4 && d >= 0.0 })
     assert(a.map(_._2).distinct.length > 1, "degenerate single-cluster result")
+  }
+
+  test("default-geometry IVF assignment is built once per session: a rebuild starts no Spark job") {
+    // a corpus plan no other suite uses, so the first build is a cold miss
+    val corpus = graft.Tables.embeddings(spark, sf()).filter($"vec_id" % 3 =!= 1)
+    val group  = "ivf-stage-cache"
+    val jobs   = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group`    => jobs.incrementAndGet()
+          case "sentinel" => sentinel.countDown()
+          case _          =>
+        }
+    }
+    // listener events arrive asynchronously but in order: once a later
+    // sentinel job's start is delivered, every job the build started is
+    // counted
+    def jobsStartedBy[T](build: => T): (T, Int) = {
+      jobs.set(0)
+      sentinel = new java.util.concurrent.CountDownLatch(1)
+      val sc = spark.sparkContext
+      sc.setJobGroup(group, "IVF assignment build")
+      val out = try build finally sc.clearJobGroup()
+      sc.setJobGroup("sentinel", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      (out, jobs.get())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (first, coldJobs) = jobsStartedBy(Similarity.ivfAssign(corpus, "vec_id", "embedding", nCells = 3))
+      assert(coldJobs > 0, "the cold build must run the seed pick and the assignment checkpoint")
+      val (second, warmJobs) = jobsStartedBy(Similarity.ivfAssign(corpus, "vec_id", "embedding", nCells = 3))
+      assert(second eq first, "the rebuild must be a stage-cache hit")
+      assert(warmJobs === 0, "a stage-cache hit must not re-run the seed pick or the assignment")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
