@@ -89,8 +89,9 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       // FileOutputCommitter v2 moves task output into place at task
       // commit instead of double-renaming at job commit — on the
-      // streaming micro-batch path (2 sinks × 32 task commits per batch)
-      // the v1 job-commit rename fan-out is pure fixed cost per batch.
+      // streaming micro-batch path (2 sinks per batch; a 60 k-row
+      // cdc_backlog batch writes 4 tasks per sink) the v1 job-commit
+      // rename fan-out is pure fixed cost per batch.
       // v2's known caveat (partial output visible if the JOB fails
       // mid-commit) is covered here by the idempotent batch=<id>
       // directory overwrite and by the manifest sink's own commit

@@ -1,7 +1,10 @@
 package org.apache.spark.sql.graft
 
+import java.util.concurrent.{CompletableFuture, ExecutorService}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Companion to ColumnBridge for whole plans: `Dataset.ofRows` (the lift
   * from a LogicalPlan to a DataFrame) is `private[sql]` in Spark 4, and
@@ -25,4 +28,14 @@ object PlanBridge {
     */
   def observedOrEmpty(obs: org.apache.spark.sql.Observation): Map[String, Any] =
     obs.getOrEmpty
+
+  /** `SQLExecution.withThreadLocalCaptured` is `private[sql]` and takes the
+    * classic session: runs `body` on `exec` under the caller's active
+    * session and SparkContext local properties (job group, job tags,
+    * streaming query ids), so the jobs `body` starts belong to the caller —
+    * a streaming query's `stop()` cancels them with its own.
+    */
+  def withThreadLocalCaptured[T](spark: SparkSession, exec: ExecutorService)(body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], exec)(body)
 }

@@ -1,8 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CompletionException, ConcurrentLinkedQueue, ExecutionException}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,6 +18,8 @@ import graft.cdc.Envelope
   *  - DlqPipelineIT: failed lookups land in the DLQ, are absent from the
   *    output, and appear after replay against the repaired dimension;
   *  - AnimalStreamControlIT: stop/start/status/offsets via StreamRegistry.
+  * Plus the micro-batch body's own contract: one source read per batch,
+  * a failing branch fails the batch loudly, the A10 DLQ count log.
   * File-based sources/sinks stand in for Kafka topics (no broker here).
   */
 class PipelineSpec extends GraftSpecBase {
@@ -125,6 +131,127 @@ class PipelineSpec extends GraftSpecBase {
     assert(
       ManifestJsonl.readManifest(java.nio.file.Paths.get(okPath)).get
         .txns === Map("manifestTransform-ok" -> 0L))
+  }
+
+  private def land(dir: String, ids: Seq[Long], files: Int): Unit =
+    spark
+      .createDataFrame(spark.sparkContext.parallelize(ids.map(i => envRow(i, s"n$i")), files), recordSchema)
+      .write.mode("overwrite").parquet(dir)
+
+  private type Starter = (String, DataFrame, () => DataFrame, String, Seq[String], String, String, String,
+    org.apache.spark.sql.streaming.Trigger) => StreamingQuery
+
+  private val starters: Seq[(String, Starter)] = Seq(
+    "parquet"  -> (Pipelines.startEnrichPipeline _),
+    "manifest" -> (Pipelines.startEnrichPipelineManifest _)
+  )
+
+  private def drain(start: Starter, name: String, source: DataFrame, dimIds: Seq[Long],
+      okPath: String, dlqPath: String, ckpt: String): StreamingQuery = {
+    val q = start(name, source, () => dim(dimIds: _*), "dim_id", Seq("breed"), okPath, dlqPath, ckpt,
+      org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    q.awaitTermination()
+    q
+  }
+
+  test("each micro-batch reads its source once") {
+    import graft.sources.ManifestJsonl
+    // 6 files admitted 2 per trigger: 3 batches, each with hits and misses
+    val ids = 1L to 300L
+    val srcDir = tmp("once-src")
+    land(srcDir, ids, files = 6)
+    for ((kind, start) <- starters) {
+      val okPath = tmp(s"once-ok-$kind"); val dlqPath = tmp(s"once-dlq-$kind")
+      val source = spark.readStream.schema(recordSchema).option("maxFilesPerTrigger", 2L).parquet(srcDir)
+      val q = drain(start, s"once-$kind", source, ids.filter(_ % 2 == 0), okPath, dlqPath, tmp(s"once-ckpt-$kind"))
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+      assert(batches.length === 3, kind)
+      // numInputRows counts the rows the source scan produced: a second
+      // read of any batch would count its rows twice
+      assert(batches.map(_.numInputRows).sum === ids.length.toLong, kind)
+      val (ok, dlq) =
+        if (kind == "parquet") (spark.read.parquet(okPath), spark.read.parquet(dlqPath))
+        else (ManifestJsonl.read(spark, okPath), ManifestJsonl.read(spark, dlqPath))
+      assert(ok.count() === 150L, kind)
+      assert(dlq.count() === 150L, kind)
+    }
+  }
+
+  /** Drains ids 1..3 against a dimension of 1, 2 with one sink path
+    * blocked by a regular file and checks the failure; then removes the
+    * blocker, restarts from the same checkpoint and compares the sinks
+    * with a clean run's.
+    */
+  private def blockedRun(blockOk: Boolean): Unit = {
+    val srcDir = tmp("blk-src")
+    land(srcDir, Seq(1L, 2L, 3L), files = 1)
+    val source = () => spark.readStream.schema(recordSchema).parquet(srcDir)
+    def sinkRows(okPath: String, dlqPath: String): (Seq[String], Seq[Long]) = (
+      spark.read.parquet(okPath).select("id", "name", "breed", "batch").collect().map(_.mkString(",")).sorted.toSeq,
+      spark.read.parquet(dlqPath).select("key.id").collect().map(_.getLong(0)).sorted.toSeq)
+
+    val cleanOk = tmp("blk-clean-ok"); val cleanDlq = tmp("blk-clean-dlq")
+    drain(Pipelines.startEnrichPipeline _, "blocked-clean", source(), Seq(1L, 2L), cleanOk, cleanDlq, tmp("blk-clean-ckpt"))
+
+    val blocker = Files.createTempFile("blk-file", "").toString
+    val okPath  = if (blockOk) blocker else tmp("blk-ok")
+    val dlqPath = if (blockOk) tmp("blk-dlq") else blocker
+    val ckpt    = tmp("blk-ckpt")
+    val err = intercept[StreamingQueryException](
+      drain(Pipelines.startEnrichPipeline _, "blocked", source(), Seq(1L, 2L), okPath, dlqPath, ckpt))
+    // the same write outside the stream fails with this exception class
+    val own = intercept[Exception](spark.range(1).write.parquet(s"$blocker/batch=0")).getClass
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    val shown = chain.map(_.getClass.getName).mkString(" <- ")
+    assert(!chain.exists(e => e.isInstanceOf[ExecutionException] || e.isInstanceOf[CompletionException]), shown)
+    assert(chain.exists(e => e.getClass == own && e.getMessage.contains(blocker)), s"no $own for $blocker: $shown")
+    // the other branch finished before the query reported the failure
+    val other = if (blockOk) dlqPath else okPath
+    assert(Files.exists(Paths.get(other, "batch=0", "_SUCCESS")), s"unfinished branch write under $other")
+
+    Files.delete(Paths.get(blocker))
+    val q = drain(Pipelines.startEnrichPipeline _, "blocked", source(), Seq(1L, 2L), okPath, dlqPath, ckpt)
+    assert(q.exception.isEmpty)
+    assert(sinkRows(okPath, dlqPath) === sinkRows(cleanOk, cleanDlq))
+  }
+
+  test("a failing DLQ write fails the batch loudly; a restart replays it cleanly") {
+    blockedRun(blockOk = false)
+  }
+
+  test("a failing success write fails the batch loudly; a restart replays it cleanly") {
+    blockedRun(blockOk = true)
+  }
+
+  /** What `Pipelines` logs at INFO while `body` runs. */
+  private def pipelinesLog(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("pipelines-log", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(Pipelines.getClass).asInstanceOf[CoreLogger]
+    val level = logger.getLevel
+    // the appender first: adding it re-derives the logger's level
+    logger.addAppender(appender)
+    logger.setLevel(Level.INFO)
+    try body
+    finally { logger.removeAppender(appender); logger.setLevel(level); appender.stop() }
+    lines.asScala.toSeq
+  }
+
+  test("both pipelines log the DLQ count (A10 peek)") {
+    val srcDir = tmp("peek-src")
+    land(srcDir, Seq(1L, 2L, 3L, 4L, 5L), files = 1)
+    for ((kind, start) <- starters) {
+      val lines = pipelinesLog(drain(start, s"peek-$kind", spark.readStream.schema(recordSchema).parquet(srcDir),
+        Seq(1L, 2L), tmp("peek-ok"), tmp("peek-dlq"), tmp("peek-ckpt")))
+      assert(lines.contains(s"[peek-$kind] batch 0: 3 record(s) routed to DLQ"), s"$kind: $lines")
+    }
   }
 
   test("manual export: plain and envelope-shaped JSON, unparseable rejected") {
