@@ -76,16 +76,8 @@ object Bench {
       )
     }.getOrElse(1250.0).max(60.0)
     // GraftSession (shared configs + GraftExtensions, incl. the custom
-    // as-of strategy) plus the local-bench knob: the sf0.1 tables are
-    // single ~1-10 MB parquet files, far below the 128 MB default split
-    // size — without this the whole lineitem scan is one task on a
-    // 32-thread executor. A real cluster dataset has many files and keeps
-    // the default.
-    val spark = GraftSession
-      .builder("graft-bench")
-      .config("spark.sql.files.maxPartitionBytes", (2L * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (256L * 1024).toString)
-      .getOrCreate()
+    // as-of strategy) plus the local-bench file splits.
+    val spark = GraftSession.benchBuilder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // run-level total of shared-stage build seconds (audit field)
@@ -106,45 +98,7 @@ object Bench {
       val sec   = (System.nanoTime() - t0) / 1e9
       val build = graft.operators.SessionStageCache.drainBuildNanos() / 1e9
       stageBuildTotal += build
-      // Storage isolation between queries: operators that persist() or
-      // localCheckpoint() release their blocks only when the ContextCleaner
-      // GCs the DataFrame — across a 400-query run those leaked blocks
-      // accumulate until eviction pressure lands on whichever query runs
-      // next (observed: dedup_jaccard_ppjoin 2.6 s solo vs 14.3 s median
-      // late in the full suite, bimodal min 4.6/max 14.8). Dropping all
-      // cached/checkpointed blocks after each timed run makes query times
-      // independent of suite position. Cleanup cost is excluded from the
-      // measured time, matching how a per-job cluster would bill it.
-      //
-      // r9 postmortem: async unpersist wasn't enough — ppjoin still showed
-      // med 7.4 s vs min 1.7 s IN THE SAME RUN. Root cause: blocking=false
-      // returns before the blocks drop, and broadcast/shuffle state from
-      // checkpoint-heavy neighbors is freed only when the ContextCleaner's
-      // reference queue is driven by a GC — so the NEXT query inherits the
-      // heap+page-cache pressure. Now: blocking unpersist, and when this
-      // query actually left persistent blocks behind, force a GC plus a
-      // short settle so the cleaner drains before the next timed trial.
-      // r10 postmortem: ONE gc+settle still shipped two spread violators
-      // and a poisoned median (graph_jaccard_neighbors med 18.7 s vs min
-      // 4.8 s) — weak/phantom-reference cleanup (ContextCleaner's queue,
-      // DirectByteBuffer frees) often needs a SECOND collection cycle
-      // after the first one discovers the refs, so the settle is
-      // gc → drain → gc → drain.
-      // Bench-session caches (the shared dedup pair-table stage,
-      // Dedup.protectedRddIds) are exempt: they are deliberately
-      // long-lived across the suite, and unpersisting a localCheckpoint
-      // is UNRECOVERABLE (truncated lineage) — the sweep would not just
-      // re-run the shared stage, it would crash every later consumer.
-      val protectedIds = graft.operators.Dedup.protectedRddIds
-      val leaked = spark.sparkContext.getPersistentRDDs.filter(kv => !protectedIds(kv._1))
-      if (leaked.nonEmpty) {
-        leaked.valuesIterator.foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
-        System.gc()
-        Thread.sleep(120)
-        System.gc()
-        Thread.sleep(120)
-      } else spark.catalog.clearCache()
+      releaseStorage(spark)
       (sec, build)
     }
 
@@ -936,5 +890,51 @@ object Bench {
       println(hookHeadline)
       System.out.flush()
     }
+  }
+
+  /** Drops the blocks a finished query left persisted (the per-query
+    * storage-isolation sweep); `tools.Profile` runs it after each noop run
+    * too.
+    */
+  def releaseStorage(spark: SparkSession): Unit = {
+    // Storage isolation between queries: operators that persist() or
+    // localCheckpoint() release their blocks only when the ContextCleaner
+    // GCs the DataFrame — across a 400-query run those leaked blocks
+    // accumulate until eviction pressure lands on whichever query runs
+    // next (observed: dedup_jaccard_ppjoin 2.6 s solo vs 14.3 s median
+    // late in the full suite, bimodal min 4.6/max 14.8). Dropping all
+    // cached/checkpointed blocks after each timed run makes query times
+    // independent of suite position. Cleanup cost is excluded from the
+    // measured time, matching how a per-job cluster would bill it.
+    //
+    // r9 postmortem: async unpersist wasn't enough — ppjoin still showed
+    // med 7.4 s vs min 1.7 s IN THE SAME RUN. Root cause: blocking=false
+    // returns before the blocks drop, and broadcast/shuffle state from
+    // checkpoint-heavy neighbors is freed only when the ContextCleaner's
+    // reference queue is driven by a GC — so the NEXT query inherits the
+    // heap+page-cache pressure. Now: blocking unpersist, and when this
+    // query actually left persistent blocks behind, force a GC plus a
+    // short settle so the cleaner drains before the next timed trial.
+    // r10 postmortem: ONE gc+settle still shipped two spread violators
+    // and a poisoned median (graph_jaccard_neighbors med 18.7 s vs min
+    // 4.8 s) — weak/phantom-reference cleanup (ContextCleaner's queue,
+    // DirectByteBuffer frees) often needs a SECOND collection cycle
+    // after the first one discovers the refs, so the settle is
+    // gc → drain → gc → drain.
+    // Bench-session caches (the shared dedup pair-table stage,
+    // SessionStageCache.protectedIds) are exempt: they are deliberately
+    // long-lived across the suite, and unpersisting a localCheckpoint
+    // is UNRECOVERABLE (truncated lineage) — the sweep would not just
+    // re-run the shared stage, it would crash every later consumer.
+    val protectedIds = graft.operators.SessionStageCache.protectedIds
+    val leaked = spark.sparkContext.getPersistentRDDs.filter(kv => !protectedIds(kv._1))
+    if (leaked.nonEmpty) {
+      leaked.valuesIterator.foreach(_.unpersist(blocking = true))
+      spark.catalog.clearCache()
+      System.gc()
+      Thread.sleep(120)
+      System.gc()
+      Thread.sleep(120)
+    } else spark.catalog.clearCache()
   }
 }

@@ -115,6 +115,22 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
   }
 
+  /** Local-bench file splits: the sf0.1 tables are single ~1-10 MB parquet
+    * files, far below the 128 MB default split size — without this the
+    * whole lineitem scan is one task on a 32-thread executor. A real
+    * cluster dataset has many files and keeps the default.
+    */
+  val localFileSplits: Map[String, String] = Map(
+    "spark.sql.files.maxPartitionBytes" -> (2L * 1024 * 1024).toString,
+    "spark.sql.files.openCostInBytes"   -> (256L * 1024).toString
+  )
+
+  /** The session `graft.Bench` times (and `tools.Profile` profiles):
+    * `builder` plus `localFileSplits`.
+    */
+  def benchBuilder(appName: String): SparkSession.Builder =
+    builder(appName).config(localFileSplits)
+
   def get(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

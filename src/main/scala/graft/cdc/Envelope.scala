@@ -35,14 +35,20 @@ object Envelope {
   def dropTombstones(df: DataFrame, valueCol: String = "value"): DataFrame =
     df.filter(col(valueCol).isNotNull)
 
-  /** A4 — extract the `after` image, dropping deletes and invalid ids.
-    * Emits the flattened after-payload columns.
+  /** A3 + A4 — the envelope rows worth processing: tombstones, deletes
+    * (null `after`) and null/zero ids dropped, in that order. Keeps the
+    * envelope columns as they are.
     */
-  def extractAfter(df: DataFrame, valueCol: String = "value", idField: String = "id"): DataFrame =
+  def validAfter(df: DataFrame, valueCol: String = "value", idField: String = "id"): DataFrame =
     dropTombstones(df, valueCol)
       .filter(col(s"$valueCol.after").isNotNull)
       .filter(col(s"$valueCol.after.$idField").isNotNull && col(s"$valueCol.after.$idField") =!= 0)
-      .select(col(s"$valueCol.after.*"))
+
+  /** A4 — extract the `after` image of the `validAfter` rows.
+    * Emits the flattened after-payload columns.
+    */
+  def extractAfter(df: DataFrame, valueCol: String = "value", idField: String = "id"): DataFrame =
+    validAfter(df, valueCol, idField).select(col(s"$valueCol.after.*"))
 
   /** Deterministic envelope synthesis for tests/fixtures: wraps the
     * `events` fixture table into CDC envelopes, marking a reproducible

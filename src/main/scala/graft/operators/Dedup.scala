@@ -30,11 +30,6 @@ object Dedup {
     */
   private val PairCache = SessionStageCache
 
-  /** RDD ids of live session-cache materializations — consulted by the
-    * bench's per-query storage-isolation sweep (see SessionStageCache).
-    */
-  def protectedRddIds: Set[Int] = SessionStageCache.protectedIds
-
   /** Tiny-input guard: a single small parquet file arrives as one
     * partition, which would serialize the expensive per-document shingle /
     * signature computation on a many-core executor. Real datasets arrive

@@ -32,8 +32,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    longer serialize on one monitor, while two racers on the SAME
   *    stage still build it exactly once.
   *
-  * Bench contract: `Bench.runOnce`'s per-query storage-isolation sweep
-  * consults `protectedRddIds` and skips these blocks — unpersisting a
+  * Bench contract: the per-query storage-isolation sweep
+  * (`Bench.releaseStorage`, run by `Bench.runOnce` and `tools.Profile`)
+  * consults `protectedIds` and skips these blocks — unpersisting a
   * localCheckpoint is unrecoverable (truncated lineage), so evicting a
   * deliberate cross-query materialization would crash later consumers,
   * not just slow them. Build wall-time is metered into `drainBuildNanos`

@@ -18,11 +18,6 @@ import org.apache.spark.sql.types.StructType
   */
 object KafkaCdc {
 
-  /** A1 — CDC topic consumption: (key, value) binary columns exactly as
-    * the Kafka source emits them. startingOffsets mirrors the consumer
-    * group position semantics (A18's reset writes an explicit JSON map
-    * here).
-    */
   /** The consumer option contract, separated from the builder so it is
     * unit-testable without a broker: subscription, group-position
     * semantics, and the reference's max.poll-style throttle. A18's reset
@@ -41,6 +36,11 @@ object KafkaCdc {
       "startingOffsets"         -> startingOffsets
     ) ++ maxOffsetsPerTrigger.map(n => "maxOffsetsPerTrigger" -> n.toString)
 
+  /** A1 — CDC topic consumption: (key, value) binary columns exactly as
+    * the Kafka source emits them. startingOffsets mirrors the consumer
+    * group position semantics (A18's reset writes an explicit JSON map
+    * here).
+    */
   def cdcSource(
       spark: SparkSession,
       bootstrapServers: String,

@@ -40,10 +40,7 @@ object Pipelines {
       dimKey: String,
       dimCols: Seq[String]
   ): (DataFrame, DataFrame) = {
-    val valid = Envelope
-      .dropTombstones(batch)
-      .filter(col("value.after").isNotNull)
-      .filter(col("value.after.id").isNotNull && col("value.after.id") =!= 0)
+    val valid = Envelope.validAfter(batch)
 
     val d = broadcast(dim.select(dimKey, dimCols: _*))
     val joined = valid.join(d, col("value.after.id") === d(dimKey), "left")

@@ -21,7 +21,7 @@ class PairCacheSpec extends GraftSpecBase {
     assert(a eq b, "second call must be a cache hit (same DataFrame instance)")
     // and the cache's checkpoint blocks are registered for the bench
     // sweep exemption
-    assert(Dedup.protectedRddIds.nonEmpty)
+    assert(SessionStageCache.protectedIds.nonEmpty)
   }
 
   test("a different input plan gets its own entry (no aliasing)") {
@@ -81,12 +81,12 @@ class PairCacheSpec extends GraftSpecBase {
 
   test("cached frame survives a blocking unpersist sweep of UNPROTECTED rdds") {
     // mirror of Bench.runOnce's storage-isolation sweep: everything not
-    // in protectedRddIds is unpersisted; the cached pair table must stay
-    // consumable afterwards (a localCheckpoint that lost its blocks
-    // cannot be recomputed)
+    // in SessionStageCache.protectedIds is unpersisted; the cached pair
+    // table must stay consumable afterwards (a localCheckpoint that lost
+    // its blocks cannot be recomputed)
     val cached = Dedup.minhashPairs(graft.Tables.documents(spark, sf()), "doc_id", "text", 3, 0.5)
     val before = cached.count()
-    val protectedIds = Dedup.protectedRddIds
+    val protectedIds = SessionStageCache.protectedIds
     spark.sparkContext.getPersistentRDDs
       .filter(kv => !protectedIds(kv._1))
       .valuesIterator.foreach(_.unpersist(blocking = true))

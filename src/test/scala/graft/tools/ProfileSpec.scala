@@ -1,0 +1,50 @@
+package graft.tools
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
+
+import graft.{GraftSession, GraftSpecBase, SparkEntry}
+
+/** Pins `tools.Profile`: its plan files are the plans the bench session
+  * builds, every row carries a plan and a total time, and a bad name
+  * fails before anything is written.
+  */
+class ProfileSpec extends GraftSpecBase {
+
+  private val queries = Seq("q1_pricing_summary", "cdc_enrich_join")
+
+  /** A session on the shared context with the bench's file-split conf. */
+  private def benchSession(): SparkSession = {
+    val s = spark.newSession()
+    GraftSession.localFileSplits.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  // expression ids and plan ids come from per-JVM counters
+  private def masked(plan: String): String =
+    plan.replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
+
+  test("profile writes each query's formatted bench-session plan and times plan and total") {
+    val out   = Files.createTempDirectory("graft-profile").resolve("plans")
+    val costs = Profile.profile(benchSession(), sf("sf0.01"), out.toString, queries, trials = 1)
+    assert(costs.map(_.query) === queries)
+    costs.foreach(c => assert(c.planS > 0 && c.totalS > 0, c))
+    val ref = benchSession()
+    queries.foreach { q =>
+      val expected = SparkEntry.queries(q)(ref, sf("sf0.01"))
+        .queryExecution.explainString(ExplainMode.fromString("formatted"))
+      assert(masked(Files.readString(out.resolve(s"$q.txt"))) === masked(expected), q)
+    }
+  }
+
+  test("profile rejects an unknown query name before writing any file") {
+    val out = Files.createTempDirectory("graft-profile").resolve("plans")
+    val e = intercept[IllegalArgumentException] {
+      Profile.profile(benchSession(), sf("sf0.01"), out.toString, Seq("q1_pricing_summary", "no_such_query"), trials = 1)
+    }
+    assert(e.getMessage.contains("no_such_query"))
+    assert(!Files.exists(out))
+  }
+}
