@@ -704,7 +704,7 @@ object QueriesExt16 {
     * collapse that runs before any counting pipeline (the threshold is
     * sized to the fixture's per-key event density so BOTH keep and
     * suppress paths run through the oracle; millisecond-scale gaps are
-    * DebounceSpec's synthetic territory). Emits every event with its
+    * not exercised here). Emits every event with its
     * burst id and a `kept` flag so the downstream filter is one
     * predicate.
     *

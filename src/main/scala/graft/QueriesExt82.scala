@@ -157,8 +157,8 @@ object QueriesExt82 {
     * volume: per event type, the fraction of events surviving
     * leading-edge debounce at gaps of 1 h / 6 h / 24 h, from ONE lag
     * window (the B72 per-(user, type) previous-event rule; the gaps are
-    * row-local comparisons on the same `prev_ms`). The batch twin of the
-    * streaming Debounce operator's tuning question, and the sibling of
+    * row-local comparisons on the same `prev_ms`). It answers a debounce
+    * operator's tuning question, and is the sibling of
     * B230's session-gap sweep — that one prices sessionization, this one
     * prices suppression. Exact integer milliseconds and ppm.
     *

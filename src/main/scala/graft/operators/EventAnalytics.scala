@@ -79,9 +79,9 @@ object EventAnalytics {
   /** Gap-based sessionization: a new session starts when the gap to the
     * previous event of the same user exceeds `gapMs`. Returns per-user
     * session counts and bounds. One shuffle on user_id; the window sort is
-    * the standard sessionize shape (streaming twin:
-    * graft.streaming.SessionWindows — same session_window aggregation
-    * under a watermark).
+    * the standard sessionize shape (a stream would run Spark's
+    * `session_window` aggregation under a watermark; no streaming twin
+    * ships).
     */
   def sessionize(events: DataFrame, gapMs: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window

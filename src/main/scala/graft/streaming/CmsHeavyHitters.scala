@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
+import org.apache.spark.sql.streaming.OutputMode
 
-/** Streaming Count-Min Sketch heavy hitters on `transformWithState`
+/** Streaming Count-Min Sketch heavy hitters on `flatMapGroupsWithState`
   * (SURVEY.md §2 B209) — the stream form of B208's `events_cms_topk`:
   * per key, a d×w counter grid plus a bounded top-m candidate list;
   * after every touched batch the key emits its refreshed heavy-hitter
@@ -11,11 +11,11 @@ import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
   *
   * This is the bounded-state frequency tracker for keys whose id stream
   * never ends: exact per-id counting grows with id cardinality, while
-  * CMS state is d·w + m values per key, TTL-expirable, and MERGEABLE —
+  * CMS state is d·w + m values per key and MERGEABLE —
   * counter grids add cell-wise, so replays, repartitions and cross-
   * stream merges land on identical counters.
   *
-  * Order discipline (the Anomaly/Debounce rule): the batch is folded
+  * Order discipline: the batch is folded
   * counters-first — ALL increments land in the grid before ANY estimate
   * is read — and the candidate refresh then scores the closed pool
   * (previous candidates ∪ ids touched this batch) against the settled
@@ -56,13 +56,11 @@ object CmsHeavyHitters {
       ds: Dataset[(String, String)],
       d: Int = 4,
       w: Int = 512,
-      m: Int = 10,
-      ttl: TTLConfig = TTLConfig.NONE
+      m: Int = 10
   ): Dataset[HeavyHitter] = {
     require(d >= 1 && w >= 2 && m >= 1, s"bad CMS geometry d=$d w=$w m=$m")
     // (flattened d×w counter grid, current candidate ids)
     val fold = new KeyedFold[String, (String, String), (Array[Long], Array[String]), HeavyHitter](
-      "cms",
       Encoders.tuple(KeyedFold.longArrays, KeyedFold.stringArrays),
       (new Array[Long](d * w), Array.empty[String]))({
       (key, prev, rows) =>
@@ -85,6 +83,6 @@ object CmsHeavyHitters {
           HeavyHitter(key, id, est, i + 1)
         })
     })
-    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[HeavyHitter])
+    fold.fmgws(ds, _._1, None, OutputMode.Update)(Encoders.STRING, Encoders.product[HeavyHitter])
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
+import org.apache.spark.sql.streaming.OutputMode
 
-/** Streaming CUSUM control chart on `transformWithState` (SURVEY.md §2
+/** Streaming CUSUM control chart on `flatMapGroupsWithState` (SURVEY.md §2
   * B226) — the ONLINE form of B225's batch changepoint: per key, the
   * one-sided cumulative-sum statistics of Page's control chart,
   *   Sᵖ = max(0, Sᵖ + (x − target − slack)),
@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
   * h in the same fixed-point unit), so state and emissions are exact —
   * no float accumulation drift across millions of batches.
   *
-  * Determinism (the Anomaly/Debounce discipline): the batch slice is
+  * Determinism (the event-time sort discipline): the batch slice is
   * sorted by event time before folding, so emission is a pure function
   * of (state, batch timestamp-value multiset). CUSUM is inherently a
   * sequential fold — unlike the sketch operators there is no order-free
@@ -44,13 +44,12 @@ object CusumChart {
       ds: Dataset[(String, Long, Long)],
       target: Long,
       slack: Long,
-      h: Long,
-      ttl: TTLConfig = TTLConfig.NONE
+      h: Long
   ): Dataset[ChartState] = {
     require(slack >= 0 && h > 0, s"need slack >= 0 and h > 0 (got slack=$slack h=$h)")
     // state: (sPos, sNeg, nPoints)
     val fold = new KeyedFold[String, (String, Long, Long), (Long, Long, Long), ChartState](
-      "cusum", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong), (0L, 0L, 0L))({
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong), (0L, 0L, 0L))({
       (key, chart, rows) =>
         var (sPos, sNeg, n) = chart
         var tripped = 0
@@ -69,6 +68,6 @@ object CusumChart {
         }
         (Some((sPos, sNeg, n)), Iterator.single(ChartState(key, sPos, sNeg, n, tripped, tripMs)))
     })
-    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[ChartState])
+    fold.fmgws(ds, _._1, None, OutputMode.Update)(Encoders.STRING, Encoders.product[ChartState])
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
+import org.apache.spark.sql.streaming.OutputMode
 
-/** Streaming DGIM sliding-window counter on `transformWithState`
+/** Streaming DGIM sliding-window counter on `flatMapGroupsWithState`
   * (SURVEY.md §2 B212) — "how many events did this key see in the last
   * W milliseconds?" answered with O(log² W) state instead of a
   * per-event buffer (Datar–Gionis–Indyk–Motwani, SODA 2002 — public
@@ -18,7 +18,7 @@ import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
   * error ≤ 1/(2(r−1)) of the true in-window count (r=4 → ≤ 16.7%),
   * exact while every in-window bucket still has size 1.
   *
-  * Order discipline (the Anomaly/Debounce rule): the batch's rows are
+  * Order discipline (the event-time sort rule): the batch's rows are
   * sorted by event time before insertion, so emission is a pure
   * function of (state, batch multiset) — within-batch arrival order
   * cannot change it. The window is EVENT-time anchored at the maximum
@@ -84,13 +84,12 @@ object DgimWindow {
   def perKey(
       ds: Dataset[(String, Long)],
       windowMs: Long,
-      r: Int = 4,
-      ttl: TTLConfig = TTLConfig.NONE
+      r: Int = 4
   ): Dataset[WindowEstimate] = {
     require(windowMs > 0 && r >= 2, s"bad DGIM geometry windowMs=$windowMs r=$r")
     // (flattened bucket list [ts, size, ...], asOf high-water mark)
     val fold = new KeyedFold[String, (String, Long), (Array[Long], Long), WindowEstimate](
-      "dgim", Encoders.tuple(KeyedFold.longArrays, Encoders.scalaLong), (Array.empty[Long], Long.MinValue))({
+      Encoders.tuple(KeyedFold.longArrays, Encoders.scalaLong), (Array.empty[Long], Long.MinValue))({
       (key, prev, rows) =>
         var buckets = prev._1.grouped(2).map(a => (a(0), a(1))).toVector
         var asOf    = prev._2
@@ -107,6 +106,6 @@ object DgimWindow {
         (Some((buckets.flatMap(b => Seq(b._1, b._2)).toArray, asOf)),
           Iterator.single(WindowEstimate(key, asOf, estimate(buckets), buckets.length)))
     })
-    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[WindowEstimate])
+    fold.fmgws(ds, _._1, None, OutputMode.Update)(Encoders.STRING, Encoders.product[WindowEstimate])
   }
 }

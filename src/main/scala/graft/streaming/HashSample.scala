@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
+import org.apache.spark.sql.streaming.OutputMode
 
-/** Streaming bottom-k-by-hash distinct sample on `transformWithState`
+/** Streaming bottom-k-by-hash distinct sample on `flatMapGroupsWithState`
   * (SURVEY.md §2 B219): per key, the k distinct ids with the smallest
   * 52-bit md5 hashes ever seen — a uniform-without-replacement sample
   * of the key's full distinct-id history in O(k) state, and, unlike a
@@ -29,13 +29,11 @@ object HashSample {
   /** @param ds (key, id) rows — keep the k hash-smallest distinct ids per key */
   def perKey(
       ds: Dataset[(String, String)],
-      k: Int = 64,
-      ttl: TTLConfig = TTLConfig.NONE
+      k: Int = 64
   ): Dataset[SampleMember] = {
     require(k >= 1, s"hash sample needs k >= 1 (got $k)")
     // parallel arrays (hashes ascending, ids) — the bounded min-set
     val fold = new KeyedFold[String, (String, String), (Array[Long], Array[String]), SampleMember](
-      "hashsample",
       Encoders.tuple(KeyedFold.longArrays, KeyedFold.stringArrays),
       (Array.empty[Long], Array.empty[String]))({
       (key, prev, rows) =>
@@ -56,6 +54,6 @@ object HashSample {
         }
         (Some((kept.map(_._2).toArray, kept.map(_._1).toArray)), members)
     })
-    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[SampleMember])
+    fold.fmgws(ds, _._1, None, OutputMode.Update)(Encoders.STRING, Encoders.product[SampleMember])
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
+import org.apache.spark.sql.streaming.OutputMode
 
-/** Streaming HDR-histogram quantiles on `transformWithState`
+/** Streaming HDR-histogram quantiles on `flatMapGroupsWithState`
   * (SURVEY.md §2 B202) — the stream form of B201's
   * `events_latency_digest`: per key, a FIXED 1024-counter log-bucket
   * histogram (16 sub-buckets per octave over integer micro-units)
@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
   *
   * Why this and not exact percentiles: an exact stream percentile needs
   * every value retained (unbounded state); a moments sketch
-  * (RunningStats) can't answer tail quantiles. The HDR histogram is the
+  * (count, mean, variance) can't answer tail quantiles. The HDR histogram is the
   * standard latency-telemetry answer — O(1) state per key (8 KB), a
   * PROVEN ≤ 6.25% relative error (values within a bucket span
   * [lb, lb·17/16)), and — because the state is a commutative integer
@@ -62,11 +62,10 @@ object HistQuantiles {
 
   /** @param ds (key, value) rows; values non-negative (micro-unit snap) */
   def perKey(
-      ds: Dataset[(String, Double)],
-      ttl: TTLConfig = TTLConfig.NONE
+      ds: Dataset[(String, Double)]
   ): Dataset[KeyDigest] = {
     val fold = new KeyedFold[String, (String, Double), Array[Long], KeyDigest](
-      "hist", KeyedFold.longArrays, new Array[Long](NBuckets))({ (key, counts, rows) =>
+      KeyedFold.longArrays, new Array[Long](NBuckets))({ (key, counts, rows) =>
       // no sort needed: the histogram is a commutative integer aggregate
       rows.foreach { case (_, x) =>
         counts(bucketOf(math.round(x * 1000000.0))) += 1L
@@ -79,6 +78,6 @@ object HistQuantiles {
         quantile(counts, n, 99, 100)
       )))
     })
-    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[KeyDigest])
+    fold.fmgws(ds, _._1, None, OutputMode.Update)(Encoders.STRING, Encoders.product[KeyDigest])
   }
 }

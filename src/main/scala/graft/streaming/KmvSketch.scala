@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming KMV (k-minimum-values) distinct-count sketch on
-  * `transformWithState` (SURVEY.md §2 B204) — the stream form of B203's
+  * `flatMapGroupsWithState` (SURVEY.md §2 B204) — the stream form of B203's
   * `events_kmv_distinct`: per key, the k smallest 52-bit md5 prefixes of
   * the ids seen so far, merged across micro-batches; after every touched
   * batch the key emits its refreshed estimate N ≈ (k−1)·2⁵² / v_k
@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
   * This is the bounded-state distinct counter for keys whose id stream
   * never ends: exact distinct state grows with cardinality,
   * `approx_count_distinct` is batch-only, while the KMV state is k longs
-  * per key, TTL-expirable, and MERGEABLE — two sketches union by keeping
+  * per key and MERGEABLE — two sketches union by keeping
   * the k smallest of both, so replays, repartitions and cross-stream
   * merges all land on identical estimates (a min-set is a commutative
   * idempotent aggregate; no in-batch sort needed).
@@ -43,13 +43,12 @@ object KmvSketch {
   /** @param ds (key, id) rows — estimate distinct ids within each key */
   def perKey(
       ds: Dataset[(String, String)],
-      k: Int = 64,
-      ttl: TTLConfig = TTLConfig.NONE
+      k: Int = 64
   ): Dataset[KeyEstimate] = {
     require(k >= 2, s"k must be >= 2, got $k")
     // (sorted ascending k-min hash array, total rows seen)
     val fold = new KeyedFold[String, (String, String), (Array[Long], Long), KeyEstimate](
-      "kmv", Encoders.tuple(KeyedFold.longArrays, Encoders.scalaLong), (Array.empty[Long], 0L))({
+      Encoders.tuple(KeyedFold.longArrays, Encoders.scalaLong), (Array.empty[Long], 0L))({
       (key, prev, rows) =>
         var seen = prev._2
         val incoming = rows.map { r => seen += 1; hash52(r._2) }.toArray
@@ -59,6 +58,6 @@ object KmvSketch {
         val (est, kth) = estimate(k, merged, seen)
         (Some((merged, seen)), Iterator.single(KeyEstimate(key, seen, est, kth)))
     })
-    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[KeyEstimate])
+    fold.fmgws(ds, _._1, None, OutputMode.Update)(Encoders.STRING, Encoders.product[KeyEstimate])
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
+import org.apache.spark.sql.streaming.OutputMode
 
-/** Exponentially-decayed per-key activity score on `transformWithState`
+/** Exponentially-decayed per-key activity score on `flatMapGroupsWithState`
   * (SURVEY.md §2 B183) — the streaming "what's trending now" primitive: a
   * topic's score decays continuously with a configurable half-life and
   * bumps by 1 per event, so a topic needs sustained recent volume, not
@@ -13,9 +13,8 @@ import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
   *
   * This complements the batch-side B56 (`events_decay_score`): same decay
   * math, but here the state is the running score itself, carried across
-  * micro-batches by the store and expired by TTL when a topic goes cold —
-  * the O(live topics) state budget a 100 TB event stream needs (dead
-  * topics are evicted by the store, not tracked forever).
+  * micro-batches by the store. A topic's state is kept for as long as the
+  * query runs: there is no expiry.
   *
   * Emission is Update-mode: one refreshed (topic, score, lastMs) row per
   * touched key per micro-batch. Downstream a bounded `TopKBy` over the
@@ -29,7 +28,7 @@ import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
   * makes the score a pure function of the timestamp multiset, so any
   * replay from a checkpoint recomputes identical scores — the property
   * the spec pins against the closed form. Same in-batch-sort discipline
-  * as Anomaly and Debounce.
+  * as CusumChart and DgimWindow.
   */
 object Trending {
 
@@ -41,12 +40,10 @@ object Trending {
     */
   def perTopic(
       ds: Dataset[(String, Long)],
-      halfLifeMs: Long,
-      ttl: TTLConfig = TTLConfig.NONE
+      halfLifeMs: Long
   ): Dataset[TopicScore] = {
     require(halfLifeMs > 0, s"halfLifeMs must be positive, got $halfLifeMs")
     val fold = new KeyedFold[String, (String, Long), (Double, Long, Long), TopicScore](
-      "decayed",
       Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong, Encoders.scalaLong),
       (0.0, Long.MinValue, 0L))({
       (key, decayed, rows) =>
@@ -68,6 +65,6 @@ object Trending {
         }
         (Some((score, lastMs, n)), Iterator.single(TopicScore(key, score, lastMs, n)))
     })
-    fold.tws(ds, _._1, ttl, OutputMode.Update())(Encoders.STRING, Encoders.product[TopicScore])
+    fold.fmgws(ds, _._1, None, OutputMode.Update)(Encoders.STRING, Encoders.product[TopicScore])
   }
 }

@@ -18,4 +18,26 @@ trait GraftSpecBase extends AnyFunSuite {
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Run `body` with Spark's RocksDB state store (changelog checkpointing,
+    * memory bounded at 256 MB), restoring the previous values of these
+    * confs afterwards. The provider is read at query start, so only queries
+    * started inside `body` use RocksDB.
+    */
+  def withRocksDB[A](body: => A): A = {
+    val conf = Map(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage"             -> "true",
+      "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB"               -> "256"
+    )
+    val prev = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

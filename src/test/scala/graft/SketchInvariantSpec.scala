@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.streaming.{HistQuantiles, KmvSketch}
 
 /** Cross-implementation parity for the round-10 sketch pairs: the BATCH
-  * SQL queries and the STREAMING transformWithState operators must
+  * SQL queries and the STREAMING flatMapGroupsWithState operators must
   * implement the same math — proven by replaying each batch result
   * through the streaming operator's own scala kernels over the raw
   * fixture data (a third, independent path beside the DuckDB oracle).

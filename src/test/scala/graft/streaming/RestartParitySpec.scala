@@ -1,106 +1,97 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftSpecBase
 
-/** Crash-restart parity for the round-10 streaming operators: state
-  * written through one checkpointed query must be picked up by a FRESH
-  * query on the same checkpoint and produce exactly what an
-  * uninterrupted run would have — the exactly-once-state claim behind
-  * every "cross-batch accumulation" spec, proven across a process
-  * boundary rather than across micro-batches of one live query.
-  * (Same Trigger.Once + foreachBatch + parquet-source shape as
-  * TwsTtlSpec — the memory sink cannot recover a checkpoint.)
+/** Crash-restart parity for the keyed state of `StatefulDedup.latestWins`:
+  * the version high-water marks written through one checkpointed query
+  * must be picked up by a FRESH query on the same checkpoint, which then
+  * emits exactly what an uninterrupted run would have — the
+  * exactly-once-state claim proven across a process boundary rather than
+  * across micro-batches of one live query. Each drain is one Trigger.Once
+  * batch through `foreachBatch` from a parquet source (the memory sink
+  * cannot recover a checkpoint).
   */
 class RestartParitySpec extends GraftSpecBase {
   import spark.implicits._
 
+  type Rec = (String, Long, String)
+
   @annotation.nowarn("cat=deprecation")
   private val onceTrigger: Trigger = Trigger.Once()
 
-  private def withRocksDB[T](body: => T): T = {
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    try body
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  // key k stores 3; then its 2 and 3 (at or below the mark) are suppressed
+  // while key j advances and key m arrives; then k advances past its mark
+  // while the redelivered j and m records are suppressed
+  private val batches: Seq[Seq[Rec]] = Seq(
+    Seq(("k", 3L, "a"), ("k", 1L, "older"), ("j", 1L, "x")),
+    Seq(("k", 2L, "stale"), ("k", 3L, "dup"), ("j", 2L, "y"), ("m", 1L, "new")),
+    Seq(("k", 5L, "b"), ("j", 2L, "redelivered"), ("m", 1L, "redelivered"))
+  )
+
+  /** Each batch lands as ONE parquet file, moved into `srcDir` complete, so
+    * a live query never lists a half-written batch.
+    */
+  private def writeBatch(srcDir: String, rows: Seq[Rec]): Unit = {
+    val stage = Files.createTempDirectory("lwr-stage").toString
+    rows.toDF("key", "version", "name").coalesce(1).write.mode("overwrite").parquet(stage)
+    val part = Files.list(Paths.get(stage)).iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get
+    Files.move(part, Paths.get(srcDir, part.getFileName.toString))
   }
 
-  test("SpaceSaving: a fresh query on the same checkpoint continues the summary exactly") {
-    withRocksDB {
-      val srcDir = java.nio.file.Files.createTempDirectory("ssr-src").toString
-      val ckpt   = java.nio.file.Files.createTempDirectory("ssr-ckpt").toString
-      def writeBatch(rows: Seq[(String, String)]): Unit =
-        rows.toDF("key", "id").write.mode("append").parquet(srcDir)
-      def drainOnce(qname: String): Seq[SpaceSaving.TrackedItem] = {
-        val got = new java.util.concurrent.CopyOnWriteArrayList[SpaceSaving.TrackedItem]()
-        val src = spark.readStream.schema("key STRING, id STRING").parquet(srcDir).as[(String, String)]
-        val q = SpaceSaving.perKey(src, m = 3)
-          .writeStream.queryName(qname).outputMode("update")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[SpaceSaving.TrackedItem], _: Long) =>
-            b.collect().foreach(got.add)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(onceTrigger)
-          .start()
-        q.awaitTermination()
-        import scala.jdk.CollectionConverters._
-        got.asScala.toSeq
-      }
+  /** Starts latest-wins over `srcDir`, collecting each batch's emissions. */
+  private def start(srcDir: String, ckpt: String, qname: String, trigger: Option[Trigger])(
+      got: java.util.List[Set[Rec]]
+  ): StreamingQuery = {
+    val src = spark.readStream.schema("key STRING, version BIGINT, name STRING").parquet(srcDir).as[Rec]
+    val w = StatefulDedup
+      .latestWins[String, Rec](src, _._1, _._2)
+      .writeStream.queryName(qname).outputMode("append")
+      .foreachBatch { (b: Dataset[Rec], _: Long) => got.add(b.collect().toSet); () }
+      .option("checkpointLocation", ckpt)
+    trigger.fold(w)(w.trigger).start()
+  }
 
-      writeBatch(Seq.fill(4)(("k", "hot")) ++ Seq(("k", "a"), ("k", "b")))
-      val r1 = drainOnce("ssr1")
-      assert(r1.map(t => (t.id, t.estimate)).toSet === Set(("hot", 4L), ("a", 1L), ("b", 1L)))
-
-      // restart: a NEW query object on the same checkpoint must see the
-      // prior summary — hot accumulates, c evicts a 1-count entry
-      writeBatch(Seq.fill(3)(("k", "hot")) :+ (("k", "c")))
-      val r2 = drainOnce("ssr2").filter(_.estimate > 0)
-      val hot = r2.find(_.id == "hot").get
-      assert(hot.estimate === 7L, s"restart lost state: $r2")
-      val c = r2.find(_.id == "c").get
-      assert(c.estimate === 2L && c.error === 1L, s"eviction after restart wrong: $r2")
+  /** One fresh query per batch on a shared checkpoint. */
+  private def restartedDrains(): Seq[Set[Rec]] = {
+    val srcDir = Files.createTempDirectory("lwr-src").toString
+    val ckpt   = Files.createTempDirectory("lwr-ckpt").toString
+    batches.zipWithIndex.map { case (rows, i) =>
+      writeBatch(srcDir, rows)
+      val got = new java.util.concurrent.CopyOnWriteArrayList[Set[Rec]]()
+      start(srcDir, ckpt, s"lwr_$i", Some(onceTrigger))(got).awaitTermination()
+      assert(got.size === 1, s"drain $i ran ${got.size} batches")
+      got.get(0)
     }
   }
 
-  test("DriftMonitor: histogram survives the restart and scores the union of both drains") {
-    withRocksDB {
-      val srcDir = java.nio.file.Files.createTempDirectory("dmr-src").toString
-      val ckpt   = java.nio.file.Files.createTempDirectory("dmr-ckpt").toString
-      val ref    = Map(HistQuantiles.bucketOf(100L) -> 1000000L)
-      def writeBatch(rows: Seq[(String, Long)]): Unit =
-        rows.toDF("key", "v").write.mode("append").parquet(srcDir)
-      def drainOnce(qname: String): Seq[DriftMonitor.DriftScore] = {
-        val got = new java.util.concurrent.CopyOnWriteArrayList[DriftMonitor.DriftScore]()
-        val src = spark.readStream.schema("key STRING, v LONG").parquet(srcDir).as[(String, Long)]
-        val q = DriftMonitor.perKey(src, ref)
-          .writeStream.queryName(qname).outputMode("update")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[DriftMonitor.DriftScore], _: Long) =>
-            b.collect().foreach(got.add)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(onceTrigger)
-          .start()
-        q.awaitTermination()
-        import scala.jdk.CollectionConverters._
-        got.asScala.toSeq
-      }
+  /** One live query over the same batch boundaries. */
+  private def uninterruptedRun(): Seq[Set[Rec]] = {
+    val srcDir = Files.createTempDirectory("lwu-src").toString
+    val got    = new java.util.concurrent.CopyOnWriteArrayList[Set[Rec]]()
+    val q      = start(srcDir, Files.createTempDirectory("lwu-ckpt").toString, "lwu", None)(got)
+    try batches.foreach { rows => writeBatch(srcDir, rows); q.processAllAvailable() }
+    finally q.stop()
+    got.asScala.toSeq.filter(_.nonEmpty)
+  }
 
-      val b1 = Seq(("k", 100L), ("k", 100L))
-      val b2 = Seq(("k", 5000000L), ("k", 100L))
-      writeBatch(b1)
-      val r1 = drainOnce("dmr1")
-      assert(r1.map(_.n) === Seq(2L))
-      writeBatch(b2)
-      val r2 = drainOnce("dmr2")
-      // closed form over the UNION proves the histogram carried across
-      val counts = new Array[Long](1024)
-      (b1 ++ b2).foreach { case (_, v) => counts(HistQuantiles.bucketOf(v)) += 1L }
-      assert(r2.map(_.n) === Seq(4L), s"restart lost counters: $r2")
-      assert(r2.head.psiMicro === DriftMonitor.psiMicro(counts, 4L, ref))
-      assert(r2.head.ksPpm === DriftMonitor.ksPpm(counts, 4L, ref))
+  test("latestWins: a fresh query on the same checkpoint suppresses stored versions and emits advances") {
+    assert(restartedDrains() === Seq(
+      Set(("k", 3L, "a"), ("j", 1L, "x")),
+      Set(("j", 2L, "y"), ("m", 1L, "new")),
+      Set(("k", 5L, "b"))
+    ))
+  }
+
+  test("latestWins on RocksDB: restarted drains write the same sink as an uninterrupted run") {
+    withRocksDB {
+      assert(restartedDrains() === uninterruptedRun())
     }
   }
 }

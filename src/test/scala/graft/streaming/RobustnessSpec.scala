@@ -106,28 +106,6 @@ class RobustnessSpec extends GraftSpecBase {
     assert(e.getMessage.contains("dim_value"))
   }
 
-  test("dropDuplicatesWithinWatermark dedups redelivered records with bounded state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val out = StatefulDedup.exactWithinWatermark(
-      input.toDF(), Seq("event_type", "value"), "ts", "10 minutes"
-    )
-    val q = out.writeStream.format("memory").queryName("wmdedup").outputMode("append").start()
-
-    val t = java.sql.Timestamp.valueOf("2024-01-01 01:00:00")
-    // redelivery within the watermark delay: one survivor
-    input.addData(Ev(t, "click", 1.0), Ev(t, "click", 1.0), Ev(t, "view", 2.0))
-    q.processAllAvailable()
-    input.addData(Ev(java.sql.Timestamp.valueOf("2024-01-01 01:05:00"), "click", 1.0))
-    q.processAllAvailable()
-    q.stop()
-
-    val rows = spark.table("wmdedup").select("event_type", "value")
-      .as[(String, Double)].collect().sorted
-    assert(rows.toSeq === Seq(("click", 1.0), ("view", 2.0)))
-  }
-
   test("registry stop/stopAll survive a query that already failed") {
     val srcDir = tmp("fsrc")
     spark

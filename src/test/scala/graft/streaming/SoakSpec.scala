@@ -75,50 +75,48 @@ class SoakSpec extends GraftSpecBase {
 
   test("watermarked window agg soak under RocksDB: state plateaus, no unbounded growth") {
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "200")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    val batches = 100
-    val perBatch = 1000L
-    val src = spark.readStream
-      .format("graft-synthetic-events")
-      .option("rows", batches * perBatch)
-      .option("users", 50)
-      .option("rowsPerBatch", perBatch)
-      .option("partitions", 4)
-      .load()
-    // generator ts advances ~1 s per event_id, so each 1000-row batch
-    // advances event time ~17 min: 10-min windows + a 10-min watermark
-    // means old windows close every batch — live state is a bounded set
-    // of (window × user) rows regardless of how long the stream runs
-    val agg = src
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "10 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-    val q = agg.writeStream
-      .queryName("soak-state")
-      .outputMode("append")
-      .format("noop")
-      .option("checkpointLocation", WorkDirs.fresh(spark, "soak-state-ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val prog = q.recentProgress.toSeq.filter(_.numInputRows > 0)
-    assert(prog.size >= batches - 2, s"expected ~$batches micro-batches, got ${prog.size}")
-    val stateRows = prog.map(_.stateOperators.map(_.numRowsTotal).sum)
-    val mid  = stateRows.slice(stateRows.size / 4, stateRows.size / 2)
-    val last = stateRows.takeRight(stateRows.size / 4)
-    System.err.println(
-      s"[soak] state rows: mid max ${mid.max}, last max ${last.max}, " +
-        s"curve=${stateRows.grouped(math.max(1, stateRows.size / 20)).map(_.max).mkString(",")}")
-    // plateau: the last quarter's peak must not exceed the mid-run peak
-    // by more than 50% — unbounded state tracks batch index and would be
-    // ~2x here (and 100x in a day-long run)
-    assert(mid.max > 0, "state operator reported zero rows — the agg is not stateful?")
-    assert(
-      last.max <= mid.max * 1.5,
-      s"state grew past plateau: mid-run peak ${mid.max} rows -> last-quarter peak ${last.max} rows"
-    )
+    withRocksDB {
+      val batches = 100
+      val perBatch = 1000L
+      val src = spark.readStream
+        .format("graft-synthetic-events")
+        .option("rows", batches * perBatch)
+        .option("users", 50)
+        .option("rowsPerBatch", perBatch)
+        .option("partitions", 4)
+        .load()
+      // generator ts advances ~1 s per event_id, so each 1000-row batch
+      // advances event time ~17 min: 10-min windows + a 10-min watermark
+      // means old windows close every batch — live state is a bounded set
+      // of (window × user) rows regardless of how long the stream runs
+      val agg = src
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "10 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
+      val q = agg.writeStream
+        .queryName("soak-state")
+        .outputMode("append")
+        .format("noop")
+        .option("checkpointLocation", WorkDirs.fresh(spark, "soak-state-ckpt"))
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val prog = q.recentProgress.toSeq.filter(_.numInputRows > 0)
+      assert(prog.size >= batches - 2, s"expected ~$batches micro-batches, got ${prog.size}")
+      val stateRows = prog.map(_.stateOperators.map(_.numRowsTotal).sum)
+      val mid  = stateRows.slice(stateRows.size / 4, stateRows.size / 2)
+      val last = stateRows.takeRight(stateRows.size / 4)
+      System.err.println(
+        s"[soak] state rows: mid max ${mid.max}, last max ${last.max}, " +
+          s"curve=${stateRows.grouped(math.max(1, stateRows.size / 20)).map(_.max).mkString(",")}")
+      // plateau: the last quarter's peak must not exceed the mid-run peak
+      // by more than 50% — unbounded state tracks batch index and would be
+      // ~2x here (and 100x in a day-long run)
+      assert(mid.max > 0, "state operator reported zero rows — the agg is not stateful?")
+      assert(
+        last.max <= mid.max * 1.5,
+        s"state grew past plateau: mid-run peak ${mid.max} rows -> last-quarter peak ${last.max} rows"
+      )
+    }
   }
 }

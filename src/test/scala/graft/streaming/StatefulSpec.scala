@@ -9,7 +9,6 @@ import graft.GraftSpecBase
 
 case class CdcRec(user_id: Long, version: Long, name: String)
 case class Ev(ts: Timestamp, event_type: String, value: Double)
-case class FunnelEv(user_id: Long, ms: Long, event_type: String)
 
 /** Streaming state operators: latest-wins dedup over flatMapGroupsWithState
   * (B2 streaming form) and the watermarked tumbling aggregation (B7).
@@ -62,7 +61,7 @@ class StatefulSpec extends GraftSpecBase {
     // RocksDB provider (the 100 TB state path — SSD-spilled, bounded
     // memory) must emit exactly what the default heap-backed store does
     implicit val sqlCtx = spark.sqlContext
-    StateBackend.withRocksDB(spark, boundedMemoryMB = Some(256)) {
+    withRocksDB {
       val input = MemoryStream[CdcRec]
       val out = StatefulDedup.latestWins[Long, CdcRec](input.toDS(), _.user_id, _.version)
       val q = out.writeStream.format("memory").queryName("lw_rocks").outputMode("append").start()
@@ -87,32 +86,6 @@ class StatefulSpec extends GraftSpecBase {
       !spark.conf.get("spark.sql.streaming.stateStore.providerClass").contains("RocksDB"))
   }
 
-  test("latestWins on transformWithState: output parity with the fMGWS form") {
-    // B171's migration template applied to the highest-value fMGWS twin:
-    // the SAME batches through both paths under the RocksDB provider must
-    // emit the SAME records (version advances only, in-batch max first)
-    implicit val sqlCtx = spark.sqlContext
-    val batches = Seq(
-      Seq(CdcRec(1, 10, "a"), CdcRec(1, 5, "stale"), CdcRec(2, 7, "x")),
-      Seq(CdcRec(1, 20, "b"), CdcRec(2, 7, "dup"), CdcRec(1, 15, "late")),
-      Seq(CdcRec(3, 1, "new"), CdcRec(1, 19, "older"))
-    )
-    def drain(qname: String, mk: MemoryStream[CdcRec] => org.apache.spark.sql.Dataset[CdcRec]): Seq[CdcRec] = {
-      val input = MemoryStream[CdcRec]
-      val q = mk(input).writeStream.format("memory").queryName(qname).outputMode("append").start()
-      batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      q.stop()
-      spark.table(qname).as[CdcRec].collect().toSeq.sortBy(r => (r.user_id, r.version))
-    }
-    StateBackend.withRocksDB(spark) {
-      val tws   = drain("lw_tws", in => StatefulDedup.latestWinsTws[Long, CdcRec](in.toDS(), _.user_id, _.version))
-      val fmgws = drain("lw_fmgws", in => StatefulDedup.latestWins[Long, CdcRec](in.toDS(), _.user_id, _.version))
-      assert(tws === fmgws)
-      assert(tws === Seq(
-        CdcRec(1, 10, "a"), CdcRec(1, 20, "b"), CdcRec(2, 7, "x"), CdcRec(3, 1, "new")))
-    }
-  }
-
   test("decodeOrDlq splits well-formed and corrupt frames (A13)") {
     import org.apache.spark.sql.functions._
     import graft.sources.{ConfluentWire, KafkaCdc}
@@ -133,36 +106,5 @@ class StatefulSpec extends GraftSpecBase {
     val (decoded, corrupt) = KafkaCdc.decodeOrDlq(raw, schema)
     assert(decoded.select("value.id").collect().map(_.getLong(0)).toSeq === Seq(1L))
     assert(corrupt.count() === 2)
-  }
-
-  test("streaming funnel emits exactly one completion per key, across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[FunnelEv]
-    val out = FunnelDetector.detect[Long, FunnelEv](
-      input.toDS(), _.user_id, _.event_type, _.ms,
-      stages = Seq("view", "click", "purchase")
-    )
-    val q = out.writeStream.format("memory").queryName("fn").outputMode("append").start()
-
-    // user 1 progresses view→click in batch 1 (out of order within the
-    // batch — sorted by ms before matching); user 2 clicks without viewing
-    input.addData(
-      FunnelEv(1L, 20L, "click"), FunnelEv(1L, 10L, "view"),
-      FunnelEv(2L, 15L, "click"), FunnelEv(1L, 15L, "error")
-    )
-    q.processAllAvailable()
-    assert(spark.table("fn").count() === 0)   // funnel incomplete
-
-    // purchase completes user 1; a second purchase must not re-emit;
-    // user 2's late view starts (not completes) their funnel
-    input.addData(
-      FunnelEv(1L, 30L, "purchase"), FunnelEv(1L, 40L, "purchase"),
-      FunnelEv(2L, 40L, "view")
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    val hits = spark.table("fn").as[(Long, Long)].collect().toSeq
-    assert(hits === Seq((1L, 30L)))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.GraftSpecBase
 
-/** Decayed trending scores on transformWithState: cross-batch state
+/** Decayed trending scores on flatMapGroupsWithState: cross-batch state
   * carries the score forward, decay follows the closed form
   * Σᵢ 2^(−(T−tᵢ)/h) over all events, and replaying the same batches
   * yields identical scores (decay is event-time, not wall-clock).
