@@ -6,7 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
@@ -45,17 +45,7 @@ case class TopKByLong(
     containsNull = false
   )
 
-  // the heap's head is the WORST kept entry: lowest score, ties broken
-  // toward the largest id (larger id loses a tie)
-  private def newHeap() = new java.util.PriorityQueue[(Double, Long)](
-    k + 1,
-    new java.util.Comparator[(Double, Long)] {
-      override def compare(a: (Double, Long), b: (Double, Long)): Int = {
-        val c = java.lang.Double.compare(a._1, b._1)
-        if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-      }
-    }
-  )
+  private def newHeap() = new java.util.PriorityQueue[(Double, Long)](k + 1, TopKBy.WorstFirst)
 
   override def createAggregationBuffer(): java.util.PriorityQueue[(Double, Long)] = newHeap()
 
@@ -89,7 +79,7 @@ case class TopKByLong(
     val it = heap.iterator()
     while (it.hasNext) { entries(i) = it.next(); i += 1 }
     // rank order: score desc, id asc
-    val sorted = entries.sortBy { case (s, id) => (-s, id) }
+    val sorted = entries.sorted(Ordering.comparatorToOrdering(TopKBy.WorstFirst).reverse)
     new GenericArrayData(sorted.map { case (s, id) =>
       new GenericInternalRow(Array[Any](s, id)): Any
     })
@@ -123,6 +113,17 @@ case class TopKByLong(
 }
 
 object TopKBy {
+
+  /** Worst-first entry order, so a heap's head is the WORST kept entry:
+    * lowest score, ties broken toward the largest id (larger id loses a
+    * tie). Scores compare as SQL orders doubles (-0.0 == 0.0, NaN above
+    * every number), so a -0.0/0.0 tie falls to the id as it does in the
+    * window form.
+    */
+  private[functions] val WorstFirst: java.util.Comparator[(Double, Long)] = (a, b) => {
+    val c = SQLOrderingUtil.compareDoubles(a._1, b._1)
+    if (c != 0) c else java.lang.Long.compare(b._2, a._2)
+  }
 
   /** array<struct<score,id>> of the group's top k by (score desc, id asc). */
   def topKByLong(score: Column, payload: Column, k: Int): Column =

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
@@ -173,6 +173,62 @@ case class WordKGrams(child: Expression, k: Int)
     copy(child = newChild)
 }
 
+/** IVF cell assignment as a map-side kernel: the id of the centroid
+  * nearest to a double-array vector, over a centroid matrix small enough
+  * to ship inside the expression (nCells × dim doubles).
+  *
+  * Replaces a crossJoin against the broadcast centroid table plus a
+  * `min(struct(d, cell))` aggregate per vector: same distance, same op
+  * order — `(v·v − 2.0·(v·c)) + Σc²` with DotProduct's sequential
+  * left-to-right sums over min(|v|, |c|) elements — and the same argmin:
+  * the smallest (d, cell) under SQL ordering (`SQLOrderingUtil`: -0.0 ==
+  * 0.0, NaN above every number; a NULL vector makes every d NULL, and
+  * NULL sorts first, so it lands in the smallest cell id). No centroids
+  * gives NULL, the row the join would not have produced.
+  */
+case class NearestCell(child: Expression, cells: Seq[Long], cents: Seq[Seq[Double]], norms2: Seq[Double])
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  require(cells.length == cents.length && cells.length == norms2.length)
+
+  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def nullable: Boolean  = cells.isEmpty
+  override def prettyName: String = "graft_nearest_cell"
+
+  @transient private lazy val cellArr = cells.toArray
+  @transient private lazy val centArr = cents.map(_.toArray).toArray
+  @transient private lazy val normArr = norms2.toArray
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    if (cellArr.isEmpty) return null
+    val v = child.eval(input).asInstanceOf[ArrayData]
+    if (v == null) return cellArr.min
+    val n  = v.numElements()
+    val vs = new Array[Double](n)
+    var vv = 0.0
+    var i  = 0
+    while (i < n) { vs(i) = v.getDouble(i); vv += vs(i) * vs(i); i += 1 }
+    var best  = -1L
+    var bestD = 0.0
+    var j     = 0
+    while (j < cellArr.length) {
+      val c  = centArr(j)
+      val m  = math.min(n, c.length)
+      var vc = 0.0
+      i = 0
+      while (i < m) { vc += vs(i) * c(i); i += 1 }
+      val d   = vv - 2.0 * vc + normArr(j)
+      val cmp = if (j == 0) -1 else SQLOrderingUtil.compareDoubles(d, bestD)
+      if (cmp < 0 || (cmp == 0 && cellArr(j) < best)) { best = cellArr(j); bestD = d }
+      j += 1
+    }
+    best
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object VectorExpressions {
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
@@ -182,4 +238,7 @@ object VectorExpressions {
 
   def wordKGrams(tokens: Column, k: Int): Column =
     ColumnBridge.column(WordKGrams(ColumnBridge.expression(tokens), k))
+
+  def nearestCell(vec: Column, cells: Seq[Long], cents: Seq[Seq[Double]], norms2: Seq[Double]): Column =
+    ColumnBridge.column(NearestCell(ColumnBridge.expression(vec), cells, cents, norms2))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
+import graft.operators.Parallelism.spreadSmallInput
 import graft.operators.TextAnalysis._
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §2 B1–B3):
@@ -29,17 +30,6 @@ object Dedup {
     * per (session, input plan `sameResult`, params).
     */
   private val PairCache = SessionStageCache
-
-  /** Tiny-input guard: a single small parquet file arrives as one
-    * partition, which would serialize the expensive per-document shingle /
-    * signature computation on a many-core executor. Real datasets arrive
-    * in many splits and skip this; the threshold keeps the repartition
-    * from adding a shuffle where the scan is already parallel.
-    */
-  private def spreadSmallInput(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
 
   /** B1 — exact dedup on arbitrary key columns: keeps the row with the
     * minimal tie-break per key. One hash aggregation (map-side partial

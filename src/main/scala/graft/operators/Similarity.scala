@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Parallelism.spreadSmallInput
+
 /** Approximate/exact nearest-neighbor search over embedding columns
   * (SURVEY.md §2 B4). Brute-force cosine is the correctness baseline; the
   * bucketed variant is the scale path (compare only within a coarse cell —
@@ -32,22 +34,12 @@ object Similarity {
 
   private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
 
-  /** See Dedup.spreadSmallInput — parallelize the corpus scan when a tiny
-    * single-file input would otherwise score all candidates in one task.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
   /** Brute-force top-k by cosine: for each query vector, the k nearest
     * corpus vectors (excluding itself), ranked (cosine desc, id asc).
     *
     * Scale shape: queries are broadcast (they are small by assumption);
-    * the corpus streams through one scan — no corpus self-shuffle. At
-    * 100 TB the corpus side stays partition-parallel and the per-partition
-    * top-k is reduced by the final window; swap the window for a
-    * `mapPartitions` heap only if profiling demands it.
+    * the corpus streams through one scan — no corpus self-shuffle — and
+    * the bounded-heap `rankTopK` keeps k rows per query map-side.
     */
   def bruteForceTopK(
       corpus: DataFrame,
@@ -56,17 +48,29 @@ object Similarity {
       vecCol: String,
       k: Int
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = spread(corpus).select(col(idCol).as("corpus_id"), asDouble(col(vecCol)).as("cv"))
+    val c = spreadSmallInput(corpus).select(col(idCol).as("corpus_id"), asDouble(col(vecCol)).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-    val scored = c
-      .join(broadcast(q), col("corpus_id") =!= col("query_id"))
-      .withColumn("cosine", round(cosine(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("corpus_id").asc)
+    rankTopK(
+      c.join(broadcast(q), col("corpus_id") =!= col("query_id"))
+        .withColumn("cosine", round(cosine(col("qv"), col("cv")), 6)),
+      k)
+  }
+
+  /** Per query, the k best scored rows by (cosine desc, corpus_id asc),
+    * ranked 1..k: (query_id, corpus_id, cosine, rank). The bounded-heap
+    * TopKBy aggregate moves k rows per query through its shuffle, where a
+    * `row_number()` window would shuffle and sort every scored row; its
+    * tie-break is the window's. A row with a NULL cosine (a NULL vector)
+    * is skipped, where the window would rank it last.
+    */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+    val idType = scored.schema("corpus_id").dataType
     scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cosine"), col("rank").cast("long").as("rank"))
+      .groupBy(col("query_id"))
+      .agg(graft.functions.TopKBy.topKByLong(col("cosine"), col("corpus_id").cast("long"), k).as("top"))
+      .select(col("query_id"), posexplode(col("top")))
+      .select(col("query_id"), col("col.id").cast(idType).as("corpus_id"),
+        col("col.score").as("cosine"), (col("pos") + 1).cast("long").as("rank"))
   }
 
   /** Session-shared brute-force truth table (r16, the r15 verdict's
@@ -103,17 +107,12 @@ object Similarity {
       bucketCol: String,
       k: Int
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = spread(corpus).select(col(idCol).as("corpus_id"), col(bucketCol).as("cb"), asDouble(col(vecCol)).as("cv"))
+    val c = spreadSmallInput(corpus).select(col(idCol).as("corpus_id"), col(bucketCol).as("cb"), asDouble(col(vecCol)).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(bucketCol).as("qb"), asDouble(col(vecCol)).as("qv"))
-    val scored = c
-      .join(broadcast(q), col("cb") === col("qb") && col("corpus_id") =!= col("query_id"))
-      .withColumn("cosine", round(cosine(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cosine"), col("rank").cast("long").as("rank"))
+    rankTopK(
+      c.join(broadcast(q), col("cb") === col("qb") && col("corpus_id") =!= col("query_id"))
+        .withColumn("cosine", round(cosine(col("qv"), col("cv")), 6)),
+      k)
   }
 
   /** Sign-bit sketch over the first `bits` dimensions — a trivial
@@ -138,13 +137,12 @@ object Similarity {
     * index: every step here — seed pick, argmin assignment, probe set,
     * final ranking — is plain deterministic relational algebra.
     *
-    * The centroid "model" is small (nCells × dim doubles) and ships as a
-    * BROADCAST TABLE: cell assignment is a crossJoin against it plus a
-    * map-side-combining `min(struct(d, cell))` per vector — the same
-    * deterministic argmin, but linear in nCells inside whole-stage codegen
-    * (an earlier literal-array `least(...)` form fell out of codegen past
-    * ~100 cells and ran 15× slower the moment cell count scaled with the
-    * corpus). No ML pipeline anywhere.
+    * The centroid "model" is small (nCells × dim doubles): cell
+    * assignment is the map-side NearestCell kernel holding the matrix —
+    * the deterministic argmin over (distance, cell id), one pass over the
+    * corpus with no join and no aggregate — and the per-query probe
+    * ranking crosses the queries with it as a BROADCAST TABLE. No ML
+    * pipeline anywhere.
     */
   /** Deterministic seed centroids as a broadcast table (cell id, centroid,
     * ||centroid||²): nCells rows with the smallest (md5(id), id) — a
@@ -173,11 +171,11 @@ object Similarity {
     )
   }
 
-  /** Corpus → nearest cell against a centroid table: crossJoin the
-    * broadcast centroids, then a map-side-combining min over
-    * struct(d, cell) — lexicographic struct order == ORDER BY
-    * (distance, cell id), the deterministic tie-break. Returns
-    * (corpus_id, cv, cell).
+  /** Corpus → nearest cell: the NearestCell kernel over the centroid
+    * matrix, ORDER BY (distance, cell id) as the deterministic argmin.
+    * The matrix is read back from the driver-built table, a local
+    * relation, so collecting it runs no job. Returns (corpus_id, cv, cell),
+    * one row per corpus row.
     */
   private def ivfAssignWithCents(
       corpus: DataFrame,
@@ -185,19 +183,15 @@ object Similarity {
       vecCol: String,
       cents: DataFrame
   ): DataFrame = {
-    def d(vec: Column): Column =
-      dot(vec, vec) - lit(2.0) * dot(vec, col("ce")) + col("ce2")
-    spread(corpus)
+    val m = cents.collect().toIndexedSeq
+    val cell = graft.functions.VectorExpressions.nearestCell(
+      col("cv"), m.map(_.getLong(0)), m.map(_.getSeq[Double](1).toIndexedSeq), m.map(_.getDouble(2)))
+    spreadSmallInput(corpus)
       .select(col(idCol).as("corpus_id"), asDouble(col(vecCol)).as("cv"))
-      .crossJoin(cents)
-      .groupBy(col("corpus_id"))
-      .agg(
-        min(struct(d(col("cv")).as("d"), col("cell").as("cell"))).as("m"),
-        // cv is functionally dependent on corpus_id (every crossJoin row
-        // carries the same vector), so first() is deterministic here
-        first(col("cv")).as("cv")
-      )
-      .select(col("corpus_id"), col("cv"), col("m.cell").as("cell"))
+      .withColumn("cell", cell)
+      // only with no centroids is a cell NULL: the rows a crossJoin
+      // against an empty table never produced
+      .filter(col("cell").isNotNull)
   }
 
   /** Session-shared default-geometry centroid table and cell assignment
@@ -261,46 +255,61 @@ object Similarity {
       // when queries are a bounded set. Pass false when the query batch
       // grows with the corpus (incremental refresh): a corpus-fraction
       // broadcast is the unbounded-build-side bug, and the cell-keyed
-      // shuffle join partitions fine once nCells scales with the corpus.
+      // sort-merge join partitions fine once nCells scales with the
+      // corpus. The merge is hinted: the assignment's size estimate is
+      // the scan's, so a small corpus would otherwise be broadcast.
       broadcastQueries: Boolean = true
   ): DataFrame = {
+    val (cents, assigned) = ivfIndex(corpus, idCol, vecCol, nCells, seedSource)
+    probeTopK(assigned, probeCells(queries, idCol, vecCol, cents, nProbe), k, broadcastQueries)
+  }
+
+  /** The IVF index, (centroid table, corpus cell assignment): the
+    * session-shared stages under the default geometry (r16), or a private
+    * pair seeded from `seedSource`.
+    */
+  private def ivfIndex(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      nCells: Int,
+      seedSource: Option[DataFrame]
+  ): (DataFrame, DataFrame) = seedSource match {
+    case None => (ivfCentsCached(corpus, idCol, vecCol, nCells), ivfAssignCached(corpus, idCol, vecCol, nCells))
+    case Some(src) =>
+      val cents = ivfCentroidTable(src, idCol, vecCol, nCells)
+      (cents, ivfAssignWithCents(corpus, idCol, vecCol, cents))
+  }
+
+  /** Per query, its `maxProbe` nearest cells under the assignment's
+    * distance, ranked (distance, cell id) as `prn`: (query_id, qv, cell,
+    * prn). The window shuffles queries × nCells rows keyed by query —
+    * linear in both.
+    */
+  private def probeCells(
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      cents: DataFrame,
+      maxProbe: Int
+  ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-
-    // default geometry rides the session-shared index stages (r16)
-    val cents =
-      if (seedSource.isEmpty) ivfCentsCached(corpus, idCol, vecCol, nCells)
-      else ivfCentroidTable(seedSource.get, idCol, vecCol, nCells)
-    def d(vec: Column): Column =
-      dot(vec, vec) - lit(2.0) * dot(vec, col("ce")) + col("ce2")
-    val c =
-      if (seedSource.isEmpty) ivfAssignCached(corpus, idCol, vecCol, nCells)
-      else ivfAssignWithCents(corpus, idCol, vecCol, cents)
-
-    // per query: the nProbe nearest cells via the same distance, ranked
-    // (distance, cell id); the window shuffles queries×nCells rows keyed
-    // by query — linear in both
-    val q = queries
+    val d = dot(col("qv"), col("qv")) - lit(2.0) * dot(col("qv"), col("ce")) + col("ce2")
+    queries
       .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
       .crossJoin(cents)
-      .withColumn(
-        "prn",
-        row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(d(col("qv")).asc, col("cell").asc)
-        )
-      )
-      .filter(col("prn") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cell"))
-
-    val scored = c
-      .join(if (broadcastQueries) broadcast(q) else q, Seq("cell"))
-      .filter(col("corpus_id") =!= col("query_id"))
-      .withColumn("cosine", round(cosine(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cosine"), col("rank").cast("long").as("rank"))
+      .withColumn("prn", row_number().over(Window.partitionBy(col("query_id")).orderBy(d.asc, col("cell").asc)))
+      .filter(col("prn") <= maxProbe)
+      .select(col("query_id"), col("qv"), col("cell"), col("prn"))
   }
+
+  /** Per query, the top k corpus rows of its probed cells (`rankTopK`). */
+  private def probeTopK(assigned: DataFrame, probes: DataFrame, k: Int, broadcastQueries: Boolean): DataFrame =
+    rankTopK(
+      assigned.join(if (broadcastQueries) broadcast(probes) else probes.hint("merge"), Seq("cell"))
+        .filter(col("corpus_id") =!= col("query_id"))
+        .withColumn("cosine", round(cosine(col("qv"), col("cv")), 6)),
+      k)
 
   /** `ivfTopK` at SEVERAL nProbe operating points with the centroid
     * table, the corpus cell assignment, and the probe ranking computed
@@ -324,39 +333,14 @@ object Similarity {
       nProbes: Seq[Int],
       seedSource: Option[DataFrame] = None
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-
-    // default geometry rides the session-shared index stages (r16); the
-    // r15 per-query eager checkpoint of the assignment became the shared
-    // entry itself
-    val cents =
-      if (seedSource.isEmpty) ivfCentsCached(corpus, idCol, vecCol, nCells)
-      else ivfCentroidTable(seedSource.get, idCol, vecCol, nCells)
-    def d(vec: Column): Column =
-      dot(vec, vec) - lit(2.0) * dot(vec, col("ce")) + col("ce2")
-    val c =
-      if (seedSource.isEmpty) ivfAssignCached(corpus, idCol, vecCol, nCells)
-      else ivfAssignWithCents(corpus, idCol, vecCol, cents).localCheckpoint(true)
-    val q = queries
-      .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .crossJoin(cents)
-      .withColumn(
-        "prn",
-        row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(d(col("qv")).asc, col("cell").asc)
-        )
-      )
-      .filter(col("prn") <= nProbes.max)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("corpus_id").asc)
+    // the default geometry's assignment is already a checkpointed
+    // session-shared stage; a private one is materialized here
+    val (cents, index) = ivfIndex(corpus, idCol, vecCol, nCells, seedSource)
+    val assigned = if (seedSource.isEmpty) index else index.localCheckpoint(true)
+    val probes   = probeCells(queries, idCol, vecCol, cents, nProbes.max)
     nProbes.map { np =>
-      val qn = q.filter(col("prn") <= np).select(col("query_id"), col("qv"), col("cell"))
-      c.join(broadcast(qn), Seq("cell"))
-        .filter(col("corpus_id") =!= col("query_id"))
-        .withColumn("cosine", round(cosine(col("qv"), col("cv")), 6))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(lit(np.toLong).as("n_probe"), col("query_id"), col("corpus_id"),
-          col("cosine"), col("rank").cast("long").as("rank"))
+      probeTopK(assigned, probes.filter(col("prn") <= np), k, broadcastQueries = true)
+        .select(lit(np.toLong).as("n_probe"), col("*"))
     }.reduce(_ unionByName _)
   }
 
@@ -450,7 +434,7 @@ object Similarity {
       dim: Int
   ): DataFrame = {
     val planes = signPlanes(bands * MaxBitsPerBand, dim)
-    val base = spread(embeddings).select(
+    val base = spreadSmallInput(embeddings).select(
       col(idCol).as("vec_id"),
       asDouble(col(vecCol)).as("v")
     )
@@ -521,7 +505,7 @@ object Similarity {
     // same plane geometry as randomHyperplanePairs: dim must match the
     // embedding column's length or the sign projections are meaningless
     val planes = signPlanes(bands * MaxBitsPerBand, dim)
-    val base = spread(embeddings).select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
+    val base = spreadSmallInput(embeddings).select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
     val bandCols = (0 until bands).map { bd =>
       (0 until bitsPerBand).map { b =>
         val plane = planes(bd * MaxBitsPerBand + b)
@@ -610,8 +594,8 @@ object Similarity {
   /** Deterministic Lloyd's k-means: `iters` refinement rounds over the
     * ivfTopK seed recipe (cluster c = the row with the c-th smallest
     * (md5(id), id)). Each round assigns every vector to its nearest
-    * centroid — a codegen'd argmin over literal centroid arrays, exactly
-    * the ivfTopK cell-assignment shape — then recomputes centroids as the
+    * centroid — a codegen'd argmin over literal centroid arrays, the
+    * argmin ivfTopK's NearestCell kernel computes — then recomputes centroids as the
     * 6-dp-rounded dim-wise mean. The rounding pins cross-engine parity
     * (double sums associate differently per engine; 1e-6 dwarfs the
     * ~1e-14 noise) and makes every intermediate centroid replayable from
@@ -655,7 +639,7 @@ object Similarity {
       k: Int,
       iters: Int
   ): DataFrame = {
-    val e = spread(embeddings)
+    val e = spreadSmallInput(embeddings)
       .select(col(idCol).cast("long").as("vec_id"), asDouble(col(vecCol)).as("v"))
 
     def assign(cents: Seq[(Int, Array[Double])]): DataFrame = {

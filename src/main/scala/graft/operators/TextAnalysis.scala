@@ -7,10 +7,15 @@ import graft.functions.Hashing
 /** Text-analysis operators for an LLM training-data pipeline: tokenization,
   * quality scoring, language ID, fingerprinting (SURVEY.md §2 B5).
   *
-  * Everything is built from codegen'd `org.apache.spark.sql.functions` —
-  * no UDFs — so the whole stage fuses into one pass over the text column
-  * and scales linearly with input splits (no shuffle except the final
-  * aggregations callers add).
+  * Everything is a Catalyst expression — `org.apache.spark.sql.functions`
+  * plus graft's kernels in `graft.functions`, no UDFs — so each operator
+  * is a per-row projection inside one whole-stage-codegen scan and scales
+  * linearly with input splits (no shuffle except the final aggregations
+  * callers add). A projection evaluates an expression that several
+  * columns share once (subexpression elimination); a Filter does not, so
+  * a predicate pushed into it re-evaluates each reference. That is why
+  * the quality and language signals are kernels over ONE tokenization
+  * each rather than one regex or token filter per column.
   */
 object TextAnalysis {
 
@@ -56,25 +61,18 @@ object TextAnalysis {
     */
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "it")
 
+  /** Appends the fields of one `TextQuality` kernel over the text's
+    * tokens; each equals its composed SQL form, which the oracles replay:
+    *   punct_ratio    = round(#[.,;:!?] / greatest(length(t), 1), 6)
+    *   upper_ratio    = round(#[A-Z] / greatest(length(t), 1), 6)
+    *   stopword_ratio = round(#stopword tokens / greatest(size(tokens), 1), 6)
+    *   len_score      = 1.0 if length(normalize(t)) is in [100, 5000], else 0.0
+    *   quality_score  = round((len_score + least(stopword_ratio * 4, 1.0)
+    *                      + (1.0 - least(punct_ratio * 10, 1.0))) / 3.0, 6)
+    */
   def withQuality(df: DataFrame, textCol: String): DataFrame = {
-    val t       = col(textCol)
-    val norm    = normalize(t)
-    val toks    = tokens(t)
-    val nPunct  = length(t) - length(regexp_replace(t, "[\\.,;:!\\?]", ""))
-    val nUpper  = length(t) - length(regexp_replace(t, "[A-Z]", ""))
-    val nStop   = size(filter(toks, tk => tk.isInCollection(Stopwords)))
-    df.withColumn("punct_ratio", round(nPunct.cast("double") / greatest(length(t), lit(1)), 6))
-      .withColumn("upper_ratio", round(nUpper.cast("double") / greatest(length(t), lit(1)), 6))
-      .withColumn("stopword_ratio", round(nStop.cast("double") / greatest(size(toks), lit(1)), 6))
-      .withColumn("len_score", when(length(norm).between(100, 5000), lit(1.0)).otherwise(lit(0.0)))
-      .withColumn(
-        "quality_score",
-        round(
-          (col("len_score") + least(col("stopword_ratio") * 4, lit(1.0)) +
-            (lit(1.0) - least(col("punct_ratio") * 10, lit(1.0)))) / 3.0,
-          6
-        )
-      )
+    val q = graft.functions.TextExpressions.textQuality(tokens(col(textCol)), col(textCol), Stopwords)
+    graft.functions.TextQuality.Fields.foldLeft(df)((d, f) => d.withColumn(f, q.getField(f)))
   }
 
   /** N-gram-frequency language ID heuristic: votes by language-marker tokens,
@@ -89,23 +87,13 @@ object TextAnalysis {
     "zh" -> Seq("的", "是", "了", "在")
   )
 
-  def withLangId(df: DataFrame, textCol: String): DataFrame = {
-    val toks  = tokens(col(textCol))
-    val langs = LangMarkers.map(_._1)
-    val withVotes = LangMarkers.foldLeft(df) { case (d, (lang, markers)) =>
-      d.withColumn(s"votes_$lang", size(filter(toks, tk => tk.isInCollection(markers))))
-    }
-    // First-match-wins CASE chain: lang L wins if its votes are >= every
-    // later language's votes (earlier languages already failed their guard).
-    // Mirrors a plain SQL CASE so an oracle reproduces ties identically.
-    val best = langs.zipWithIndex.init.foldRight(lit(langs.last)) { case ((lang, i), acc) =>
-      val laterMax = langs.drop(i + 1).map(l => col(s"votes_$l")).reduceLeft(greatest(_, _))
-      when(col(s"votes_$lang") >= laterMax, lit(lang)).otherwise(acc)
-    }
-    withVotes
-      .withColumn("lang_pred", best)
-      .drop(langs.map(l => s"votes_$l"): _*)
-  }
+  /** Appends lang_pred: a `LangPred` kernel over the text's tokens. Votes
+    * are marker-token counts per language; the first-match-wins chain (L
+    * wins if its votes are >= every later language's) mirrors a plain SQL
+    * CASE, so an oracle reproduces ties identically.
+    */
+  def withLangId(df: DataFrame, textCol: String): DataFrame =
+    df.withColumn("lang_pred", graft.functions.TextExpressions.langPred(tokens(col(textCol)), LangMarkers))
 
   /** Canonicalize a URL for dedup: lowercase the scheme+host, strip a
     * leading `www.`, drop the fragment, and remove tracking query params

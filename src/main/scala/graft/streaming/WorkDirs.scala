@@ -30,13 +30,17 @@ object WorkDirs {
       .stripSuffix("/")
 
   /** Create and return `<base>/<label>-<uuid>` on whatever filesystem the
-    * base resolves to.
+    * base resolves to. The directory is registered with the FileSystem's
+    * `deleteOnExit`: it is removed, contents and all, when that FileSystem
+    * closes — for the cached instance, at JVM exit.
     */
   def fresh(spark: SparkSession, label: String): String = {
     val dir  = new Path(s"${base(spark)}/$label-${UUID.randomUUID().toString.take(12)}")
     val fs   = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    fs.makeQualified(dir).toString
+    val qualified = fs.makeQualified(dir)
+    fs.mkdirs(qualified)
+    fs.deleteOnExit(qualified)
+    qualified.toString
   }
 
   /** Stage a fixture table's RAW parquet bytes into a fresh scratch dir

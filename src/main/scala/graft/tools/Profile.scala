@@ -2,8 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.graft.PlanBridge
 
 /** Where a query's time goes: for each named query, DRIVER-side cost
   * (DataFrame construction + analysis + optimization + physical planning,
@@ -16,13 +18,16 @@ import org.apache.spark.sql.execution.ExplainMode
   * Per query: one untimed warm pass, then the median of `trials` plan
   * times and of `trials` noop-sink totals. The formatted explain of the
   * last planned DataFrame goes to `<outDir>/<query>.txt`, so two runs
-  * compare with `diff -r`. Prints one `query plan_s total_s plan_pct` row
-  * per query. Unknown names fail before the session starts; a failing
-  * query fails the run.
+  * compare with `diff -r`. Prints one `query plan_s total_s plan_pct
+  * build_jobs` row per query: `build_jobs` is the median number of Spark
+  * jobs one build + plan started. A builder that runs work before it
+  * returns (a stream drain, a seed collect, a stage-cache build) shows
+  * `build_jobs > 0`, and its plan_s is not planning alone. Unknown names
+  * fail before the session starts; a failing query fails the run.
   */
 object Profile {
 
-  final case class Cost(query: String, planS: Double, totalS: Double)
+  final case class Cost(query: String, planS: Double, totalS: Double, buildJobs: Int)
 
   def main(args: Array[String]): Unit = {
     require(args.length == 3 || args.length == 4, "usage: Profile <sfDir> <outDir> <q1,q2,...> [trials]")
@@ -46,7 +51,7 @@ object Profile {
     requireKnown(names)
     require(trials >= 1, s"trials must be >= 1, got $trials")
     Files.createDirectories(Paths.get(outDir))
-    println(f"${"query"}%-34s ${"plan_s"}%8s ${"total_s"}%8s ${"plan_pct"}%8s")
+    println(f"${"query"}%-34s ${"plan_s"}%8s ${"total_s"}%8s ${"plan_pct"}%8s ${"build_jobs"}%10s")
     names.map { name =>
       def build() = graft.SparkEntry.queries(name)(spark, sfDir)
       def run(): Double = { // the sweep is untimed, as in the bench
@@ -55,14 +60,33 @@ object Profile {
         sec
       }
       run() // warm pass (codegen, page cache, file index), untimed
-      val planned = Seq.fill(trials)(timed { val df = build(); df.queryExecution.executedPlan; df })
+      val planned = Seq.fill(trials)(jobsStartedBy(spark)(timed { val df = build(); df.queryExecution.executedPlan; df }))
       val totals  = Seq.fill(trials)(run())
-      val explain = planned.last._1.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val explain = planned.last._1._1.queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.write(Paths.get(outDir, s"$name.txt"), explain.getBytes("UTF-8"))
-      val cost = Cost(name, median(planned.map(_._2)), median(totals))
-      println(f"$name%-34s ${cost.planS}%8.3f ${cost.totalS}%8.3f ${100 * cost.planS / math.max(cost.totalS, 1e-9)}%7.1f%%")
+      val cost = Cost(name, median(planned.map(_._1._2)), median(totals), planned.map(_._2).sorted.apply(trials / 2))
+      println(f"$name%-34s ${cost.planS}%8.3f ${cost.totalS}%8.3f ${100 * cost.planS / math.max(cost.totalS, 1e-9)}%7.1f%% ${cost.buildJobs}%10d")
       cost
     }
+  }
+
+  /** `body`'s result and the number of Spark jobs that started while it
+    * ran. The listener bus is drained before the listener is added and
+    * after `body`, so the count is exact when nothing else runs jobs
+    * meanwhile (Profile runs one query at a time).
+    */
+  def jobsStartedBy[A](spark: SparkSession)(body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    PlanBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      PlanBridge.drainListenerBus(spark)
+      (a, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def timed[A](body: => A): (A, Double) = {

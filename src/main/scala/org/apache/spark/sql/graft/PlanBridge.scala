@@ -29,6 +29,13 @@ object PlanBridge {
   def observedOrEmpty(obs: org.apache.spark.sql.Observation): Map[String, Any] =
     obs.getOrEmpty
 
+  /** Waits until the listener bus has delivered every posted event
+    * (`waitUntilEmpty` is `private[spark]`), so a listener's counters
+    * cover every job started before the call.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** `SQLExecution.withThreadLocalCaptured` is `private[sql]` and takes the
     * classic session: runs `body` on `exec` under the caller's active
     * session and SparkContext local properties (job group, job tags,

@@ -296,6 +296,29 @@ class PlanAuditSpec extends GraftSpecBase {
     assert(globalWindows(d) === 0)
   }
 
+  test("curation gate: the pushed-down Filter tokenizes each text at most twice; IVF assignment has no aggregate or cartesian join") {
+    // the gate predicates are pushed through the withQuality/withLangId
+    // projects into one Filter, which does no subexpression elimination:
+    // the TextQuality and LangPred kernels hold one tokenization each
+    val gate = operators.TextAnalysis.withLangId(
+      operators.TextAnalysis.withQuality(Tables.documents(spark, sf()), "text"), "text")
+      .filter(col("quality_score") >= 0.5 && col("lang_pred") === "en")
+      .select("doc_id", "text")
+    val filters = gate.queryExecution.executedPlan.collect { case f: org.apache.spark.sql.execution.FilterExec => f }
+    assert(filters.nonEmpty, gate.queryExecution.executedPlan)
+    filters.foreach { f =>
+      val splits = f.condition.collect { case e: org.apache.spark.sql.catalyst.expressions.StringSplit => e }.size
+      assert(splits <= 2, f.condition.sql)
+    }
+    // an explicit seedSource builds the assignment uncached, so its plan
+    // (not a checkpoint scan) is what is audited
+    val emb = Tables.embeddings(spark, sf())
+    val assign = operators.Similarity.ivfAssign(emb, "vec_id", "embedding", nCells = 4, seedSource = Some(emb))
+    val p = assign.queryExecution.executedPlan.toString
+    assert(!p.contains("Aggregate") && !p.contains("CartesianProduct") && !p.contains("NestedLoopJoin"), p)
+    assert(p.contains("graft_nearest_cell"), p)
+  }
+
   test("sim_rp_lsh: banded self-join on (band,bucket), never all-pairs") {
     // audited on the UNCACHED build stage: the public entry returns the
     // session-cached checkpoint (a Scan ExistingRDD leaf), so the banding

@@ -39,6 +39,16 @@ class TopKBySpec extends GraftSpecBase {
       .agg(TopKBy.topKByLong(col("s"), col("id"), 3).as("top"))
       .select(explode(col("top.id")).as("id")).as[Long].collect().toSet
     assert(top === Set(1L, 2L, 3L)) // id 4 loses the three-way boundary tie
+    // SQL orders -0.0 and 0.0 as equal, so the id breaks their tie too
+    val signed = Seq((1L, 0.0, 2L), (1L, -0.0, 1L)).toDF("g", "s", "id").repartition(2)
+    val viaHeap = signed.groupBy(col("g"))
+      .agg(TopKBy.topKByLong(col("s"), col("id"), 1).as("top"))
+      .select(explode(col("top.id"))).as[Long].collect().toSeq
+    val viaWindow = signed
+      .withColumn("rank", row_number().over(Window.partitionBy(col("g")).orderBy(col("s").desc, col("id").asc)))
+      .filter(col("rank") === 1).select("id").as[Long].collect().toSeq
+    assert(viaWindow === Seq(1L))
+    assert(viaHeap === viaWindow)
   }
 
   test("null scores and ids are skipped; registered SQL function works") {

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 import graft.GraftSpecBase
+import graft.tools.Profile
 
 class SimilaritySpec extends GraftSpecBase {
   import spark.implicits._
@@ -123,38 +125,68 @@ class SimilaritySpec extends GraftSpecBase {
   test("default-geometry IVF assignment is built once per session: a rebuild starts no Spark job") {
     // a corpus plan no other suite uses, so the first build is a cold miss
     val corpus = graft.Tables.embeddings(spark, sf()).filter($"vec_id" % 3 =!= 1)
-    val group  = "ivf-stage-cache"
-    val jobs   = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group`    => jobs.incrementAndGet()
-          case "sentinel" => sentinel.countDown()
-          case _          =>
-        }
-    }
-    // listener events arrive asynchronously but in order: once a later
-    // sentinel job's start is delivered, every job the build started is
-    // counted
-    def jobsStartedBy[T](build: => T): (T, Int) = {
-      jobs.set(0)
-      sentinel = new java.util.concurrent.CountDownLatch(1)
-      val sc = spark.sparkContext
-      sc.setJobGroup(group, "IVF assignment build")
-      val out = try build finally sc.clearJobGroup()
-      sc.setJobGroup("sentinel", "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      (out, jobs.get())
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (first, coldJobs) = jobsStartedBy(Similarity.ivfAssign(corpus, "vec_id", "embedding", nCells = 3))
-      assert(coldJobs > 0, "the cold build must run the seed pick and the assignment checkpoint")
-      val (second, warmJobs) = jobsStartedBy(Similarity.ivfAssign(corpus, "vec_id", "embedding", nCells = 3))
-      assert(second eq first, "the rebuild must be a stage-cache hit")
-      assert(warmJobs === 0, "a stage-cache hit must not re-run the seed pick or the assignment")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (first, coldJobs) = Profile.jobsStartedBy(spark)(Similarity.ivfAssign(corpus, "vec_id", "embedding", nCells = 3))
+    assert(coldJobs > 0, "the cold build must run the seed pick and the assignment checkpoint")
+    val (second, warmJobs) = Profile.jobsStartedBy(spark)(Similarity.ivfAssign(corpus, "vec_id", "embedding", nCells = 3))
+    assert(second eq first, "the rebuild must be a stage-cache hit")
+    assert(warmJobs === 0, "a stage-cache hit must not re-run the seed pick or the assignment")
+  }
+
+  /** The assignment form the NearestCell kernel replaced: crossJoin the
+    * centroid table, then min(struct(d, cell)) per vector.
+    */
+  private def composedAssign(corpus: DataFrame, cents: Seq[(Long, Seq[Double], Double)]): DataFrame = {
+    val table = cents.toDF("cell", "ce", "ce2")
+    val v = col("cv")
+    val d = Similarity.dot(v, v) - lit(2.0) * Similarity.dot(v, col("ce")) + col("ce2")
+    corpus.crossJoin(broadcast(table))
+      .groupBy(col("corpus_id"))
+      .agg(min(struct(d.as("d"), col("cell").as("cell"))).as("m"))
+      .select(col("corpus_id"), col("m.cell").as("cell"))
+  }
+
+  private def kernelAssign(corpus: DataFrame, cents: Seq[(Long, Seq[Double], Double)]): DataFrame =
+    corpus.select(col("corpus_id"),
+      graft.functions.VectorExpressions.nearestCell(col("cv"), cents.map(_._1), cents.map(_._2), cents.map(_._3)).as("cell"))
+
+  private def centroids(vs: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double], Double)] =
+    vs.map { case (id, v) => (id, v, v.map(x => x * x).sum) }
+
+  test("NearestCell equals the crossJoin + min(struct(d, cell)) assignment, ties and NULL vectors included") {
+    val fixture = graft.Tables.embeddings(spark, sf())
+      .select(col("vec_id").as("corpus_id"), transform(col("embedding"), _.cast("double")).as("cv"))
+    val seeds = centroids(fixture.filter($"corpus_id" % 97 === 0).limit(6).as[(Long, Seq[Double])].collect().toSeq)
+    val a = kernelAssign(fixture, seeds).as[(Long, Long)].collect().toMap
+    assert(a === composedAssign(fixture, seeds).as[(Long, Long)].collect().toMap)
+    assert(a.values.toSet.size > 1, "degenerate single-cell assignment")
+    // (1,1) is equidistant from cells 9 and 4, the NULL vector's distances
+    // are all NULL: both go to the smallest cell id, as the struct min does
+    val cells = centroids(Seq(9L -> Seq(1.0, 0.0), 4L -> Seq(0.0, 1.0), 7L -> Seq(5.0, 5.0)))
+    val crafted = Seq((1L, Some(Seq(1.0, 1.0))), (2L, None), (3L, Some(Seq(4.0, 6.0))), (4L, Some(Seq(0.9))))
+      .toDF("corpus_id", "cv")
+    val k = kernelAssign(crafted, cells).as[(Long, Long)].collect().toMap
+    assert(k === composedAssign(crafted, cells).as[(Long, Long)].collect().toMap)
+    assert(k === Map(1L -> 4L, 2L -> 4L, 3L -> 7L, 4L -> 9L))
+  }
+
+  test("brute-force and IVF top-k equal the row_number() window ranking they replaced") {
+    val emb     = graft.Tables.embeddings(spark, sf())
+    val queries = emb.filter($"vec_id" < 8)
+    val scored = emb.select(col("vec_id").as("corpus_id"), transform(col("embedding"), _.cast("double")).as("cv"))
+      .join(broadcast(queries.select(col("vec_id").as("query_id"), transform(col("embedding"), _.cast("double")).as("qv"))),
+        col("corpus_id") =!= col("query_id"))
+      .withColumn("cosine", round(Similarity.cosine(col("qv"), col("cv")), 6))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("corpus_id").asc)
+    val viaWindow = scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 7)
+      .select(col("query_id"), col("corpus_id"), col("cosine"), col("rank").cast("long"))
+      .as[(Long, Long, Double, Long)].collect().toSet
+    val viaHeap = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 7)
+      .as[(Long, Long, Double, Long)].collect().toSet
+    assert(viaHeap === viaWindow)
+    // with one cell every corpus row is probed: IVF is brute force
+    val ivf = Similarity.ivfTopK(emb, queries, "vec_id", "embedding", k = 7, nCells = 1, nProbe = 1)
+      .as[(Long, Long, Double, Long)].collect().toSet
+    assert(ivf === viaWindow)
   }
 }

@@ -1,11 +1,114 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSpecBase
 
 class TextAnalysisSpec extends GraftSpecBase {
   import spark.implicits._
+
+  /** The composed Spark form the TextQuality kernel replaced — the
+    * reference its columns must equal.
+    */
+  private def composedQuality(df: DataFrame, textCol: String): DataFrame = {
+    val t      = col(textCol)
+    val toks   = TextAnalysis.tokens(t)
+    val nPunct = length(t) - length(regexp_replace(t, "[\\.,;:!\\?]", ""))
+    val nUpper = length(t) - length(regexp_replace(t, "[A-Z]", ""))
+    val nStop  = size(filter(toks, tk => tk.isInCollection(TextAnalysis.Stopwords)))
+    df.withColumn("punct_ratio", round(nPunct.cast("double") / greatest(length(t), lit(1)), 6))
+      .withColumn("upper_ratio", round(nUpper.cast("double") / greatest(length(t), lit(1)), 6))
+      .withColumn("stopword_ratio", round(nStop.cast("double") / greatest(size(toks), lit(1)), 6))
+      .withColumn("len_score",
+        when(length(TextAnalysis.normalize(t)).between(100, 5000), lit(1.0)).otherwise(lit(0.0)))
+      .withColumn("quality_score", round(
+        (col("len_score") + least(col("stopword_ratio") * 4, lit(1.0)) +
+          (lit(1.0) - least(col("punct_ratio") * 10, lit(1.0)))) / 3.0, 6))
+  }
+
+  /** The composed form the LangPred kernel replaced: per-language marker
+    * votes, then the first-match-wins CASE chain.
+    */
+  private def composedLangId(df: DataFrame, textCol: String): DataFrame = {
+    val toks  = TextAnalysis.tokens(col(textCol))
+    val langs = TextAnalysis.LangMarkers.map(_._1)
+    val withVotes = TextAnalysis.LangMarkers.foldLeft(df) { case (d, (lang, markers)) =>
+      d.withColumn(s"votes_$lang", size(filter(toks, tk => tk.isInCollection(markers))))
+    }
+    val best = langs.zipWithIndex.init.foldRight(lit(langs.last)) { case ((lang, i), acc) =>
+      val laterMax = langs.drop(i + 1).map(l => col(s"votes_$l")).reduceLeft(greatest(_, _))
+      when(col(s"votes_$lang") >= laterMax, lit(lang)).otherwise(acc)
+    }
+    withVotes.withColumn("lang_pred", best).drop(langs.map(l => s"votes_$l"): _*)
+  }
+
+  private def kernelForm(df: DataFrame): DataFrame =
+    TextAnalysis.withLangId(TextAnalysis.withQuality(df, "text"), "text")
+
+  private def composedForm(df: DataFrame): DataFrame =
+    composedLangId(composedQuality(df, "text"), "text")
+
+  /** Row-for-row equality, NULLs included, both ways. */
+  private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
+    assert(a.columns.toSeq === b.columns.toSeq)
+    assert(a.exceptAll(b).count() === 0, a.exceptAll(b).collect().mkString("\n"))
+    assert(b.exceptAll(a).count() === 0, b.exceptAll(a).collect().mkString("\n"))
+  }
+
+  // normalized length = Σ token chars + (n − 1): 20 five-char words make 119
+  private def words(n: Int, w: String = "abcd ") = w * n
+  private val edgeTexts: Seq[(Long, String)] = Seq(
+    1L -> null,
+    2L -> "",
+    3L -> "   ",
+    4L -> "\tThe cat, the MAT!\n",
+    5L -> " \t\n ",
+    6L -> "Ünïcödé Straße ist groß. 的 是 了 在 Ça va? ÉÉÉ",
+    7L -> ("x" * 99),                         // 99 normalized chars
+    8L -> ("x" * 100),                        // 100: the lower bound
+    9L -> ("y" * 5000),                       // 5000: the upper bound
+    10L -> ("y" * 5001),
+    11L -> (words(20) + "the of and is it a to in"),
+    12L -> "der le",                          // de 1 vs fr 1: de wins the tie
+    13L -> "le el",                           // fr 1 vs es 1: fr wins
+    14L -> "el 的",                           // es 1 vs zh 1: es wins
+    15L -> "the der le el 的",                // a five-way tie: en
+    16L -> "der der le le le",                // fr has more votes than de
+    17L -> "THE Der. le",                     // case folds before the vote
+    18L -> ("  lead and trail spaces  " + words(30, "Abc. ")),
+    19L -> "a\u00a0b\u2003c",                  // non-ASCII spaces are not \s in Java regex
+    20L -> "?!.,;: ;;;..."
+  )
+
+  test("quality and language kernels equal the composed Spark form on edge cases and fixture docs") {
+    val edges = edgeTexts.toDF("doc_id", "text")
+    assertSameRows(kernelForm(edges), composedForm(edges))
+    val docs = graft.Tables.documents(spark, sf("sf0.01")).select("doc_id", "text")
+    assertSameRows(kernelForm(docs), composedForm(docs))
+  }
+
+  test("a NULL text scores NULL ratios, len_score 0, quality 0.333333 and language zh") {
+    val r = kernelForm(Seq((1L, null: String)).toDF("doc_id", "text"))
+      .select("punct_ratio", "upper_ratio", "stopword_ratio", "len_score", "quality_score", "lang_pred")
+      .head()
+    assert((0 to 2).forall(r.isNullAt))
+    assert(r.getDouble(3) === 0.0)
+    assert(r.getDouble(4) === 0.333333)
+    assert(r.getString(5) === "zh")
+  }
+
+  test("under legacySizeOfNull the kernels count a NULL token array as size(NULL) = -1, like the composed form") {
+    val prev = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val edges = edgeTexts.take(3).toDF("doc_id", "text")
+      val kernel = kernelForm(edges)
+      assertSameRows(kernel, composedForm(edges))
+      assert(kernel.filter(col("doc_id") === 1L).select("stopword_ratio", "lang_pred").as[(Double, String)].head() ===
+        ((-1.0, "en")))
+    } finally prev.fold(spark.conf.unset("spark.sql.ansi.enabled"))(spark.conf.set("spark.sql.ansi.enabled", _))
+  }
 
   test("normalize collapses whitespace and lowercases") {
     val out = Seq("  Hello   WORLD  ").toDF("t")

@@ -18,6 +18,18 @@ class WorkDirsSpec extends GraftSpecBase {
     assert(new java.io.File(new java.net.URI(a)).isDirectory)
   }
 
+  test("fresh and staged dirs are registered for deletion when the FileSystem closes") {
+    val fixture = java.nio.file.Files.createTempDirectory("wd-flat").toString
+    spark.range(3).write.parquet(s"$fixture/t.parquet")
+    for (d <- Seq(WorkDirs.fresh(spark, "wd-exit"), WorkDirs.stageRawTable(spark, fixture, "t", "wd-exit"))) {
+      val p  = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // cancelDeleteOnExit reports whether the path was registered
+      assert(fs.cancelDeleteOnExit(p), d)
+      fs.deleteOnExit(p)
+    }
+  }
+
   test("spark.graft.stream.workdir conf overrides the base") {
     val base = java.nio.file.Files.createTempDirectory("wd-base").toString
     spark.conf.set("spark.graft.stream.workdir", base)

@@ -39,6 +39,15 @@ class ProfileSpec extends GraftSpecBase {
     }
   }
 
+  test("build_jobs counts the Spark jobs a builder starts before it returns its DataFrame") {
+    val out   = Files.createTempDirectory("graft-profile").resolve("plans")
+    val costs = Profile.profile(benchSession(), sf("sf0.01"), out.toString,
+      Seq("q1_pricing_summary", "curate_stream_e2e"), trials = 1)
+    assert(costs.map(_.query) === Seq("q1_pricing_summary", "curate_stream_e2e"))
+    assert(costs.head.buildJobs === 0, costs.head)   // planning alone
+    assert(costs.last.buildJobs > 0, costs.last)     // the builder drains its stream
+  }
+
   test("profile rejects an unknown query name before writing any file") {
     val out = Files.createTempDirectory("graft-profile").resolve("plans")
     val e = intercept[IllegalArgumentException] {
