@@ -3,15 +3,15 @@
 
 Usage:
   scripts/perf_pairs.py <parentDir> <changeDir> <workload> <seed> [<seed> ...]
-                        [--seconds 24]
 
 <parentDir> and <changeDir> are two checkouts of the repository (for
 example `git archive <sha> | tar -x -C <dir>`), each built by its own
 `perfbench/run.py`. Pair i runs seed i on both sides, the parent first in
 even pairs and the change first in odd ones, one run at a time
-(`--trace 0`). For every end-to-end metric in the parent's BENCHMARK.json
-it prints the per-pair values, both sides' medians and quartiles, the
-change's wins, and whether the gain rule holds:
+(`--trace 0`), each for the `run_seconds` the parent's BENCHMARK.json
+sets. For every end-to-end metric in that file it prints the per-pair
+values, both sides' medians and quartiles, the change's wins, and whether
+the gain rule holds:
 
   - the change is better in at least nine tenths of the pairs (ties count
     for neither side), and
@@ -55,18 +55,18 @@ def main():
     ap.add_argument("change")
     ap.add_argument("workload")
     ap.add_argument("seeds", nargs="+", type=int)
-    ap.add_argument("--seconds", type=int, default=24)
     a = ap.parse_args()
 
     with open(os.path.join(a.parent, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
+        bench = json.load(f)
+    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
 
     runs = {"parent": [], "change": []}
     bad = []
     for i, seed in enumerate(a.seeds):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
-            r = run(getattr(a, side), a.workload, seed, a.seconds)
+            r = run(getattr(a, side), a.workload, seed, seconds)
             runs[side].append(r)
             if r.get("correct") is not True or r.get("failed", 0) != 0:
                 bad.append(f"{side} seed {seed}: correct={r.get('correct')} failed={r.get('failed')}")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Tiny-input guard for the per-row-heavy operators (shingling, MinHash
   * signatures, vector scoring): a single small parquet file arrives as one
@@ -26,12 +27,15 @@ object Parallelism {
   /** Partitions `plan` produces as planned. A leaf's RDD is built from
     * metadata (file splits, a checkpoint's partitions, local rows) without
     * running a job; an exchange counts at its planned partition number,
-    * which AQE may coalesce at run time; an operator that passes its input
+    * which AQE may coalesce at run time, and a reused one is read from the
+    * exchange it reuses (executing it would fail for a broadcast and run
+    * the sampling job of a range shuffle); an operator that passes its input
     * through (UnknownPartitioning(0)) counts its widest child.
     */
   private[graft] def planPartitions(plan: SparkPlan): Int = plan match {
     case a: AdaptiveSparkPlanExec => planPartitions(a.inputPlan)
     case u: UnionExec             => u.children.map(planPartitions).sum
+    case r: ReusedExchangeExec    => planPartitions(r.child)
     case leaf if leaf.children.isEmpty => leaf.execute().getNumPartitions
     case p => p.outputPartitioning match {
       case UnknownPartitioning(0) => p.children.map(planPartitions).max

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.GraftSpecBase
@@ -28,5 +29,22 @@ class ParallelismSpec extends GraftSpecBase {
       val (_, jobs) = Profile.jobsStartedBy(spark)(Parallelism.spreadSmallInput(join))
       assert(jobs === 0, join.queryExecution.executedPlan)
     }
+  }
+
+  test("with AQE off, a reused broadcast exchange is read from the plan, not executed") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    // without whole-stage codegen the reused exchange is the join's direct child
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    val dim   = s.range(0, 50).toDF("k")
+    // an RDD scan has no known partitioning, so the join's count recurses into the build side
+    val fact  = s.createDataFrame(s.sparkContext.parallelize(0L until 1000L, 1).map(Tuple1(_))).toDF("id")
+      .withColumn("k", col("id") % 50)
+    val union = fact.join(broadcast(dim), "k").union(fact.filter(col("id") > 10).join(broadcast(dim), "k"))
+    val plan  = union.queryExecution.executedPlan
+    assert(plan.collectFirst { case r: ReusedExchangeExec => r }.nonEmpty, plan)
+    val (spread, jobs) = Profile.jobsStartedBy(s)(Parallelism.spreadSmallInput(union))
+    assert(jobs === 0)
+    assert(spread.rdd.getNumPartitions === s.sparkContext.defaultParallelism)
   }
 }
