@@ -24,7 +24,7 @@ object QueriesExt42 {
     * This is the bounded-state answer where exact per-id counting must
     * keep every id: the sketch is 2 048 longs TOTAL, commutative under
     * addition, hence mergeable across partitions/days/streams with zero
-    * order sensitivity (streaming twin: `streaming/CmsHeavyHitters`).
+    * order sensitivity.
     *
     * Scale shape: one per-user map-side count (the certification's exact
     * side), a ×4 explode into a ≤2 048-key hash-agg (the sketch build —

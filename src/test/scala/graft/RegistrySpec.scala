@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** The driver-contract invariants the correctness gate silently assumes:
   * every registered query has an oracle and vice versa (the gap that left
   * B36 "unit-tested but unoracled" in round 6 cannot silently recur),
@@ -51,8 +53,9 @@ class RegistrySpec extends GraftSpecBase {
   test("survey map is total both ways and REGISTRY.md matches the registry (r12 verdict #7)") {
     // every registered query carries SURVEY §2 ids on its QuerySpec, the
     // spec-covered ids of scripts/survey_map.tsv are neither duplicated nor
-    // query-mapped, and the committed REGISTRY.md must list exactly the
-    // registered queries, each with its registration site — so coverage
+    // query-mapped and name existing suites, and the committed REGISTRY.md
+    // must list exactly the registered queries, each with its registration
+    // site, and exactly the survey map's spec rows — so coverage
     // tables can be generated, never hand-maintained, and a new wave fails
     // the suite until REGISTRY.md is refreshed
     // (`scripts/run-main.sh graft.tools.Registry`).
@@ -64,9 +67,22 @@ class RegistrySpec extends GraftSpecBase {
     assert(dupSpecIds.isEmpty, s"duplicate spec-id rows: $dupSpecIds")
     val overlap = specIds.map(_._1).toSet & SparkEntry.registry.flatMap(_.surveyIds).toSet
     assert(overlap.isEmpty, s"SURVEY ids both query-mapped and spec-only: ${overlap.toSeq.sorted}")
+    // every spec named as evidence exists, so a deleted suite cannot leave its row behind
+    val testClasses = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/test"))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .flatMap(p => """\bclass\s+(\w+)""".r.findAllMatchIn(
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).map(_.group(1)))
+        .toSet
+      finally files.close()
+    }
+    val missingSpecs = specIds.flatMap(_._2.split("/")).distinct.filterNot(testClasses).sorted
+    assert(missingSpecs.isEmpty, s"survey_map.tsv names specs with no class under src/test: $missingSpecs")
 
     val registryMd = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("REGISTRY.md")), "UTF-8")
+    val specRows = """(?m)^\| (\S+) \| (\S+) \|$""".r.findAllMatchIn(registryMd).map(m => m.group(1) -> m.group(2)).toSet
+    assert(specRows === specIds.toSet, "REGISTRY.md's spec table differs from scripts/survey_map.tsv")
     val listed = """\| `([a-z0-9_]+)` \|""".r.findAllMatchIn(registryMd).map(_.group(1)).toSet
     assert((q -- listed).isEmpty, s"REGISTRY.md missing queries: ${(q -- listed).toSeq.sorted} — regenerate")
     assert((listed -- q).isEmpty, s"REGISTRY.md lists unregistered queries: ${(listed -- q).toSeq.sorted} — regenerate")

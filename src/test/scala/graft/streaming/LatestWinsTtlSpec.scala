@@ -73,4 +73,15 @@ class LatestWinsTtlSpec extends GraftSpecBase {
     assert(drain(Seq(("k", 1L, "late"))) === Set.empty)
     assert(drain(Seq(("k", 4L, "b"))) === Set(("k", 4L, "b")))
   }
+
+  test("latestWins ttl: a TTL below one millisecond fails at the call, before any query starts") {
+    val src = spark.readStream.schema("key STRING, version BIGINT, name STRING")
+      .parquet(Files.createTempDirectory("lwttl-bad").toString).as[Rec]
+    Seq(Duration.ZERO, Duration.ofNanos(500)).foreach { d =>
+      val e = intercept[IllegalArgumentException] {
+        StatefulDedup.latestWins[String, Rec](src, _._1, _._2, ttl = Some(d))
+      }
+      assert(e.getMessage.contains("ttl must be at least 1 ms"), d.toString)
+    }
+  }
 }
