@@ -22,7 +22,7 @@ object QueriesExt40 {
     * estimate formula verbatim, so the certification is cross-engine.
     * This is the bounded-state answer where exact distinct must shuffle
     * every key: sketch state is k longs per group, mergeable across
-    * partitions/streams.
+    * partitions/streams (streaming twin: `streaming/KmvSketch`).
     *
     * Scale shape: distinct (type, hash-prefix) hash-agg, then the
     * bounded-heap TopKBy aggregate (k entries per group, map-side

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming HDR-histogram quantiles on `flatMapGroupsWithState`
   * (SURVEY.md §2 B202) — the stream form of B201's
@@ -18,8 +19,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * [lb, lb·17/16)), and — because the state is a commutative integer
   * counter array — emission is a pure function of the value multiset:
   * arrival order, batch boundaries, and replay all produce identical
-  * digests, with no in-batch sort needed (unlike the fold-based
-  * operators, which sort to get this property).
+  * digests, with no in-batch sort needed.
   *
   * Bucketing matches the batch query bit-for-bit: v = round(x·10⁶) as
   * a long; bucket = v for v < 16, else 16·(bitlen−1) + the 4 mantissa
@@ -64,20 +64,22 @@ object HistQuantiles {
   def perKey(
       ds: Dataset[(String, Double)]
   ): Dataset[KeyDigest] = {
-    val fold = new KeyedFold[String, (String, Double), Array[Long], KeyDigest](
-      KeyedFold.longArrays, new Array[Long](NBuckets))({ (key, counts, rows) =>
-      // no sort needed: the histogram is a commutative integer aggregate
-      rows.foreach { case (_, x) =>
-        counts(bucketOf(math.round(x * 1000000.0))) += 1L
-      }
-      val n = counts.sum
-      (Some(counts), Iterator.single(KeyDigest(
-        key, n,
-        quantile(counts, n, 1, 2),
-        quantile(counts, n, 9, 10),
-        quantile(counts, n, 99, 100)
-      )))
-    })
-    fold.fmgws(ds, _._1, None, OutputMode.Update)(Encoders.STRING, Encoders.product[KeyDigest])
+    ds.groupByKey(_._1)(Encoders.STRING).flatMapGroupsWithState[Array[Long], KeyDigest](
+      OutputMode.Update, GroupStateTimeout.NoTimeout) {
+      (key: String, rows: Iterator[(String, Double)], state: GroupState[Array[Long]]) =>
+        val counts = state.getOption.getOrElse(new Array[Long](NBuckets))
+        // no sort needed: the histogram is a commutative integer aggregate
+        rows.foreach { case (_, x) =>
+          counts(bucketOf(math.round(x * 1000000.0))) += 1L
+        }
+        val n = counts.sum
+        state.update(counts)
+        Iterator.single(KeyDigest(
+          key, n,
+          quantile(counts, n, 1, 2),
+          quantile(counts, n, 9, 10),
+          quantile(counts, n, 99, 100)
+        ))
+    }(ExpressionEncoder[Array[Long]](), Encoders.product[KeyDigest])
   }
 }

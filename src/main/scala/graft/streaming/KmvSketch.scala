@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming KMV (k-minimum-values) distinct-count sketch on
   * `flatMapGroupsWithState` (SURVEY.md §2 B204) — the stream form of B203's
@@ -46,18 +47,20 @@ object KmvSketch {
       k: Int = 64
   ): Dataset[KeyEstimate] = {
     require(k >= 2, s"k must be >= 2, got $k")
-    // (sorted ascending k-min hash array, total rows seen)
-    val fold = new KeyedFold[String, (String, String), (Array[Long], Long), KeyEstimate](
-      Encoders.tuple(KeyedFold.longArrays, Encoders.scalaLong), (Array.empty[Long], 0L))({
-      (key, prev, rows) =>
+    // state: (sorted ascending k-min hash array, total rows seen)
+    val stateEncoder = Encoders.tuple(ExpressionEncoder[Array[Long]](), Encoders.scalaLong)
+    ds.groupByKey(_._1)(Encoders.STRING).flatMapGroupsWithState[(Array[Long], Long), KeyEstimate](
+      OutputMode.Update, GroupStateTimeout.NoTimeout) {
+      (key: String, rows: Iterator[(String, String)], state: GroupState[(Array[Long], Long)]) =>
+        val prev = state.getOption.getOrElse((Array.empty[Long], 0L))
         var seen = prev._2
         val incoming = rows.map { r => seen += 1; hash52(r._2) }.toArray
         // min-set union: commutative + idempotent, so arrival order and
         // batch boundaries cannot change the result
         val merged = (prev._1 ++ incoming).distinct.sorted.take(k)
         val (est, kth) = estimate(k, merged, seen)
-        (Some((merged, seen)), Iterator.single(KeyEstimate(key, seen, est, kth)))
-    })
-    fold.fmgws(ds, _._1, None, OutputMode.Update)(Encoders.STRING, Encoders.product[KeyEstimate])
+        state.update((merged, seen))
+        Iterator.single(KeyEstimate(key, seen, est, kth))
+    }(stateEncoder, Encoders.product[KeyEstimate])
   }
 }

@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Cross-implementation parity for the round-10 sketch queries: each
-  * BATCH SQL result is replayed through an independent scala form of the
-  * same kernels over the raw fixture data (a third path beside the DuckDB
-  * oracle). The kernels below are that reference.
+import graft.streaming.{HistQuantiles, KmvSketch}
+
+/** Cross-implementation parity for the round-10 sketch pairs: the BATCH
+  * SQL queries and the STREAMING flatMapGroupsWithState operators must
+  * implement the same math — proven by replaying each batch result
+  * through the streaming operator's own scala kernels over the raw
+  * fixture data (a third, independent path beside the DuckDB oracle).
   */
 class SketchInvariantSpec extends GraftSpecBase {
-  import SketchInvariantSpec.{HistQuantiles, KmvSketch}
 
   test("events_latency_digest equals HistQuantiles' bucket kernels replayed over raw values") {
     val got = SparkEntry.queries("events_latency_digest")(spark, sf())
@@ -39,64 +41,8 @@ class SketchInvariantSpec extends GraftSpecBase {
     raw.foreach { case (tpe, users) =>
       val hashes = users.map(u => KmvSketch.hash52(u.toString)).distinct.sorted.toArray
       val exact = hashes.length.toLong
-      val (est, _) = KmvSketch.estimate(64, hashes.take(64))
+      val (est, _) = KmvSketch.estimate(64, hashes.take(64), users.size.toLong)
       assert(got(tpe) === ((exact, est)), s"type $tpe")
     }
-  }
-}
-
-object SketchInvariantSpec {
-
-  /** HDR log-bucket kernels over integer micro-units: bucket = v for
-    * v < 16, else 16·(bitlen−1) + the 4 mantissa bits after the leading 1;
-    * negatives clamp to bucket 0. A quantile is the lower bound of the
-    * bucket where the cumulative count first reaches (numQ·n + numQ) / denQ.
-    */
-  private object HistQuantiles {
-
-    def bucketOf(xMicro: Long): Int = {
-      val v = math.max(0L, xMicro)
-      if (v < 16L) v.toInt
-      else {
-        val bitlen = 64 - java.lang.Long.numberOfLeadingZeros(v)
-        (((bitlen - 1) << 4) + ((v >>> (bitlen - 5)) & 15L)).toInt
-      }
-    }
-
-    def lowerBound(b: Int): Long =
-      if (b < 16) b.toLong else (16L + (b % 16)) << ((b / 16) - 4)
-
-    def quantile(counts: Array[Long], n: Long, numQ: Long, denQ: Long): Long = {
-      val target = (numQ * n + numQ) / denQ
-      var cum    = 0L
-      var b      = 0
-      while (b < counts.length) {
-        cum += counts(b)
-        if (cum >= target) return lowerBound(b)
-        b += 1
-      }
-      0L
-    }
-  }
-
-  /** KMV kernels: a 52-bit hash (the first 13 hex digits of md5(id), as
-    * `conv(substring(md5(id), 1, 13), 16, 10)`), and the estimate
-    * (k−1)·2⁵² / v_k from the k smallest hashes, exact below k.
-    */
-  private object KmvSketch {
-
-    private val TwoPow52 = 4503599627370496L
-
-    def hash52(id: String): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5").digest(id.getBytes("UTF-8"))
-      var v  = 0L
-      var i  = 0
-      while (i < 6) { v = (v << 8) | (md(i) & 0xffL); i += 1 }
-      (v << 4) | ((md(6) & 0xf0L) >>> 4)
-    }
-
-    def estimate(k: Int, sorted: Array[Long]): (Long, Long) =
-      if (sorted.length < k) (sorted.length.toLong, if (sorted.isEmpty) 0L else sorted.last)
-      else ((k - 1).toLong * TwoPow52 / sorted(k - 1), sorted(k - 1))
   }
 }

@@ -61,67 +61,6 @@ class SketchKernelPropertySpec extends GraftSpecBase {
     })
   }
 
-  test("CMS bucket: always inside the grid row for any id and hash row") {
-    check(forAll(Gen.chooseNum(0, 7), Gen.alphaNumStr) { (r, id) =>
-      val b = CmsHeavyHitters.bucket(r, id, 512)
-      b >= 0 && b < 512
-    })
-  }
-
-  test("CMS grid: min-of-counters never undercounts any id's true frequency") {
-    val d = 4; val w = 64 // small w to force collisions — the bound must still hold
-    val idsGen = Gen.listOf(Gen.chooseNum(0, 30).map(i => s"id-$i"))
-    check(forAll(idsGen) { ids =>
-      val grid = new Array[Long](d * w)
-      ids.foreach { id =>
-        (0 until d).foreach(r => grid(r * w + CmsHeavyHitters.bucket(r, id, w)) += 1L)
-      }
-      val truth = ids.groupBy(identity).view.mapValues(_.size.toLong)
-      truth.forall { case (id, n) =>
-        (0 until d).map(r => grid(r * w + CmsHeavyHitters.bucket(r, id, w))).min >= n
-      }
-    })
-  }
-
-  test("CMS grid: cell-wise sum of two folds equals the fold of the concatenation (mergeable)") {
-    val d = 4; val w = 64
-    def fold(ids: Seq[String]): Array[Long] = {
-      val g = new Array[Long](d * w)
-      ids.foreach(id => (0 until d).foreach(r => g(r * w + CmsHeavyHitters.bucket(r, id, w)) += 1L))
-      g
-    }
-    val idsGen = Gen.listOf(Gen.chooseNum(0, 30).map(i => s"id-$i"))
-    check(forAll(idsGen, idsGen) { (a, b) =>
-      val merged = fold(a).zip(fold(b)).map { case (x, y) => x + y }
-      merged.sameElements(fold(a ++ b))
-    })
-  }
-
-  test("DGIM kernel: estimate within 1/(2(r-1)) of the exact in-window count, any ts multiset") {
-    val r = 3; val W = 1000L
-    val tsGen = Gen.nonEmptyListOf(Gen.chooseNum(0L, 5000L))
-    check(forAll(tsGen) { tss =>
-      val sorted = tss.sorted
-      val bs = sorted.foldLeft(Vector.empty[(Long, Long)])((b, t) => DgimWindow.insert(b, t, r))
-      val asOf  = sorted.last
-      val kept  = DgimWindow.expire(bs, asOf, W)
-      val est   = DgimWindow.estimate(kept)
-      val exact = sorted.count(_ > asOf - W).toLong
-      exact == 0L || math.abs(est - exact).toDouble / exact <= 1.0 / (2 * (r - 1))
-    })
-  }
-
-  test("DGIM kernel: bucket list stays ts-sorted with at most r+1 buckets per size") {
-    val r = 2
-    val tsGen = Gen.nonEmptyListOf(Gen.chooseNum(0L, 5000L))
-    check(forAll(tsGen) { tss =>
-      val bs = tss.sorted.foldLeft(Vector.empty[(Long, Long)])((b, t) => DgimWindow.insert(b, t, r))
-      val tsSorted  = bs.map(_._1) == bs.map(_._1).sorted
-      val perSizeOk = bs.groupBy(_._2).values.forall(_.size <= r + 1)
-      tsSorted && perSizeOk
-    })
-  }
-
   test("quantile is monotone in q and bounded by the histogram's support") {
     val countsGen = Gen.listOfN(40, Gen.chooseNum(0L, 5L)).map { cs =>
       val arr = new Array[Long](1024)
