@@ -94,15 +94,15 @@ object GraftSession {
       // rename fan-out is pure fixed cost per batch.
       // v2's known caveat (partial output visible if the JOB fails
       // mid-commit) is covered here by the idempotent batch=<id>
-      // directory overwrite and by the manifest sink's own commit
-      // protocol — readers of either sink never trust bare files.
+      // directory overwrite: a batch whose sink write fails is never
+      // committed to the checkpoint, so the restart replays it and
+      // overwrites that batch's directory whole.
       // Session-global caveat: BATCH parquet writes in this session get v2
       // too, so a failed batch job can leave partially-visible output for
       // a consumer that doesn't re-overwrite. Acceptable here because every
       // batch write in this repo is an overwrite into a fresh/per-run dir
       // (bench/verify/test scratch); a library consumer embedding
-      // GraftSession for durable batch ETL should override this back to v1
-      // or write through the manifest sink.
+      // GraftSession for durable batch ETL should override this back to v1.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       // events.parquet carries TIMESTAMP(NANOS) which Spark's reader
       // rejects; read as raw nanos and convert in the loader (Tables.events)

@@ -9,7 +9,7 @@ import graft.Tables._
 /** Round-10 additions, batch 33: the deterministic HDR-histogram
   * quantile digest — mergeable approximate percentiles with a PROVEN
   * error bound, the telemetry primitive exact percentiles can't give a
-  * stream (and the batch form of streaming/HistQuantiles).
+  * stream.
   */
 object QueriesExt39 {
 

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.cdc.Envelope
-import graft.enrich.Enrichment
 
 /** The reference's three topologies re-expressed as Structured Streaming
   * pipelines (SURVEY.md §3):
@@ -58,6 +57,16 @@ object Pipelines {
     (success, failed)
   }
 
+  /** Runs each DLQ branch write; daemon threads, so an idle pool never
+    * holds the JVM open, and cached, so concurrent streams never queue
+    * behind each other's DLQ writes.
+    */
+  private lazy val branchPool = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-dlq-branch")
+    t.setDaemon(true)
+    t
+  }
+
   /** §3.1 main pipeline: stream of envelope records → enrich → success
     * parquet + DLQ parquet. `dim` is re-evaluated every micro-batch.
     *
@@ -70,76 +79,6 @@ object Pipelines {
     * succeed against a fresher dimension for rows that failed on the first
     * attempt, and only an unconditional overwrite wipes the stale DLQ
     * files, keeping the success sink and the DLQ disjoint.
-    */
-  def startEnrichPipeline(
-      name: String,
-      source: DataFrame,
-      dim: () => DataFrame,
-      dimKey: String,
-      dimCols: Seq[String],
-      successPath: String,
-      dlqPath: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery =
-    startBranched(name, source, dim, dimKey, dimCols, checkpoint, trigger)(
-      (ok, batchId) => ok.write.mode("overwrite").parquet(s"$successPath/batch=$batchId"),
-      (failed, batchId) => failed.write.mode("overwrite").parquet(s"$dlqPath/batch=$batchId")
-    )
-
-  /** §3.1 pipeline with MANIFEST-COMMITTED sinks: same enrich/branch as
-    * `startEnrichPipeline`, but both sinks go through the transactional
-    * `graft-manifest-jsonl` connector with `txnVersion = batchId` instead
-    * of `batch=<id>` directory-overwrite idempotence. A replayed
-    * micro-batch (crash between sink commit and checkpoint commit)
-    * re-commits the same txnVersion and is dropped by the manifest's
-    * per-app high-water mark — exactly-once output with ATOMIC visibility
-    * (a reader of the sink sees whole committed snapshots, never a
-    * half-written batch directory), the lakehouse commit protocol the
-    * sink's docstring promises, exercised end-to-end.
-    *
-    * Sink rows are flattened to the connector's scalar surface: the key
-    * struct becomes `key_id`, and the DLQ keeps the ORIGINAL envelope as
-    * its JSON serialization — exactly what a Kafka DLQ topic carries.
-    */
-  def startEnrichPipelineManifest(
-      name: String,
-      source: DataFrame,
-      dim: () => DataFrame,
-      dimKey: String,
-      dimCols: Seq[String],
-      successPath: String,
-      dlqPath: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    def commit(rows: DataFrame, path: String, app: String, batchId: Long): Unit =
-      rows.write.format("graft-manifest-jsonl")
-        .option("path", path)
-        .option("txnAppId", app).option("txnVersion", batchId.toString)
-        .mode("append").save()
-    startBranched(name, source, dim, dimKey, dimCols, checkpoint, trigger)(
-      (ok, batchId) => commit(
-        ok.select(col("key.id").as("key_id") +: ok.columns.filterNot(_ == "key").map(col).toSeq: _*),
-        successPath, s"$name-ok", batchId),
-      (failed, batchId) => commit(
-        failed.select(col("key.id").as("key_id"), to_json(col("value")).as("envelope_json")),
-        dlqPath, s"$name-dlq", batchId)
-    )
-  }
-
-  /** Runs each DLQ branch write; daemon threads, so an idle pool never
-    * holds the JVM open, and cached, so concurrent streams never queue
-    * behind each other's DLQ writes.
-    */
-  private lazy val branchPool = java.util.concurrent.Executors.newCachedThreadPool { r =>
-    val t = new Thread(r, "graft-dlq-branch")
-    t.setDaemon(true)
-    t
-  }
-
-  /** The §3.1 micro-batch body both pipelines share; they differ only in
-    * how each branch is written.
     *
     * The batch is persisted so the source is read ONCE per micro-batch:
     * both branches filter the same enrich join, and without the cache each
@@ -169,15 +108,17 @@ object Pipelines {
     * A10 peek: the DLQ-bound count rides the DLQ write via observe()
     * instead of a separate count() — an extra pass over the cached batch.
     */
-  private def startBranched(
+  def startEnrichPipeline(
       name: String,
       source: DataFrame,
       dim: () => DataFrame,
       dimKey: String,
       dimCols: Seq[String],
+      successPath: String,
+      dlqPath: String,
       checkpoint: String,
-      trigger: Trigger
-  )(writeOk: (DataFrame, Long) => Unit, writeDlq: (DataFrame, Long) => Unit): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()
+  ): StreamingQuery =
     source.writeStream
       .queryName(name)
       .option("checkpointLocation", checkpoint)
@@ -192,9 +133,9 @@ object Pipelines {
             try write
             catch { case e: Throwable => if (!failure.compareAndSet(null, e)) failure.get.addSuppressed(e) }
           val dlqDone = PlanBridge.withThreadLocalCaptured(batch.sparkSession, branchPool) {
-            attempt(writeDlq(failed.observe(obs, count(lit(1)).as("n")), batchId))
+            attempt(failed.observe(obs, count(lit(1)).as("n")).write.mode("overwrite").parquet(s"$dlqPath/batch=$batchId"))
           }
-          attempt(writeOk(ok, batchId))
+          attempt(ok.write.mode("overwrite").parquet(s"$successPath/batch=$batchId"))
           dlqDone.join()
           Option(failure.get).foreach(e => throw e)
           // defensive lookup: if the write action ever completes without

@@ -24,11 +24,6 @@ object Topology {
     *        committed-vs-end lag probes and reset-to-latest via
     *        checkpoint seeding. Kafka sources instead honor resets
     *        through `startingOffsets` inside `source` itself.
-    * @param manifestSinks route both sinks through the transactional
-    *        `graft-manifest-jsonl` connector (txnVersion = batchId,
-    *        exactly-once across replay) instead of `batch=<id>` parquet
-    *        directory idempotence — the lakehouse-commit flavor of the
-    *        same topology, under the same control plane.
     */
   final case class PipelineDef(
       name: String,
@@ -41,8 +36,7 @@ object Topology {
       checkpointRoot: String,
       autoStart: Boolean = true,
       dlqReplay: Option[DlqReplayDef] = None,
-      sourceDir: Option[String] = None,
-      manifestSinks: Boolean = false
+      sourceDir: Option[String] = None
   )
 
   final case class DlqReplayDef(
@@ -68,10 +62,7 @@ object Topology {
           // listing into the fresh epoch's checkpoint (seek-to-end)
           if (spec == ResetSpec.Latest)
             p.sourceDir.foreach(d => FileSourceReset.seedLatest(spark, ckpt, d))
-          val starter =
-            if (p.manifestSinks) Pipelines.startEnrichPipelineManifest _
-            else Pipelines.startEnrichPipeline _
-          starter(
+          Pipelines.startEnrichPipeline(
             s"${p.name}-$epoch",
             p.source(),
             p.dimension,

@@ -18,8 +18,9 @@ import graft.cdc.Envelope
   *  - DlqPipelineIT: failed lookups land in the DLQ, are absent from the
   *    output, and appear after replay against the repaired dimension;
   *  - AnimalStreamControlIT: stop/start/status/offsets via StreamRegistry.
-  * Plus the micro-batch body's own contract: one source read per batch,
-  * a failing branch fails the batch loudly, the A10 DLQ count log.
+  * Plus the micro-batch body's own contract: a forced replay of a batch
+  * leaves each row in its sink once, one source read per batch, a
+  * failing branch fails the batch loudly, the A10 DLQ count log.
   * File-based sources/sinks stand in for Kafka topics (no broker here).
   */
 class PipelineSpec extends GraftSpecBase {
@@ -81,100 +82,69 @@ class PipelineSpec extends GraftSpecBase {
       === Array(1L, 2L, 3L))
   }
 
-  test("manifest pipeline: exactly-once across a FORCED micro-batch replay") {
-    import graft.sources.ManifestJsonl
-    val srcDir  = tmp("m-src")
-    val okPath  = tmp("m-ok")
-    val dlqPath = tmp("m-dlq")
-    val ckpt    = tmp("m-ckpt")
-
-    spark
-      .createDataFrame(
-        spark.sparkContext.parallelize(Seq(envRow(1, "a"), envRow(2, "b"), envRow(3, "c"))),
-        recordSchema
-      )
-      .write.mode("overwrite").parquet(srcDir)
-
-    def runPipeline(): Unit = {
-      val q = Pipelines.startEnrichPipelineManifest(
-        "manifestTransform",
-        spark.readStream.schema(recordSchema).parquet(srcDir),
-        () => dim(1, 2), "dim_id", Seq("breed"),
-        okPath, dlqPath, ckpt
-      )
-      q.processAllAvailable(); q.stop()
-    }
-    runPipeline()
-    val ok1 = ManifestJsonl.read(spark, okPath)
-    assert(ok1.select("key_id").collect().map(_.getLong(0)).sorted === Array(1L, 2L))
-    assert(ok1.columns.contains("breed"))
-    val dlq1 = ManifestJsonl.read(spark, dlqPath)
-    assert(dlq1.count() === 1L)
-    // the DLQ row carries the original envelope as JSON
-    assert(dlq1.select("envelope_json").head().getString(0).contains("\"id\":3"))
-
-    // FORCE the replay: delete batch 0's checkpoint commit marker — on
-    // restart the engine sees the offset log ahead of the commit log and
-    // re-executes the batch with the SAME batchId (the crash-between-
-    // sink-commit-and-checkpoint-commit window, for real)
-    val commit0 = java.nio.file.Paths.get(ckpt, "commits", "0")
-    assert(Files.exists(commit0), "expected checkpoint commit marker for batch 0")
-    Files.delete(commit0)
-    // the local-fs checksum sidecar must go with it or the re-write trips
-    Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".0.crc"))
-    runPipeline()
-
-    // the replayed batch re-committed txnVersion 0 and was dropped by the
-    // manifest's high-water mark: counts unchanged, no duplicates
-    assert(ManifestJsonl.read(spark, okPath).count() === 2L)
-    assert(ManifestJsonl.read(spark, dlqPath).count() === 1L)
-    assert(
-      ManifestJsonl.readManifest(java.nio.file.Paths.get(okPath)).get
-        .txns === Map("manifestTransform-ok" -> 0L))
-  }
-
   private def land(dir: String, ids: Seq[Long], files: Int): Unit =
     spark
       .createDataFrame(spark.sparkContext.parallelize(ids.map(i => envRow(i, s"n$i")), files), recordSchema)
       .write.mode("overwrite").parquet(dir)
 
-  private type Starter = (String, DataFrame, () => DataFrame, String, Seq[String], String, String, String,
-    org.apache.spark.sql.streaming.Trigger) => StreamingQuery
-
-  private val starters: Seq[(String, Starter)] = Seq(
-    "parquet"  -> (Pipelines.startEnrichPipeline _),
-    "manifest" -> (Pipelines.startEnrichPipelineManifest _)
-  )
-
-  private def drain(start: Starter, name: String, source: DataFrame, dimIds: Seq[Long],
+  private def drain(name: String, source: DataFrame, dimIds: Seq[Long],
       okPath: String, dlqPath: String, ckpt: String): StreamingQuery = {
-    val q = start(name, source, () => dim(dimIds: _*), "dim_id", Seq("breed"), okPath, dlqPath, ckpt,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    val q = Pipelines.startEnrichPipeline(name, source, () => dim(dimIds: _*), "dim_id", Seq("breed"),
+      okPath, dlqPath, ckpt)
     q.awaitTermination()
     q
   }
 
+  /** Success rows as "id,name,breed,batch" and DLQ ids, both sorted. */
+  private def sinkRows(okPath: String, dlqPath: String): (Seq[String], Seq[Long]) = (
+    spark.read.parquet(okPath).select("id", "name", "breed", "batch").collect().map(_.mkString(",")).sorted.toSeq,
+    spark.read.parquet(dlqPath).select("key.id").collect().map(_.getLong(0)).sorted.toSeq)
+
+  test("enrich pipeline: exactly-once across a FORCED micro-batch replay") {
+    val srcDir = tmp("r-src")
+    land(srcDir, Seq(1L, 2L, 3L), files = 1)
+    val source = () => spark.readStream.schema(recordSchema).parquet(srcDir)
+
+    val cleanOk = tmp("r-clean-ok"); val cleanDlq = tmp("r-clean-dlq")
+    drain("replay-clean", source(), Seq(1L, 2L), cleanOk, cleanDlq, tmp("r-clean-ckpt"))
+
+    val okPath = tmp("r-ok"); val dlqPath = tmp("r-dlq"); val ckpt = tmp("r-ckpt")
+    drain("replay", source(), Seq(1L, 2L), okPath, dlqPath, ckpt)
+    // FORCE the replay: delete batch 0's checkpoint commit marker — on
+    // restart the engine sees the offset log ahead of the commit log and
+    // re-executes the batch with the SAME batchId (the crash-between-
+    // sink-write-and-checkpoint-commit window, for real)
+    val commit0 = Paths.get(ckpt, "commits", "0")
+    assert(Files.exists(commit0), "expected checkpoint commit marker for batch 0")
+    Files.delete(commit0)
+    // the local-fs checksum sidecar must go with it or the re-write trips
+    Files.deleteIfExists(Paths.get(ckpt, "commits", ".0.crc"))
+    val q = drain("replay", source(), Seq(1L, 2L), okPath, dlqPath, ckpt)
+    assert(q.recentProgress.exists(p => p.batchId == 0L && p.numInputRows == 3L), "batch 0 was not replayed")
+
+    // the replayed batch overwrote its own batch=0 directories: each id
+    // exactly once, in the same sink as a clean run's
+    val (ok, dlq) = sinkRows(okPath, dlqPath)
+    assert(ok.map(_.split(",")(0).toLong) === Seq(1L, 2L))
+    assert(dlq === Seq(3L))
+    assert((ok, dlq) === sinkRows(cleanOk, cleanDlq))
+  }
+
   test("each micro-batch reads its source once") {
-    import graft.sources.ManifestJsonl
     // 6 files admitted 2 per trigger: 3 batches, each with hits and misses
     val ids = 1L to 300L
     val srcDir = tmp("once-src")
     land(srcDir, ids, files = 6)
-    for ((kind, start) <- starters) {
-      val okPath = tmp(s"once-ok-$kind"); val dlqPath = tmp(s"once-dlq-$kind")
-      val source = spark.readStream.schema(recordSchema).option("maxFilesPerTrigger", 2L).parquet(srcDir)
-      val q = drain(start, s"once-$kind", source, ids.filter(_ % 2 == 0), okPath, dlqPath, tmp(s"once-ckpt-$kind"))
-      val batches = q.recentProgress.filter(_.numInputRows > 0)
-      assert(batches.length === 3, kind)
-      // numInputRows counts the rows the source scan produced: a second
-      // read of any batch would count its rows twice
-      assert(batches.map(_.numInputRows).sum === ids.length.toLong, kind)
-      val (ok, dlq) =
-        if (kind == "parquet") (spark.read.parquet(okPath), spark.read.parquet(dlqPath))
-        else (ManifestJsonl.read(spark, okPath), ManifestJsonl.read(spark, dlqPath))
-      assert(ok.count() === 150L, kind)
-      assert(dlq.count() === 150L, kind)
-    }
+    val okPath = tmp("once-ok"); val dlqPath = tmp("once-dlq")
+    val source = spark.readStream.schema(recordSchema).option("maxFilesPerTrigger", 2L).parquet(srcDir)
+    val q = drain("once", source, ids.filter(_ % 2 == 0), okPath, dlqPath, tmp("once-ckpt"))
+    val batches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batches.length === 3)
+    // numInputRows counts the rows the source scan produced: a second
+    // read of any batch would count its rows twice
+    assert(batches.map(_.numInputRows).sum === ids.length.toLong)
+    assert(spark.read.parquet(okPath).count() === 150L)
+    assert(spark.read.parquet(dlqPath).count() === 150L)
   }
 
   /** Drains ids 1..3 against a dimension of 1, 2 with one sink path
@@ -186,19 +156,16 @@ class PipelineSpec extends GraftSpecBase {
     val srcDir = tmp("blk-src")
     land(srcDir, Seq(1L, 2L, 3L), files = 1)
     val source = () => spark.readStream.schema(recordSchema).parquet(srcDir)
-    def sinkRows(okPath: String, dlqPath: String): (Seq[String], Seq[Long]) = (
-      spark.read.parquet(okPath).select("id", "name", "breed", "batch").collect().map(_.mkString(",")).sorted.toSeq,
-      spark.read.parquet(dlqPath).select("key.id").collect().map(_.getLong(0)).sorted.toSeq)
 
     val cleanOk = tmp("blk-clean-ok"); val cleanDlq = tmp("blk-clean-dlq")
-    drain(Pipelines.startEnrichPipeline _, "blocked-clean", source(), Seq(1L, 2L), cleanOk, cleanDlq, tmp("blk-clean-ckpt"))
+    drain("blocked-clean", source(), Seq(1L, 2L), cleanOk, cleanDlq, tmp("blk-clean-ckpt"))
 
     val blocker = Files.createTempFile("blk-file", "").toString
     val okPath  = if (blockOk) blocker else tmp("blk-ok")
     val dlqPath = if (blockOk) tmp("blk-dlq") else blocker
     val ckpt    = tmp("blk-ckpt")
     val err = intercept[StreamingQueryException](
-      drain(Pipelines.startEnrichPipeline _, "blocked", source(), Seq(1L, 2L), okPath, dlqPath, ckpt))
+      drain("blocked", source(), Seq(1L, 2L), okPath, dlqPath, ckpt))
     // the same write outside the stream fails with this exception class
     val own = intercept[Exception](spark.range(1).write.parquet(s"$blocker/batch=0")).getClass
     val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
@@ -210,7 +177,7 @@ class PipelineSpec extends GraftSpecBase {
     assert(Files.exists(Paths.get(other, "batch=0", "_SUCCESS")), s"unfinished branch write under $other")
 
     Files.delete(Paths.get(blocker))
-    val q = drain(Pipelines.startEnrichPipeline _, "blocked", source(), Seq(1L, 2L), okPath, dlqPath, ckpt)
+    val q = drain("blocked", source(), Seq(1L, 2L), okPath, dlqPath, ckpt)
     assert(q.exception.isEmpty)
     assert(sinkRows(okPath, dlqPath) === sinkRows(cleanOk, cleanDlq))
   }
@@ -244,14 +211,12 @@ class PipelineSpec extends GraftSpecBase {
     lines.asScala.toSeq
   }
 
-  test("both pipelines log the DLQ count (A10 peek)") {
+  test("the pipeline logs the DLQ count (A10 peek)") {
     val srcDir = tmp("peek-src")
     land(srcDir, Seq(1L, 2L, 3L, 4L, 5L), files = 1)
-    for ((kind, start) <- starters) {
-      val lines = pipelinesLog(drain(start, s"peek-$kind", spark.readStream.schema(recordSchema).parquet(srcDir),
-        Seq(1L, 2L), tmp("peek-ok"), tmp("peek-dlq"), tmp("peek-ckpt")))
-      assert(lines.contains(s"[peek-$kind] batch 0: 3 record(s) routed to DLQ"), s"$kind: $lines")
-    }
+    val lines = pipelinesLog(drain("peek", spark.readStream.schema(recordSchema).parquet(srcDir),
+      Seq(1L, 2L), tmp("peek-ok"), tmp("peek-dlq"), tmp("peek-ckpt")))
+    assert(lines.contains("[peek] batch 0: 3 record(s) routed to DLQ"), lines.toString)
   }
 
   test("manual export: plain and envelope-shaped JSON, unparseable rejected") {

@@ -68,46 +68,6 @@ class TopologySpec extends GraftSpecBase {
     assert(spark.read.parquet(ok).select("id").as[Long].collect().sorted === Array(1L, 9L))
   }
 
-  test("topology with manifestSinks: same wiring, transactional manifest visibility") {
-    import spark.implicits._
-    import graft.sources.ManifestJsonl
-    val srcDir = tmp("msrc"); val ok = tmp("mok"); val dlq = tmp("mdlq")
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(Row(1L), Row(null, Row(1L, "a"), "c", 1L)),
-        Row(Row(9L), Row(null, Row(9L, "miss"), "c", 1L))
-      )),
-      recordSchema
-    ).write.mode("overwrite").parquet(srcDir)
-
-    def dim(ids: Long*) = ids.map(i => (i, s"d$i")).toDF("dim_id", "breed")
-    val registry = Topology.start(spark, Seq(
-      Topology.PipelineDef(
-        name = "manifestTransform",
-        source = () => spark.readStream.schema(recordSchema).parquet(srcDir),
-        dimension = () => dim(1),
-        dimKey = "dim_id",
-        dimCols = Seq("breed"),
-        successPath = ok,
-        dlqPath = dlq,
-        checkpointRoot = tmp("mckpt"),
-        manifestSinks = true
-      )
-    ))
-    try {
-      assert(registry.isRunning("manifestTransform"))
-      spark.streams.active.foreach(_.processAllAvailable())
-      val okDf = ManifestJsonl.read(spark, ok)
-      assert(okDf.select("key_id").collect().map(_.getLong(0)).toSeq === Seq(1L))
-      val dlqDf = ManifestJsonl.read(spark, dlq)
-      assert(dlqDf.count() === 1L)
-      assert(dlqDf.select("envelope_json").head().getString(0).contains("\"id\":9"))
-      // the commits are txn-ledgered under the pipeline's sink app ids
-      assert(ManifestJsonl.readManifest(java.nio.file.Paths.get(ok)).get
-        .txns.keySet.exists(_.endsWith("-ok")))
-    } finally registry.stopAll()
-  }
-
   test("topology control plane: sourceDir enables lag probes and reset-to-latest") {
     import spark.implicits._
     val srcDir = tmp("t2src"); val ok = tmp("t2ok"); val dlq = tmp("t2dlq")
