@@ -148,7 +148,6 @@ object Bench {
         QStat(med, sorted.head, sorted.last, sorted.size, warm, ts.map(_._2).sum)
       }
     }
-    def fullFat(name: String): QStat = measure(name, trials, warm = true, doWarmup = true)
 
     // warmup: exercise scan + join + agg codegen paths once
     try SparkEntry.queries("q6_revenue_forecast")(spark, sfDir).write.format("noop").mode("overwrite").save()

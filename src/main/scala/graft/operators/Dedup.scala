@@ -71,16 +71,6 @@ object Dedup {
       Hashing.MinhashP
     )
 
-  /** B3 — MinHash+LSH near-duplicate pairs.
-    *
-    * shingle → 16-wide signature → 4 bands of 4 → band-hash bucket join →
-    * exact Jaccard verification on the candidate pairs only. Returns
-    * (id_a, id_b, jaccard) with id_a < id_b and jaccard >= tau.
-    *
-    * The band join shuffles (doc, band) — 4 rows per doc — instead of all
-    * pairs; exact verification touches only bucket-colliding pairs. That is
-    * the standard web-scale dedup shape (cf. Broder's shingling paper).
-    */
   /** The materialized "signature table" a real pipeline checkpoints:
     * (doc_id, shingle_set, set_size, sig) in one scan-fused pass.
     */
@@ -114,59 +104,27 @@ object Dedup {
     )
   }
 
-  /** Exact-Jaccard verification of candidate (id_a, id_b) pairs against a
-    * signature table covering every id the candidates mention.
-    *
-    * The signature table is semi-join-pruned to the documents the
-    * candidates actually reference BEFORE the shingle explode — the same
-    * trick minhashPairsIncremental documents. Candidate members are a
-    * small fraction of the corpus (the sf10 probe measured ~10 %), so
-    * exploding every document's shingle set to verify a bounded pair list
-    * was the dominant cost of the whole LSH pipeline at scale.
+  /** Exact Jaccard from an intersection count and the two distinct-set
+    * sizes, rounded to 6 places — the one formula every Jaccard verifier
+    * here emits, and the one the oracles replay.
     */
-  /** Above this many distinct member ids the broadcast fallback kicks in:
-    * 20M longs ≈ 160 MB raw (~0.5 GB as a HashedRelation) — past that a
-    * forced broadcast risks the driver/executor broadcast ceiling, and on
-    * a corpus THAT duplicated the shuffle semi-join is the honest plan.
-    */
-  private val MaxBroadcastMembers = 20L * 1000 * 1000
+  private def jaccard(nInter: Column, za: Column, zb: Column): Column =
+    round(nInter.cast("double") / (za + zb - nInter).cast("double"), 6)
 
-  private def verifyPairs(candidates: DataFrame, sigs: DataFrame, tau: Double): DataFrame = {
-    val members = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-      .distinct()
-    // broadcast the (pair-list-sized) member set: a shuffle semi-join
-    // would move the WIDE signature rows (shingle-set arrays) through an
-    // exchange just to drop most of them — the pruning must not cost a
-    // sigs shuffle. But the member set is DATA-DEPENDENT (a pathologically
-    // duplicated corpus makes it corpus-sized), so gate the forced
-    // broadcast on a count — cheap, because every caller hands in
-    // localCheckpoint()ed candidates — and fall back to a shuffle
-    // semi-join (AQE may still choose broadcast if it fits) above the cap.
-    val nMembers = members.count()
-    val memberSide =
-      if (nMembers <= MaxBroadcastMembers) broadcast(members) else members
-    val pruned = sigs.join(memberSide, Seq("doc_id"), "left_semi")
-    val sets   = pruned.select(col("doc_id"), explode(col("shingle_set")).as("shingle"))
-    val sizes  = pruned.select(col("doc_id"), col("set_size"))
-    candidates
-      .join(sets.as("sa"), col("id_a") === col("sa.doc_id"))
-      .join(sets.as("sb"), col("id_b") === col("sb.doc_id") && col("sa.shingle") === col("sb.shingle"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-      .join(sizes.as("za"), col("id_a") === col("za.doc_id"))
-      .join(sizes.as("zb"), col("id_b") === col("zb.doc_id"))
-      .select(
-        col("id_a"),
-        col("id_b"),
-        round(
-          col("n_inter").cast("double") /
-            (col("za.set_size") + col("zb.set_size") - col("n_inter")).cast("double"),
-          6
-        ).as("jaccard")
-      )
+  /** Exact-Jaccard verification of candidate (id_a, id_b) pairs against a
+    * signature table covering every id the candidates mention: each pair
+    * gets both members' shingle sets (attachMembers) and counts their
+    * overlap as `size(array_intersect(...))` — the sets are already
+    * distinct (signatureTable), so that is |A ∩ B|. Pairs with no overlap
+    * drop out before the division: they are never near-duplicates, and a
+    * NULL-text member (a NULL shingle set) drops out with them.
+    */
+  private def verifyPairs(candidates: DataFrame, sigs: DataFrame, tau: Double): DataFrame =
+    attachMembers(candidates, sigs, "doc_id", Seq("shingle_set", "set_size"))
+      .withColumn("n_inter", size(array_intersect(col("shingle_set_a"), col("shingle_set_b"))).cast("long"))
+      .filter(col("n_inter") > 0)
+      .select(col("id_a"), col("id_b"), jaccard(col("n_inter"), col("set_size_a"), col("set_size_b")).as("jaccard"))
       .filter(col("jaccard") >= tau)
-  }
 
   /** B103 — LSH index-quality calibration: over a fixed-size md5-ranked
     * sample of band-colliding candidate pairs (see CalibrationSampleK),
@@ -180,7 +138,7 @@ object Dedup {
     * Same shuffle budget as minhashPairs: the band join generates the
     * candidates, signature comparison is an array zip on the joined
     * pair rows, and exact Jaccard touches only the SAMPLED pairs'
-    * members (semi-join-pruned before the shingle explode). Output
+    * members (attachMembers' semi-join prune). Output
     * is ≤ 17 rows; cost is O(k), not O(candidates).
     */
   /** Calibration-family candidate budget (r12 brief #3). The calibration
@@ -213,9 +171,9 @@ object Dedup {
       .orderBy(md5(concat_ws(":", col("id_a"), col("id_b"))), col("id_a"), col("id_b"))
       .limit(CalibrationSampleK)
       .distinct()
-      // pair-list-sized; materialized once because three consumers
-      // (member pruning + est join + exact-Jaccard joins) would each
-      // replay the band self-join + global top-k otherwise.
+      // pair-list-sized; materialized once because attachMembers' member
+      // count, prune and both side joins would each replay the band
+      // self-join + global top-k otherwise.
       // NOTE: localCheckpoint(true) is EAGER — merely constructing a
       // calibration DataFrame runs the band self-join + global top-k at
       // build time, and the truncated lineage is backed by
@@ -228,35 +186,70 @@ object Dedup {
       // persist()+count() instead.
       .localCheckpoint(true)
 
-  /** Semi-join-prune a signature table to the docs a (bounded) candidate
-    * list mentions, BEFORE any shingle explode — the verifyPairs trick,
-    * now shared with the calibration family (their full-corpus set
-    * explode was the dominant sf10 cost).
+  /** The band-collision self-join of an LSH band table (`id`, band,
+    * `hash`): every (id_a, id_b) with id_a < id_b whose rows agree on some
+    * band's hash — once PER agreeing band, so callers dedupe
+    * (`distinct()`, or sampleCandidates' post-limit distinct).
     */
-  private def pruneToMembers(sigs: DataFrame, candidates: DataFrame): DataFrame = {
-    val members = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-      .distinct()
-    // ≤ 2·CalibrationSampleK rows — always broadcastable
-    sigs.join(broadcast(members), Seq("doc_id"), "left_semi")
+  private[operators] def bandCollisions(banded: DataFrame, id: String, hash: String): DataFrame =
+    banded.as("x")
+      .join(
+        banded.as("y"),
+        col("x.band") === col("y.band") && col(s"x.$hash") === col(s"y.$hash") &&
+          col(s"x.$id") < col(s"y.$id"))
+      .select(col(s"x.$id").as("id_a"), col(s"y.$id").as("id_b"))
+
+  /** Above this many distinct member ids the broadcast fallback kicks in:
+    * 20M longs ≈ 160 MB raw (~0.5 GB as a HashedRelation) — past that a
+    * forced broadcast risks the driver/executor broadcast ceiling, and on
+    * a corpus THAT duplicated the shuffle semi-join is the honest plan.
+    */
+  private val MaxBroadcastMembers = 20L * 1000 * 1000
+
+  /** Attach both members' rows to each candidate (id_a, id_b) pair: the
+    * member table (keyed by `id`) is semi-join-pruned to the ids the
+    * candidates mention, then joined once per side, carrying each `carry`
+    * column as `<c>_a` / `<c>_b`. Candidate members are a small fraction
+    * of the corpus (the sf10 probe measured ~10 %), so the wide member
+    * rows never move in full.
+    *
+    * `candidates` must be materialized (every caller hands in a
+    * localCheckpoint()ed pair list): the member count, the prune and both
+    * side joins each read it.
+    */
+  private[operators] def attachMembers(
+      candidates: DataFrame,
+      members: DataFrame,
+      id: String,
+      carry: Seq[String]
+  ): DataFrame = {
+    val ids = candidates.select(explode(array(col("id_a"), col("id_b"))).as(id)).distinct()
+    // broadcast the (pair-list-sized) id set: a shuffle semi-join would
+    // move the WIDE member rows (shingle-set arrays, vectors) through an
+    // exchange just to drop most of them — the pruning must not cost a
+    // member shuffle. But the id set is DATA-DEPENDENT (a pathologically
+    // duplicated corpus makes it corpus-sized), so gate the forced
+    // broadcast on a count — cheap, because the candidates are
+    // materialized — and fall back to a shuffle semi-join (AQE may still
+    // choose broadcast if it fits) above the cap.
+    val idSide = if (ids.count() <= MaxBroadcastMembers) broadcast(ids) else ids
+    val pruned = members.join(idSide, Seq(id), "left_semi")
+    def side(s: String): DataFrame =
+      pruned.select(col(id).as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s")): _*)
+    candidates.join(side("a"), "id_a").join(side("b"), "id_b")
   }
 
   /** Shared candidate/verify stage for the B103/B265 calibration family
     * (r12 verdict: the two queries were plan-identical within 2% and
     * differed only in emitted columns — two full banding+verify passes
     * for one diagnostic family). ONE signature scan, ONE band self-join,
-    * ONE md5-ranked sample, ONE verify join pass producing every per-pair
-    * statistic either table needs: full-signature agreement, 1-bit
-    * (parity) agreement, and exact Jaccard in integer ppm.
-    *
-    * The verify pass is also single-stage now: the sample is ≤
-    * CalibrationSampleK pairs by construction, so exact Jaccard is
-    * `array_intersect` on the two (already-distinct) shingle sets carried
-    * by the SAME two joins that carry the signatures — the previous
-    * explode→equi-join→groupBy intersection (correct for the UNBOUNDED
-    * action pipeline, where per-pair arrays would skew) cost four extra
-    * joins and a shuffle here. Output is pair-sized, checkpointed once;
-    * both public tables are ≤17-row group-bys over it.
+    * ONE md5-ranked sample, ONE member join (attachMembers) producing
+    * every per-pair statistic either table needs: full-signature
+    * agreement, 1-bit (parity) agreement, and exact Jaccard in integer
+    * ppm by `array_intersect` on the two (already-distinct) shingle sets —
+    * the same kernel as verifyPairs, except that zero-overlap pairs stay
+    * in: they are part of the curve. Output is pair-sized, checkpointed
+    * once; both public tables are ≤17-row group-bys over it.
     */
   private def calibrationPairStats(
       docs: DataFrame,
@@ -264,31 +257,16 @@ object Dedup {
       textCol: String,
       shingleWords: Int
   ): DataFrame = PairCache.getOrCompute(docs, s"calibrationPairStats:$idCol:$textCol:$shingleWords") {
-    val sigs   = signatureTable(docs, idCol, textCol, shingleWords).persist()
-    val banded = bandRows(sigs)
-    val candidates = sampleCandidates(
-      banded.as("x")
-        .join(banded.as("y"), col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash"))
-        .filter(col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")))
-    val pruned = pruneToMembers(sigs, candidates)
-      .select(col("doc_id"), col("sig"), col("shingle_set"), col("set_size"))
-    val perPair = candidates
-      .join(
-        pruned.select(
-          col("doc_id").as("id_a"), col("sig").as("sig_a"),
-          col("shingle_set").as("set_a"), col("set_size").as("za")), "id_a")
-      .join(
-        pruned.select(
-          col("doc_id").as("id_b"), col("sig").as("sig_b"),
-          col("shingle_set").as("set_b"), col("set_size").as("zb")), "id_b")
+    val sigs       = signatureTable(docs, idCol, textCol, shingleWords).persist()
+    val candidates = sampleCandidates(bandCollisions(bandRows(sigs), "doc_id", "band_hash"))
+    val perPair = attachMembers(candidates, sigs, "doc_id", Seq("sig", "shingle_set", "set_size"))
       .select(
         expr("CAST(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), b -> b)) AS BIGINT)")
           .as("n_match"),
         expr("CAST(size(filter(zip_with(sig_a, sig_b, (x, y) -> x % 2 = y % 2), b -> b)) AS BIGINT)")
           .as("n_match_1bit"),
-        expr("CAST(size(array_intersect(set_a, set_b)) AS BIGINT)").as("n_inter"),
-        col("za"), col("zb"))
+        expr("CAST(size(array_intersect(shingle_set_a, shingle_set_b)) AS BIGINT)").as("n_inter"),
+        col("set_size_a").as("za"), col("set_size_b").as("zb"))
       .select(
         col("n_match"),
         col("n_match_1bit"),
@@ -343,6 +321,16 @@ object Dedup {
         expr("CAST(sum(jac_ppm) div count(1) AS BIGINT)").as("avg_jaccard_ppm"))
       .withColumn("est_full_ppm", expr("n_match * 1000000 div 16"))
 
+  /** B3 — MinHash+LSH near-duplicate pairs.
+    *
+    * shingle → 16-wide signature → 4 bands of 4 → band-hash bucket join →
+    * exact Jaccard verification on the candidate pairs only. Returns
+    * (id_a, id_b, jaccard) with id_a < id_b and jaccard >= tau.
+    *
+    * The band join shuffles (doc, band) — 4 rows per doc — instead of all
+    * pairs; exact verification touches only bucket-colliding pairs. That is
+    * the standard web-scale dedup shape (cf. Broder's shingling paper).
+    */
   def minhashPairs(
       docs: DataFrame,
       idCol: String,
@@ -350,18 +338,14 @@ object Dedup {
       shingleWords: Int,
       tau: Double
   ): DataFrame = PairCache.getOrCompute(docs, s"minhashPairs:$idCol:$textCol:$shingleWords:$tau") {
-    // Persisted because three downstream branches (banding, set explode,
-    // sizes) would otherwise each recompute the shingling.
+    // Persisted because two downstream branches (banding, and the member
+    // rows verifyPairs attaches) would otherwise each recompute the shingling.
     val withShingles = signatureTable(docs, idCol, textCol, shingleWords).persist()
-    val banded       = bandRows(withShingles)
 
-    val candidates = banded.as("x")
-      .join(banded.as("y"), col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
+    val candidates = bandCollisions(bandRows(withShingles), "doc_id", "band_hash")
       .distinct()
-      // pair-list-sized; materialized once because verifyPairs consumes it
-      // THREE times (member pruning + both set joins) — unmaterialized,
+      // pair-list-sized; materialized once because verifyPairs reads it
+      // four times (member count, prune, both side joins) — unmaterialized,
       // the band self-join would replay per consumer
       .localCheckpoint(true)
 
@@ -380,7 +364,7 @@ object Dedup {
     * table is the persisted LSH index of a standing pipeline (recomputed
     * here from the corpus frame; at 100 TB it is read, and the fresh
     * side's 4 rows/doc are appended after the run). Corpus shingle sets
-    * are exploded ONLY for documents that actually collide with the
+    * are read ONLY for documents that actually collide with the
     * increment (semi-join pruning) — the property that keeps a small
     * increment cheap against an arbitrarily large corpus.
     *
@@ -408,18 +392,16 @@ object Dedup {
         least(col("x.doc_id"), col("y.doc_id")).as("id_a"),
         greatest(col("x.doc_id"), col("y.doc_id")).as("id_b")
       )
-    val freshVsFresh = fB.as("x")
-      .join(fB.as("y"), col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-    // candidates feed two consumers (the id set for pruning and the
-    // verification join) — materialize the small pair list once instead of
+    val freshVsFresh = bandCollisions(fB, "doc_id", "band_hash")
+    // candidates feed several consumers (the id set for pruning and the
+    // member joins) — materialize the small pair list once instead of
     // re-running both band joins per consumer
     val candidates = freshVsCorpus.unionByName(freshVsFresh).distinct().localCheckpoint(true)
 
-    // member pruning happens INSIDE verifyPairs (broadcast semi-join on
-    // the pair-member ids) — an explicit shuffle semi-join here would
-    // move the wide signature rows through an exchange a second time
+    // member pruning happens INSIDE verifyPairs (attachMembers' broadcast
+    // semi-join on the pair-member ids) — an explicit shuffle semi-join
+    // here would move the wide signature rows through an exchange a second
+    // time
     val out = verifyPairs(candidates, cS.unionByName(fS), tau).localCheckpoint(true)
     cS.unpersist(); fS.unpersist()
     out
@@ -510,14 +492,7 @@ object Dedup {
         col("y.set_size").as("szb")
       )
       .agg(count(lit(1)).as("n_inter"))
-      .select(
-        col("id_a"),
-        col("id_b"),
-        round(
-          col("n_inter").cast("double") / (col("sza") + col("szb") - col("n_inter")).cast("double"),
-          6
-        ).as("jaccard")
-      )
+      .select(col("id_a"), col("id_b"), jaccard(col("n_inter"), col("sza"), col("szb")).as("jaccard"))
       .filter(col("jaccard") >= tau)
       // same release discipline as minhashPairs: small verified result out,
       // big shingle table freed before returning
@@ -602,14 +577,7 @@ object Dedup {
       .drop("doc_id")
       .join(base.select(col("doc_id"), col("sset").as("sb"), col("set_size").as("szb")), col("id_b") === col("doc_id"))
       .withColumn("n_inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .select(
-        col("id_a"),
-        col("id_b"),
-        round(
-          col("n_inter").cast("double") / (col("sza") + col("szb") - col("n_inter")).cast("double"),
-          6
-        ).as("jaccard")
-      )
+      .select(col("id_a"), col("id_b"), jaccard(col("n_inter"), col("sza"), col("szb")).as("jaccard"))
       .filter(col("jaccard") >= tau)
       .localCheckpoint(true)
     base.unpersist()

@@ -438,15 +438,9 @@ object Similarity {
       col(idCol).as("vec_id"),
       asDouble(col(vecCol)).as("v")
     )
-    // bit-pack each band's sign pattern into one long: Σ 2^b · [dot > 0]
-    val bandBuckets = (0 until bands).map { bd =>
-      (0 until bitsPerBand).map { b =>
-        val plane = planes(bd * MaxBitsPerBand + b)
-        when(dot(col("v"), array(plane.map(lit).toIndexedSeq: _*)) > 0, lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    }
-    val banded = base
-      .select(col("vec_id"), col("v"), posexplode(array(bandBuckets: _*)).as(Seq("band", "bucket")))
+    val banded = base.select(
+      col("vec_id"), col("v"),
+      posexplode(array(signBandMasks(planes, bands, bitsPerBand): _*)).as(Seq("band", "bucket")))
     val candidates = banded.as("x")
       .join(
         banded.as("y"),
@@ -467,6 +461,17 @@ object Similarity {
       )
   }
 
+  /** Each band's sign pattern of column `v` against its planes, bit-packed
+    * into one long per band: Σ 2^b · [v · plane_b > 0].
+    */
+  private def signBandMasks(planes: Array[Array[Double]], bands: Int, bitsPerBand: Int): Seq[Column] =
+    (0 until bands).map { bd =>
+      (0 until bitsPerBand).map { b =>
+        val plane = planes(bd * MaxBitsPerBand + b)
+        when(dot(col("v"), array(plane.map(lit).toIndexedSeq: _*)) > 0, lit(1L << b)).otherwise(lit(0L))
+      }.reduce(_ + _)
+    }
+
   /** B287 — sign-LSH index-quality calibration, the vector-space twin of
     * Dedup.minhashCalibration: for every band-colliding candidate pair,
     * the number of AGREEING sign bits across all `2·bitsPerBand` planes
@@ -486,8 +491,8 @@ object Similarity {
     * (~200 M banded candidates × ~1 KB) it spilled past the disk and
     * died — the diagnostic's curve converges long before that, so a
     * fixed deterministic sample is the correct cost class (O(k) verify
-    * after a linear banding pass). Vectors and masks join back via a
-    * broadcast semi-join on the ≤2k sampled members only. Cosines are
+    * after a linear banding pass). Vectors and masks join back to the
+    * sampled pairs' members only (Dedup.attachMembers). Cosines are
     * round-6 snapped then scaled to exact integer micros so the
     * per-level mean is summation-order-free; the oracle replays the
     * identical sample (ORDER BY md5(id:id) LIMIT k, rank before
@@ -506,43 +511,18 @@ object Similarity {
     // embedding column's length or the sign projections are meaningless
     val planes = signPlanes(bands * MaxBitsPerBand, dim)
     val base = spreadSmallInput(embeddings).select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
-    val bandCols = (0 until bands).map { bd =>
-      (0 until bitsPerBand).map { b =>
-        val plane = planes(bd * MaxBitsPerBand + b)
-        when(dot(col("v"), array(plane.map(lit).toIndexedSeq: _*)) > 0, lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_ + _).as(s"b$bd")
-    }
-    val packed = base.select(col("vec_id") +: col("v") +: bandCols: _*).persist()
-    val maskCols = (0 until bands).map(i => col(s"b$i"))
+    val masks  = (0 until bands).map(bd => s"b$bd")
+    val packed = base.select(col("vec_id") +: col("v") +:
+      signBandMasks(planes, bands, bitsPerBand).zip(masks).map { case (m, b) => m.as(b) }: _*).persist()
     val banded = packed.select(
-      col("vec_id"), posexplode(array(maskCols: _*)).as(Seq("band", "bucket")))
-    val candidates = Dedup.sampleCandidates(
-      banded.as("x")
-        .join(
-          banded.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-            col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b")))
-    val members = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("vec_id"))
-      .distinct()
-    val pruned = packed.join(broadcast(members), Seq("vec_id"), "left_semi")
-    val aSide = pruned.select(
-      (col("vec_id").as("id_a") +: col("v").as("va") +:
-        (0 until bands).map(i => col(s"b$i").as(s"a$i"))): _*)
-    val zSide = pruned.select(
-      (col("vec_id").as("id_b") +: col("v").as("vb") +:
-        (0 until bands).map(i => col(s"b$i").as(s"z$i"))): _*)
-    val perPair = candidates
-      .join(aSide, "id_a")
-      .join(zSide, "id_b")
+      col("vec_id"), posexplode(array(masks.map(col): _*)).as(Seq("band", "bucket")))
+    val candidates = Dedup.sampleCandidates(Dedup.bandCollisions(banded, "vec_id", "bucket"))
+    val perPair = Dedup.attachMembers(candidates, packed, "vec_id", "v" +: masks)
       .select(
         (lit(bands.toLong * bitsPerBand) -
-          (0 until bands)
-            .map(i => expr(s"CAST(bit_count(a$i ^ z$i) AS BIGINT)"))
-            .reduce(_ + _))
+          masks.map(m => expr(s"CAST(bit_count(${m}_a ^ ${m}_b) AS BIGINT)")).reduce(_ + _))
           .as("n_match"),
-        round(round(cosine(col("va"), col("vb")), 6) * lit(1000000), 0)
+        round(round(cosine(col("v_a"), col("v_b")), 6) * lit(1000000), 0)
           .cast("long").as("cos_micro"))
       .localCheckpoint(true)
     packed.unpersist()

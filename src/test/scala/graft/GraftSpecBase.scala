@@ -11,10 +11,7 @@ trait GraftSpecBase extends AnyFunSuite {
     .builder("graft-test")
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
-    .config(
-      "spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    )
+    .config("spark.sql.warehouse.dir", GraftSpecBase.warehouseDir)
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
@@ -39,5 +36,18 @@ trait GraftSpecBase extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+}
+
+object GraftSpecBase {
+
+  /** The test JVM's one warehouse dir. Suites share one session, and
+    * `spark.sql.warehouse.dir` is static: only the first `getOrCreate`
+    * reads it. Deleted, contents and all, at JVM exit.
+    */
+  lazy val warehouseDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.toString
   }
 }

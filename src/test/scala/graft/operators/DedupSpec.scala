@@ -49,6 +49,35 @@ class DedupSpec extends GraftSpecBase {
     assert(pairs.contains((1L, 3L)))
   }
 
+  test("minhash verification: exact Jaccard on short, repeated-shingle and NULL-text docs") {
+    val edge = Seq[(Long, String)](
+      (1L, "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "the quick brown fox jumps over the lazy dog again and again"), // exact dup of 1
+      (3L, "the quick brown fox jumps over the lazy cat again and again"), // near dup of 1
+      (4L, "short text"),   // fewer tokens than shingleWords: one whole-text shingle
+      (5L, "Short   TEXT"), // normalizes to 4's text
+      (6L, "a b c a b c a b c"), // 7 shingles, 3 distinct
+      (7L, "a b c a b c"),       // 4 shingles, the same 3 distinct
+      (8L, null),
+      (9L, null),
+      (10L, "completely unrelated text about spark query planning internals")
+    ).toDF("doc_id", "text")
+    val sets = edge
+      .select(col("doc_id"), TextAnalysis.wordShingles(col("text"), 3).as("sh"))
+      .as[(Long, Option[Seq[String]])].collect()
+      .collect { case (id, Some(sh)) => id -> sh.toSet }.toMap
+    def bruteJaccard(a: Long, b: Long): Double = {
+      val inter = (sets(a) intersect sets(b)).size.toDouble
+      BigDecimal(inter / (sets(a).size + sets(b).size - inter)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+    val pairs = Dedup.minhashPairs(edge, "doc_id", "text", shingleWords = 3, tau = 0.5)
+      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect()
+    assert(!pairs.exists(p => Set(8L, 9L)(p._1) || Set(8L, 9L)(p._2)), pairs.mkString(", "))
+    pairs.foreach { case (a, b, j) => assert(j === bruteJaccard(a, b), s"pair ($a, $b)") }
+    val ids = pairs.map(p => (p._1, p._2)).toSet
+    assert(Set((1L, 2L), (4L, 5L), (6L, 7L)).subsetOf(ids), pairs.mkString(", "))
+  }
+
   test("incremental minhash equals the full recompute restricted to fresh pairs") {
     val all       = graft.Tables.documents(spark, sf())
     val threshold = all.agg(org.apache.spark.sql.functions.max(col("doc_id"))).head.getLong(0) * 4 / 5
