@@ -144,9 +144,11 @@ object Similarity {
     * ranking crosses the queries with it as a BROADCAST TABLE. No ML
     * pipeline anywhere.
     */
-  /** Deterministic seed centroids as a broadcast table (cell id, centroid,
-    * ||centroid||²): nCells rows with the smallest (md5(id), id) — a
-    * TakeOrdered over the scan, cheap at any scale. Cell id = the seed
+  /** Deterministic seed centroids as a driver-built table (cell id,
+    * centroid, ||centroid||²): nCells rows with the smallest (md5(id),
+    * id) — a TakeOrdered over the scan, cheap at any scale. It carries no
+    * join hint: `ivfAssignWithCents` collects it, and `probeCells`
+    * broadcasts it into its crossJoin. Cell id = the seed
     * row's id, so the index is self-describing; ||c||² is driver-computed
     * once so the distance formula is exactly the replayable
     * d = v·v − 2·v·c + Σc², same op order as the oracle SQL.
@@ -164,11 +166,9 @@ object Similarity {
       .limit(nCells)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    broadcast(
-      seedSource.sparkSession.createDataFrame(
-        seeds.toIndexedSeq.map { case (id, v) => (id, v.toSeq, v.map(x => x * x).sum) }
-      ).toDF("cell", "ce", "ce2")
-    )
+    seedSource.sparkSession.createDataFrame(
+      seeds.toIndexedSeq.map { case (id, v) => (id, v.toSeq, v.map(x => x * x).sum) }
+    ).toDF("cell", "ce", "ce2")
   }
 
   /** Corpus → nearest cell: the NearestCell kernel over the centroid
@@ -297,7 +297,7 @@ object Similarity {
     val d = dot(col("qv"), col("qv")) - lit(2.0) * dot(col("qv"), col("ce")) + col("ce2")
     queries
       .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .crossJoin(cents)
+      .crossJoin(broadcast(cents))
       .withColumn("prn", row_number().over(Window.partitionBy(col("query_id")).orderBy(d.asc, col("cell").asc)))
       .filter(col("prn") <= maxProbe)
       .select(col("query_id"), col("qv"), col("cell"), col("prn"))

@@ -41,13 +41,21 @@ trait GraftSpecBase extends AnyFunSuite {
 
 object GraftSpecBase {
 
-  /** The test JVM's one warehouse dir. Suites share one session, and
-    * `spark.sql.warehouse.dir` is static: only the first `getOrCreate`
-    * reads it. Deleted, contents and all, at JVM exit.
+  private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+  sys.addShutdownHook(scratch.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+
+  /** A fresh directory under `java.io.tmpdir` whose name starts with
+    * `prefix`. Deleted, contents and all, at JVM exit.
     */
-  lazy val warehouseDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+  def tmpDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    scratch.add(dir)
     dir.toString
   }
+
+  /** The test JVM's one warehouse dir. Suites share one session, and
+    * `spark.sql.warehouse.dir` is static: only the first `getOrCreate`
+    * reads it.
+    */
+  lazy val warehouseDir: String = tmpDir("graft-warehouse")
 }

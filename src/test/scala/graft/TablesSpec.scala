@@ -1,10 +1,11 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
+
+import graft.GraftSpecBase.tmpDir
 
 /** Fixture-generation compatibility for `Tables.events`.
   *
@@ -19,7 +20,7 @@ import org.apache.spark.sql.Row
 class TablesSpec extends GraftSpecBase {
 
   private def writeEvents(rows: Seq[Row], schema: StructType): String = {
-    val dir = Files.createTempDirectory("graft-tables-spec").toString
+    val dir = tmpDir("graft-tables-spec")
     spark
       .createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
       .write

@@ -1,14 +1,14 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 
 class CompactionSpec extends GraftSpecBase {
 
   test("compaction collapses a small-file tail into few healthy files") {
-    val fragged = Files.createTempDirectory("frag").toString
-    val out     = Files.createTempDirectory("compact").toString
+    val fragged = tmpDir("frag")
+    val out     = tmpDir("compact")
     val ev      = graft.Tables.events(spark, sf())
     ev.repartition(16).write.mode("overwrite").parquet(fragged)
 

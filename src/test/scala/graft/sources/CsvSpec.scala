@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.types._
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 
 /** CSV manifest ingestion: typed lines parse against the explicit schema
   * (quoted fields with embedded commas/quotes round-trip), lines whose
@@ -21,7 +22,7 @@ class CsvSpec extends GraftSpecBase {
   ))
 
   test("typed rows parse incl. quoted commas/quotes; type failures route raw") {
-    val dir = Files.createTempDirectory("csv").toString
+    val dir = tmpDir("csv")
     val lines = Seq(
       """1,alpha,10""",
       """2,"beta, with comma",20""",
@@ -46,7 +47,7 @@ class CsvSpec extends GraftSpecBase {
     // from_csv marks a wrong token count malformed — for a TYPED manifest
     // that is the contract you want (a missing column is a broken row, not
     // an optional field); JSONL keeps the lenient missing-key = null rule
-    val dir = Files.createTempDirectory("csv2").toString
+    val dir = tmpDir("csv2")
     Files.write(java.nio.file.Paths.get(dir, "m.csv"), "7,solo".getBytes("UTF-8"))
     val (clean, corrupt) = Csv.branch(Csv.read(spark, dir, schema))
     assert(clean.count() === 0)

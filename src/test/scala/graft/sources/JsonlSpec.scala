@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.types._
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 
 /** JSONL ingestion: clean lines parse against the explicit schema,
   * malformed lines route to the corrupt branch with the raw line intact
@@ -20,7 +21,7 @@ class JsonlSpec extends GraftSpecBase {
   ))
 
   test("clean rows parse, malformed lines land in the corrupt branch raw") {
-    val dir = Files.createTempDirectory("jsonl").toString
+    val dir = tmpDir("jsonl")
     val lines = Seq(
       """{"doc_id": 1, "text": "hello world", "source": "src1"}""",
       """{"doc_id": 2, "text": "second doc", "source": "src2"}""",
@@ -41,7 +42,7 @@ class JsonlSpec extends GraftSpecBase {
   }
 
   test("partial rows with missing fields are clean (nulls), not corrupt") {
-    val dir = Files.createTempDirectory("jsonl2").toString
+    val dir = tmpDir("jsonl2")
     Files.write(java.nio.file.Paths.get(dir, "p.jsonl"),
       """{"doc_id": 9}""".getBytes("UTF-8"))
     val (clean, corrupt) = Jsonl.branch(Jsonl.read(spark, dir, schema))

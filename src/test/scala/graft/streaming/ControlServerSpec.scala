@@ -2,11 +2,11 @@ package graft.streaming
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
 
 import org.apache.spark.sql.types._
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 
 /** REST control-plane round trip (the reference's
   * AnimalStreamControlIT scenarios over HTTP): status/stop/start, offsets
@@ -17,7 +17,6 @@ import graft.GraftSpecBase
 class ControlServerSpec extends GraftSpecBase {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   private val http = HttpClient.newHttpClient()
   private def get(url: String): (Int, String) = {
@@ -37,7 +36,7 @@ class ControlServerSpec extends GraftSpecBase {
   }
 
   test("REST control plane drives lifecycle, offsets, reset and export") {
-    val srcDir = tmp("cs-src"); val ckptRoot = tmp("cs-ckpt"); val okRoot = tmp("cs-ok")
+    val srcDir = tmpDir("cs-src"); val ckptRoot = tmpDir("cs-ckpt"); val okRoot = tmpDir("cs-ok")
     Seq(1L, 2L).toDF("id").coalesce(1).write.mode("append").parquet(srcDir)
 
     val registry = new StreamRegistry(spark)
@@ -63,7 +62,7 @@ class ControlServerSpec extends GraftSpecBase {
     )
     spark.streams.active.foreach(_.processAllAvailable())
 
-    val exportPath = tmp("cs-export")
+    val exportPath = tmpDir("cs-export")
     val payload = StructType(Seq(
       StructField("id", LongType), StructField("name", StringType)
     ))

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 
 /** A17/A18 control-plane semantics, mirroring the reference's
   * AnimalStreamControlIT offset sequence (reset to earliest / latest /
@@ -12,7 +12,6 @@ import graft.GraftSpecBase
 class ControlSpec extends GraftSpecBase {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   private def writeFile(dir: String, ids: Long*): Unit =
     ids.toSeq.toDF("id").coalesce(1).write.mode("append").parquet(dir)
@@ -47,7 +46,7 @@ class ControlSpec extends GraftSpecBase {
   }
 
   test("reset to latest skips the backlog; reset to earliest replays it") {
-    val srcDir = tmp("rst-src"); val ckptRoot = tmp("rst-ckpt"); val okRoot = tmp("rst-ok")
+    val srcDir = tmpDir("rst-src"); val ckptRoot = tmpDir("rst-ckpt"); val okRoot = tmpDir("rst-ok")
     writeFile(srcDir, 1L, 2L)
     writeFile(srcDir, 3L)
 
@@ -92,7 +91,7 @@ class ControlSpec extends GraftSpecBase {
     // the reference's group-inactive wait (StreamControlService.java:199-219)
     // guarantees no concurrent consumption during a reset; here the factory
     // itself checks the previous query is dead at relaunch time
-    val srcDir = tmp("seq-src"); val ckptRoot = tmp("seq-ckpt")
+    val srcDir = tmpDir("seq-src"); val ckptRoot = tmpDir("seq-ckpt")
     writeFile(srcDir, 1L)
     val registry = new StreamRegistry(spark)
     @volatile var prevQ: org.apache.spark.sql.streaming.StreamingQuery = null
@@ -128,7 +127,7 @@ class ControlSpec extends GraftSpecBase {
       else dir.listFiles().toSeq.map(_.getName).filter(_.matches("\\d+")).map(_.toLong).sorted
     }
 
-    val srcDir = tmp("guard-src"); val ckptRoot = tmp("guard-ckpt"); val okRoot = tmp("guard-ok")
+    val srcDir = tmpDir("guard-src"); val ckptRoot = tmpDir("guard-ckpt"); val okRoot = tmpDir("guard-ok")
     writeFile(srcDir, 0L)
 
     val registry = new StreamRegistry(spark)
@@ -184,7 +183,7 @@ class ControlSpec extends GraftSpecBase {
   }
 
   test("reset refuses to relaunch while the previous run is still active") {
-    val srcDir = tmp("refuse-src"); val ckptRoot = tmp("refuse-ckpt")
+    val srcDir = tmpDir("refuse-src"); val ckptRoot = tmpDir("refuse-ckpt")
     writeFile(srcDir, 1L)
     val gate     = new CountDownLatch(1)
     val entered  = new CountDownLatch(1)
@@ -235,7 +234,7 @@ class ControlSpec extends GraftSpecBase {
   }
 
   test("lag reports the backlog mid-stream and zero after drain") {
-    val srcDir = tmp("lag-src"); val ckpt = tmp("lag-ckpt")
+    val srcDir = tmpDir("lag-src"); val ckpt = tmpDir("lag-ckpt")
     writeFile(srcDir, 1L)
     writeFile(srcDir, 2L)
     writeFile(srcDir, 3L)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.time.Duration
 
 import scala.jdk.CollectionConverters._
@@ -9,6 +8,7 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 
 /** What `StatefulDedup.latestWins(ttl = …)` forgets, and when. The TTL is a
   * processing-time timeout: a key's high-water mark is dropped only in a
@@ -39,8 +39,8 @@ class LatestWinsTtlSpec extends GraftSpecBase {
     * in one fresh Trigger.Once query, returning what it emitted.
     */
   private def drains(): Seq[Rec] => Set[Rec] = {
-    val srcDir = Files.createTempDirectory("lwttl-src").toString
-    val ckpt   = Files.createTempDirectory("lwttl-ckpt").toString
+    val srcDir = tmpDir("lwttl-src")
+    val ckpt   = tmpDir("lwttl-ckpt")
     rows => {
       rows.toDF("key", "version", "name").write.mode("append").parquet(srcDir)
       val got = new java.util.concurrent.CopyOnWriteArrayList[Rec]()
@@ -76,7 +76,7 @@ class LatestWinsTtlSpec extends GraftSpecBase {
 
   test("latestWins ttl: a TTL below one millisecond fails at the call, before any query starts") {
     val src = spark.readStream.schema("key STRING, version BIGINT, name STRING")
-      .parquet(Files.createTempDirectory("lwttl-bad").toString).as[Rec]
+      .parquet(tmpDir("lwttl-bad")).as[Rec]
     Seq(Duration.ZERO, Duration.ofNanos(500)).foreach { d =>
       val e = intercept[IllegalArgumentException] {
         StatefulDedup.latestWins[String, Rec](src, _._1, _._2, ttl = Some(d))

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 import graft.cdc.Envelope
 
 /** Streaming twins of the reference's integration tests (SURVEY.md §5):
@@ -42,13 +43,11 @@ class PipelineSpec extends GraftSpecBase {
     ids.map(i => (i, s"breed-$i")).toDF("dim_id", "breed")
   }
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   test("enrich pipeline: hits to success sink, misses to DLQ, replay repairs them") {
-    val srcDir     = tmp("src")
-    val okPath     = tmp("ok")
-    val dlqPath    = tmp("dlq")
+    val srcDir     = tmpDir("src")
+    val okPath     = tmpDir("ok")
+    val dlqPath    = tmpDir("dlq")
 
     // phase 1 (DlqPipelineIT:55): dimension knows ids 1,2 — id 3 must fail
     spark
@@ -61,7 +60,7 @@ class PipelineSpec extends GraftSpecBase {
     val source = spark.readStream.schema(recordSchema).parquet(srcDir)
     val q = Pipelines.startEnrichPipeline(
       "animalTransform", source, () => dim(1, 2), "dim_id", Seq("breed"),
-      okPath, dlqPath, tmp("ckpt")
+      okPath, dlqPath, tmpDir("ckpt")
     )
     q.processAllAvailable(); q.stop()
 
@@ -75,7 +74,7 @@ class PipelineSpec extends GraftSpecBase {
     // phase 2 (DlqPipelineIT:128): replay DLQ against the repaired dimension
     val replay = Pipelines.startDlqReplay(
       "animalDlqTransform", spark, dlqPath, dlq.schema, () => dim(1, 2, 3),
-      "dim_id", Seq("breed"), okPath, tmp("ckpt2"), maxFilesPerTrigger = 10
+      "dim_id", Seq("breed"), okPath, tmpDir("ckpt2"), maxFilesPerTrigger = 10
     )
     replay.processAllAvailable(); replay.stop()
     assert(spark.read.parquet(okPath).select("id").collect().map(_.getLong(0)).sorted
@@ -101,14 +100,14 @@ class PipelineSpec extends GraftSpecBase {
     spark.read.parquet(dlqPath).select("key.id").collect().map(_.getLong(0)).sorted.toSeq)
 
   test("enrich pipeline: exactly-once across a FORCED micro-batch replay") {
-    val srcDir = tmp("r-src")
+    val srcDir = tmpDir("r-src")
     land(srcDir, Seq(1L, 2L, 3L), files = 1)
     val source = () => spark.readStream.schema(recordSchema).parquet(srcDir)
 
-    val cleanOk = tmp("r-clean-ok"); val cleanDlq = tmp("r-clean-dlq")
-    drain("replay-clean", source(), Seq(1L, 2L), cleanOk, cleanDlq, tmp("r-clean-ckpt"))
+    val cleanOk = tmpDir("r-clean-ok"); val cleanDlq = tmpDir("r-clean-dlq")
+    drain("replay-clean", source(), Seq(1L, 2L), cleanOk, cleanDlq, tmpDir("r-clean-ckpt"))
 
-    val okPath = tmp("r-ok"); val dlqPath = tmp("r-dlq"); val ckpt = tmp("r-ckpt")
+    val okPath = tmpDir("r-ok"); val dlqPath = tmpDir("r-dlq"); val ckpt = tmpDir("r-ckpt")
     drain("replay", source(), Seq(1L, 2L), okPath, dlqPath, ckpt)
     // FORCE the replay: delete batch 0's checkpoint commit marker — on
     // restart the engine sees the offset log ahead of the commit log and
@@ -133,11 +132,11 @@ class PipelineSpec extends GraftSpecBase {
   test("each micro-batch reads its source once") {
     // 6 files admitted 2 per trigger: 3 batches, each with hits and misses
     val ids = 1L to 300L
-    val srcDir = tmp("once-src")
+    val srcDir = tmpDir("once-src")
     land(srcDir, ids, files = 6)
-    val okPath = tmp("once-ok"); val dlqPath = tmp("once-dlq")
+    val okPath = tmpDir("once-ok"); val dlqPath = tmpDir("once-dlq")
     val source = spark.readStream.schema(recordSchema).option("maxFilesPerTrigger", 2L).parquet(srcDir)
-    val q = drain("once", source, ids.filter(_ % 2 == 0), okPath, dlqPath, tmp("once-ckpt"))
+    val q = drain("once", source, ids.filter(_ % 2 == 0), okPath, dlqPath, tmpDir("once-ckpt"))
     val batches = q.recentProgress.filter(_.numInputRows > 0)
     assert(batches.length === 3)
     // numInputRows counts the rows the source scan produced: a second
@@ -153,17 +152,17 @@ class PipelineSpec extends GraftSpecBase {
     * with a clean run's.
     */
   private def blockedRun(blockOk: Boolean): Unit = {
-    val srcDir = tmp("blk-src")
+    val srcDir = tmpDir("blk-src")
     land(srcDir, Seq(1L, 2L, 3L), files = 1)
     val source = () => spark.readStream.schema(recordSchema).parquet(srcDir)
 
-    val cleanOk = tmp("blk-clean-ok"); val cleanDlq = tmp("blk-clean-dlq")
-    drain("blocked-clean", source(), Seq(1L, 2L), cleanOk, cleanDlq, tmp("blk-clean-ckpt"))
+    val cleanOk = tmpDir("blk-clean-ok"); val cleanDlq = tmpDir("blk-clean-dlq")
+    drain("blocked-clean", source(), Seq(1L, 2L), cleanOk, cleanDlq, tmpDir("blk-clean-ckpt"))
 
-    val blocker = Files.createTempFile("blk-file", "").toString
-    val okPath  = if (blockOk) blocker else tmp("blk-ok")
-    val dlqPath = if (blockOk) tmp("blk-dlq") else blocker
-    val ckpt    = tmp("blk-ckpt")
+    val blocker = Files.createFile(Paths.get(tmpDir("blk-file"), "sink")).toString
+    val okPath  = if (blockOk) blocker else tmpDir("blk-ok")
+    val dlqPath = if (blockOk) tmpDir("blk-dlq") else blocker
+    val ckpt    = tmpDir("blk-ckpt")
     val err = intercept[StreamingQueryException](
       drain("blocked", source(), Seq(1L, 2L), okPath, dlqPath, ckpt))
     // the same write outside the stream fails with this exception class
@@ -212,15 +211,15 @@ class PipelineSpec extends GraftSpecBase {
   }
 
   test("the pipeline logs the DLQ count (A10 peek)") {
-    val srcDir = tmp("peek-src")
+    val srcDir = tmpDir("peek-src")
     land(srcDir, Seq(1L, 2L, 3L, 4L, 5L), files = 1)
     val lines = pipelinesLog(drain("peek", spark.readStream.schema(recordSchema).parquet(srcDir),
-      Seq(1L, 2L), tmp("peek-ok"), tmp("peek-dlq"), tmp("peek-ckpt")))
+      Seq(1L, 2L), tmpDir("peek-ok"), tmpDir("peek-dlq"), tmpDir("peek-ckpt")))
     assert(lines.contains("[peek] batch 0: 3 record(s) routed to DLQ"), lines.toString)
   }
 
   test("manual export: plain and envelope-shaped JSON, unparseable rejected") {
-    val okPath = tmp("manual")
+    val okPath = tmpDir("manual")
     assert(Pipelines.manualExport(spark, """{"id": 7, "name": "Buddy"}""", payload, okPath) === 1L)
     assert(Pipelines.manualExport(spark, """{"after": {"id": 8, "name": "Rex"}}""", payload, okPath) === 1L)
     assert(Pipelines.manualExport(spark, """{"name": "no-id"}""", payload, okPath) === 0L)
@@ -229,8 +228,8 @@ class PipelineSpec extends GraftSpecBase {
   }
 
   test("registry: stop/start/status/offsets/reset lifecycle") {
-    val srcDir = tmp("csrc")
-    val okPath = tmp("cok")
+    val srcDir = tmpDir("csrc")
+    val okPath = tmpDir("cok")
     spark
       .createDataFrame(spark.sparkContext.parallelize(Seq(envRow(1, "a"))), recordSchema)
       .write.mode("overwrite").parquet(srcDir)
@@ -242,7 +241,7 @@ class PipelineSpec extends GraftSpecBase {
         val source = spark.readStream.schema(recordSchema).parquet(srcDir)
         Pipelines.startEnrichPipeline(
           s"ctl-$epoch", source, () => dim(1), "dim_id", Seq("breed"),
-          okPath, tmp("cdlq"), tmp(s"cckpt$epoch")
+          okPath, tmpDir("cdlq"), tmpDir(s"cckpt$epoch")
         )
       }
     )

@@ -8,6 +8,7 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 
 /** Crash-restart parity for the keyed state of `StatefulDedup.latestWins`:
   * the version high-water marks written through one checkpointed query
@@ -39,7 +40,7 @@ class RestartParitySpec extends GraftSpecBase {
     * a live query never lists a half-written batch.
     */
   private def writeBatch(srcDir: String, rows: Seq[Rec]): Unit = {
-    val stage = Files.createTempDirectory("lwr-stage").toString
+    val stage = tmpDir("lwr-stage")
     rows.toDF("key", "version", "name").coalesce(1).write.mode("overwrite").parquet(stage)
     val part = Files.list(Paths.get(stage)).iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get
     Files.move(part, Paths.get(srcDir, part.getFileName.toString))
@@ -60,8 +61,8 @@ class RestartParitySpec extends GraftSpecBase {
 
   /** One fresh query per batch on a shared checkpoint. */
   private def restartedDrains(): Seq[Set[Rec]] = {
-    val srcDir = Files.createTempDirectory("lwr-src").toString
-    val ckpt   = Files.createTempDirectory("lwr-ckpt").toString
+    val srcDir = tmpDir("lwr-src")
+    val ckpt   = tmpDir("lwr-ckpt")
     batches.zipWithIndex.map { case (rows, i) =>
       writeBatch(srcDir, rows)
       val got = new java.util.concurrent.CopyOnWriteArrayList[Set[Rec]]()
@@ -73,9 +74,9 @@ class RestartParitySpec extends GraftSpecBase {
 
   /** One live query over the same batch boundaries. */
   private def uninterruptedRun(): Seq[Set[Rec]] = {
-    val srcDir = Files.createTempDirectory("lwu-src").toString
+    val srcDir = tmpDir("lwu-src")
     val got    = new java.util.concurrent.CopyOnWriteArrayList[Set[Rec]]()
-    val q      = start(srcDir, Files.createTempDirectory("lwu-ckpt").toString, "lwu", None)(got)
+    val q      = start(srcDir, tmpDir("lwu-ckpt"), "lwu", None)(got)
     try batches.foreach { rows => writeBatch(srcDir, rows); q.processAllAvailable() }
     finally q.stop()
     got.asScala.toSeq.filter(_.nonEmpty)

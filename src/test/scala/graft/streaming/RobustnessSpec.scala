@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types._
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 import graft.cdc.Envelope
 
 /** Regression tests for failure-path semantics:
@@ -38,18 +39,16 @@ class RobustnessSpec extends GraftSpecBase {
     ids.map(i => (i, s"breed-$i")).toDF("dim_id", "breed")
   }
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   private def rmrf(dir: String): Unit =
     Files.walk(Paths.get(dir)).sorted(Comparator.reverseOrder[java.nio.file.Path]())
       .forEach(p => Files.deleteIfExists(p))
 
   test("replayed batch wipes its stale DLQ partition when the retry succeeds") {
-    val srcDir  = tmp("rsrc")
-    val okPath  = tmp("rok")
-    val dlqPath = tmp("rdlq")
-    val ckpt    = tmp("rckpt")
+    val srcDir  = tmpDir("rsrc")
+    val okPath  = tmpDir("rok")
+    val dlqPath = tmpDir("rdlq")
+    val ckpt    = tmpDir("rckpt")
     spark
       .createDataFrame(
         spark.sparkContext.parallelize(Seq(envRow(1, "a"), envRow(3, "c"))),
@@ -107,7 +106,7 @@ class RobustnessSpec extends GraftSpecBase {
   }
 
   test("registry stop/stopAll survive a query that already failed") {
-    val srcDir = tmp("fsrc")
+    val srcDir = tmpDir("fsrc")
     spark
       .createDataFrame(spark.sparkContext.parallelize(Seq(envRow(1, "a"))), recordSchema)
       .write.mode("overwrite").parquet(srcDir)
@@ -117,7 +116,7 @@ class RobustnessSpec extends GraftSpecBase {
       "doomed",
       _ => spark.readStream.schema(recordSchema).parquet(srcDir)
         .writeStream
-        .option("checkpointLocation", tmp("fckpt"))
+        .option("checkpointLocation", tmpDir("fckpt"))
         .foreachBatch { (_: DataFrame, _: Long) =>
           throw new RuntimeException("boom")
         }

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 import graft.cdc.Envelope
 
 /** Full-topology assembly: the reference's three-function wiring
@@ -24,11 +24,10 @@ class TopologySpec extends GraftSpecBase {
     StructField("value", Envelope.envelopeSchema(payload), nullable = true)
   ))
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   test("topology: auto-started pipeline + on-demand DLQ replay") {
     import spark.implicits._
-    val srcDir = tmp("tsrc"); val ok = tmp("tok"); val dlq = tmp("tdlq")
+    val srcDir = tmpDir("tsrc"); val ok = tmpDir("tok"); val dlq = tmpDir("tdlq")
     spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(
         Row(Row(1L), Row(null, Row(1L, "a"), "c", 1L)),
@@ -49,7 +48,7 @@ class TopologySpec extends GraftSpecBase {
         dimCols = Seq("breed"),
         successPath = ok,
         dlqPath = dlq,
-        checkpointRoot = tmp("tckpt"),
+        checkpointRoot = tmpDir("tckpt"),
         dlqReplay = Some(Topology.DlqReplayDef(repairDimension = () => dim(1, 9), dlqSchema = dlqSchema))
       )
     ))
@@ -70,7 +69,7 @@ class TopologySpec extends GraftSpecBase {
 
   test("topology control plane: sourceDir enables lag probes and reset-to-latest") {
     import spark.implicits._
-    val srcDir = tmp("t2src"); val ok = tmp("t2ok"); val dlq = tmp("t2dlq")
+    val srcDir = tmpDir("t2src"); val ok = tmpDir("t2ok"); val dlq = tmpDir("t2dlq")
     def writeEnv(ids: Long*): Unit =
       spark.createDataFrame(
         spark.sparkContext.parallelize(ids.map(i => Row(Row(i), Row(null, Row(i, s"n$i"), "c", 1L))), 1),
@@ -87,7 +86,7 @@ class TopologySpec extends GraftSpecBase {
         dimCols = Seq("breed"),
         successPath = ok,
         dlqPath = dlq,
-        checkpointRoot = tmp("t2ckpt"),
+        checkpointRoot = tmpDir("t2ckpt"),
         sourceDir = Some(srcDir)
       )
     ))

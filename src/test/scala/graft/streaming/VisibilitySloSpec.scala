@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -8,6 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 import graft.cdc.Envelope
 
 /** The reference's ONLY published performance contract, pinned as a test
@@ -52,8 +52,6 @@ class VisibilitySloSpec extends GraftSpecBase {
     ids.map(i => (i, s"breed-$i")).toDF("dim_id", "breed")
   }
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   /** Polls `read` until `pred` holds; returns elapsed seconds or fails
     * after `deadlineSec`. Sink reads race the writer mid-commit, so read
@@ -69,9 +67,9 @@ class VisibilitySloSpec extends GraftSpecBase {
   }
 
   test("CDC enrich visibility <= 30s, DLQ visibility <= 60s after source commit (reference SLO)") {
-    val srcDir  = tmp("slo-src")
-    val okPath  = tmp("slo-ok")
-    val dlqPath = tmp("slo-dlq")
+    val srcDir  = tmpDir("slo-src")
+    val okPath  = tmpDir("slo-ok")
+    val dlqPath = tmpDir("slo-dlq")
 
     // the stream must be LIVE before the measured commit: seed one
     // already-enrichable record so batch 0 establishes the topology
@@ -80,7 +78,7 @@ class VisibilitySloSpec extends GraftSpecBase {
       "slo-pipeline",
       spark.readStream.schema(recordSchema).parquet(srcDir),
       () => dim(1, 2), "dim_id", Seq("breed"),
-      okPath, dlqPath, tmp("slo-ckpt"),
+      okPath, dlqPath, tmpDir("slo-ckpt"),
       trigger = Trigger.ProcessingTime("500 milliseconds")
     )
     try {

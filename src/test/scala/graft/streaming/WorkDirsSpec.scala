@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 
 /** Pins the injectable-scratch-base contract cdc_pipeline_e2e and the
   * bench stream rely on: session-conf override wins, every allocation is
@@ -19,7 +20,7 @@ class WorkDirsSpec extends GraftSpecBase {
   }
 
   test("fresh and staged dirs are registered for deletion when the FileSystem closes") {
-    val fixture = java.nio.file.Files.createTempDirectory("wd-flat").toString
+    val fixture = tmpDir("wd-flat")
     spark.range(3).write.parquet(s"$fixture/t.parquet")
     for (d <- Seq(WorkDirs.fresh(spark, "wd-exit"), WorkDirs.stageRawTable(spark, fixture, "t", "wd-exit"))) {
       val p  = new org.apache.hadoop.fs.Path(d)
@@ -31,7 +32,7 @@ class WorkDirsSpec extends GraftSpecBase {
   }
 
   test("spark.graft.stream.workdir conf overrides the base") {
-    val base = java.nio.file.Files.createTempDirectory("wd-base").toString
+    val base = tmpDir("wd-base")
     spark.conf.set("spark.graft.stream.workdir", base)
     try {
       val d = WorkDirs.fresh(spark, "conf-scoped")
@@ -42,7 +43,7 @@ class WorkDirsSpec extends GraftSpecBase {
 
   test("stageRawTable rejects a hive-partitioned table instead of staging part of it") {
     import spark.implicits._
-    val fixture = java.nio.file.Files.createTempDirectory("wd-partitioned").toString
+    val fixture = tmpDir("wd-partitioned")
     Seq((1L, "a"), (2L, "b")).toDF("id", "part")
       .write.partitionBy("part").parquet(s"$fixture/t.parquet")
     val e = intercept[IllegalArgumentException](WorkDirs.stageRawTable(spark, fixture, "t", "wd-stage"))
@@ -50,7 +51,7 @@ class WorkDirsSpec extends GraftSpecBase {
   }
 
   test("stageRawTable rejects a table directory with no parquet file") {
-    val fixture = java.nio.file.Files.createTempDirectory("wd-empty").toString
+    val fixture = tmpDir("wd-empty")
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(fixture, "t.parquet"))
     val e = intercept[IllegalArgumentException](WorkDirs.stageRawTable(spark, fixture, "t", "wd-stage"))
     assert(e.getMessage.contains("no *.parquet file"))

@@ -3,6 +3,7 @@ package graft.tools
 import scala.sys.process._
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 
 /** Folds the two standalone pre-snapshot gates into `sbt test`
   * (round-11 brief #6): both went stale mid-round in r10 and needed
@@ -29,7 +30,7 @@ class GateToolsSpec extends GraftSpecBase {
     // shelling the scripts/ wrapper (which spawns a second Spark JVM to
     // re-dump oracle_sql.json — redundant under sbt test, where
     // SparkEntry.oracleSql is right here).
-    val outDir = java.nio.file.Files.createTempDirectory("oracle-lint").toString
+    val outDir = tmpDir("oracle-lint")
     def esc(s: String): String = s.flatMap {
       case '"'          => "\\\""
       case '\\'         => "\\\\"

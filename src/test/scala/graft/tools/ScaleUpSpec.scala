@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.GraftSpecBase
+import graft.GraftSpecBase.tmpDir
 
 /** Pins the ScaleUp invariants SCALING.md's methodology rests on: replicas
   * are disjoint self-consistent stars (FK integrity preserved), and the
@@ -13,7 +14,7 @@ import graft.GraftSpecBase
 class ScaleUpSpec extends GraftSpecBase {
 
   private lazy val out: String = {
-    val dir = java.nio.file.Files.createTempDirectory("scaleup-spec").toString
+    val dir = tmpDir("scaleup-spec")
     ScaleUp.run(spark, sf(), dir, 2)
     dir
   }
