@@ -66,7 +66,7 @@ object GraftSession {
       // exchange at 8×threads and let AQE coalesce down to the advisory
       // size — small inputs still collapse to a handful of partitions,
       // large ones keep per-partition state bounded.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTS", (cpus.toInt * 8).toString))
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", (cpus.toInt * 8).toString)
       // parallelismFirst=true (the Spark default) refuses to coalesce
       // below defaultParallelism. Round 10 traded it for size-first
       // coalescing on a 6-query subset measurement; the round-11 re-audit
@@ -81,10 +81,9 @@ object GraftSession {
       // queries at sf1 24.2 vs 32.5 s; sf10 graph family a wash (71.0 vs
       // 73.2 s single-trial). Keeping parallelism beats packing bytes on
       // a 32-thread executor, and on a real cluster the advisory below
-      // still bounds partition bloat. Env knobs are dev overrides for
-      // scale probes, not a user contract.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", sys.env.getOrElse("SPARK_GRAFT_PF", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", sys.env.getOrElse("SPARK_GRAFT_ADVISORY", (16L * 1024 * 1024).toString))
+      // still bounds partition bloat.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (16L * 1024 * 1024).toString)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")

@@ -157,7 +157,7 @@ object QueriesExt27 {
           .as("n_invalid_id"),
         sum(
           when(
-            col("value.after").isNotNull && col("value.after.id") =!= 0L,
+            col("value.after").isNotNull && Envelope.validId(col("value.after.id")),
             1L
           ).otherwise(0L)
         ).as("n_kept")

@@ -276,8 +276,7 @@ object QueriesExt33 {
     */
   private def cdcConflictAudit(s: SparkSession, dir: String): DataFrame = {
     val env = cdc.Envelope.synthesizeFromEvents(events(s, dir))
-    val kept = env
-      .where(col("value").isNotNull && col("value.after").isNotNull && col("value.after.id") =!= 0L)
+    val kept = cdc.Envelope.validAfter(env)
       .select(
         col("value.after.user_id").as("user_id"),
         expr("value.ts_ms div 60000").as("minute")

@@ -412,15 +412,12 @@ object SparkEntry {
   private def cdcExtracted(s: SparkSession, dir: String): DataFrame =
     Envelope.extractAfter(Envelope.synthesizeFromEvents(events(s, dir)))
 
-  private def cdcExtract(s: SparkSession, dir: String): DataFrame =
-    cdcExtracted(s, dir)
-
   private val cdcExtractSql =
     s"""SELECT event_id AS id, user_id, event_type, value, epoch_ms(ts) AS ts_ms
        |FROM events WHERE $cdcKeptSql""".stripMargin
 
   private def cdcLatestWins(s: SparkSession, dir: String): DataFrame =
-    Envelope.latestWins(cdcExtracted(s, dir), "user_id", "ts_ms", "id")
+    operators.Dedup.latestWins(cdcExtracted(s, dir), Seq("user_id"), Seq(col("ts_ms"), col("id")))
 
   private val cdcLatestWinsSql =
     s"""SELECT id, user_id, event_type, value, ts_ms FROM (
@@ -485,7 +482,7 @@ object SparkEntry {
     QuerySpec("q_case_agg", Seq("B8"), qCaseAgg, qCaseAggSql),
     QuerySpec("q_string_funcs", Seq("B8"), qStringFuncs, qStringFuncsSql),
     QuerySpec("q_date_funcs", Seq("B8"), qDateFuncs, qDateFuncsSql),
-    QuerySpec("cdc_extract", Seq("A1", "A3", "A4"), cdcExtract, cdcExtractSql),
+    QuerySpec("cdc_extract", Seq("A1", "A3", "A4"), cdcExtracted, cdcExtractSql),
     QuerySpec("cdc_latest_wins", Seq("B2"), cdcLatestWins, cdcLatestWinsSql),
     QuerySpec("cdc_enrich_join", Seq("A5", "A6"), cdcEnrichJoin, cdcEnrichJoinSql),
     QuerySpec("cdc_enrich_dlq", Seq("A7"), cdcEnrichDlq, cdcEnrichDlqSql),

@@ -32,23 +32,26 @@ object Envelope {
   ))
 
   /** A3 — tombstone drop: null envelope value. */
-  def dropTombstones(df: DataFrame, valueCol: String = "value"): DataFrame =
-    df.filter(col(valueCol).isNotNull)
+  def dropTombstones(df: DataFrame): DataFrame =
+    df.filter(col("value").isNotNull)
+
+  /** A4 — the id rule: a record id is valid when it is neither null nor 0. */
+  def validId(id: Column): Column = id.isNotNull && id =!= 0
 
   /** A3 + A4 — the envelope rows worth processing: tombstones, deletes
     * (null `after`) and null/zero ids dropped, in that order. Keeps the
     * envelope columns as they are.
     */
-  def validAfter(df: DataFrame, valueCol: String = "value", idField: String = "id"): DataFrame =
-    dropTombstones(df, valueCol)
-      .filter(col(s"$valueCol.after").isNotNull)
-      .filter(col(s"$valueCol.after.$idField").isNotNull && col(s"$valueCol.after.$idField") =!= 0)
+  def validAfter(df: DataFrame): DataFrame =
+    dropTombstones(df)
+      .filter(col("value.after").isNotNull)
+      .filter(validId(col("value.after.id")))
 
   /** A4 — extract the `after` image of the `validAfter` rows.
     * Emits the flattened after-payload columns.
     */
-  def extractAfter(df: DataFrame, valueCol: String = "value", idField: String = "id"): DataFrame =
-    validAfter(df, valueCol, idField).select(col(s"$valueCol.after.*"))
+  def extractAfter(df: DataFrame): DataFrame =
+    validAfter(df).select(col("value.after.*"))
 
   /** Deterministic envelope synthesis for tests/fixtures: wraps the
     * `events` fixture table into CDC envelopes, marking a reproducible
@@ -65,12 +68,7 @@ object Envelope {
     )
     val value = when(
       col("event_id") % 97 === 0,
-      lit(null).cast(StructType(Seq(
-        StructField("before", payloadSchema, nullable = true),
-        StructField("after", payloadSchema, nullable = true),
-        StructField("op", StringType),
-        StructField("ts_ms", LongType)
-      )))
+      lit(null).cast(envelopeSchema(payloadSchema))
     ).otherwise(
       struct(
         lit(null).cast(payloadSchema).as("before"),
@@ -91,11 +89,4 @@ object Envelope {
     StructField("value", DoubleType),
     StructField("ts_ms", LongType)
   ))
-
-  /** Latest-wins compaction over extracted CDC rows — the reference's
-    * `@Version` optimistic-lock counter generalized (SURVEY.md §2 B2):
-    * per key keep the max (orderCol, tieBreak) row.
-    */
-  def latestWins(df: DataFrame, keyCol: String, orderCol: String, tieBreak: String): DataFrame =
-    graft.operators.Dedup.latestWins(df, Seq(keyCol), Seq(col(orderCol), col(tieBreak)))
 }

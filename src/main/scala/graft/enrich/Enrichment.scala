@@ -1,6 +1,6 @@
 package graft.enrich
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Lookup enrichment — the reference's core operator (SURVEY.md §2 A5–A9).
@@ -22,17 +22,12 @@ object Enrichment {
   /** A5 — enrich `records` with `dimension` on `records[keyCol] ==
     * dimension[dimKeyCol]`. Left join keeps misses so callers can branch;
     * `enrich_failed` marks them (A7's try/catch as a column).
-    * The dimension is broadcast when small (Catalyst handles it under the
-    * threshold; `broadcastDim` forces it for guaranteed-small dims).
+    * The dimension is always broadcast: it is the per-batch lookup table,
+    * and a broadcast hash join is the one-probe-per-record form of the
+    * reference's REST lookup.
     */
-  def enrich(
-      records: DataFrame,
-      dimension: DataFrame,
-      keyCol: String,
-      dimKeyCol: String,
-      broadcastDim: Boolean = true
-  ): DataFrame = {
-    val dim = if (broadcastDim) broadcast(dimension) else dimension
+  def enrich(records: DataFrame, dimension: DataFrame, keyCol: String, dimKeyCol: String): DataFrame = {
+    val dim = broadcast(dimension)
     records
       .join(dim, records(keyCol) === dim(dimKeyCol), "left")
       .withColumn("enrich_failed", dim(dimKeyCol).isNull)
@@ -52,5 +47,5 @@ object Enrichment {
     * partition placement, i.e. the Kafka-Streams repartition semantics.
     */
   def rekey(df: DataFrame, keyCol: String): DataFrame =
-    df.withColumn("key", struct(col(keyCol).as("id")))
+    df.select(struct(col(keyCol).as("id")).as("key"), col("*"))
 }

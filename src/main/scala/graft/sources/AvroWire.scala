@@ -150,22 +150,10 @@ object AvroWire {
     df.withColumn(outCol, ConfluentWire.frame(body, schemaId))
   }
 
-  /** A13 over Avro: decode with the registry snapshot, split valid rows
-    * from corrupt/unknown-schema/incomplete ones (which keep their
-    * ORIGINAL key/value bytes for the DLQ) — same contract as
-    * [[KafkaCdc.decodeOrDlq]] with from_json.
+  /** A13 over Avro: decode with the registry snapshot, then the same
+    * split as [[KafkaCdc.decodeOrDlq]] — corrupt, unknown-schema and
+    * incomplete rows keep their ORIGINAL key/value bytes for the DLQ.
     */
-  def decodeOrDlq(
-      raw: DataFrame,
-      schemas: Map[Int, String],
-      readerSchemaJson: String,
-      requiredField: String = "id"
-  ): (DataFrame, DataFrame) = {
-    val withDecoded = decodeRows(raw, schemas, readerSchemaJson)
-    val valid = col("decoded").isNotNull && col(s"decoded.$requiredField").isNotNull
-    (
-      withDecoded.filter(valid).select(col("key"), col("decoded").as("value")),
-      withDecoded.filter(!valid).select(col("key"), col("value"))
-    )
-  }
+  def decodeOrDlq(raw: DataFrame, schemas: Map[Int, String], readerSchemaJson: String): (DataFrame, DataFrame) =
+    KafkaCdc.splitDecoded(decodeRows(raw, schemas, readerSchemaJson))
 }

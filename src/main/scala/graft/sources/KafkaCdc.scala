@@ -60,32 +60,27 @@ object KafkaCdc {
     cdcSource(spark, bootstrapServers, dlqTopic, maxOffsetsPerTrigger = Some(10L))
 
   /** A13 — deserialization DLQ split: strip the Confluent header and
-    * decode the envelope; frames that are malformed (bad header) or
-    * undecodable (json null) go to the corrupt branch with their ORIGINAL
-    * key/value bytes, replacing the binder-level DLQ. Returns
-    * (decoded, corrupt).
-    *
-    * `decode` is pluggable: JSON-encoded envelopes decode with from_json
-    * here; Confluent-framed Avro envelopes take the schema-registry path
-    * ([[AvroWire.decodeOrDlq]] — same (decoded, corrupt) contract, real
-    * Avro resolution with per-frame writer-schema lookup).
+    * decode the JSON envelope with from_json; frames that are malformed
+    * (bad header) or undecodable (json null) go to the corrupt branch with
+    * their ORIGINAL key/value bytes, replacing the binder-level DLQ.
+    * Returns (decoded, corrupt). Confluent-framed Avro envelopes take the
+    * schema-registry path ([[AvroWire.decodeOrDlq]]), which ends in the
+    * same [[splitDecoded]].
     */
-  def decodeOrDlq(
-      raw: DataFrame,
-      envelopeSchema: StructType,
-      requiredField: String = "id",
-      decode: (org.apache.spark.sql.Column, StructType) => org.apache.spark.sql.Column =
-        (c, t) => from_json(c.cast("string"), t)
-  ): (DataFrame, DataFrame) = {
-    val withDecoded = raw.withColumn(
-      "decoded",
-      decode(ConfluentWire.payload(col("value")), envelopeSchema)
-    )
-    // PERMISSIVE decode yields an all-null row (not a null struct) for
-    // garbage input, so "decoded" alone can't flag corruption — require a
-    // non-null mandatory field, which also routes schema-valid-but-
-    // incomplete records to the DLQ like the reference's id check.
-    val valid = col("decoded").isNotNull && col(s"decoded.$requiredField").isNotNull
+  def decodeOrDlq(raw: DataFrame, envelopeSchema: StructType): (DataFrame, DataFrame) =
+    splitDecoded(raw.withColumn("decoded", from_json(ConfluentWire.payload(col("value")).cast("string"), envelopeSchema)))
+
+  /** The one A13 split over a frame with a `decoded` struct column:
+    * (key, decoded AS value) for valid rows, (key, value) with the
+    * original bytes for the rest.
+    *
+    * PERMISSIVE decode yields an all-null row (not a null struct) for
+    * garbage input, so "decoded" alone can't flag corruption — require a
+    * non-null `id`, which also routes schema-valid-but-incomplete records
+    * to the DLQ like the reference's id check.
+    */
+  private[sources] def splitDecoded(withDecoded: DataFrame): (DataFrame, DataFrame) = {
+    val valid = col("decoded").isNotNull && col("decoded.id").isNotNull
     (
       withDecoded.filter(valid).select(col("key"), col("decoded").as("value")),
       withDecoded.filter(!valid).select(col("key"), col("value"))

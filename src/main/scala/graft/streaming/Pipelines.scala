@@ -6,6 +6,7 @@ import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.cdc.Envelope
+import graft.enrich.Enrichment
 
 /** The reference's three topologies re-expressed as Structured Streaming
   * pipelines (SURVEY.md §3):
@@ -30,8 +31,12 @@ object Pipelines {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** A3→A8 as one batch transform. Returns (success records re-keyed by id
-    * — A11, failed original envelopes — A9's DLQ payload).
+  /** A3→A11 as one batch transform, composed from the one definition of
+    * each rule: `Envelope.validAfter` (A3/A4), `Enrichment.enrich` on the
+    * dimension projected to `dimKey +: dimCols` (A5), `Enrichment.branch`
+    * (A8) and `Enrichment.rekey` (A11). Returns (success records: `key`,
+    * then the `after` fields, then `dimCols`; failed original envelopes
+    * as `key`, `value` — A9's DLQ payload).
     */
   def enrichBatch(
       batch: DataFrame,
@@ -39,22 +44,12 @@ object Pipelines {
       dimKey: String,
       dimCols: Seq[String]
   ): (DataFrame, DataFrame) = {
-    val valid = Envelope.validAfter(batch)
-
-    val d = broadcast(dim.select(dimKey, dimCols: _*))
-    val joined = valid.join(d, col("value.after.id") === d(dimKey), "left")
-
-    val success = joined
-      .filter(d(dimKey).isNotNull)
-      .select(
-        struct(col("value.after.id").as("id")).as("key") +:
-          col("value.after.*") +:
-          dimCols.map(col): _*
-      )
-    val failed = joined
-      .filter(d(dimKey).isNull)
-      .select(col("key"), col("value"))
-    (success, failed)
+    val (hits, misses) = Enrichment.branch(
+      Enrichment.enrich(Envelope.validAfter(batch), dim.select(dimKey, dimCols: _*), "value.after.id", dimKey))
+    (
+      Enrichment.rekey(hits.select(col("value.after.*") +: dimCols.map(col): _*), "id"),
+      misses.select(col("key"), col("value"))
+    )
   }
 
   /** Runs each DLQ branch write; daemon threads, so an idle pool never
@@ -202,7 +197,7 @@ object Pipelines {
     val envSchema = org.apache.spark.sql.types.StructType(
       org.apache.spark.sql.types.StructField("after", payload, nullable = true) +: payload.fields
     )
-    val parsed = Seq(json)
+    val rows = Seq(json)
       .toDF("raw")
       .select(from_json(col("raw"), envSchema).as("j"))
       .select(
@@ -211,8 +206,8 @@ object Pipelines {
           .otherwise(struct(payload.fieldNames.toSeq.map(f => col(s"j.$f")): _*))
           .as("row")
       )
-      .filter(col("row.id").isNotNull && col("row.id") =!= 0)
-      .select(struct(col("row.id").as("id")).as("key"), col("row.*"))
+      .filter(Envelope.validId(col("row.id")))
+    val parsed = Enrichment.rekey(rows.select(col("row.*")), "id")
     val n = parsed.count()
     if (n > 0) {
       // own value in the shared batch= namespace — root-level files next

@@ -18,6 +18,8 @@ class EnrichmentSpec extends GraftSpecBase {
     assert(failed.select("ref_id").as[Long].collect() === Array(9L))
     val rekeyed = Enrichment.rekey(ok, "ref_id")
     assert(rekeyed.select("key.id").as[Long].collect().sorted === Array(1L, 2L))
+    // the key is prepended, the other columns keep their order
+    assert(rekeyed.columns.toSeq === "key" +: ok.columns.toSeq)
   }
 
   test("enrich reads the dimension via spark.read.jdbc (embedded Derby)") {

@@ -70,6 +70,15 @@ class PipelineSpec extends GraftSpecBase {
     val dlq = spark.read.parquet(dlqPath)
     // DLQ carries the ORIGINAL envelope (A9), not an error record
     assert(dlq.select("value.after.id").collect().map(_.getLong(0)) === Array(3L))
+    // both sinks' schemas, exactly: the success sink is the key struct,
+    // then the `after` fields, then the dim columns; the DLQ sink is the
+    // original record, key and envelope
+    assert(spark.read.parquet(s"$okPath/batch=0").schema === StructType(Seq(
+      StructField("key", StructType(Seq(StructField("id", LongType)))),
+      StructField("id", LongType),
+      StructField("name", StringType),
+      StructField("breed", StringType))))
+    assert(spark.read.parquet(s"$dlqPath/batch=0").schema === recordSchema)
 
     // phase 2 (DlqPipelineIT:128): replay DLQ against the repaired dimension
     val replay = Pipelines.startDlqReplay(
