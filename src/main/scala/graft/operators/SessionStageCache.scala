@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session-scoped cache of eagerly-materialized shared stages (r14).
   *
@@ -26,6 +28,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *  - entries of a STOPPED SparkSession are evicted on every lookup, so
   *    a long-lived JVM cycling sessions (parallel test suites, repeated
   *    Verify mains) can't accumulate dead DataFrames;
+  *  - so are entries whose checkpoint blocks are gone (an RDD behind the
+  *    cached frame left `getPersistentRDDs`): such a frame can never be
+  *    served again, and it pins its session. A job that unpersists the
+  *    context's blocks and moves to a `newSession()` (perfbench's
+  *    llm_curate) leaves exactly these behind;
   *  - the (potentially multi-second) Spark build job runs OUTSIDE the
   *    global lock, under a per-(session, params) latch with a
   *    double-checked lookup — concurrent callers of DIFFERENT stages no
@@ -49,14 +56,15 @@ private[graft] object SessionStageCache {
       params: String,
       plan: LogicalPlan,
       df: DataFrame,
-      rddIds: Set[Int])
+      rddIds: Set[Int],
+      backing: Seq[Int])
 
   private val entries    = scala.collection.mutable.ArrayBuffer.empty[Entry]
   private val latches    = scala.collection.mutable.HashMap.empty[(SparkSession, String), AnyRef]
   private val buildNanos = new java.util.concurrent.atomic.AtomicLong(0L)
 
   def protectedIds: Set[Int] = synchronized {
-    evictStopped()
+    evictDead()
     entries.iterator.flatMap(_.rddIds).toSet
   }
 
@@ -69,10 +77,16 @@ private[graft] object SessionStageCache {
   def drainBuildNanos(): Long = buildNanos.getAndSet(0L)
 
   // caller must hold the global lock
-  private def evictStopped(): Unit = {
+  private def evictDead(): Unit = {
+    val persistent = scala.collection.mutable.HashMap.empty[SparkContext, collection.Set[Int]]
     var i = entries.size - 1
     while (i >= 0) {
-      if (entries(i).session.sparkContext.isStopped) entries.remove(i)
+      val e  = entries(i)
+      val sc = e.session.sparkContext
+      if (sc.isStopped || !e.backing.forall(persistent.getOrElseUpdate(sc, sc.getPersistentRDDs.keySet))) {
+        entries.remove(i)
+        latches.remove((e.session, e.params))
+      }
       i -= 1
     }
     latches.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
@@ -80,7 +94,7 @@ private[graft] object SessionStageCache {
 
   private def lookup(s: SparkSession, params: String, plan: LogicalPlan): Option[DataFrame] =
     synchronized {
-      evictStopped()
+      evictDead()
       entries.collectFirst {
         case e if (e.session eq s) && e.params == params && e.plan.sameResult(plan) => e.df
       }
@@ -105,9 +119,14 @@ private[graft] object SessionStageCache {
           val t0     = System.nanoTime()
           val out    = build
           buildNanos.addAndGet(System.nanoTime() - t0)
-          val newIds = (s.sparkContext.getPersistentRDDs.keySet -- before).toSet
+          val after  = s.sparkContext.getPersistentRDDs.keySet
+          // the persisted (checkpointed) RDDs the frame reads, this
+          // build's or an earlier entry's; a LocalRelation frame has none
+          val backing = out.queryExecution.logical.collectLeaves().collect {
+            case r: LogicalRDD if after(r.rdd.id) => r.rdd.id
+          }
           synchronized {
-            entries += Entry(s, params, plan, out, newIds)
+            entries += Entry(s, params, plan, out, (after -- before).toSet, backing)
             System.err.println(s"[stagecache] built $params (${entries.size} entries live)")
           }
           out

@@ -2,6 +2,11 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -20,19 +25,22 @@ import org.apache.spark.sql.graft.PlanBridge
   * times and of `trials` noop-sink totals. The formatted explain of the
   * last planned DataFrame goes to `<outDir>/<query>.txt`, so two runs
   * compare with `diff -r`. Prints one `query plan_s total_s plan_pct
-  * build_jobs compiles` row per query: `build_jobs` is the median number
+  * build_jobs compiles forks` row per query: `build_jobs` is the median number
   * of Spark jobs one build + plan started. A builder that runs work
   * before it returns (a stream drain, a seed collect, a stage-cache
   * build) shows `build_jobs > 0`, and its plan_s is not planning alone.
   * `compiles` is the median number of classes Janino compiled in one
   * timed noop-sink run; after the warm pass it reads 0 unless the query
   * generates code the JVM-wide codegen cache has not seen (a plan that
-  * differs per run, or a cache too small for the working set). Unknown
+  * differs per run, or a cache too small for the working set). `forks`
+  * is the median number of processes the JVM started in one timed run
+  * (`processStarts`); with `GraftSession`'s fork-free `file:` filesystem
+  * a query that only reads and writes local files reads 0. Unknown
   * names fail before the session starts; a failing query fails the run.
   */
 object Profile {
 
-  final case class Cost(query: String, planS: Double, totalS: Double, buildJobs: Int, compiles: Long)
+  final case class Cost(query: String, planS: Double, totalS: Double, buildJobs: Int, compiles: Long, forks: Int)
 
   def main(args: Array[String]): Unit = {
     require(args.length == 3 || args.length == 4, "usage: Profile <sfDir> <outDir> <q1,q2,...> [trials]")
@@ -59,12 +67,12 @@ object Profile {
     println(header)
     names.map { name =>
       def build() = graft.SparkEntry.queries(name)(spark, sfDir)
-      def run(): (Double, Long) = { // the sweep is untimed, as in the bench
-        val c0       = compileCount
-        val (_, sec) = timed(build().write.format("noop").mode("overwrite").save())
-        val compiled = compileCount - c0
+      def run(): (Double, Long, Int) = { // the sweep is untimed, as in the bench
+        val c0                  = compileCount
+        val ((_, sec), started) = processStarts(timed(build().write.format("noop").mode("overwrite").save()))
+        val compiled            = compileCount - c0
         graft.Bench.releaseStorage(spark)
-        (sec, compiled)
+        (sec, compiled, started.size)
       }
       run() // warm pass (codegen, page cache, file index), untimed
       val planned = Seq.fill(trials)(jobsStartedBy(spark)(timed { val df = build(); df.queryExecution.executedPlan; df }))
@@ -72,20 +80,40 @@ object Profile {
       val explain = planned.last._1._1.queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.write(Paths.get(outDir, s"$name.txt"), explain.getBytes("UTF-8"))
       val cost = Cost(name, median(planned.map(_._1._2)), median(totals.map(_._1)),
-        planned.map(_._2).sorted.apply(trials / 2), totals.map(_._2).sorted.apply(trials / 2))
-      println(f"$name%-34s ${cost.planS}%8.3f ${cost.totalS}%8.3f ${100 * cost.planS / math.max(cost.totalS, 1e-9)}%7.1f%% ${cost.buildJobs}%10d ${cost.compiles}%8d")
+        planned.map(_._2).sorted.apply(trials / 2), totals.map(_._2).sorted.apply(trials / 2),
+        totals.map(_._3).sorted.apply(trials / 2))
+      println(f"$name%-34s ${cost.planS}%8.3f ${cost.totalS}%8.3f ${100 * cost.planS / math.max(cost.totalS, 1e-9)}%7.1f%% ${cost.buildJobs}%10d ${cost.compiles}%8d ${cost.forks}%5d")
       cost
     }
   }
 
   val header: String =
-    f"${"query"}%-34s ${"plan_s"}%8s ${"total_s"}%8s ${"plan_pct"}%8s ${"build_jobs"}%10s ${"compiles"}%8s"
+    f"${"query"}%-34s ${"plan_s"}%8s ${"total_s"}%8s ${"plan_pct"}%8s ${"build_jobs"}%10s ${"compiles"}%8s ${"forks"}%5s"
 
   /** Classes Janino has compiled in this JVM so far, driver and executor
     * threads alike: each compile adds one sample to Spark's compilation
     * time histogram.
     */
   def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** `body`'s result and the command line of every process this JVM
+    * started while it ran (`ProcessBuilder.start`: Hadoop's shell-outs,
+    * Spark's cleanup), from an in-process JFR recording of
+    * `jdk.ProcessStart` events.
+    */
+  def processStarts[A](body: => A): (A, Seq[String]) = {
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withoutStackTrace()
+      rec.start()
+      val a = try body finally rec.stop()
+      val file = Files.createTempFile("graft-forks", ".jfr")
+      try {
+        rec.dump(file)
+        (a, RecordingFile.readAllEvents(file).asScala.map(_.getString("command")).toSeq)
+      } finally Files.deleteIfExists(file)
+    } finally rec.close()
+  }
 
   /** `body`'s result and the number of Spark jobs that started while it
     * ran. The listener bus is drained before the listener is added and

@@ -95,4 +95,21 @@ class PairCacheSpec extends GraftSpecBase {
     val again = Dedup.minhashPairs(graft.Tables.documents(spark, sf()), "doc_id", "text", 3, 0.5)
     assert(again.count() === before)
   }
+
+  test("an entry whose checkpoint blocks are gone is evicted, and the next lookup rebuilds it") {
+    // perfbench's llm_curate between jobs: unpersist the context's blocks,
+    // move on in a new session; the old entry can never be served again
+    val s      = spark.newSession()
+    val before = SessionStageCache.protectedIds
+    val first  = Dedup.minhashPairs(graft.Tables.documents(s, sf()), "doc_id", "text", 6, 0.6) // cold geometry
+    val n      = first.count()
+    val built  = SessionStageCache.protectedIds -- before
+    assert(built.nonEmpty)
+    built.foreach(id => s.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
+    assert((SessionStageCache.protectedIds intersect built).isEmpty, "the dead entry must be evicted")
+    val again = Dedup.minhashPairs(graft.Tables.documents(s, sf()), "doc_id", "text", 6, 0.6)
+    assert(!(again eq first), "a dead entry must not be served")
+    assert(again.count() === n)
+    assert(Dedup.minhashPairs(graft.Tables.documents(s, sf()), "doc_id", "text", 6, 0.6) eq again)
+  }
 }

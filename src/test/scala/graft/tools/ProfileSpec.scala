@@ -10,7 +10,7 @@ import graft.GraftSpecBase.tmpDir
 
 /** Pins `tools.Profile`: its plan files are the plans the bench session
   * builds, every row carries a plan and a total time and the printed
-  * table has its header and a compile count per row, and a bad name
+  * table has its header and a compile and a fork count per row, and a bad name
   * fails before anything is written.
   */
 class ProfileSpec extends GraftSpecBase {
@@ -35,9 +35,9 @@ class ProfileSpec extends GraftSpecBase {
     assert(costs.map(_.query) === queries)
     costs.foreach(c => assert(c.planS > 0 && c.totalS > 0, c))
     val lines = printed.toString("UTF-8").linesIterator.map(_.trim.split("\\s+").toSeq).toSeq
-    assert(lines.head === Seq("query", "plan_s", "total_s", "plan_pct", "build_jobs", "compiles"))
+    assert(lines.head === Seq("query", "plan_s", "total_s", "plan_pct", "build_jobs", "compiles", "forks"))
     assert(lines.tail.map(_.head) === queries)
-    assert(lines.tail.map(_.last.toLong) === costs.map(_.compiles))
+    assert(lines.tail.map(l => (l(l.size - 2).toLong, l.last.toInt)) === costs.map(c => (c.compiles, c.forks)))
     val ref = benchSession()
     queries.foreach { q =>
       val expected = SparkEntry.queries(q)(ref, sf("sf0.01"))
